@@ -4421,56 +4421,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # q144/q113/q114 and the raw relations stay pytest-gated
     # (test_sketches) — bringing the registry to 150 all-hash-matched
     # entries within the window guarantee.
-        "q152_label_knn": q152_label_knn,
-        "q153_filtered_knn": q153_filtered_knn,
-        "q154_filtered_ivf_gate": q154_filtered_ivf_gate,
-        "q163_filtered_graph_gate": q163_filtered_graph_gate,
-        "q164_filtered_ivfpq_serving_gate": q164_filtered_ivfpq_serving_gate,
-        "q155_filtered_revenue": q155_filtered_revenue,
-        "q156_market_share": q156_market_share,
-        "q157_profit_by_nation_year": q157_profit_by_nation_year,
-        "q158_important_parts": q158_important_parts,
-        "q159_late_priority_lines": q159_late_priority_lines,
-        "q160_top_supplier": q160_top_supplier,
-        "q161_supplier_part_counts": q161_supplier_part_counts,
-        "q162_excess_shippers": q162_excess_shippers,
-        "q150_ivfpq_serving_parity_gate": q150_ivfpq_serving_parity_gate,
-        "q151_rpt_serving_parity_gate": q151_rpt_serving_parity_gate,
-        "q03_knn_ids": q03_knn_ids,
-        "q04_knn_join": q04_knn_join,
-        "q05_shard_stats": q05_shard_stats,
-        "q06_two_phase_knn": q06_two_phase_knn,
-        "q07_recall": q07_recall,
-        "q120_classifier_margin_gate": q120_classifier_margin_gate,
-        "q121_kcenter_cover_gate": q121_kcenter_cover_gate,
-        "q117_compaction_roundtrip": q117_compaction_roundtrip,
-        "q112_lsh_join_gate": q112_lsh_join_gate,
-        "q115_semdedup_gate": q115_semdedup_gate,
-        "q113_hll_gate": q113_hll_gate,
-        "q114_quantile_gate": q114_quantile_gate,
-        "q89_salted_join": q89_salted_join,
-        "q90_maxsim_retrieval": q90_maxsim_retrieval,
-        "q91_distinct_users_daily": q91_distinct_users_daily,
-        "q92_props_map_stats": q92_props_map_stats,
-        "q93_tfidf_keywords": q93_tfidf_keywords,
-        "q94_incremental_dedup": q94_incremental_dedup,
-        "q95_bigram_lm_score": q95_bigram_lm_score,
-        "q98_bloom_semi_join": q98_bloom_semi_join,
-        "q100_heavy_hitters": q100_heavy_hitters,
-        "q102_fuzzy_part_names": q102_fuzzy_part_names,
-        "q65_event_rollup": q65_event_rollup,
-        "q122_rollup_incremental": q122_rollup_incremental,
-        "q123_funnel_steps": q123_funnel_steps,
-        "q124_retention_cohorts": q124_retention_cohorts,
-        "q125_volume_anomalies": q125_volume_anomalies,
-        "q126_sql_nation_volume": q126_sql_nation_volume,
-        "q128_custdist": q128_custdist,
-        "q129_promo_revenue": q129_promo_revenue,
-        "q130_returned_items": q130_returned_items,
-        "q131_disjunctive_revenue": q131_disjunctive_revenue,
-        "q132_merge_upsert": q132_merge_upsert,
-        "q133_scd2_history": q133_scd2_history,
-        "q08_index_roundtrip": q08_index_roundtrip,
         "q168_multi_tenant_serving": q168_multi_tenant_serving,
         "q165_dict_encode_tables": q165_dict_encode_tables,
         "q166_string_filtered_knn": q166_string_filtered_knn,
@@ -4571,6 +4521,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q88_small_qty_revenue": q88_small_qty_revenue,
         "q01_l2sq_pairs": q01_l2sq_pairs,
         "q02_ip_cos_pairs": q02_ip_cos_pairs,
+        "q152_label_knn": q152_label_knn,
+        "q153_filtered_knn": q153_filtered_knn,
+        "q154_filtered_ivf_gate": q154_filtered_ivf_gate,
+        "q163_filtered_graph_gate": q163_filtered_graph_gate,
+        "q164_filtered_ivfpq_serving_gate": q164_filtered_ivfpq_serving_gate,
+        "q155_filtered_revenue": q155_filtered_revenue,
+        "q156_market_share": q156_market_share,
+        "q157_profit_by_nation_year": q157_profit_by_nation_year,
+        "q158_important_parts": q158_important_parts,
+        "q159_late_priority_lines": q159_late_priority_lines,
+        "q160_top_supplier": q160_top_supplier,
+        "q161_supplier_part_counts": q161_supplier_part_counts,
+        "q162_excess_shippers": q162_excess_shippers,
+        "q150_ivfpq_serving_parity_gate": q150_ivfpq_serving_parity_gate,
+        "q151_rpt_serving_parity_gate": q151_rpt_serving_parity_gate,
+        "q03_knn_ids": q03_knn_ids,
+        "q04_knn_join": q04_knn_join,
+        "q05_shard_stats": q05_shard_stats,
+        "q06_two_phase_knn": q06_two_phase_knn,
+        "q07_recall": q07_recall,
+        "q120_classifier_margin_gate": q120_classifier_margin_gate,
+        "q121_kcenter_cover_gate": q121_kcenter_cover_gate,
+        "q117_compaction_roundtrip": q117_compaction_roundtrip,
+        "q112_lsh_join_gate": q112_lsh_join_gate,
+        "q115_semdedup_gate": q115_semdedup_gate,
+        "q113_hll_gate": q113_hll_gate,
+        "q114_quantile_gate": q114_quantile_gate,
+        "q89_salted_join": q89_salted_join,
+        "q90_maxsim_retrieval": q90_maxsim_retrieval,
+        "q91_distinct_users_daily": q91_distinct_users_daily,
+        "q92_props_map_stats": q92_props_map_stats,
+        "q93_tfidf_keywords": q93_tfidf_keywords,
+        "q94_incremental_dedup": q94_incremental_dedup,
+        "q95_bigram_lm_score": q95_bigram_lm_score,
+        "q98_bloom_semi_join": q98_bloom_semi_join,
+        "q100_heavy_hitters": q100_heavy_hitters,
+        "q102_fuzzy_part_names": q102_fuzzy_part_names,
+        "q65_event_rollup": q65_event_rollup,
+        "q122_rollup_incremental": q122_rollup_incremental,
+        "q123_funnel_steps": q123_funnel_steps,
+        "q124_retention_cohorts": q124_retention_cohorts,
+        "q125_volume_anomalies": q125_volume_anomalies,
+        "q126_sql_nation_volume": q126_sql_nation_volume,
+        "q128_custdist": q128_custdist,
+        "q129_promo_revenue": q129_promo_revenue,
+        "q130_returned_items": q130_returned_items,
+        "q131_disjunctive_revenue": q131_disjunctive_revenue,
+        "q132_merge_upsert": q132_merge_upsert,
+        "q133_scd2_history": q133_scd2_history,
+        "q08_index_roundtrip": q08_index_roundtrip,
     }
 
 

@@ -79,6 +79,24 @@ def test_full_lifecycle(spark, data, tmp_path):
     )
 
 
+def test_saved_handle_reads_the_written_index(spark, data, tmp_path):
+    """save() rebinds the handle to the written relations: its plans
+    are parquet scans (no graph build re-runs per query) and it answers
+    exactly like VectorIndex.load of the same path."""
+    train, test = data
+    idx = VectorIndex.build(train, PARAMS)
+    path = str(tmp_path / "idx")
+    idx.save(path)
+    for rel in (idx.vectors, idx.edges):
+        plan = rel._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" in plan, plan
+        assert "InPandas" not in plan and "Exchange" not in plan, plan
+    loaded = VectorIndex.load(spark, path)
+    assert sorted(map(tuple, idx.query(test, K).collect())) == sorted(
+        map(tuple, loaded.query(test, K).collect())
+    )
+
+
 @pytest.mark.parametrize("metric", ["cosine_similarity", "inner_product"])
 def test_metric_aware_facade(spark, data, metric):
     from dataclasses import replace

@@ -1044,7 +1044,14 @@ class VectorIndex:
     # -- persistence & maintenance ----------------------------------------
 
     def save(self, path: str) -> "VectorIndex":
+        """Write the index to ``path`` and rebind this handle to the
+        written relations (the ones :meth:`load` returns): a built
+        index's ``vectors``/``edges`` are lazy build plans, and without
+        the rebind every later :meth:`query` would re-run the whole
+        graph build."""
         save_index(self.vectors, self.edges, self.params, path)
+        saved = VectorIndex.load(self.vectors.sparkSession, path)
+        self.vectors, self.edges = saved.vectors, saved.edges
         self.path = path
         return self
 

@@ -28,6 +28,20 @@ At 100 TB the blob relation is the index's natural serving format: it is
 what the executors would hold resident anyway, partition-pruned by
 ``shard``, and spillable (MEMORY_AND_DISK) when the fleet's aggregate
 memory is short.
+
+The same resident-blob pattern serves every route: IVF cells
+(:class:`CellServingIndex`), PQ / SQ / IVF-PQ code blobs, RP-tree leaves
+and PCA blobs. One lifecycle core, :class:`_ResidentBlobIndex`, owns what
+they share — ``warm``/``unpersist``/``bytes_resident``, ``remove`` and
+the remove ledger, the strategy histogram, the segment stack, and the
+crash-safe snapshot protocol (``snapshot``, ``snapshot_incremental``,
+``from_snapshot``: versioned dirs, writer token, manifest commit, GC,
+latest-generation-wins restore, blob and corpus fingerprints). Each
+serving class keeps its own pack, refresh-encode and query kernels and
+declares the rest as data: its blob key column, the names of its
+pending-snapshot and blob-count attributes, its driver ``.npy`` arrays,
+whether it snapshots a routing table, its histogram source relation and
+whether it keeps a fingerprinted cold corpus.
 """
 
 from __future__ import annotations
@@ -188,29 +202,13 @@ def _adopt_base_leaf(idx) -> None:
     ``warm()`` skip its sever forever. Sever the base HERE in that
     case (the same eager localCheckpoint warm() would have done), so
     the 'resident state is lineage-free' invariant holds on every
-    refresh path regardless of call order."""
+    refresh path regardless of call order. (The sever flags itself, so
+    a refresh that fails mid-way never leaves a severed-but-unflagged
+    handle whose warm() re-checkpoints the corpus redundantly.)"""
     if not getattr(idx, "_seg_stack", None):
-        if not getattr(idx, "_blobs_severed", False):
-            plan = idx.blobs
-            idx.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            # flag it here, not only at the caller's tail: a refresh
-            # that fails mid-way must not leave a severed-but-unflagged
-            # handle whose warm() re-checkpoints the corpus redundantly
-            idx._blobs_severed = True
+        idx._sever()
         idx._seg_stack = [idx.blobs]
         idx._seg_bytes = [_leaf_blob_bytes(idx.blobs)]
-
-
-def _unpersist_blobs(idx) -> None:
-    """Free the resident blob relation AND every checkpointed segment
-    leaf beneath it (``blobs.unpersist()`` alone is a no-op once blobs
-    is a lazy union over checkpointed segments)."""
-    idx.blobs.unpersist()
-    for leaf in getattr(idx, "_seg_stack", []):
-        leaf.unpersist()
-    idx._seg_stack = []
-    idx._seg_bytes = []
 
 
 def _fs_write_bytes(spark, path: str, data: bytes) -> None:
@@ -551,30 +549,6 @@ def _dense_reroute(idx, k: int, candidate_factor: int):
     return fb if m > candidate_factor * k else None
 
 
-def _attach_dense_fallback(idx, handle):
-    """Body of the ``reroute_dense_to`` methods: remember the graph-route
-    handle dense-corpus queries should dispatch to. ``None`` detaches.
-
-    Attr packing must MATCH (round 13 review): a dispatch forwards
-    ``allowed`` / ``query_by_*`` constraints verbatim, so a fallback
-    packed without (or with differently-ordered) attribute columns
-    would fail only when the corpus crosses the density threshold — a
-    data-dependent runtime error, or worse, differently-filtered
-    answers. Validated here, at attach time."""
-    if handle is not None and idx._attr_cols is not None:
-        fb_cols = getattr(handle, "_attr_cols", None)
-        if fb_cols != idx._attr_cols:
-            raise ValueError(
-                f"reroute_dense_to: this handle packs attribute columns "
-                f"{list(idx._attr_cols)} but the fallback packs "
-                f"{list(fb_cols) if fb_cols else None} — build the graph "
-                "fallback with the SAME attr_col (same order) so "
-                "filtered/constrained queries dispatch equivalently"
-            )
-    idx._dense_fallback = handle
-    return idx
-
-
 def _blob_ids(blobs: DataFrame) -> DataFrame:
     """Resident ids as a (id long) relation — one unpickling pass over
     the blob payloads. Used only on rare guard paths (the streaming
@@ -802,9 +776,7 @@ def _single_pass_window_query(
         F.col(lo_col).cast("long").alias("__lo"),
         F.col(hi_col).cast("long").alias("__hi"),
     )
-    for b in idx._live_bcs:
-        b.unpersist(blocking=False)
-    idx._live_bcs = []
+    idx._release_broadcasts()
     return chunked_over_queries(
         t,
         lambda chunk: _single_pass_constraint_batch(
@@ -852,9 +824,7 @@ def _single_pass_attr_query(
             for i, c in enumerate(qcols)
         ),
     )
-    for b in idx._live_bcs:
-        b.unpersist(blocking=False)
-    idx._live_bcs = []
+    idx._release_broadcasts()
     return chunked_over_queries(
         t,
         lambda chunk: _single_pass_constraint_batch(
@@ -1196,7 +1166,481 @@ def _pack_shard(key, vec_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFr
     )
 
 
-class ServingIndex:
+_CORPUS_SCALARS = (("id_col", "_id_col"), ("vec_col", "_vec_col"))
+
+
+def _stamp_stream(manifest: dict, stream_batch_id, stream_epoch) -> None:
+    """Record the streaming maintain loop's exactly-once state."""
+    if stream_batch_id is not None:
+        manifest["last_batch_id"] = int(stream_batch_id)
+    if stream_epoch is not None:
+        manifest["stream_epoch"] = str(stream_epoch)
+
+
+class _ResidentBlobIndex:
+    """The one lifecycle core under every serving class: a resident
+    ``(key, n_vectors, blob)`` relation, its segment stack, the remove
+    ledger, the crash-safe snapshot protocol (writer token, versioned
+    dirs, manifest commit, GC last), incremental generations and the
+    restore-time integrity checks.
+
+    A serving class declares its differences as data and the core
+    branches on these declarations only:
+
+    - ``_KEY`` / ``_SCHEMA``: the blob key column (``shard``/``cell``/
+      ``part``/``leaf``) and the blob row schema; ``part`` marks a flat
+      scan route, whose snapshot fold also compacts the resident blobs;
+    - ``_PENDING`` / ``_COUNT``: the attribute names of the keys queued
+      for the next incremental snapshot and of the blob-row count;
+    - ``_ARRAYS``: driver-held numpy arrays as ``(file name,
+      attribute)`` pairs, written beside the blobs and restored from
+      them;
+    - ``_ROUTED``: a routing table (``_routing_table()``) is snapshotted
+      under ``routing_dir``; ``_ROUTING_FOLLOWS_KEYS``: it changes with
+      the refreshed keys, so an incremental snapshot rewrites it as
+      ``routing_g<gen>``;
+    - ``_HIST_SOURCE``: the attribute holding the relation the strategy
+      histogram is counted over (``None`` after a restore, where the
+      manifest carries the histogram);
+    - ``_COLD_CORPUS``: raw vectors stay in a cold corpus ``_train``,
+      passed at restore and checked against the manifest's corpus
+      fingerprint; the corpus-only arguments (``train``,
+      ``fingerprint_corpus``, ``corpus_fp_delta``) are refused elsewhere;
+    - ``_QUANTIZED``: blobs hold quantized codes, so the near-duplicate
+      reroute (:meth:`reroute_dense_to`) applies;
+    - ``_MANIFEST_SCALARS``: extra ``(manifest key, attribute)`` pairs.
+    """
+
+    _PENDING: str
+    _COUNT: str
+    _KEY: str
+    _SCHEMA: str
+    _HIST_SOURCE: str
+    _ARRAYS: tuple = ()
+    _ROUTED = False
+    _ROUTING_FOLLOWS_KEYS = False
+    _COLD_CORPUS = False
+    _QUANTIZED = False
+    _MANIFEST_SCALARS: tuple = ()
+    # (id, vec) column names of the relations a refresh wave arrives in
+    _id_col = "id"
+    _vec_col = "vec"
+
+    def __init__(self, spark, attr_col) -> None:
+        from vector_index_spark.operators.filtered import normalize_attr_cols
+
+        self._spark = spark
+        # pack with full parallelism, then hold one blob partition per
+        # core: blob rows are self-contained, and every warm batch would
+        # otherwise pay one near-empty task per pack partition
+        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        self._attr_cols = normalize_attr_cols(attr_col)
+        # lazily-built (attr tuple -> distinct-id count) histogram for
+        # the filtered-query strategy rule; one small aggregate, once
+        self._attr_hist = None
+        # broadcasts of the previous call, recycled at the next one (by
+        # then its results are consumed) — a long-running stream must
+        # not accumulate one query-matrix broadcast per micro-batch
+        self._live_bcs: list = []
+
+    def _release_broadcasts(self) -> None:
+        for b in self._live_bcs:
+            b.unpersist(blocking=False)
+        self._live_bcs = []
+
+    def _sever(self) -> None:
+        """Materialize the blob relation as an eager ``localCheckpoint``,
+        which SEVERS its lineage into the source files. Maintenance
+        rewrites those files (``append_to_index`` overwrites index
+        partitions, the compressed maintain loops append to the corpus)
+        and Spark invalidates plan caches on write, so a lineage-bearing
+        cache would silently RECOMPUTE from mutated or deleted files
+        (FAILED_READ_FILE at best, re-encoded or duplicated rows at
+        worst). Resident state is lineage-free by construction;
+        durability and executor-loss recovery are :meth:`snapshot`'s
+        job."""
+        if not getattr(self, "_blobs_severed", False):
+            plan = self.blobs
+            self.blobs = plan.localCheckpoint(eager=True)
+            plan.unpersist()
+            self._blobs_severed = True
+
+    def warm(self):
+        """Materialize the blob relation (one job) and count its rows;
+        call once at startup so the first real query batch does not pay
+        the build. See :meth:`_sever` for why this is a checkpoint."""
+        self._sever()
+        setattr(self, self._COUNT, self.blobs.count())
+        return self
+
+    def unpersist(self) -> None:
+        """Free the resident blob relation, every checkpointed segment
+        leaf beneath it (``blobs.unpersist()`` alone is a no-op once
+        blobs is a lazy union over segments) and live broadcasts."""
+        self.blobs.unpersist()
+        for leaf in getattr(self, "_seg_stack", []):
+            leaf.unpersist()
+        self._seg_stack = []
+        self._seg_bytes = []
+        self._release_broadcasts()
+
+    def bytes_resident(self) -> dict:
+        """Executor-resident blob bytes plus the driver-held arrays
+        (codebooks, scales, tree, basis) — see :func:`_bytes_resident`;
+        compressed routes show their compression ratio here."""
+        return _bytes_resident(
+            self.blobs,
+            tuple(getattr(self, attr) for _, attr in self._ARRAYS),
+            seg_stack=getattr(self, "_seg_stack", None),
+        )
+
+    def _attribute_histogram(self):
+        if self._attr_hist is None:
+            self._attr_hist = _subtract_removed_ledger(
+                self, _tuple_histogram(
+                    getattr(self, self._HIST_SOURCE), self._attr_cols,
+                    id_col=self._id_col,
+                ),
+            )
+        return self._attr_hist
+
+    def _routing_table(self) -> DataFrame:
+        return self._cents_kv
+
+    def remove(self, ids) -> int:
+        """Remove rows by id from the resident blobs (see
+        :func:`_resident_remove`): emptied blobs drop and restore as
+        removed; on cold-corpus routes the exact re-rank is an id join,
+        so removed ids never resurface and the corpus fingerprint is
+        untouched. Returns the number of rows removed."""
+        if self._KEY == "shard":
+            raise TypeError(
+                "ServingIndex blobs are packed shard graphs: remove rows "
+                "with builder.remove_from_index, then refresh() the "
+                "affected shards"
+            )
+        return _resident_remove(self, ids)
+
+    def reroute_dense_to(self, handle):
+        """Attach a graph-route :class:`ServingIndex` (same corpus; same
+        attr packing when ``query_by_*`` is used) as the dense-corpus
+        fallback: when the near-duplicate multiplicity exceeds the
+        shortlist budget ``candidate_factor*k``, queries DISPATCH to it
+        instead of warning (the SCALE.md routing rule as dispatch;
+        raw-vector beam recall is 1.0 exactly where compressed
+        shortlists collapse). ``None`` detaches.
+
+        Attr packing must MATCH: a dispatch forwards ``allowed`` /
+        ``query_by_*`` constraints verbatim, so a fallback packed without
+        (or with differently-ordered) attribute columns would fail only
+        once the corpus crosses the density threshold — validated here,
+        at attach time."""
+        if not self._QUANTIZED:
+            raise TypeError(
+                f"{type(self).__name__} serves raw vectors; the "
+                "near-duplicate reroute applies to quantized-code routes"
+            )
+        if handle is not None and self._attr_cols is not None:
+            fb_cols = getattr(handle, "_attr_cols", None)
+            if fb_cols != self._attr_cols:
+                raise ValueError(
+                    f"reroute_dense_to: this handle packs attribute "
+                    f"columns {list(self._attr_cols)} but the fallback "
+                    f"packs {list(fb_cols) if fb_cols else None} — build "
+                    "the graph fallback with the SAME attr_col (same "
+                    "order) so filtered/constrained queries dispatch "
+                    "equivalently"
+                )
+        self._dense_fallback = handle
+        return self
+
+    def _refuse_corpus_args(self, **given) -> None:
+        bad = sorted(k for k, v in given.items() if v is not None)
+        if bad and not self._COLD_CORPUS:
+            raise TypeError(
+                f"{type(self).__name__} keeps its raw vectors in the blobs "
+                f"(no cold corpus): {', '.join(bad)} does not apply"
+            )
+
+    @classmethod
+    def _scalar_fields(cls) -> tuple:
+        """(manifest key, attribute) pairs stored verbatim."""
+        return cls._MANIFEST_SCALARS + (
+            _CORPUS_SCALARS if cls._COLD_CORPUS else ()
+        )
+
+    def _manifest_scalars(self) -> dict:
+        return {key: getattr(self, attr) for key, attr in self._scalar_fields()}
+
+    def snapshot(
+        self, path: str, stream_batch_id: "int | None" = None,
+        stream_epoch: "str | None" = None, *,
+        fingerprint_corpus: "bool | None" = None,
+    ):
+        """Persist the SERVING form itself: the packed blob relation,
+        the route's driver arrays, its routing table when it has one,
+        and a manifest (format version, blob fingerprint, attr_cols and
+        — when attributes are packed — the strategy histogram). A
+        restarted fleet then cold-starts with :meth:`from_snapshot` from
+        a parquet read: no cogroup, no encode, no re-pack. The snapshot
+        is byte-faithful (restored answers equal the live ones), and is
+        written through the Hadoop FileSystem API so it lives on ONE
+        storage URI (s3a://, hdfs://, file://).
+
+        Cold-corpus routes (PQ, SQ, IVF-PQ) record the corpus
+        FINGERPRINT (count + id checksum + spot rows) instead of the raw
+        vectors, so a drifted corpus raises at restore instead of
+        silently re-ranking against mismatched vectors;
+        ``fingerprint_corpus=False`` skips that corpus scan (it
+        dominates the write at millions of rows) and restore then
+        validates blobs only.
+
+        Crash-safe: a re-snapshot writes fresh VERSIONED dirs, commits
+        by rewriting the manifest (``generations=[]``), and only then
+        deletes the previous version's dirs — a crash at any point
+        leaves either the old or the new snapshot fully restorable, and
+        a handle restored from this very path never overwrites the dirs
+        its plan still reads. A writer-intent token staked before the
+        dir writes turns a concurrent writer into a typed error at
+        commit. ``stream_batch_id`` / ``stream_epoch`` record the
+        streaming maintain loop's exactly-once state."""
+        self._refuse_corpus_args(fingerprint_corpus=fingerprint_corpus)
+        return self._snapshot_full(
+            path, fingerprint_corpus is not False, stream_batch_id,
+            stream_epoch,
+        )
+
+    def _snapshot_full(self, path, fingerprint, stream_batch_id,
+                       stream_epoch):
+        import uuid as _uuid
+
+        spark = self._spark
+        old = _read_manifest_any(spark, path)
+        version = int(old.get("base_version", 1)) + 1 if old else 1
+        token = _acquire_snapshot_write(spark, path)
+        self.blobs.write.mode("overwrite").parquet(
+            f"{path}/{_vdir('blobs', version)}"
+        )
+        base_dirs = [_vdir("blobs", version)]
+        for name, attr in self._ARRAYS:
+            _fs_write_npy(
+                spark, f"{path}/{_vdir(name, version)}", getattr(self, attr)
+            )
+            base_dirs.append(_vdir(name, version))
+        manifest = {
+            "format_version": SNAPSHOT_FORMAT_VERSION,
+            "class": type(self).__name__,
+            "snapshot_id": _uuid.uuid4().hex,
+            "base_version": version,
+            "base_dirs": base_dirs,
+            "generations": [],
+            "blobs": _blob_fingerprint(self.blobs),
+            **self._manifest_scalars(),
+            **_manifest_attr_fields(
+                self._attr_cols, self._attribute_histogram
+            ),
+        }
+        if self._ROUTED:
+            manifest["routing_dir"] = _vdir("routing", version)
+            self._routing_table().write.mode("overwrite").parquet(
+                f"{path}/{manifest['routing_dir']}"
+            )
+        if self._COLD_CORPUS:
+            manifest["corpus"] = _corpus_fingerprint(
+                self._train, self._id_col, self._vec_col
+            ) if fingerprint else None
+        _stamp_stream(manifest, stream_batch_id, stream_epoch)
+        _commit_snapshot_write(spark, path, token)
+        _write_manifest(spark, path, manifest)
+        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
+        setattr(self, self._PENDING, set())
+        _gc_stale_snapshot_dirs(spark, path, old, manifest)
+        return self
+
+    def snapshot_incremental(
+        self, path: str, max_generations: int = 8,
+        stream_batch_id: "int | None" = None,
+        stream_epoch: "str | None" = None, *,
+        fingerprint_corpus: "bool | None" = None,
+        corpus_fp_delta: "tuple[int, int] | None" = None,
+    ):
+        """Incremental snapshot after :meth:`refresh` / :meth:`remove`:
+        write ONLY the keys touched since the last snapshot as a new
+        blob GENERATION (``blobs_gen_N``) plus an updated manifest —
+        the write cost tracks the wave, not the corpus. Driver arrays
+        never refit on append, so they are not rewritten; a routing
+        table that follows the keys (graph shard centroids) is written
+        as ``routing_g<gen>``. :meth:`from_snapshot` resolves per key
+        latest-generation-wins (a key a generation CLAIMS but writes no
+        row for was removed).
+
+        COMPACTION: restore unions one parquet read per generation, so
+        when stacking would push the chain past ``max_generations`` the
+        call folds the whole chain into a fresh full base instead
+        (crash-safe versioned rewrite; flat routes first compact their
+        resident blobs back to one per core) — restore depth stays
+        bounded and per-wave cost stays wave-sized amortized.
+
+        Requires lineage: this handle must have written or restored the
+        snapshot at ``path`` INCLUDING its current generation tip (the
+        unaffected base blobs are reused byte-as-is); otherwise a typed
+        :class:`SnapshotIntegrityError` says to run :meth:`snapshot`.
+        With nothing pending, only the manifest refreshes.
+
+        Cold-corpus routes: ``corpus_fp_delta=(wave_rows,
+        wave_id_crc_sum)`` with ``fingerprint_corpus=False`` maintains
+        the corpus fingerprint INCREMENTALLY (it is additive, and the
+        base's spot rows stay valid on an append-only corpus), so a
+        streaming fleet keeps drift detection without a per-wave corpus
+        scan; a fold re-anchors with a full fingerprint."""
+        self._refuse_corpus_args(
+            fingerprint_corpus=fingerprint_corpus,
+            corpus_fp_delta=corpus_fp_delta,
+        )
+        fingerprint = fingerprint_corpus is not False
+        spark = self._spark
+        manifest = _read_manifest(spark, path, type(self).__name__)
+        _check_incremental_lineage(self, path, manifest)
+        pending = sorted(getattr(self, self._PENDING, set()))
+        gens = manifest.get("generations", [])
+        delta_mode = (
+            corpus_fp_delta is not None
+            and manifest.get("corpus") is not None
+        )
+        if pending and len(gens) >= max_generations:
+            if self._KEY == "part":
+                _flat_compact_blobs(self)
+            return self._snapshot_full(
+                path, fingerprint or delta_mode, stream_batch_id,
+                stream_epoch,
+            )
+        # writer-intent token on the incremental path too: two handles
+        # restored from the same tip pass the lineage check and would
+        # race the generation dir and the manifest
+        token = _acquire_snapshot_write(spark, path)
+        if self._COLD_CORPUS:
+            if fingerprint:
+                corpus_fp = _corpus_fingerprint(
+                    self._train, self._id_col, self._vec_col
+                )
+            elif delta_mode:
+                corpus_fp = dict(manifest["corpus"])
+                corpus_fp["n_rows"] += int(corpus_fp_delta[0])
+                corpus_fp["id_crc_sum"] += int(corpus_fp_delta[1])
+            else:
+                corpus_fp = None
+            manifest["corpus"] = corpus_fp
+        old_routing = manifest.get(
+            "routing_dir",
+            _vdir("routing", int(manifest.get("base_version", 1))),
+        )
+        if pending:
+            gen = (max(g["gen"] for g in gens) + 1) if gens else 1
+            self.blobs.filter(
+                F.col(self._KEY).isin(pending)
+            ).write.mode("overwrite").parquet(f"{path}/blobs_gen_{gen}")
+            gens = gens + [{"gen": gen, "shards": [int(s) for s in pending]}]
+            if self._ROUTING_FOLLOWS_KEYS:
+                # a fresh dir, so a crash mid-write cannot clobber the
+                # one the committed manifest points at
+                manifest["routing_dir"] = f"routing_g{gen}"
+                self._routing_table().write.mode("overwrite").parquet(
+                    f"{path}/{manifest['routing_dir']}"
+                )
+        elif self._ROUTING_FOLLOWS_KEYS:
+            manifest["routing_dir"] = old_routing
+        manifest.update(
+            {
+                "blobs": _blob_fingerprint(self.blobs),
+                "generations": gens,
+                **self._manifest_scalars(),
+                **_manifest_attr_fields(
+                    self._attr_cols, self._attribute_histogram
+                ),
+            }
+        )
+        _stamp_stream(manifest, stream_batch_id, stream_epoch)
+        _commit_snapshot_write(spark, path, token)
+        _write_manifest(spark, path, manifest)
+        setattr(self, self._PENDING, set())
+        self._snapshot_lineage = (path, *_lineage_token(manifest))
+        if self._ROUTING_FOLLOWS_KEYS and old_routing != manifest["routing_dir"]:
+            _fs_delete(spark, f"{path}/{old_routing}")
+        return self
+
+    @classmethod
+    def from_snapshot(
+        cls, spark, path: str, train: "DataFrame | None" = None,
+        validate: bool = True,
+    ):
+        """Restore a serving handle from :meth:`snapshot` (plus its
+        generations) — a parquet read and the driver arrays' .npy loads,
+        no re-pack; answers equal the live handle's. Cold-corpus routes
+        take the corpus relation ``train`` (read wherever it already
+        lives); the others are self-contained and take none.
+
+        The restored blobs are an eager ``localCheckpoint``, not a
+        persist: the resident relation keeps no lineage into the
+        snapshot dirs a later full snapshot's GC deletes. With
+        ``validate`` (default) the blob fingerprint is re-derived and,
+        where the writer recorded one, ``train`` is checked against the
+        corpus fingerprint — count, id checksum, exact spot vectors;
+        :class:`SnapshotIntegrityError` on a version/class mismatch, a
+        truncated blob relation or a drifted corpus. The restored handle
+        carries the snapshot's lineage, so :meth:`refresh` and
+        :meth:`snapshot_incremental` continue the chain."""
+        if (train is not None) != cls._COLD_CORPUS:
+            raise TypeError(
+                f"{cls.__name__}.from_snapshot "
+                + (
+                    "needs the cold corpus relation (train)"
+                    if cls._COLD_CORPUS
+                    else "takes no train: the snapshot is self-contained"
+                )
+            )
+        manifest = _read_manifest(spark, path, cls.__name__)
+        idx = cls.__new__(cls)
+        idx._spark = spark
+        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        idx._live_bcs = []
+        _restore_attr_fields(idx, manifest)
+        for key, attr in cls._scalar_fields():
+            setattr(idx, attr, manifest[key])
+        # the histogram was snapshotted; the live source is not needed
+        # (cold-corpus routes count over the passed corpus)
+        setattr(idx, cls._HIST_SOURCE, train)
+        base_v = int(manifest.get("base_version", 1))
+        for name, attr in cls._ARRAYS:
+            setattr(
+                idx, attr, _fs_read_npy(spark, f"{path}/{_vdir(name, base_v)}")
+            )
+        idx.blobs = (
+            _resolve_generations(
+                spark, path,
+                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
+                cls._KEY, manifest.get("generations", []),
+            )
+            .repartition(idx._n_serve)
+            .localCheckpoint(eager=True)
+        )
+        idx._blobs_severed = True
+        if validate:
+            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
+            if cls._COLD_CORPUS and manifest["corpus"] is not None:
+                _check_corpus_fingerprint(
+                    train, idx._id_col, idx._vec_col, manifest["corpus"],
+                    path,
+                )
+        if cls._ROUTED:
+            idx._cents_kv = spark.read.parquet(
+                f"{path}/"
+                f"{manifest.get('routing_dir', _vdir('routing', base_v))}"
+            ).localCheckpoint(eager=True)
+        idx._snapshot_lineage = (path, *_lineage_token(manifest))
+        return idx
+
+
+class ServingIndex(_ResidentBlobIndex):
     """Resident serving form of a graph index: per-shard graphs pickled
     into one persisted relation, centroid routing table checkpointed.
 
@@ -1212,21 +1656,24 @@ class ServingIndex:
     broad filters, masked exact GEMM over the resident matrices under
     selective ones."""
 
+    _KEY, _SCHEMA = "shard", BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_shards", "n_shards"
+    _HIST_SOURCE = "_vectors"
+    _ROUTED = _ROUTING_FOLLOWS_KEYS = True
+    _MANIFEST_SCALARS = (("dimension", "_dimension"),)
+    # a restored handle routes by its snapshotted table (_cents_kv)
+    _centroids = None
+
     def __init__(
         self,
         vectors: DataFrame,
         edges: DataFrame,
         centroids: DataFrame | None = None,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         dimension: int | None = None,
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
+        super().__init__(vectors.sparkSession, attr_col)
         self._dimension = dimension  # set -> ragged queries fail fast
-        self._storage_level = storage_level
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
         if self._attr_cols is not None:
             vectors = _with_attr_cols(vectors, self._attr_cols)
         cg, _ = _shard_cogroup(
@@ -1234,16 +1681,10 @@ class ServingIndex:
             extra_cols=tuple(_attr_pack_names(self._attr_cols))
             if self._attr_cols is not None else (),
         )
-        spark = vectors.sparkSession
-        # pack with full cogroup parallelism, then compact the persisted
-        # relation to one partition per core: blob rows are self-contained,
-        # and without this every warm batch pays one near-empty task per
-        # pack partition (256 on local[32]) instead of per core
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
         self.blobs = (
             cg.applyInPandas(_pack_shard, BLOB_SCHEMA)
             .repartition(self._n_serve)
-            .persist(storage_level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # centroid routing table: materialized lazily on the FIRST routed
         # query — unrouted serving (nprobe=None, the stream_ann_query
@@ -1251,40 +1692,6 @@ class ServingIndex:
         self._vectors = vectors
         self._centroids = centroids
         self._cents_kv = None
-        self._spark = spark
-        # broadcasts of the previous batch's query matrix, recycled at the
-        # next batch (by then the previous results are consumed in the
-        # foreachBatch serving loop) — without this a long-running stream
-        # accumulates one query-matrix broadcast per micro-batch
-        self._live_bcs: list = []
-
-    def warm(self) -> "ServingIndex":
-        """Materialize the blob cache (one job); call once at startup so
-        the first real query batch doesn't pay the build.
-
-        Round 12: materialization is an eager ``localCheckpoint``, which
-        SEVERS the blob relation's lineage into the index parquet files.
-        ``append_to_index`` dynamic-partition-overwrites those files and
-        Spark auto-invalidates plan caches on write, so a lineage-bearing
-        cache would silently RECOMPUTE from mutated or deleted part-files
-        mid-maintenance (FAILED_READ_FILE at best, merged rows at worst).
-        Resident state is lineage-free by construction; durability and
-        executor-loss recovery are :meth:`snapshot`'s job — the maintain
-        loops keep it fresh per wave exactly for that."""
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_shards = self.blobs.count()
-        return self
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (pickled shard graphs incl. raw
-        vectors, CSR edges and any attrs) — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, seg_stack=getattr(self, "_seg_stack", None)
-        )
 
     def refresh(
         self,
@@ -1312,12 +1719,6 @@ class ServingIndex:
         ``ServingIndex(vectors, edges)`` rebuild (tests/test_serving.py).
         """
         shards = sorted({int(s) for s in shards})
-        # incremental-snapshot bookkeeping (round 11): shards re-packed
-        # since the last snapshot are the only ones snapshot_incremental
-        # must rewrite
-        self._pending_snapshot_shards = (
-            getattr(self, "_pending_snapshot_shards", set()) | set(shards)
-        )
         refreshed = vectors
         if self._attr_cols is not None:
             refreshed = _with_attr_cols(refreshed, self._attr_cols)
@@ -1346,8 +1747,8 @@ class ServingIndex:
             ~F.col("shard").isin(shards)
         ).unionByName(seg)
         _track_segment(self, seg)
-        self.n_shards = self.blobs.count()
-        self._blobs_severed = True
+        # the re-packed shards queue for snapshot_incremental
+        _after_resident_change(self, shards)
         # routing table: carry over unaffected shards, recompute affected
         if self._centroids is None and self._cents_kv is not None:
             old_kv = self._cents_kv
@@ -1361,221 +1762,6 @@ class ServingIndex:
             )
         self._vectors = vectors
         return self
-
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-
-    def snapshot(
-        self, path: str, stream_batch_id: "int | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "ServingIndex":
-        """Persist the SERVING form itself (round 8): the packed blob
-        relation, the routing table, and a manifest (dimension,
-        attr_cols, and — when attributes are packed — the strategy
-        histogram). A restarted serving fleet then cold-starts with
-        :meth:`from_snapshot` from a parquet read: NO shard cogroup, NO
-        graph rebuild, NO pickling — at 100 TB that is the difference
-        between minutes of parquet scan and hours of re-packing. The
-        snapshot is byte-faithful: answers from the restored index are
-        identical to the live one (tested). The manifest carries a
-        ``format_version`` plus a blob fingerprint, written through the
-        Hadoop FileSystem API so the whole snapshot lives on ONE storage
-        URI (s3a://, hdfs://, file://) — round 10.
-
-        Crash-safe since round 12 (ADVICE): a re-snapshot writes the new
-        base/routing into fresh VERSIONED dirs, commits by rewriting the
-        manifest (generations=[]), and only then deletes the previous
-        version's dirs — a crash at any point leaves either the old or
-        the new snapshot fully restorable, never a manifest pointing at
-        deleted generation dirs; and a handle restored from this very
-        path never overwrites the dirs its lazily-persisted blob plan
-        still reads."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        self._routing_table().write.mode("overwrite").parquet(
-            f"{path}/{_vdir('routing', version)}"
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "dimension": self._dimension,
-            "blobs": _blob_fingerprint(self.blobs),
-            "snapshot_id": _uuid.uuid4().hex,
-            "base_version": version,
-            "base_dirs": [_vdir("blobs", version)],
-            "routing_dir": _vdir("routing", version),
-            "generations": [],
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_shards = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    def snapshot_incremental(
-        self,
-        path: str,
-        max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "ServingIndex":
-        """Incremental snapshot after :meth:`refresh` (round 11, VERDICT
-        r10 item 7): write ONLY the shards re-packed since the last
-        snapshot as a new blob GENERATION (``blobs_gen_N``) plus an
-        updated manifest, instead of rewriting the whole packed
-        relation — on a 100 TB fleet snapshotting after each ingest
-        wave, the write cost tracks the wave, not the corpus.
-        :meth:`from_snapshot` resolves per-shard latest-generation-wins
-        (a shard a generation CLAIMS but writes no row for was removed).
-
-        COMPACTION (round 12, VERDICT r11 item 2): restore unions one
-        parquet read per generation, so an unbounded chain degrades
-        restore linearly in wave count. When stacking would push the
-        chain past ``max_generations``, the call folds the whole chain
-        into a fresh full base (:meth:`snapshot` — crash-safe versioned
-        rewrite) instead: restore depth is bounded at
-        ``max_generations`` + base, and per-wave cost stays wave-sized
-        amortized (one corpus-sized write every ``max_generations``
-        waves, from the already-resident blob cache).
-
-        Requires lineage: this handle must have written or restored the
-        snapshot at ``path`` INCLUDING its current generation tip (the
-        unaffected base blobs are reused byte-as-is, which is only
-        sound against the chain this handle's resident state descends
-        from); otherwise a typed :class:`SnapshotIntegrityError` says
-        to run :meth:`snapshot`. With nothing pending, only the
-        manifest refreshes."""
-        spark = self._spark
-        manifest = _read_manifest(spark, path, type(self).__name__)
-        _check_incremental_lineage(self, path, manifest)
-        pending = sorted(
-            getattr(self, "_pending_snapshot_shards", set())
-        )
-        gens = manifest.get("generations", [])
-        if pending and len(gens) >= max_generations:
-            return self.snapshot(
-                path, stream_batch_id=stream_batch_id,
-                stream_epoch=stream_epoch,
-            )
-        # stake the writer-intent token on the INCREMENTAL path too
-        # (round 14, ADVICE): two handles restored from the same
-        # manifest tip carry identical lineage tokens and would both
-        # pass the lineage check, then race the same blobs_gen_N dir
-        # and the manifest — same interleaved-writer corruption the
-        # full-snapshot guard covers, same typed-error fix
-        _wtoken = _acquire_snapshot_write(spark, path)
-        if pending:
-            gen = (max(g["gen"] for g in gens) + 1) if gens else 1
-            self.blobs.filter(
-                F.col("shard").isin(pending)
-            ).write.mode("overwrite").parquet(f"{path}/blobs_gen_{gen}")
-            gens = gens + [
-                {"gen": gen, "shards": [int(s) for s in pending]}
-            ]
-            # routing changes only with the shards; write it as a fresh
-            # versioned dir so a crash mid-write can't clobber the dir
-            # the committed manifest points at (replay-idempotent: a
-            # retry rewrites the same gen + routing dirs)
-            routing_dir = f"routing_g{gen}"
-            self._routing_table().write.mode("overwrite").parquet(
-                f"{path}/{routing_dir}"
-            )
-        else:
-            routing_dir = manifest.get(
-                "routing_dir",
-                _vdir("routing", int(manifest.get("base_version", 1))),
-            )
-        old_routing = manifest.get(
-            "routing_dir",
-            _vdir("routing", int(manifest.get("base_version", 1))),
-        )
-        manifest.update(
-            {
-                "dimension": self._dimension,
-                "blobs": _blob_fingerprint(self.blobs),
-                "generations": gens,
-                "routing_dir": routing_dir,
-                **_manifest_attr_fields(
-                    self._attr_cols, self._attribute_histogram
-                ),
-            }
-        )
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(spark, path, _wtoken)
-        _write_manifest(spark, path, manifest)
-        self._pending_snapshot_shards = set()
-        self._snapshot_lineage = (path, *_lineage_token(manifest))
-        if old_routing != routing_dir:
-            _fs_delete(spark, f"{path}/{old_routing}")
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "ServingIndex":
-        """Restore a serving handle from :meth:`snapshot` — a parquet
-        read + persist, no re-pack. The restored handle serves queries
-        (routed, filtered, per-tenant, per-window) identically to the
-        original; :meth:`refresh` still works by passing the live
-        post-append/remove relations. Raises
-        :class:`SnapshotIntegrityError` on a version/class mismatch or
-        (with ``validate``) a truncated blob relation."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._dimension = manifest["dimension"]
-        idx._storage_level = storage_level
-        _restore_attr_fields(idx, manifest)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        base_v = int(manifest.get("base_version", 1))
-        rel = _resolve_generations(
-            spark, path,
-            spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-            "shard", manifest.get("generations", []),
-        )
-        # eager localCheckpoint, not persist: one materializing pass at
-        # restore, and the resident relation keeps no lineage into the
-        # snapshot dirs a later full snapshot's GC deletes — see warm()
-        idx.blobs = rel.repartition(idx._n_serve).localCheckpoint(
-            eager=True
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-        idx._cents_kv = spark.read.parquet(
-            f"{path}/{manifest.get('routing_dir', _vdir('routing', base_v))}"
-        ).localCheckpoint(eager=True)
-        idx._centroids = None
-        idx._vectors = None  # refresh() takes live relations explicitly
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
 
     def _routing_table(self):
         if self._cents_kv is None:
@@ -1683,9 +1869,7 @@ class ServingIndex:
         # chunks before the lazily-unioned result executes (re-shippable,
         # so correct either way, but needlessly re-broadcast). By the next
         # serving call the previous results are consumed.
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         if self._dimension is not None:
             from vector_index_spark.functions.distance import assert_dim
@@ -1699,16 +1883,6 @@ class ServingIndex:
             ),
             max_queries_per_batch,
         )
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            # _vectors already carries the casted __attr{i} pack columns
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._vectors, _attr_pack_names(self._attr_cols)
-                )
-            )
-        return self._attr_hist
 
     def query_by_attribute(
         self,
@@ -1750,9 +1924,7 @@ class ServingIndex:
                 f"qattr_col must name {len(self._attr_cols)} column(s) "
                 f"(one per attr_col), got {qattr_col!r}"
             )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
             F.col(vec_col).alias("vec"),
@@ -1989,9 +2161,7 @@ class ServingIndex:
                 )
             return self._grouped_masked_batch(qids, Q, groups, k)
 
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         return chunked_over_queries(t, run_chunk, max_queries_per_batch)
 
     def _query_batch(
@@ -2104,26 +2274,91 @@ class ServingIndex:
 CELL_BLOB_SCHEMA = "cell long, n_vectors long, blob binary"
 
 
-def _pack_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=["cell", "n_vectors", "blob"])
-    pdf = pdf.sort_values("id")
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-    payload: tuple = (ids, X)
-    attrs = _stack_attrs(pdf)
-    if attrs is not None:
-        payload = (ids, X, attrs)
-    return pd.DataFrame(
-        {
-            "cell": [int(key[0])],
-            "n_vectors": [len(ids)],
-            "blob": [pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)],
-        }
+def _pack_keyed(key_col: str, src_col: str, dtype):
+    """``applyInPandas`` pack for the keyed routes: one id-sorted
+    (ids, matrix[, attrs]) blob per key — raw float64 vectors on
+    Cell/RPT, int32 residual codes on IVF-PQ. ``pack`` carries no type
+    hints: partial hints make ``applyInPandas`` warn on every call, and
+    without any it takes the grouped-map form directly."""
+
+    def pack(key, pdf):
+        if len(pdf) == 0:
+            return pd.DataFrame(columns=[key_col, "n_vectors", "blob"])
+        pdf = pdf.sort_values("id")
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        payload: tuple = (ids, np.stack(pdf[src_col].to_numpy()).astype(dtype))
+        attrs = _stack_attrs(pdf)
+        if attrs is not None:
+            payload = (*payload, attrs)
+        return pd.DataFrame(
+            {
+                key_col: [int(key[0])],
+                "n_vectors": [len(ids)],
+                "blob": [pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)],
+            }
+        )
+
+    return pack
+
+
+def _pack_flat(mats_of):
+    """``mapInPandas`` pack for the flat scan routes (PQ / SQ / PCA):
+    one id-sorted (ids, *mats_of(rows)[, attrs]) blob per partition,
+    keyed by its min id — globally unique, so remove() and the
+    generation resolve can key blobs by ``part``."""
+
+    def pack(batches):
+        rows = [pdf for pdf in batches if len(pdf)]
+        if not rows:
+            return
+        pdf = pd.concat(rows, ignore_index=True).sort_values("id")
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        payload: tuple = (ids, *mats_of(pdf))
+        attrs = _stack_attrs(pdf)
+        if attrs is not None:
+            payload = (*payload, attrs)
+        yield pd.DataFrame(
+            {
+                "part": [int(ids[0])],
+                "n_vectors": [len(ids)],
+                "blob": [pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)],
+            }
+        )
+
+    return pack
+
+
+def _code_relation(code_rel: DataFrame, idx) -> DataFrame:
+    """The code relation a compressed route packs, with the attribute
+    codes joined on from the cold corpus when the handle packs
+    attributes — a one-time build-side id equi-join (at 100 TB both
+    sides shuffle once on id; never paid per batch)."""
+    if idx._attr_cols is None:
+        return code_rel
+    return code_rel.join(
+        idx._train.select(
+            F.col(idx._id_col).alias("id"),
+            *_attr_code_exprs(idx._train, idx._attr_cols),
+        ),
+        "id",
     )
 
 
-class CellServingIndex:
+def _pq_codes(R, books) -> np.ndarray:
+    """Per-subspace nearest codewords of the rows of ``R`` — identical
+    math to ``pq.encode_pq`` and build_ivfpq's residual encode (the
+    tie-safe GEMM form), so refreshed payloads byte-match a cold
+    encode."""
+    from vector_index_spark.index.pq import argmin_sq_dist
+
+    m, _, sub = books.shape
+    codes = np.empty((len(R), m), dtype=np.int32)
+    for s in range(m):
+        codes[:, s] = argmin_sq_dist(R[:, s * sub : (s + 1) * sub], books[s])
+    return codes
+
+
+class CellServingIndex(_ResidentBlobIndex):
     """Warm serving for cell-partitioned flat routes (IVF): the
     ``assigned`` relation of :func:`~vector_index_spark.index.ivf.build_ivf`
     packs into one resident (cell, ids, matrix) blob relation, and a
@@ -2143,49 +2378,35 @@ class CellServingIndex:
     of operators/filtered.ivf_filtered_knn, with the predicate evaluated
     on resident arrays instead of a posting scan."""
 
+    _KEY, _SCHEMA = "cell", CELL_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_cells", "n_cells"
+    _HIST_SOURCE = "_assigned"
+    _ROUTED = True
+
     def __init__(
         self,
         assigned: DataFrame,
         centroids: DataFrame,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
-        spark = assigned.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        self._attr_cols = normalize_attr_cols(attr_col)
+        super().__init__(assigned.sparkSession, attr_col)
         cols = [F.col("centroid_id").alias("cell"), F.col("id"), F.col("vec")]
         if self._attr_cols is not None:
             cols.extend(_attr_code_exprs(assigned, self._attr_cols))
         self.blobs = (
             assigned.select(*cols)
             .groupBy("cell")
-            .applyInPandas(_pack_cell, CELL_BLOB_SCHEMA)
+            .applyInPandas(
+                _pack_keyed("cell", "vec", np.float64), CELL_BLOB_SCHEMA
+            )
             .repartition(self._n_serve)
-            .persist(storage_level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # lazily-built (attr tuple -> distinct-id count) histogram for the
-        # filtered-query strategy rule; one small aggregate job, once
-        self._attr_hist = None
         self._assigned = assigned if self._attr_cols is not None else None
         # the centroid table is tiny (one row per cell) — checkpoint now
         self._cents_kv = centroids.select(
             F.col("centroid_id").alias("id"), "vec"
         ).localCheckpoint(eager=True)
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def warm(self) -> "CellServingIndex":
-        # sever lineage into the assigned relation's source files — see
-        # PqServingIndex.warm()
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_cells = self.blobs.count()
-        return self
 
     def refresh(self, new_rows: DataFrame) -> "CellServingIndex":
         """Incremental ingest on the resident IVF route (round 13,
@@ -2204,157 +2425,11 @@ class CellServingIndex:
         blob byte-equals a cold pack over the union relation. Cost
         tracks the wave's affected cells; the touched cells queue for
         :meth:`snapshot_incremental`."""
-
-        def route_of(X):
-            # nearest existing cell — identical math to the build
-            cent = self._cents_kv.orderBy("id").collect()
-            cids = np.array([r["id"] for r in cent], dtype=np.int64)
-            C = np.stack(
-                [np.asarray(r["vec"], dtype=np.float64) for r in cent]
-            )
-            d = (
-                (X * X).sum(1)[:, None] - 2.0 * X @ C.T
-                + (C * C).sum(1)[None, :]
-            )
-            return cids[d.argmin(axis=1)]
-
         _keyed_refresh(
-            self, new_rows, "cell", CELL_BLOB_SCHEMA, route_of,
-            "_pending_snapshot_cells", "n_cells",
+            self, new_rows,
+            lambda X: (_nearest_cell(self._cents_kv, X)[0], X),
         )
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id (round 15 — the delete half of the
-        lifecycle; boundary replicas all go, emptied cells drop and
-        restore as removed). See :func:`_resident_remove`."""
-        return _resident_remove(
-            self, ids, "cell",
-            "_pending_snapshot_cells", "n_cells",
-        )
-
-    def snapshot_incremental(
-        self, path: str, max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "CellServingIndex":
-        """Incremental snapshot after :meth:`refresh` (round 13): only
-        the cells touched since the last snapshot, as a generation —
-        the routing table never changes on append (waves route to
-        existing cells). See :func:`_keyed_snapshot_incremental`."""
-        return _keyed_snapshot_incremental(
-            self, path, "cell", "_pending_snapshot_cells",
-            max_generations=max_generations,
-            stream_batch_id=stream_batch_id, stream_epoch=stream_epoch,
-        )
-
-    def snapshot(self, path: str,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None) -> "CellServingIndex":
-        """Persist the serving form (round 10): packed cell blobs, the
-        centroid routing table, and a versioned manifest — the raw
-        vectors live INSIDE the blobs, so the restore is self-contained
-        (no cold corpus argument).
-
-        Crash-safe since round 12: versioned dirs + manifest-commit +
-        GC-last, same protocol as :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        self._cents_kv.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('routing', version)}"
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "base_version": version,
-            "base_dirs": [_vdir("blobs", version)],
-            "routing_dir": _vdir("routing", version),
-            "snapshot_id": _uuid.uuid4().hex,
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_cells = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "CellServingIndex":
-        """Restore from :meth:`snapshot` — parquet read + persist, no
-        k-means assignment, no re-pack. Raises
-        :class:`SnapshotIntegrityError` on version/class mismatch or a
-        truncated blob relation."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        _restore_attr_fields(idx, manifest)
-        # the strategy histogram was snapshotted; the live relation is
-        # not needed for serving
-        idx._assigned = None
-        base_v = int(manifest.get("base_version", 1))
-        # eager localCheckpoint, not persist (round 13, ADVICE): persist
-        # keeps lineage into the versioned snapshot dirs, and the NEXT
-        # snapshot() on this path GCs the previous version — a cache-block
-        # loss would then recompute from deleted files (FAILED_READ_FILE).
-        # Same hazard ServingIndex/IvfPqServingIndex already sever.
-        # storage_level is retained for API compatibility only: the
-        # checkpointed restore materializes at Spark's local-checkpoint
-        # default (MEMORY_AND_DISK), the same level as the old default.
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "cell", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-        idx._cents_kv = spark.read.parquet(
-            f"{path}/{manifest.get('routing_dir', _vdir('routing', base_v))}"
-        ).localCheckpoint(eager=True)
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (raw float64 cell matrices + ids +
-        attrs; replicas>1 count each copy) — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, seg_stack=getattr(self, "_seg_stack", None)
-        )
-
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
 
     def query(
         self,
@@ -2408,24 +2483,13 @@ class CellServingIndex:
             self.last_filter_strategy = mode
         else:
             self.last_filter_strategy = None if allows is None else "prefilter"
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t,
             lambda chunk: self._query_batch(chunk, k, eff_nprobe, allows),
             max_queries_per_batch,
         )
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._assigned, self._attr_cols
-                )
-            )
-        return self._attr_hist
 
     def _query_batch(
         self, t: DataFrame, k: int, nprobe: int, allows=None,
@@ -2540,9 +2604,7 @@ class CellServingIndex:
                 "query_by_window needs exactly one attr_col= at "
                 "CellServingIndex construction (the windowed attribute)"
             )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
             F.col(vec_col).alias("vec"),
@@ -2609,9 +2671,7 @@ class CellServingIndex:
                 f"qattr_col must name {len(self._attr_cols)} column(s) "
                 f"(one per attr_col), got {qattr_col!r}"
             )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
             F.col(vec_col).alias("vec"),
@@ -2824,19 +2884,21 @@ class CellServingIndex:
 CODE_BLOB_SCHEMA = "part long, n_vectors long, blob binary"
 
 
-def _collect_wave(idx, new_rows: DataFrame, attr_source: "DataFrame | None",
-                  reset_hist: bool = True):
-    """Driver-side wave materialization shared by the compressed-route
-    refresh paths (round 13, VERDICT r12 item 5): select (id, vec[,
-    attr codes — joined from ``attr_source`` when given, read off
-    ``new_rows`` itself otherwise]), toPandas capped at
-    ``idx.wave_row_cap`` rows (round 14: the one-ingest-wave bound is
+def _collect_wave(idx, new_rows: DataFrame):
+    """Driver-side wave materialization shared by every refresh path
+    but the graph route's: select (id, vec[, attr codes]), toPandas
+    capped at ``idx.wave_row_cap`` rows (the one-ingest-wave bound is
     ENFORCED — an oversized wave raises :class:`WaveCapExceeded`
-    instead of OOMing the driver), return (ids int64, X float64,
-    attrs or None) — or None for an empty wave. Mirrors IvfPqServingIndex.refresh's intake.
-    ``reset_hist=False`` leaves the strategy histogram for the caller
-    to advance incrementally (the self-contained classes, whose source
-    relation is gone after a restore)."""
+    instead of OOMing the driver), return (ids int64, X float64, attrs
+    or None) — or None for an empty wave. Cold-corpus routes take the
+    attribute codes from their post-append corpus ``idx._train`` by id
+    join and reset the strategy histogram (it recomputes from that
+    corpus); self-contained routes read the codes off ``new_rows`` and
+    advance the histogram by the wave (:func:`_bump_hist_with_wave`)."""
+    attr_source = (
+        idx._train
+        if idx._attr_cols is not None and idx._COLD_CORPUS else None
+    )
     rows = new_rows.select(
         F.col(idx._id_col).alias("id"),
         F.col(idx._vec_col).alias("vec"),
@@ -2845,36 +2907,30 @@ def _collect_wave(idx, new_rows: DataFrame, attr_source: "DataFrame | None",
             if idx._attr_cols is not None and attr_source is None else ()
         ),
     )
-    joined_attrs = False
-    if idx._attr_cols is not None:
-        if attr_source is not None:
-            # LEFT join (round 14, ADVICE): the precondition checks
-            # ("train is the POST-APPEND corpus; ids unique in it")
-            # then read off the collected wave itself — a missing
-            # train id surfaces as a NULL attr code (the build-side
-            # code is never null: NULL attrs map to a sentinel), a
-            # duplicated train id as a duplicated wave id. No second
-            # action over new_rows, and the two causes report
-            # distinctly instead of both blaming "missing" rows.
-            rows = rows.join(
-                attr_source.select(
-                    F.col(idx._id_col).alias("id"),
-                    *_attr_code_exprs(attr_source, idx._attr_cols),
-                ),
-                "id",
-                "left",
-            )
-            joined_attrs = True
-        if reset_hist:
-            idx._attr_hist = None  # contents changed; histogram is stale
+    if attr_source is not None:
+        # LEFT join: the precondition checks ("train is the POST-APPEND
+        # corpus; ids unique in it") then read off the collected wave
+        # itself — a missing train id surfaces as a NULL attr code (the
+        # build-side code is never null: NULL attrs map to a sentinel),
+        # a duplicated train id as a duplicated wave id. No second
+        # action over new_rows, and the two causes report distinctly.
+        rows = rows.join(
+            attr_source.select(
+                F.col(idx._id_col).alias("id"),
+                *_attr_code_exprs(attr_source, idx._attr_cols),
+            ),
+            "id",
+            "left",
+        )
+        idx._attr_hist = None  # contents changed; histogram is stale
     cap = int(getattr(idx, "wave_row_cap", WAVE_ROW_CAP))
     wave = rows.limit(cap + 1).toPandas()  # bounded collect, ONE action
     _require_wave_cap(idx, len(wave), cap)
-    if joined_attrs and len(wave):
+    if attr_source is not None and len(wave):
         if wave["__attr0"].isna().any():
-            # enforced loudly (round 13 review): the id-join would
-            # otherwise silently drop the missing rows from the
-            # serving blobs forever while the snapshot advances
+            # enforced loudly: the id-join would otherwise silently drop
+            # the missing rows from the serving blobs forever while the
+            # snapshot advances
             raise ValueError(
                 "refresh(new_rows, train): some wave ids are missing "
                 "from the passed train relation — train must be the "
@@ -2902,8 +2958,10 @@ def _bump_hist_with_wave(idx, attrs) -> None:
     """Advance a self-contained class's strategy histogram by the
     wave's attribute tuple counts (wave ids are NEW, and the histogram
     counts distinct ids per tuple) — no rescan of a source relation
-    that is stale or gone after restore."""
-    if idx._attr_cols is None or attrs is None:
+    that is stale or gone after restore. Cold-corpus classes recompute
+    from their post-append corpus instead (reset in
+    :func:`_collect_wave`)."""
+    if idx._COLD_CORPUS or idx._attr_cols is None or attrs is None:
         return
     hist = dict(idx._attribute_histogram())
     uniq, counts = np.unique(attrs, axis=0, return_counts=True)
@@ -2913,32 +2971,34 @@ def _bump_hist_with_wave(idx, attrs) -> None:
     idx._attr_hist = hist
 
 
-def _flat_refresh(idx, new_rows: DataFrame, attr_source, mats_of,
-                  reset_hist: bool = True):
-    """Incremental ingest body for the FLAT scan routes (PQ / SQ / PCA,
-    round 13): the wave encodes with the handle's FROZEN model
-    (``mats_of(X)`` — a tuple of per-row matrices: PQ/SQ codes, PCA
-    (projection, raw); codebooks / bounds / basis never refit on
-    append, the snapshot contract) and lands as ONE NEW resident blob
-    row. These routes scan every blob with per-blob shortlists, so
-    appending a blob is the wave-cost-proportional refresh — there is
-    no keyed re-pack on an unpartitioned scan route, and recall is
-    monotone in blob count (each blob contributes its own top
-    candidates). Blob-count growth is bounded by the snapshot fold,
-    which compacts the resident relation back to ``n_serve`` blobs
+def _id_sorted_payload(ids, mats, attrs) -> tuple:
+    """One blob payload: ``(ids, *mats[, attrs])``, every per-row field
+    in id order — a merged blob then byte-equals a cold pack over the
+    union relation."""
+    order = np.argsort(ids, kind="stable")
+    payload = (ids[order], *(m[order] for m in mats))
+    return payload if attrs is None else (*payload, attrs[order])
+
+
+def _flat_refresh(idx, new_rows: DataFrame, mats_of) -> None:
+    """Incremental ingest body for the FLAT scan routes (PQ / SQ / PCA):
+    the wave encodes with the handle's FROZEN model (``mats_of(X)`` — a
+    tuple of per-row matrices: PQ/SQ codes, PCA (projection, raw);
+    codebooks / bounds / basis never refit on append, the snapshot
+    contract) and lands as ONE NEW resident blob row. These routes scan
+    every blob with per-blob shortlists, so appending a blob is the
+    wave-cost-proportional refresh — there is no keyed re-pack on an
+    unpartitioned scan route, and recall is monotone in blob count.
+    Blob-count growth is bounded by the snapshot fold, which compacts
+    the resident relation back to ``n_serve`` blobs
     (:func:`_flat_compact_blobs`). The new blob's ``part`` key is
     ``max(existing)+1`` — unique, so the generation-claim resolve
-    (:func:`_resolve_generations` on ``part``) stays sound. Returns
-    the collected wave (or None) for callers that advance their
-    histogram incrementally."""
-    got = _collect_wave(idx, new_rows, attr_source, reset_hist=reset_hist)
+    (:func:`_resolve_generations` on ``part``) stays sound."""
+    got = _collect_wave(idx, new_rows)
     if got is None:
-        return None
+        return
     ids, X, attrs = got
-    order = np.argsort(ids, kind="stable")
-    payload: tuple = (ids[order], *(m[order] for m in mats_of(X)))
-    if attrs is not None:
-        payload = (*payload, attrs[order])
+    payload = _id_sorted_payload(ids, mats_of(X), attrs)
     next_part = int(
         idx.blobs.agg(F.coalesce(F.max("part"), F.lit(-1))).collect()[0][0]
     ) + 1
@@ -2947,23 +3007,28 @@ def _flat_refresh(idx, new_rows: DataFrame, attr_source, mats_of,
           bytearray(pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)))],
         CODE_BLOB_SCHEMA,
     )
-    # segmented checkpoint (round 14, VERDICT r13 item 3): checkpoint
-    # ONLY the wave's blob (severs lineage into the wave's source
-    # files — see ServingIndex.warm()) and stack it lazily over the
-    # prior immutable leaves, so the per-wave copy is wave-sized, not
-    # corpus-sized; the stack compacts every MAX_RESIDENT_SEGMENTS
-    # waves (_track_segment) and at the snapshot fold
+    # segmented checkpoint: checkpoint ONLY the wave's blob (severs
+    # lineage into the wave's source files — see _ResidentBlobIndex.
+    # _sever) and stack it lazily over the prior immutable leaves, so
+    # the per-wave copy is wave-sized, not corpus-sized; the stack
+    # compacts every MAX_RESIDENT_SEGMENTS waves (_track_segment) and
+    # at the snapshot fold
     _adopt_base_leaf(idx)
     seg = new_blob.coalesce(1).localCheckpoint(eager=True)
     idx.blobs = idx.blobs.unionByName(seg)
     _track_segment(idx, seg)
-    idx.n_blobs = idx.blobs.count()
+    _after_resident_change(idx, {next_part})
+    _bump_hist_with_wave(idx, attrs)
+
+
+def _after_resident_change(idx, keys) -> None:
+    """Bookkeeping after a refresh or remove replaced resident blobs:
+    recount, keep the severed flag, drop the cached near-duplicate
+    probe, and queue the touched keys for the incremental snapshot."""
+    setattr(idx, idx._COUNT, idx.blobs.count())
     idx._blobs_severed = True
     idx._dup_multiplicity = None  # contents changed; re-probe lazily
-    idx._pending_snapshot_parts = (
-        getattr(idx, "_pending_snapshot_parts", set()) | {next_part}
-    )
-    return got
+    setattr(idx, idx._PENDING, getattr(idx, idx._PENDING, set()) | set(keys))
 
 
 def _flat_compact_blobs(idx) -> None:
@@ -3013,7 +3078,7 @@ def _flat_compact_blobs(idx) -> None:
         .mapInPandas(merge, CODE_BLOB_SCHEMA)
         .localCheckpoint(eager=True)
     )
-    idx.n_blobs = idx.blobs.count()
+    setattr(idx, idx._COUNT, idx.blobs.count())
     idx._blobs_severed = True
     old_blobs.unpersist()
     for leaf in old_leaves:  # free the lazy union's segment leaves too
@@ -3022,32 +3087,24 @@ def _flat_compact_blobs(idx) -> None:
     idx._seg_bytes = []
 
 
-def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
-                   route_of, pending_attr: str, count_attr: str) -> None:
-    """Incremental ingest body for the KEYED self-contained routes
-    (Cell / RPT, round 13): the wave routes through the handle's FROZEN
-    model (``route_of(X)`` -> one key per row: nearest cell / tree
-    leaf — never refit on append) and merges into only the affected
-    keys' resident blobs; every other blob carries over. Per-blob
-    payloads are id-sorted (ids, X[, attrs]) arrays, so a merged blob
-    byte-equals a cold pack over the union relation. Cost tracks the
-    wave's affected keys; they queue on ``pending_attr`` for the
+def _keyed_refresh(idx, new_rows: DataFrame, encode) -> None:
+    """Incremental ingest body for the KEYED routes (Cell / RPT /
+    IVF-PQ): ``encode(X)`` routes the wave through the handle's FROZEN
+    model and returns ``(keys, mat)`` — one nearest cell / tree leaf per
+    row (never refit on append) and the per-row payload matrix (raw X
+    on Cell/RPT, residual int32 codes on IVF-PQ). The rows merge into
+    only the affected keys' resident blobs; every other blob carries
+    over. Per-blob payloads are id-sorted (ids, mat[, attrs]) arrays,
+    so a merged blob byte-equals a cold pack over the union relation.
+    Cost tracks the wave's affected keys; they queue for the
     incremental snapshot."""
-    spark = idx._spark
-    cols = [F.col("id"), F.col("vec")]
-    if idx._attr_cols is not None:
-        cols.extend(_attr_code_exprs(new_rows, idx._attr_cols))
-    cap = int(getattr(idx, "wave_row_cap", WAVE_ROW_CAP))
-    # bounded collect, one action: the one-ingest-wave convention is
-    # ENFORCED (round 14) — an oversized wave raises instead of OOMing
-    wave = new_rows.select(*cols).limit(cap + 1).toPandas()
-    _require_wave_cap(idx, len(wave), cap)
-    if len(wave) == 0:
+    got = _collect_wave(idx, new_rows)
+    if got is None:
         return
-    ids = wave["id"].to_numpy(dtype=np.int64)
-    X = np.stack(wave["vec"].to_numpy()).astype(np.float64)
-    keys = route_of(X)
-    attrs = _stack_attrs(wave)
+    ids, X, attrs = got
+    keys, mat = encode(X)
+    spark = idx._spark
+    key_col = idx._KEY
     per_key: dict = {}
     for i, c in enumerate(keys):
         per_key.setdefault(int(c), []).append(i)
@@ -3055,7 +3112,7 @@ def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
     add = {
         c: (
             ids[np.asarray(ix, dtype=np.int64)],
-            X[np.asarray(ix, dtype=np.int64)],
+            mat[np.asarray(ix, dtype=np.int64)],
             attrs[np.asarray(ix, dtype=np.int64)]
             if attrs is not None else None,
         )
@@ -3065,9 +3122,7 @@ def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
     # as the query paths): the prior wave's merge was materialized by
     # its eager localCheckpoint, so its broadcast is consumed — a
     # long pure-maintain stream must not accumulate one per wave
-    for b in idx._live_bcs:
-        b.unpersist(blocking=False)
-    idx._live_bcs = []
+    idx._release_broadcasts()
     bc = spark.sparkContext.broadcast(add)
     idx._live_bcs.append(bc)
 
@@ -3076,16 +3131,15 @@ def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
             keys_o, nvec_o, blob_o = [], [], []
             for key, blob in zip(pdf_b[key_col], pdf_b["blob"]):
                 payload = pickle.loads(blob)
-                a_ids, a_X, a_attrs = bc.value[int(key)]
-                u_ids = np.concatenate([payload[0], a_ids])
-                u_X = np.concatenate([payload[1], a_X], axis=0)
-                order = np.argsort(u_ids, kind="stable")
-                new_payload: tuple = (u_ids[order], u_X[order])
-                if len(payload) > 2:
-                    u_attrs = np.concatenate([payload[2], a_attrs], axis=0)
-                    new_payload = (*new_payload, u_attrs[order])
+                a_ids, a_mat, a_attrs = bc.value[int(key)]
+                new_payload = _id_sorted_payload(
+                    np.concatenate([payload[0], a_ids]),
+                    (np.concatenate([payload[1], a_mat], axis=0),),
+                    np.concatenate([payload[2], a_attrs], axis=0)
+                    if len(payload) > 2 else None,
+                )
                 keys_o.append(int(key))
-                nvec_o.append(len(u_ids))
+                nvec_o.append(len(new_payload[0]))
                 blob_o.append(
                     pickle.dumps(
                         new_payload, protocol=pickle.HIGHEST_PROTOCOL
@@ -3100,39 +3154,33 @@ def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
         for r in idx.blobs.filter(F.col(key_col).isin(affected))
         .select(key_col).collect()
     }
-    merged = (
+    seg_plan = (
         idx.blobs.filter(F.col(key_col).isin(sorted(present)))
-        .mapInPandas(merge, schema)
+        .mapInPandas(merge, idx._SCHEMA)
     )
-    parts = [merged]
     missing = [c for c in affected if c not in present]
     if missing:
         # a key whose blob row didn't exist (it had zero rows): the
         # wave creates it from scratch
         rows_new = []
         for c in missing:
-            a_ids, a_X, a_attrs = add[c]
-            order = np.argsort(a_ids, kind="stable")
-            payload: tuple = (a_ids[order], a_X[order])
-            if a_attrs is not None:
-                payload = (*payload, a_attrs[order])
+            a_ids, a_mat, a_attrs = add[c]
+            payload = _id_sorted_payload(a_ids, (a_mat,), a_attrs)
             rows_new.append(
                 (int(c), int(len(a_ids)),
                  bytearray(pickle.dumps(
                      payload, protocol=pickle.HIGHEST_PROTOCOL
                  )))
             )
-        parts.append(spark.createDataFrame(rows_new, schema))
-    seg_plan = parts[0]
-    for p in parts[1:]:
-        seg_plan = seg_plan.unionByName(p)
-    # segmented checkpoint (round 14, VERDICT r13 item 3): materialize
-    # ONLY the wave-affected keys' merged/new blobs (an eager
-    # localCheckpoint — severs lineage into the wave's source files,
-    # see ServingIndex.warm()); every unaffected blob carries over as
-    # a lazy filter of the prior immutable leaves, so the per-wave
-    # copy is affected-key-sized, not corpus-sized. The stack compacts
-    # every MAX_RESIDENT_SEGMENTS waves (_track_segment).
+        seg_plan = seg_plan.unionByName(
+            spark.createDataFrame(rows_new, idx._SCHEMA)
+        )
+    # segmented checkpoint: materialize ONLY the wave-affected keys'
+    # merged/new blobs (an eager localCheckpoint — severs lineage into
+    # the wave's source files); every unaffected blob carries over as a
+    # lazy filter of the prior immutable leaves, so the per-wave copy is
+    # affected-key-sized, not corpus-sized. The stack compacts every
+    # MAX_RESIDENT_SEGMENTS waves (_track_segment).
     seg = seg_plan.coalesce(
         max(1, min(idx._n_serve, len(affected)))
     ).localCheckpoint(eager=True)
@@ -3141,13 +3189,20 @@ def _keyed_refresh(idx, new_rows: DataFrame, key_col: str, schema: str,
         ~F.col(key_col).isin(affected)
     ).unionByName(seg)
     _track_segment(idx, seg)
-    setattr(idx, count_attr, idx.blobs.count())
-    idx._blobs_severed = True
+    _after_resident_change(idx, affected)
     _bump_hist_with_wave(idx, attrs)
-    setattr(
-        idx, pending_attr,
-        getattr(idx, pending_attr, set()) | set(affected),
-    )
+
+
+def _nearest_cell(cents_kv: DataFrame, X):
+    """Nearest existing cell per row of ``X`` against the (id, vec)
+    routing table — identical math to the build-side assignment.
+    Returns (cell ids, centroid matrix, row -> centroid position)."""
+    cent = cents_kv.orderBy("id").collect()
+    cids = np.array([r["id"] for r in cent], dtype=np.int64)
+    C = np.stack([np.asarray(r["vec"], dtype=np.float64) for r in cent])
+    d = (X * X).sum(1)[:, None] - 2.0 * X @ C.T + (C * C).sum(1)[None, :]
+    nearest = d.argmin(axis=1)
+    return cids[nearest], C, nearest
 
 
 def _collect_remove_ids(idx, ids) -> "np.ndarray | None":
@@ -3195,8 +3250,7 @@ def _subtract_removed_ledger(idx, hist: dict) -> dict:
     return hist
 
 
-def _resident_remove(idx, ids, key_col: str,
-                     pending_attr: str, count_attr: str) -> int:
+def _resident_remove(idx, ids) -> int:
     """Remove rows by id from a resident blob relation (round 15,
     VERDICT r14 item 3) — the delete half of the ingest lifecycle for
     every maskable serving class (Cell / RPT keyed routes; IVF-PQ
@@ -3211,7 +3265,7 @@ def _resident_remove(idx, ids, key_col: str,
     cost); affected keys' masked blobs land as a checkpointed segment
     on the standard stack (byte/count-bounded compaction applies), and
     a FULLY-emptied key's blob row drops from the resident relation.
-    The affected keys queue on ``pending_attr``: the next incremental
+    The affected keys queue for the next incremental snapshot, which
     snapshot claims them, and an emptied key with no generation row
     restores as removed (:func:`_resolve_generations`'s existing
     claimed-but-absent semantics — no snapshot-format change). The
@@ -3226,6 +3280,7 @@ def _resident_remove(idx, ids, key_col: str,
     corpus rows per id. Returns the number of rows removed (replica
     copies counted)."""
     spark = idx._spark
+    key_col = idx._KEY
     doomed = _collect_remove_ids(idx, ids)
     if doomed is None:
         return 0
@@ -3247,9 +3302,7 @@ def _resident_remove(idx, ids, key_col: str,
             "blob. Rebuild the handle cold from its source relation "
             "(which re-keys uniquely), then remove"
         )
-    for b in idx._live_bcs:
-        b.unpersist(blocking=False)
-    idx._live_bcs = []
+    idx._release_broadcasts()
     bc = spark.sparkContext.broadcast(doomed)
     idx._live_bcs.append(bc)
     attred = idx._attr_cols is not None
@@ -3339,145 +3392,8 @@ def _resident_remove(idx, ids, key_col: str,
         ~F.col(key_col).isin(affected)
     ).unionByName(seg)
     _track_segment(idx, seg)
-    setattr(idx, count_attr, idx.blobs.count())
-    idx._blobs_severed = True
-    if hasattr(idx, "_dup_multiplicity"):
-        idx._dup_multiplicity = None  # contents changed; re-probe lazily
-    setattr(
-        idx, pending_attr,
-        getattr(idx, pending_attr, set()) | set(affected),
-    )
+    _after_resident_change(idx, affected)
     return n_removed
-
-
-def _keyed_snapshot_incremental(
-    idx, path: str, key_col: str, pending_attr: str,
-    max_generations: int = 8,
-    stream_batch_id: "int | None" = None,
-    stream_epoch: "str | None" = None,
-):
-    """Incremental snapshot body for the keyed self-contained routes
-    (Cell / RPT): only the keys touched since the last snapshot, as a
-    generation — the routing model never refits on append. Same
-    lineage + fold contract as
-    :meth:`ServingIndex.snapshot_incremental`; the restore is
-    self-contained, so there is no corpus fingerprint to maintain."""
-    spark = idx._spark
-    manifest = _read_manifest(spark, path, type(idx).__name__)
-    _check_incremental_lineage(idx, path, manifest)
-    pending = sorted(getattr(idx, pending_attr, set()))
-    gens = manifest.get("generations", [])
-    if pending and len(gens) >= max_generations:
-        return idx.snapshot(
-            path, stream_batch_id=stream_batch_id,
-            stream_epoch=stream_epoch,
-        )
-    # writer-intent token on the incremental path (round 14, ADVICE):
-    # two same-tip handles pass the lineage check and would race the
-    # generation dir + manifest — stake before the dir write, verify
-    # before the manifest commit (see _acquire_snapshot_write)
-    _wtoken = _acquire_snapshot_write(spark, path)
-    if pending:
-        gen = (max(g["gen"] for g in gens) + 1) if gens else 1
-        idx.blobs.filter(
-            F.col(key_col).isin(pending)
-        ).write.mode("overwrite").parquet(f"{path}/blobs_gen_{gen}")
-        gens = gens + [{"gen": gen, "shards": [int(c) for c in pending]}]
-    manifest.update(
-        {
-            "blobs": _blob_fingerprint(idx.blobs),
-            "generations": gens,
-            **_manifest_attr_fields(idx._attr_cols, idx._attribute_histogram),
-        }
-    )
-    if stream_batch_id is not None:
-        manifest["last_batch_id"] = int(stream_batch_id)
-    if stream_epoch is not None:
-        manifest["stream_epoch"] = str(stream_epoch)
-    _commit_snapshot_write(spark, path, _wtoken)
-    _write_manifest(spark, path, manifest)
-    setattr(idx, pending_attr, set())
-    idx._snapshot_lineage = (path, *_lineage_token(manifest))
-    return idx
-
-
-def _flat_snapshot_incremental(
-    idx, path: str, fingerprint_corpus: bool = True,
-    max_generations: int = 8,
-    stream_batch_id: "int | None" = None,
-    corpus_fp_delta: "tuple[int, int] | None" = None,
-    stream_epoch: "str | None" = None,
-    self_contained: bool = False,
-):
-    """Incremental snapshot body for the flat scan routes (PQ / SQ /
-    PCA, round 13): write ONLY the wave blobs appended since the last
-    snapshot as a new generation keyed by ``part`` — the model arrays
-    never refit on append so they are not rewritten. Folds past
-    ``max_generations`` COMPACT the resident blobs to ``n_serve`` and
-    rewrite a full base (bounded restore depth AND bounded blob count).
-    Same lineage / corpus-fingerprint-delta contract as
-    :meth:`IvfPqServingIndex.snapshot_incremental`; ``self_contained``
-    (PCA — raw vectors live inside the blobs) skips the cold-corpus
-    fingerprint machinery entirely."""
-    spark = idx._spark
-    manifest = _read_manifest(spark, path, type(idx).__name__)
-    _check_incremental_lineage(idx, path, manifest)
-    pending = sorted(getattr(idx, "_pending_snapshot_parts", set()))
-    gens = manifest.get("generations", [])
-    delta_mode = (
-        not self_contained
-        and corpus_fp_delta is not None
-        and manifest.get("corpus") is not None
-    )
-    if pending and len(gens) >= max_generations:
-        _flat_compact_blobs(idx)
-        if self_contained:
-            return idx.snapshot(
-                path, stream_batch_id=stream_batch_id,
-                stream_epoch=stream_epoch,
-            )
-        return idx.snapshot(
-            path,
-            fingerprint_corpus=fingerprint_corpus or delta_mode,
-            stream_batch_id=stream_batch_id,
-            stream_epoch=stream_epoch,
-        )
-    # writer-intent token on the incremental path (round 14, ADVICE) —
-    # see _keyed_snapshot_incremental
-    _wtoken = _acquire_snapshot_write(spark, path)
-    if self_contained:
-        corpus_fp = None
-    elif fingerprint_corpus:
-        corpus_fp = _corpus_fingerprint(idx._train, idx._id_col, idx._vec_col)
-    elif delta_mode:
-        corpus_fp = dict(manifest["corpus"])
-        corpus_fp["n_rows"] += int(corpus_fp_delta[0])
-        corpus_fp["id_crc_sum"] += int(corpus_fp_delta[1])
-    else:
-        corpus_fp = None
-    if pending:
-        gen = (max(g["gen"] for g in gens) + 1) if gens else 1
-        idx.blobs.filter(
-            F.col("part").isin(pending)
-        ).write.mode("overwrite").parquet(f"{path}/blobs_gen_{gen}")
-        gens = gens + [{"gen": gen, "shards": [int(p) for p in pending]}]
-    manifest.update(
-        {
-            "blobs": _blob_fingerprint(idx.blobs),
-            "generations": gens,
-            **_manifest_attr_fields(idx._attr_cols, idx._attribute_histogram),
-            **({} if self_contained else {"corpus": corpus_fp}),
-        }
-    )
-    if stream_batch_id is not None:
-        manifest["last_batch_id"] = int(stream_batch_id)
-    if stream_epoch is not None:
-        manifest["stream_epoch"] = str(stream_epoch)
-    _commit_snapshot_write(spark, path, _wtoken)
-    _write_manifest(spark, path, manifest)
-    idx._pending_snapshot_parts = set()
-    idx._snapshot_lineage = (path, *_lineage_token(manifest))
-    return idx
 
 
 def _translate_positions(ranked: DataFrame, spark, pos_ix, real_qids) -> DataFrame:
@@ -3579,7 +3495,7 @@ def _rerank_exact(cands: DataFrame, train: DataFrame, t: DataFrame, k: int,
     )
 
 
-class PqServingIndex:
+class PqServingIndex(_ResidentBlobIndex):
     """Warm PQ serving: the (id, codes array<int>) relation packs into
     ``n_serve`` resident (ids, code-matrix) blobs; a query batch broadcasts
     its ADC lookup tables and scans every cached blob — no per-batch
@@ -3598,104 +3514,37 @@ class PqServingIndex:
     selective filter still switches to exact brute force over the
     matching cold-corpus subset (operators/filtered strategy rule)."""
 
+    _KEY, _SCHEMA = "part", CODE_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_parts", "n_blobs"
+    _HIST_SOURCE = "_train"
+    _ARRAYS = (("codebooks.npy", "_books"),)
+    _COLD_CORPUS = _QUANTIZED = True
+
     def __init__(
         self,
         encoded: DataFrame,
         train: DataFrame,
         codebooks,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         id_col: str = "id",
         vec_col: str = "vec",
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
-        spark = encoded.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        super().__init__(encoded.sparkSession, attr_col)
         self._train, self._id_col, self._vec_col = train, id_col, vec_col
         self._books = codebooks
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
-        n = self._n_serve
-
-        def pack(batches):
-            rows = []
-            for pdf in batches:
-                if len(pdf):
-                    rows.append(pdf)
-            if not rows:
-                return
-            pdf = pd.concat(rows, ignore_index=True).sort_values("id")
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int32)
-            payload: tuple = (ids, codes)
-            attrs = _stack_attrs(pdf)
-            if attrs is not None:
-                payload = (ids, codes, attrs)
-            yield pd.DataFrame(
-                {
-                    "part": [int(ids[0])],  # min id: globally UNIQUE key (round 15)
-                    "n_vectors": [len(ids)],
-                    "blob": [pickle.dumps(payload,
-                                          protocol=pickle.HIGHEST_PROTOCOL)],
-                }
-            )
-
-        code_rel = encoded.select("id", "codes")
-        if self._attr_cols is not None:
-            # build-side join rides the attributes into the blobs — a
-            # one-time cost, mirroring IvfPqServingIndex
-            code_rel = code_rel.join(
-                train.select(
-                    F.col(id_col).alias("id"),
-                    *_attr_code_exprs(train, self._attr_cols),
-                ),
-                "id",
-            )
         self.blobs = (
-            code_rel
+            _code_relation(encoded.select("id", "codes"), self)
             .repartition(self._n_serve)
-            .mapInPandas(pack, CODE_BLOB_SCHEMA)
-            .persist(storage_level)
-        )
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._train, self._attr_cols, id_col=self._id_col
-                )
+            .mapInPandas(
+                _pack_flat(
+                    lambda pdf: (
+                        np.stack(pdf["codes"].to_numpy()).astype(np.int32),
+                    )
+                ),
+                CODE_BLOB_SCHEMA,
             )
-        return self._attr_hist
-
-    def warm(self) -> "PqServingIndex":
-        # eager localCheckpoint severs lineage into the encode relation's
-        # source files (round 13): a maintain-loop wave APPENDS to the
-        # corpus path, Spark auto-invalidates plan caches on writes to
-        # their source paths, and a persist-backed blob relation would
-        # silently RE-ENCODE from the post-append corpus — slow at best,
-        # wave rows duplicated into the resident blobs at worst (the
-        # round-12 ServingIndex/IvfPqServingIndex lesson, now on all
-        # serving classes).
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_blobs = self.blobs.count()
-        return self
-
-    def reroute_dense_to(self, handle) -> "PqServingIndex":
-        """Attach a graph-route :class:`ServingIndex` (same corpus; same
-        attr packing when ``query_by_*`` is used) as the dense-corpus
-        fallback: when the near-duplicate multiplicity exceeds the
-        shortlist budget ``candidate_factor*k``, queries DISPATCH to it
-        instead of warning (round 13, VERDICT r12 item 4 — the SCALE.md
-        routing rule as dispatch; raw-vector beam recall is 1.0 exactly
-        where compressed shortlists collapse). ``None`` detaches."""
-        return _attach_dense_fallback(self, handle)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
     def refresh(self, new_rows: DataFrame,
                 train: DataFrame) -> "PqServingIndex":
@@ -3708,178 +3557,11 @@ class PqServingIndex:
         blob-count growth is compacted at the snapshot fold. ``train``
         is the post-append cold corpus (re-rank tail + attribute
         source); new ids must be NEW (id-primary-key)."""
-        m, _, sub = self._books.shape
-
-        def mats_of(X):
-            codes = np.empty((len(X), m), dtype=np.int32)
-            # identical math to pq.encode_pq — merged answers equal a
-            # cold encode over the union corpus (tie-safe GEMM form,
-            # bit-identical to the broadcast temp it replaced)
-            from vector_index_spark.index.pq import argmin_sq_dist
-
-            for s in range(m):
-                codes[:, s] = argmin_sq_dist(
-                    X[:, s * sub : (s + 1) * sub], self._books[s]
-                )
-            return (codes,)
-
         self._train = train
-        _flat_refresh(self, new_rows, train, mats_of)
+        _flat_refresh(
+            self, new_rows, lambda X: (_pq_codes(X, self._books),)
+        )
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id from the resident code blobs (round 15):
-        removed ids can never be shortlisted, so the exact re-rank (an
-        id join against the cold corpus) never resurfaces them; the
-        corpus fingerprint is untouched. Emptied parts drop and restore
-        as removed. See :func:`_resident_remove`."""
-        return _resident_remove(
-            self, ids, "part",
-            "_pending_snapshot_parts", "n_blobs",
-        )
-
-    def snapshot_incremental(
-        self, path: str, fingerprint_corpus: bool = True,
-        max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        corpus_fp_delta: "tuple[int, int] | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "PqServingIndex":
-        """Incremental snapshot after :meth:`refresh` — wave blobs only,
-        as a generation keyed by ``part``; folds compact the resident
-        blobs and rewrite a full base. See
-        :func:`_flat_snapshot_incremental`."""
-        return _flat_snapshot_incremental(
-            self, path, fingerprint_corpus=fingerprint_corpus,
-            max_generations=max_generations,
-            stream_batch_id=stream_batch_id,
-            corpus_fp_delta=corpus_fp_delta, stream_epoch=stream_epoch,
-        )
-
-    def snapshot(self, path: str,
-                 fingerprint_corpus: bool = True,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None) -> "PqServingIndex":
-        """Persist the serving form (round 10): packed code blobs, the
-        codebook array, and a versioned manifest carrying the cold
-        corpus FINGERPRINT — the raw vectors for the exact re-rank tail
-        are NOT snapshotted (they live wherever they live; passed at
-        restore and validated against the fingerprint).
-
-        Crash-safe since round 12: versioned dirs + manifest-commit +
-        GC-last, same protocol as :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('codebooks.npy', version)}",
-            self._books,
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "base_version": version,
-            "base_dirs": [
-                _vdir("blobs", version), _vdir("codebooks.npy", version),
-            ],
-            "id_col": self._id_col,
-            "vec_col": self._vec_col,
-            "snapshot_id": _uuid.uuid4().hex,
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            # fingerprint_corpus=False skips the raw-corpus scan (count
-            # + id checksum + spot vectors) — at 5M rows that scan
-            # dominates the snapshot write (SCALE.md round 11); the
-            # trade is recorded in the manifest: restore then validates
-            # blobs only and cannot catch cold-corpus drift
-            "corpus": _corpus_fingerprint(
-                self._train, self._id_col, self._vec_col
-            ) if fingerprint_corpus else None,
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_parts = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        train: DataFrame,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "PqServingIndex":
-        """Restore from :meth:`snapshot` plus the cold corpus relation.
-        With ``validate`` (default) the passed ``train`` is checked
-        against the snapshot's corpus fingerprint;
-        :class:`SnapshotIntegrityError` on drift."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        idx._train = train
-        idx._id_col = manifest["id_col"]
-        idx._vec_col = manifest["vec_col"]
-        _restore_attr_fields(idx, manifest)
-        base_v = int(manifest.get("base_version", 1))
-        idx._books = _fs_read_npy(
-            spark, f"{path}/{_vdir('codebooks.npy', base_v)}"
-        )
-        # eager localCheckpoint, not persist (round 13, ADVICE): persist
-        # keeps lineage into the versioned snapshot dirs, and the NEXT
-        # snapshot() on this path GCs the previous version — a cache-block
-        # loss would then recompute from deleted files (FAILED_READ_FILE).
-        # Same hazard ServingIndex/IvfPqServingIndex already sever.
-        # storage_level is retained for API compatibility only: the
-        # checkpointed restore materializes at Spark's local-checkpoint
-        # default (MEMORY_AND_DISK), the same level as the old default.
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "part", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-            if manifest["corpus"] is not None:
-                # None = the writer opted out (fingerprint_corpus=False)
-                _check_corpus_fingerprint(
-                    train, idx._id_col, idx._vec_col, manifest["corpus"],
-                    path,
-                )
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (int32 code matrices — the PQ
-        compression ratio vs raw shows up here) plus the driver-held
-        codebooks — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, (self._books,),
-            seg_stack=getattr(self, "_seg_stack", None),
-        )
 
     def query_by_window(
         self,
@@ -4018,12 +3700,6 @@ class PqServingIndex:
             broadcast_cands=small,
         )
 
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-
     def query(
         self,
         test: DataFrame,
@@ -4074,9 +3750,7 @@ class PqServingIndex:
                     qid_col=qid_col, id_col=self._id_col,
                     test_vec=vec_col, train_vec=self._vec_col,
                 )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t,
@@ -4154,7 +3828,7 @@ class PqServingIndex:
         )
 
 
-class SqServingIndex:
+class SqServingIndex(_ResidentBlobIndex):
     """Warm SQ8 serving: uint8 code matrices resident per blob; a query
     batch broadcasts its query matrix, each blob dequantizes transiently
     and runs one GEMM + per-blob top-ncand, and candidates re-rank exactly
@@ -4168,98 +3842,44 @@ class SqServingIndex:
     selective filter switches to exact brute force over the matching
     cold-corpus subset."""
 
+    _KEY, _SCHEMA = "part", CODE_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_parts", "n_blobs"
+    _HIST_SOURCE = "_train"
+    _ARRAYS = (("mins.npy", "_mins"), ("span.npy", "_span"))
+    _COLD_CORPUS = _QUANTIZED = True
+
     def __init__(
         self,
         encoded: DataFrame,
         train: DataFrame,
         mins,
         maxs,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         id_col: str = "id",
         vec_col: str = "vec",
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
-        spark = encoded.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        super().__init__(encoded.sparkSession, attr_col)
         self._train, self._id_col, self._vec_col = train, id_col, vec_col
         self._mins = np.asarray(mins, dtype=np.float64)
         self._span = np.where(
             np.asarray(maxs, dtype=np.float64) > self._mins,
             np.asarray(maxs, dtype=np.float64) - self._mins, 1.0,
         )
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
         dim = len(self._mins)
-        n = self._n_serve
-
-        def pack(batches):
-            rows = []
-            for pdf in batches:
-                if len(pdf):
-                    rows.append(pdf)
-            if not rows:
-                return
-            pdf = pd.concat(rows, ignore_index=True).sort_values("id")
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            raw = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8)
-            codes = raw.reshape(len(ids), dim).copy()
-            payload: tuple = (ids, codes)
-            attrs = _stack_attrs(pdf)
-            if attrs is not None:
-                payload = (ids, codes, attrs)
-            yield pd.DataFrame(
-                {
-                    "part": [int(ids[0])],  # min id: globally UNIQUE key (round 15)
-                    "n_vectors": [len(ids)],
-                    "blob": [pickle.dumps(payload,
-                                          protocol=pickle.HIGHEST_PROTOCOL)],
-                }
-            )
-
-        code_rel = encoded.select("id", "codes")
-        if self._attr_cols is not None:
-            code_rel = code_rel.join(
-                train.select(
-                    F.col(id_col).alias("id"),
-                    *_attr_code_exprs(train, self._attr_cols),
-                ),
-                "id",
-            )
         self.blobs = (
-            code_rel
+            _code_relation(encoded.select("id", "codes"), self)
             .repartition(self._n_serve)
-            .mapInPandas(pack, CODE_BLOB_SCHEMA)
-            .persist(storage_level)
-        )
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._train, self._attr_cols, id_col=self._id_col
-                )
+            .mapInPandas(
+                _pack_flat(
+                    lambda pdf: (
+                        np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8)
+                        .reshape(len(pdf), dim).copy(),
+                    )
+                ),
+                CODE_BLOB_SCHEMA,
             )
-        return self._attr_hist
-
-    def warm(self) -> "SqServingIndex":
-        # sever lineage into the encode relation's source files — see
-        # PqServingIndex.warm()
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_blobs = self.blobs.count()
-        return self
-
-    def reroute_dense_to(self, handle) -> "SqServingIndex":
-        """Dense-corpus graph-route fallback — see
-        :meth:`PqServingIndex.reroute_dense_to`."""
-        return _attach_dense_fallback(self, handle)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
     def refresh(self, new_rows: DataFrame,
                 train: DataFrame) -> "SqServingIndex":
@@ -4278,162 +3898,8 @@ class SqServingIndex:
             ).astype(np.uint8),)
 
         self._train = train
-        _flat_refresh(self, new_rows, train, mats_of)
+        _flat_refresh(self, new_rows, mats_of)
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id from the resident code blobs (round 15):
-        removed ids can never be shortlisted, so the exact re-rank (an
-        id join against the cold corpus) never resurfaces them; the
-        corpus fingerprint is untouched. Emptied parts drop and restore
-        as removed. See :func:`_resident_remove`."""
-        return _resident_remove(
-            self, ids, "part",
-            "_pending_snapshot_parts", "n_blobs",
-        )
-
-    def snapshot_incremental(
-        self, path: str, fingerprint_corpus: bool = True,
-        max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        corpus_fp_delta: "tuple[int, int] | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "SqServingIndex":
-        """Incremental snapshot after :meth:`refresh` — see
-        :func:`_flat_snapshot_incremental`."""
-        return _flat_snapshot_incremental(
-            self, path, fingerprint_corpus=fingerprint_corpus,
-            max_generations=max_generations,
-            stream_batch_id=stream_batch_id,
-            corpus_fp_delta=corpus_fp_delta, stream_epoch=stream_epoch,
-        )
-
-    def snapshot(self, path: str,
-                 fingerprint_corpus: bool = True,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None) -> "SqServingIndex":
-        """Persist the serving form (round 10): packed uint8 code blobs,
-        the per-dimension scale arrays, and a versioned manifest with
-        the cold corpus fingerprint (same contract as
-        :meth:`PqServingIndex.snapshot`).
-
-        Crash-safe since round 12: versioned dirs + manifest-commit +
-        GC-last, same protocol as :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('mins.npy', version)}", self._mins
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('span.npy', version)}", self._span
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "base_version": version,
-            "base_dirs": [
-                _vdir("blobs", version), _vdir("mins.npy", version),
-                _vdir("span.npy", version),
-            ],
-            "id_col": self._id_col,
-            "vec_col": self._vec_col,
-            "snapshot_id": _uuid.uuid4().hex,
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            # fingerprint_corpus=False skips the raw-corpus scan (count
-            # + id checksum + spot vectors) — at 5M rows that scan
-            # dominates the snapshot write (SCALE.md round 11); the
-            # trade is recorded in the manifest: restore then validates
-            # blobs only and cannot catch cold-corpus drift
-            "corpus": _corpus_fingerprint(
-                self._train, self._id_col, self._vec_col
-            ) if fingerprint_corpus else None,
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_parts = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        train: DataFrame,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "SqServingIndex":
-        """Restore from :meth:`snapshot` plus the cold corpus relation
-        (validated against the snapshot's fingerprint by default)."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        idx._train = train
-        idx._id_col = manifest["id_col"]
-        idx._vec_col = manifest["vec_col"]
-        _restore_attr_fields(idx, manifest)
-        base_v = int(manifest.get("base_version", 1))
-        idx._mins = _fs_read_npy(
-            spark, f"{path}/{_vdir('mins.npy', base_v)}"
-        )
-        idx._span = _fs_read_npy(
-            spark, f"{path}/{_vdir('span.npy', base_v)}"
-        )
-        # eager localCheckpoint, not persist (round 13, ADVICE): persist
-        # keeps lineage into the versioned snapshot dirs, and the NEXT
-        # snapshot() on this path GCs the previous version — a cache-block
-        # loss would then recompute from deleted files (FAILED_READ_FILE).
-        # Same hazard ServingIndex/IvfPqServingIndex already sever.
-        # storage_level is retained for API compatibility only: the
-        # checkpointed restore materializes at Spark's local-checkpoint
-        # default (MEMORY_AND_DISK), the same level as the old default.
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "part", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-            if manifest["corpus"] is not None:
-                # None = the writer opted out (fingerprint_corpus=False)
-                _check_corpus_fingerprint(
-                    train, idx._id_col, idx._vec_col, manifest["corpus"],
-                    path,
-                )
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (uint8 code matrices — ~8x below raw
-        float64) plus the driver-held bounds — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, (self._mins, self._span),
-            seg_stack=getattr(self, "_seg_stack", None),
-        )
 
     def query_by_window(
         self,
@@ -4564,12 +4030,6 @@ class SqServingIndex:
             broadcast_cands=small,
         )
 
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-
     def query(
         self,
         test: DataFrame,
@@ -4620,9 +4080,7 @@ class SqServingIndex:
                     qid_col=qid_col, id_col=self._id_col,
                     test_vec=vec_col, train_vec=self._vec_col,
                 )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t,
@@ -4683,7 +4141,7 @@ class SqServingIndex:
                              self._vec_col, broadcast_cands=small)
 
 
-class IvfPqServingIndex:
+class IvfPqServingIndex(_ResidentBlobIndex):
     """Warm IVF-PQ serving — the route a 100 TB deployment actually
     serves (SCALE.md byte math: probes touch ~100-1000x fewer bytes than
     raw scans). Per-cell (ids, code-matrix) blobs sit resident with the
@@ -4709,6 +4167,11 @@ class IvfPqServingIndex:
     # residual codes only collide WITHIN a cell (round 13, ADVICE):
     # the near-dup multiplicity probe scopes duplicate groups by cell
     _multiplicity_key = "cell"
+    _KEY, _SCHEMA = "cell", CELL_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_cells", "n_cells"
+    _HIST_SOURCE = "_train"
+    _ARRAYS = (("centroids.npy", "_C"), ("codebooks.npy", "_books"))
+    _ROUTED = _COLD_CORPUS = _QUANTIZED = True
 
     def __init__(
         self,
@@ -4716,85 +4179,33 @@ class IvfPqServingIndex:
         centroids: DataFrame,
         codebooks,
         train: DataFrame,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         id_col: str = "id",
         vec_col: str = "vec",
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
+        from vector_index_spark.index.ivf import centroid_matrix
 
-        spark = encoded.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        super().__init__(encoded.sparkSession, attr_col)
         self._train, self._id_col, self._vec_col = train, id_col, vec_col
         self._books = codebooks
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
-        self._storage_level = storage_level
-
-        def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame(columns=["cell", "n_vectors", "blob"])
-            pdf = pdf.sort_values("id")
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int32)
-            payload: tuple = (ids, codes)
-            attrs = _stack_attrs(pdf)
-            if attrs is not None:
-                payload = (ids, codes, attrs)
-            return pd.DataFrame(
-                {
-                    "cell": [int(key[0])],
-                    "n_vectors": [len(ids)],
-                    "blob": [pickle.dumps(payload,
-                                          protocol=pickle.HIGHEST_PROTOCOL)],
-                }
-            )
-
-        code_rel = encoded.select(
-            F.col("centroid_id").alias("cell"), "id", "codes"
-        )
-        if self._attr_cols is not None:
-            # one-time build-side equi-join on id to ride the attributes
-            # into the blobs (encoded carries only codes); at 100 TB both
-            # sides shuffle once on id — a build cost, never paid per batch
-            code_rel = code_rel.join(
-                train.select(
-                    F.col(id_col).alias("id"),
-                    *_attr_code_exprs(train, self._attr_cols),
-                ),
-                "id",
-            )
         self.blobs = (
-            code_rel
+            _code_relation(
+                encoded.select(
+                    F.col("centroid_id").alias("cell"), "id", "codes"
+                ),
+                self,
+            )
             .groupBy("cell")
-            .applyInPandas(pack, CELL_BLOB_SCHEMA)
+            .applyInPandas(
+                _pack_keyed("cell", "codes", np.int32), CELL_BLOB_SCHEMA
+            )
             .repartition(self._n_serve)
-            .persist(storage_level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         self._cents_kv = centroids.select(
             F.col("centroid_id").alias("id"), "vec"
         ).localCheckpoint(eager=True)
-        from vector_index_spark.index.ivf import centroid_matrix
-
         self._C = centroid_matrix(centroids)
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def warm(self) -> "IvfPqServingIndex":
-        # eager localCheckpoint severs lineage into the cold-corpus
-        # files the maintain loop appends to — see ServingIndex.warm()
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_cells = self.blobs.count()
-        return self
-
-    def reroute_dense_to(self, handle) -> "IvfPqServingIndex":
-        """Dense-corpus graph-route fallback — see
-        :meth:`PqServingIndex.reroute_dense_to`."""
-        return _attach_dense_fallback(self, handle)
 
     def refresh(
         self, new_rows: DataFrame, train: DataFrame,
@@ -4817,393 +4228,16 @@ class IvfPqServingIndex:
         (tested). Cost tracks the wave's affected cells, never corpus
         size; the touched cells queue for :meth:`snapshot_incremental`.
         """
-        spark = self._spark
         self._train = train
-        # shared intake (round 14): wave cap enforced, attr codes via a
-        # LEFT join off train with distinct missing-vs-duplicate errors
-        got = _collect_wave(
-            self, new_rows,
-            train if self._attr_cols is not None else None,
-        )
-        if got is None:
-            return self
-        ids, X, _wave_attrs = got
-        # nearest existing cell — the routing table is the bounded side
-        cent = self._cents_kv.orderBy("id").collect()
-        cids = np.array([r["id"] for r in cent], dtype=np.int64)
-        C = np.stack(
-            [np.asarray(r["vec"], dtype=np.float64) for r in cent]
-        )
-        d = (
-            (X * X).sum(1)[:, None] - 2.0 * X @ C.T + (C * C).sum(1)[None, :]
-        )
-        nearest = d.argmin(axis=1)
-        cells = cids[nearest]
-        # encode residuals with the existing books — identical math to
-        # build_ivfpq's encode pass (ivfpq.py), so merged payloads
-        # byte-match a cold re-encode
-        m, _, sub = self._books.shape
-        R = X - C[nearest]
-        codes = np.empty((len(R), m), dtype=np.int32)
-        # identical math to build_ivfpq's encode pass (tie-safe GEMM,
-        # bit-identical to the broadcast temp it replaced) — merged
-        # payloads byte-match a cold re-encode
-        from vector_index_spark.index.pq import argmin_sq_dist
 
-        for s in range(m):
-            codes[:, s] = argmin_sq_dist(
-                R[:, s * sub : (s + 1) * sub], self._books[s]
-            )
-        attrs = _wave_attrs
-        per_cell: dict = {}
-        for i, c in enumerate(cells):
-            per_cell.setdefault(int(c), []).append(i)
-        affected = sorted(per_cell)
-        add = {
-            c: (
-                ids[np.asarray(ix, dtype=np.int64)],
-                codes[np.asarray(ix, dtype=np.int64)],
-                attrs[np.asarray(ix, dtype=np.int64)]
-                if attrs is not None else None,
-            )
-            for c, ix in per_cell.items()
-        }
-        # recycle the previous call's broadcasts first (the same posture
-        # as the query paths): the prior wave's merge was materialized by
-        # its eager localCheckpoint, so its broadcast is consumed — a
-        # long pure-maintain stream must not accumulate one per wave
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-        bc = spark.sparkContext.broadcast(add)
-        self._live_bcs.append(bc)
+        def encode(X):
+            # residuals against the nearest existing cell, encoded with
+            # the existing books
+            cells, C, nearest = _nearest_cell(self._cents_kv, X)
+            return cells, _pq_codes(X - C[nearest], self._books)
 
-        def merge(batches):
-            for pdf_b in batches:
-                cells_o, nvec_o, blob_o = [], [], []
-                for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                    payload = pickle.loads(blob)
-                    a_ids, a_codes, a_attrs = bc.value[int(cell)]
-                    u_ids = np.concatenate([payload[0], a_ids])
-                    u_codes = np.concatenate(
-                        [payload[1], a_codes], axis=0
-                    ).astype(np.int32)
-                    order = np.argsort(u_ids, kind="stable")
-                    new_payload: tuple = (u_ids[order], u_codes[order])
-                    if len(payload) > 2:
-                        u_attrs = np.concatenate([payload[2], a_attrs], axis=0)
-                        new_payload = (*new_payload, u_attrs[order])
-                    cells_o.append(int(cell))
-                    nvec_o.append(len(u_ids))
-                    blob_o.append(
-                        pickle.dumps(
-                            new_payload, protocol=pickle.HIGHEST_PROTOCOL
-                        )
-                    )
-                yield pd.DataFrame(
-                    {"cell": cells_o, "n_vectors": nvec_o, "blob": blob_o}
-                )
-
-        present = {
-            int(r["cell"])
-            for r in self.blobs.filter(F.col("cell").isin(affected))
-            .select("cell").collect()
-        }
-        merged = (
-            self.blobs.filter(F.col("cell").isin(sorted(present)))
-            .mapInPandas(merge, CELL_BLOB_SCHEMA)
-        )
-        seg_plan = merged
-        missing = [c for c in affected if c not in present]
-        if missing:
-            # a cell whose blob row didn't exist (it had zero rows):
-            # the wave creates it from scratch
-            rows_new = []
-            for c in missing:
-                a_ids, a_codes, a_attrs = add[c]
-                order = np.argsort(a_ids, kind="stable")
-                payload: tuple = (a_ids[order], a_codes[order])
-                if a_attrs is not None:
-                    payload = (*payload, a_attrs[order])
-                rows_new.append(
-                    (int(c), int(len(a_ids)),
-                     bytearray(pickle.dumps(
-                         payload, protocol=pickle.HIGHEST_PROTOCOL
-                     )))
-                )
-            seg_plan = seg_plan.unionByName(
-                spark.createDataFrame(rows_new, CELL_BLOB_SCHEMA)
-            )
-        # segmented checkpoint (round 14): materialize ONLY the
-        # wave-affected cells' merged/new blobs (eager localCheckpoint —
-        # severs lineage into the wave's source files, see warm());
-        # unaffected blobs carry over as a lazy filter of the prior
-        # immutable leaves; the stack compacts every
-        # MAX_RESIDENT_SEGMENTS waves (_track_segment)
-        seg = seg_plan.coalesce(
-            max(1, min(self._n_serve, len(affected)))
-        ).localCheckpoint(eager=True)
-        _adopt_base_leaf(self)
-        self.blobs = self.blobs.filter(
-            ~F.col("cell").isin(affected)
-        ).unionByName(seg)
-        _track_segment(self, seg)
-        self.n_cells = self.blobs.count()
-        self._blobs_severed = True
-        self._dup_multiplicity = None  # contents changed; re-probe lazily
-        self._pending_snapshot_cells = (
-            getattr(self, "_pending_snapshot_cells", set()) | set(affected)
-        )
+        _keyed_refresh(self, new_rows, encode)
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id from the resident code blobs (round 15):
-        removed ids can never be ADC-shortlisted, so the exact re-rank
-        (an id join) never resurfaces them even though the COLD corpus
-        still holds the dead rows until its own compaction — the corpus
-        fingerprint is untouched, so ``from_snapshot`` keeps validating.
-        Removed ids are retired (see :func:`_resident_remove`)."""
-        return _resident_remove(
-            self, ids, "cell",
-            "_pending_snapshot_cells", "n_cells",
-        )
-
-    def snapshot(self, path: str,
-                 fingerprint_corpus: bool = True,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None,
-                 ) -> "IvfPqServingIndex":
-        """Persist the compressed serving form (round 8): the per-cell
-        code blob relation, the centroid routing table, the driver-held
-        centroid/codebook arrays, and a manifest (attr_cols, id/vec
-        column names, strategy histogram). :meth:`from_snapshot` then
-        cold-starts a serving node from a parquet read + two .npy loads
-        — no encode-side groupBy, no re-pack. The cold corpus (`train`,
-        the raw vectors for the exact re-rank tail) is NOT snapshotted:
-        it lives wherever it already lives and is passed at restore; the
-        manifest records its FINGERPRINT (count + id checksum + spot
-        rows) so a drifted corpus raises at restore instead of silently
-        re-ranking shortlists against mismatched vectors (round 10).
-
-        Crash-safe since round 12 (ADVICE): blobs/routing/arrays land in
-        fresh VERSIONED dirs, the manifest rewrite is the commit point,
-        and the previous version + any generation chain is deleted only
-        after — see :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        self._cents_kv.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('routing', version)}"
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('centroids.npy', version)}",
-            self._C,
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('codebooks.npy', version)}",
-            self._books,
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "id_col": self._id_col,
-            "vec_col": self._vec_col,
-            "snapshot_id": _uuid.uuid4().hex,
-            "base_version": version,
-            "base_dirs": [
-                _vdir("blobs", version),
-                _vdir("centroids.npy", version),
-                _vdir("codebooks.npy", version),
-            ],
-            "routing_dir": _vdir("routing", version),
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            # fingerprint_corpus=False skips the raw-corpus scan (count
-            # + id checksum + spot vectors) — at 5M rows that scan
-            # dominates the snapshot write (SCALE.md round 11); the
-            # trade is recorded in the manifest: restore then validates
-            # blobs only and cannot catch cold-corpus drift
-            "corpus": _corpus_fingerprint(
-                self._train, self._id_col, self._vec_col
-            ) if fingerprint_corpus else None,
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_cells = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    def snapshot_incremental(
-        self, path: str, fingerprint_corpus: bool = True,
-        max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        corpus_fp_delta: "tuple[int, int] | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "IvfPqServingIndex":
-        """Incremental snapshot after :meth:`refresh` (round 11): write
-        ONLY the cells touched since the last snapshot as a new blob
-        GENERATION plus an updated manifest — centroids and codebooks
-        never refit on append, so the driver arrays are NOT rewritten
-        (the routing table carries over too: appends route to existing
-        cells). Same lineage contract as the graph route: this handle
-        must have written or restored the base snapshot at its current
-        generation tip. When stacking would push the chain past
-        ``max_generations``, the chain folds into a fresh full base
-        instead (round 12 compaction — bounded restore depth, see
-        :meth:`ServingIndex.snapshot_incremental`).
-
-        ``corpus_fp_delta=(wave_rows, wave_id_crc_sum)`` maintains the
-        cold-corpus fingerprint INCREMENTALLY when
-        ``fingerprint_corpus=False`` (round 12, ADVICE): the fingerprint
-        is additive (row count + order-independent id checksum; the
-        base's spot rows stay valid on an append-only corpus), so a
-        streaming fleet keeps full corpus-drift detection at restore
-        without any per-wave corpus scan. A fold re-anchors with a full
-        fingerprint scan (and fresh spot rows)."""
-        spark = self._spark
-        manifest = _read_manifest(spark, path, type(self).__name__)
-        _check_incremental_lineage(self, path, manifest)
-        pending = sorted(getattr(self, "_pending_snapshot_cells", set()))
-        gens = manifest.get("generations", [])
-        delta_mode = (
-            corpus_fp_delta is not None
-            and manifest.get("corpus") is not None
-        )
-        if pending and len(gens) >= max_generations:
-            return self.snapshot(
-                path,
-                fingerprint_corpus=fingerprint_corpus or delta_mode,
-                stream_batch_id=stream_batch_id,
-                stream_epoch=stream_epoch,
-            )
-        # writer-intent token on the incremental path (round 14,
-        # ADVICE) — see _keyed_snapshot_incremental
-        _wtoken = _acquire_snapshot_write(spark, path)
-        if fingerprint_corpus:
-            corpus_fp = _corpus_fingerprint(
-                self._train, self._id_col, self._vec_col
-            )
-        elif delta_mode:
-            corpus_fp = dict(manifest["corpus"])
-            corpus_fp["n_rows"] += int(corpus_fp_delta[0])
-            corpus_fp["id_crc_sum"] += int(corpus_fp_delta[1])
-        else:
-            corpus_fp = None
-        if pending:
-            gen = (max(g["gen"] for g in gens) + 1) if gens else 1
-            self.blobs.filter(
-                F.col("cell").isin(pending)
-            ).write.mode("overwrite").parquet(f"{path}/blobs_gen_{gen}")
-            gens = gens + [
-                {"gen": gen, "shards": [int(c) for c in pending]}
-            ]
-        manifest.update(
-            {
-                "blobs": _blob_fingerprint(self.blobs),
-                "corpus": corpus_fp,
-                "generations": gens,
-                **_manifest_attr_fields(
-                    self._attr_cols, self._attribute_histogram
-                ),
-            }
-        )
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(spark, path, _wtoken)
-        _write_manifest(spark, path, manifest)
-        self._pending_snapshot_cells = set()
-        self._snapshot_lineage = (path, *_lineage_token(manifest))
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        train: DataFrame,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "IvfPqServingIndex":
-        """Restore a compressed serving handle from :meth:`snapshot`
-        plus the cold corpus relation (read wherever it already lives).
-        Answers are byte-identical to the live handle (tested). With
-        ``validate`` (default) the passed ``train`` is checked against
-        the manifest's corpus fingerprint — count, id checksum, exact
-        spot vectors — and :class:`SnapshotIntegrityError` is raised on
-        drift; ``validate=False`` skips the id-column scan when the
-        caller has its own freshness guarantee."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        idx._train = train
-        idx._id_col = manifest["id_col"]
-        idx._vec_col = manifest["vec_col"]
-        _restore_attr_fields(idx, manifest)
-        base_v = int(manifest.get("base_version", 1))
-        idx._books = _fs_read_npy(
-            spark, f"{path}/{_vdir('codebooks.npy', base_v)}"
-        )
-        idx._C = _fs_read_npy(
-            spark, f"{path}/{_vdir('centroids.npy', base_v)}"
-        )
-        idx._storage_level = storage_level
-        # eager localCheckpoint, not persist — see ServingIndex.warm()
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "cell", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-            if manifest["corpus"] is not None:
-                # None = the writer opted out (fingerprint_corpus=False)
-                _check_corpus_fingerprint(
-                    train, idx._id_col, idx._vec_col, manifest["corpus"],
-                    path,
-                )
-        idx._cents_kv = spark.read.parquet(
-            f"{path}/{manifest.get('routing_dir', _vdir('routing', base_v))}"
-        ).localCheckpoint(eager=True)
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (per-cell int32 code blobs) plus the
-        driver-held centroids + codebooks — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, (self._C, self._books),
-            seg_stack=getattr(self, "_seg_stack", None),
-        )
-
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
 
     def query(
         self,
@@ -5281,9 +4315,7 @@ class IvfPqServingIndex:
                     train_vec=self._vec_col,
                 )
             eff_nprobe = boosted
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t,
@@ -5292,15 +4324,6 @@ class IvfPqServingIndex:
             ),
             max_queries_per_batch,
         )
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._train, self._attr_cols, id_col=self._id_col
-                )
-            )
-        return self._attr_hist
 
     def query_by_attribute(
         self,
@@ -5349,9 +4372,7 @@ class IvfPqServingIndex:
                 test, k, qattr_col=qattr_col,
                 qid_col=qid_col, vec_col=vec_col,
             )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
             F.col(vec_col).alias("vec"),
@@ -5615,9 +4636,7 @@ class IvfPqServingIndex:
                 test, k, lo_col=lo_col, hi_col=hi_col,
                 qid_col=qid_col, vec_col=vec_col,
             )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
             F.col(vec_col).alias("vec"),
@@ -5946,26 +4965,7 @@ class IvfPqServingIndex:
 LEAF_BLOB_SCHEMA = "leaf long, n_vectors long, blob binary"
 
 
-def _pack_leaf(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=["leaf", "n_vectors", "blob"])
-    pdf = pdf.sort_values("id")
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-    payload: tuple = (ids, X)
-    attrs = _stack_attrs(pdf)
-    if attrs is not None:
-        payload = (ids, X, attrs)
-    return pd.DataFrame(
-        {
-            "leaf": [int(key[0])],
-            "n_vectors": [len(ids)],
-            "blob": [pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)],
-        }
-    )
-
-
-class RptServingIndex:
+class RptServingIndex(_ResidentBlobIndex):
     """Warm serving for the RP-tree route: the ``assigned`` relation of
     :func:`~vector_index_spark.index.rpt.assign_rpt` packs into resident
     (leaf, ids, matrix) blobs; the tree itself (normals, thresholds —
@@ -5979,23 +4979,21 @@ class RptServingIndex:
     tests/test_serving.py). Leaves partition the corpus (no replicas),
     so no dedup step is needed before the ranking window."""
 
+    _KEY, _SCHEMA = "leaf", LEAF_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_leaves", "n_leaves"
+    _HIST_SOURCE = "_assigned"
+    _ARRAYS = (("normals.npy", "_W"), ("thresholds.npy", "_T"))
+
     def __init__(
         self,
         assigned: DataFrame,
         normals,
         thresholds,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
-        spark = assigned.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        super().__init__(assigned.sparkSession, attr_col)
         self._W = np.asarray(normals, dtype=np.float64)
         self._T = np.asarray(thresholds, dtype=np.float64)
-        self._depth = int(np.log2(len(self._W) + 1))
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
         self._assigned = assigned if self._attr_cols is not None else None
         cols = [F.col("leaf"), F.col("id"), F.col("vec")]
         if self._attr_cols is not None:
@@ -6005,32 +5003,16 @@ class RptServingIndex:
         self.blobs = (
             assigned.select(*cols)
             .groupBy("leaf")
-            .applyInPandas(_pack_leaf, LEAF_BLOB_SCHEMA)
-            .repartition(self._n_serve)
-            .persist(storage_level)
-        )
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._assigned, self._attr_cols
-                )
+            .applyInPandas(
+                _pack_keyed("leaf", "vec", np.float64), LEAF_BLOB_SCHEMA
             )
-        return self._attr_hist
+            .repartition(self._n_serve)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
-    def warm(self) -> "RptServingIndex":
-        # sever lineage into the assigned relation's source files — see
-        # PqServingIndex.warm()
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_leaves = self.blobs.count()
-        return self
+    @property
+    def _depth(self) -> int:
+        return int(np.log2(len(self._W) + 1))
 
     def refresh(self, new_rows: DataFrame) -> "RptServingIndex":
         """Incremental ingest on the RP-tree route (round 13, VERDICT
@@ -6046,144 +5028,10 @@ class RptServingIndex:
         from vector_index_spark.index.rpt import _leaves
 
         _keyed_refresh(
-            self, new_rows, "leaf", LEAF_BLOB_SCHEMA,
-            lambda X: _leaves(X, self._W, self._T, self._depth),
-            "_pending_snapshot_leaves", "n_leaves",
+            self, new_rows,
+            lambda X: (_leaves(X, self._W, self._T, self._depth), X),
         )
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id (round 15): doomed rows mask out of their
-        leaves' blobs through the frozen tree; emptied leaves drop and
-        restore as removed. See :func:`_resident_remove`."""
-        return _resident_remove(
-            self, ids, "leaf",
-            "_pending_snapshot_leaves", "n_leaves",
-        )
-
-    def snapshot_incremental(
-        self, path: str, max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "RptServingIndex":
-        """Incremental snapshot after :meth:`refresh` (round 13): only
-        the leaves touched since the last snapshot, as a generation —
-        the tree arrays never refit on append. See
-        :func:`_keyed_snapshot_incremental`."""
-        return _keyed_snapshot_incremental(
-            self, path, "leaf", "_pending_snapshot_leaves",
-            max_generations=max_generations,
-            stream_batch_id=stream_batch_id, stream_epoch=stream_epoch,
-        )
-
-    def snapshot(self, path: str,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None) -> "RptServingIndex":
-        """Persist the serving form (round 10): packed leaf blobs plus
-        the tree routing arrays (normals, thresholds — the kilobytes the
-        driver walks per query), versioned manifest. Raw vectors live
-        inside the leaf blobs, so the restore is self-contained.
-
-        Crash-safe since round 12: versioned dirs + manifest-commit +
-        GC-last, same protocol as :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('normals.npy', version)}", self._W
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('thresholds.npy', version)}",
-            self._T,
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "base_version": version,
-            "base_dirs": [
-                _vdir("blobs", version), _vdir("normals.npy", version),
-                _vdir("thresholds.npy", version),
-            ],
-            "snapshot_id": _uuid.uuid4().hex,
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_leaves = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "RptServingIndex":
-        """Restore from :meth:`snapshot` — parquet read + two tiny .npy
-        loads; no tree rebuild, no re-pack."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        base_v = int(manifest.get("base_version", 1))
-        idx._W = _fs_read_npy(
-            spark, f"{path}/{_vdir('normals.npy', base_v)}"
-        )
-        idx._T = _fs_read_npy(
-            spark, f"{path}/{_vdir('thresholds.npy', base_v)}"
-        )
-        idx._depth = int(np.log2(len(idx._W) + 1))
-        _restore_attr_fields(idx, manifest)
-        idx._assigned = None  # histogram restored from the manifest
-        # eager localCheckpoint, not persist (round 13, ADVICE): persist
-        # keeps lineage into the versioned snapshot dirs, and the NEXT
-        # snapshot() on this path GCs the previous version — a cache-block
-        # loss would then recompute from deleted files (FAILED_READ_FILE).
-        # Same hazard ServingIndex/IvfPqServingIndex already sever.
-        # storage_level is retained for API compatibility only: the
-        # checkpointed restore materializes at Spark's local-checkpoint
-        # default (MEMORY_AND_DISK), the same level as the old default.
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "leaf", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (raw float64 leaf matrices) plus the
-        driver-held tree (normals, thresholds) — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, (self._W, self._T),
-            seg_stack=getattr(self, "_seg_stack", None),
-        )
 
     def query_by_window(
         self,
@@ -6348,12 +5196,6 @@ class RptServingIndex:
             .select("qid", "rank", "id", "dist")
         )
 
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-
     def query(
         self,
         test: DataFrame,
@@ -6403,9 +5245,7 @@ class RptServingIndex:
             self.last_filter_strategy = mode
         else:
             self.last_filter_strategy = None if allows is None else "prefilter"
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t, lambda chunk: self._query_batch(chunk, k, eff_probes, allows),
@@ -6480,7 +5320,7 @@ class RptServingIndex:
         )
 
 
-class PcaServingIndex:
+class PcaServingIndex(_ResidentBlobIndex):
     """Warm serving for the PCA filter-and-refine route: the ``projected``
     relation (id, vec, pvec — raw vector co-located with its reduction,
     the route's DiskANN-style layout) packs into resident
@@ -6495,50 +5335,22 @@ class PcaServingIndex:
     # blob payload = (ids, reduced, RAW[, attrs]) — the raw vectors sit
     # at field 2 (Cell/RPT carry them at 1); see _blob_id_vecs
     _RAW_VEC_FIELD = 2
+    _KEY, _SCHEMA = "part", CODE_BLOB_SCHEMA
+    _PENDING, _COUNT = "_pending_snapshot_parts", "n_blobs"
+    _HIST_SOURCE = "_projected"
+    _ARRAYS = (("mean.npy", "_mean"), ("components.npy", "_comp"))
 
     def __init__(
         self,
         projected: DataFrame,
         mean,
         components,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         attr_col: "str | list[str] | None" = None,
     ):
-        from vector_index_spark.operators.filtered import normalize_attr_cols
-
-        spark = projected.sparkSession
-        self._n_serve = max(spark.sparkContext.defaultParallelism, 1)
+        super().__init__(projected.sparkSession, attr_col)
         self._mean = np.asarray(mean, dtype=np.float64)
         self._comp = np.asarray(components, dtype=np.float64)
-        self._attr_cols = normalize_attr_cols(attr_col)
-        self._attr_hist = None
         self._projected = projected if self._attr_cols is not None else None
-        n = self._n_serve
-
-        def pack(batches):
-            rows = []
-            for pdf in batches:
-                if len(pdf):
-                    rows.append(pdf)
-            if not rows:
-                return
-            pdf = pd.concat(rows, ignore_index=True).sort_values("id")
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            P = np.stack(pdf["pvec"].to_numpy()).astype(np.float64)
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            payload: tuple = (ids, P, X)
-            attrs = _stack_attrs(pdf)
-            if attrs is not None:
-                payload = (ids, P, X, attrs)
-            yield pd.DataFrame(
-                {
-                    "part": [int(ids[0])],  # min id: globally UNIQUE key (round 15)
-                    "n_vectors": [len(ids)],
-                    "blob": [pickle.dumps(payload,
-                                          protocol=pickle.HIGHEST_PROTOCOL)],
-                }
-            )
-
         cols = [F.col("id"), F.col("vec"), F.col("pvec")]
         if self._attr_cols is not None:
             # attr columns live on the projected relation (attach them
@@ -6547,36 +5359,17 @@ class PcaServingIndex:
         self.blobs = (
             projected.select(*cols)
             .repartition(self._n_serve)
-            .mapInPandas(pack, CODE_BLOB_SCHEMA)
-            .persist(storage_level)
-        )
-        self._spark = spark
-        self._live_bcs: list = []
-
-    def _attribute_histogram(self):
-        if self._attr_hist is None:
-            self._attr_hist = _subtract_removed_ledger(
-                self, _tuple_histogram(
-                self._projected, self._attr_cols
-                )
+            .mapInPandas(
+                _pack_flat(
+                    lambda pdf: tuple(
+                        np.stack(pdf[c].to_numpy()).astype(np.float64)
+                        for c in ("pvec", "vec")
+                    )
+                ),
+                CODE_BLOB_SCHEMA,
             )
-        return self._attr_hist
-
-    # _collect_wave's fixed column contract on this class (the
-    # projected relation is always (id, vec, pvec))
-    _id_col = "id"
-    _vec_col = "vec"
-
-    def warm(self) -> "PcaServingIndex":
-        # sever lineage into the projected relation's source files — see
-        # PqServingIndex.warm()
-        if not getattr(self, "_blobs_severed", False):
-            plan = self.blobs
-            self.blobs = plan.localCheckpoint(eager=True)
-            plan.unpersist()
-            self._blobs_severed = True
-        self.n_blobs = self.blobs.count()
-        return self
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
     def refresh(self, new_rows: DataFrame) -> "PcaServingIndex":
         """Incremental ingest on the PCA filter-and-refine route (round
@@ -6587,146 +5380,12 @@ class PcaServingIndex:
         (:meth:`PqServingIndex.refresh`). Self-contained: ``new_rows``
         carries (id, vec) plus the handle's attribute columns when it
         was built with ``attr_col``; new ids must be NEW."""
-
-        def mats_of(X):
+        _flat_refresh(
+            self, new_rows,
             # identical math to pca.project_pca over the frozen basis
-            return ((X - self._mean[None, :]) @ self._comp.T, X)
-
-        got = _flat_refresh(self, new_rows, None, mats_of, reset_hist=False)
-        if got is not None:
-            _bump_hist_with_wave(self, got[2])
+            lambda X: ((X - self._mean[None, :]) @ self._comp.T, X),
+        )
         return self
-
-    def remove(self, ids) -> int:
-        """Remove rows by id from the resident projection blobs (round
-        15): self-contained route — the raw vectors live in the blobs,
-        so the remove completes without any corpus-side bookkeeping.
-        See :func:`_resident_remove`."""
-        return _resident_remove(
-            self, ids, "part",
-            "_pending_snapshot_parts", "n_blobs",
-        )
-
-    def snapshot_incremental(
-        self, path: str, max_generations: int = 8,
-        stream_batch_id: "int | None" = None,
-        stream_epoch: "str | None" = None,
-    ) -> "PcaServingIndex":
-        """Incremental snapshot after :meth:`refresh` — wave blobs only;
-        folds compact and rewrite a full base. Self-contained (no
-        corpus fingerprint). See :func:`_flat_snapshot_incremental`."""
-        return _flat_snapshot_incremental(
-            self, path, max_generations=max_generations,
-            stream_batch_id=stream_batch_id, stream_epoch=stream_epoch,
-            self_contained=True,
-        )
-
-    def snapshot(self, path: str,
-                 stream_batch_id: "int | None" = None,
-                 stream_epoch: "str | None" = None) -> "PcaServingIndex":
-        """Persist the serving form (round 10): packed (ids, reduced,
-        raw) blobs plus the projection basis (mean, components),
-        versioned manifest. The raw vectors live inside the blobs, so
-        the restore is self-contained.
-
-        Crash-safe since round 12: versioned dirs + manifest-commit +
-        GC-last, same protocol as :meth:`ServingIndex.snapshot`."""
-        import uuid as _uuid
-
-        old = _read_manifest_any(self._spark, path)
-        version = int(old.get("base_version", 1)) + 1 if old else 1
-        # single-writer guard (round 13): stake intent before dir writes,
-        # verify at commit — a concurrent writer turns into a typed error
-        _wtoken = _acquire_snapshot_write(self._spark, path)
-        self.blobs.write.mode("overwrite").parquet(
-            f"{path}/{_vdir('blobs', version)}"
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('mean.npy', version)}", self._mean
-        )
-        _fs_write_npy(
-            self._spark, f"{path}/{_vdir('components.npy', version)}",
-            self._comp,
-        )
-        manifest = {
-            "format_version": SNAPSHOT_FORMAT_VERSION,
-            "class": type(self).__name__,
-            "base_version": version,
-            "base_dirs": [
-                _vdir("blobs", version), _vdir("mean.npy", version),
-                _vdir("components.npy", version),
-            ],
-            "snapshot_id": _uuid.uuid4().hex,
-            "generations": [],
-            "blobs": _blob_fingerprint(self.blobs),
-            **_manifest_attr_fields(
-                self._attr_cols, self._attribute_histogram
-            ),
-        }
-        if stream_batch_id is not None:
-            manifest["last_batch_id"] = int(stream_batch_id)
-        if stream_epoch is not None:
-            manifest["stream_epoch"] = str(stream_epoch)
-        _commit_snapshot_write(self._spark, path, _wtoken)
-        _write_manifest(self._spark, path, manifest)
-        self._snapshot_lineage = (path, manifest["snapshot_id"], 0)
-        self._pending_snapshot_parts = set()
-        _gc_stale_snapshot_dirs(self._spark, path, old, manifest)
-        return self
-
-    @classmethod
-    def from_snapshot(
-        cls,
-        spark,
-        path: str,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        validate: bool = True,
-    ) -> "PcaServingIndex":
-        """Restore from :meth:`snapshot` — parquet read + two .npy
-        loads; no PCA refit, no re-projection, no re-pack."""
-        manifest = _read_manifest(spark, path, cls.__name__)
-        idx = cls.__new__(cls)
-        idx._n_serve = max(spark.sparkContext.defaultParallelism, 1)
-        base_v = int(manifest.get("base_version", 1))
-        idx._mean = _fs_read_npy(spark, f"{path}/{_vdir('mean.npy', base_v)}")
-        idx._comp = _fs_read_npy(
-            spark, f"{path}/{_vdir('components.npy', base_v)}"
-        )
-        _restore_attr_fields(idx, manifest)
-        idx._projected = None  # histogram restored from the manifest
-        # eager localCheckpoint, not persist (round 13, ADVICE): persist
-        # keeps lineage into the versioned snapshot dirs, and the NEXT
-        # snapshot() on this path GCs the previous version — a cache-block
-        # loss would then recompute from deleted files (FAILED_READ_FILE).
-        # Same hazard ServingIndex/IvfPqServingIndex already sever.
-        # storage_level is retained for API compatibility only: the
-        # checkpointed restore materializes at Spark's local-checkpoint
-        # default (MEMORY_AND_DISK), the same level as the old default.
-        idx.blobs = (
-            _resolve_generations(
-                spark, path,
-                spark.read.parquet(f"{path}/{_vdir('blobs', base_v)}"),
-                "part", manifest.get("generations", []),
-            )
-            .repartition(idx._n_serve)
-            .localCheckpoint(eager=True)
-        )
-        idx._blobs_severed = True
-        if validate:
-            _check_blob_fingerprint(idx.blobs, manifest["blobs"], path)
-        idx._spark = spark
-        idx._live_bcs = []
-        idx._snapshot_lineage = (path, *_lineage_token(manifest))
-        return idx
-
-    def bytes_resident(self) -> dict:
-        """Executor-resident bytes (reduced + RAW float64 matrices —
-        this route trades memory for its exact in-blob refine) plus the
-        driver-held basis — see _bytes_resident."""
-        return _bytes_resident(
-            self.blobs, (self._mean, self._comp),
-            seg_stack=getattr(self, "_seg_stack", None),
-        )
 
     def query_by_window(
         self,
@@ -6870,12 +5529,6 @@ class PcaServingIndex:
             .select("qid", "rank", "id", "dist")
         )
 
-    def unpersist(self) -> None:
-        _unpersist_blobs(self)
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
-
     def query(
         self,
         test: DataFrame,
@@ -6920,9 +5573,7 @@ class PcaServingIndex:
         self.last_filter_strategy = (
             None if allows is None else ("exact" if exact_scan else "masked_scan")
         )
-        for b in self._live_bcs:
-            b.unpersist(blocking=False)
-        self._live_bcs = []
+        self._release_broadcasts()
         t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         return chunked_over_queries(
             t,
