@@ -85,6 +85,65 @@ def test_l2sq_vs_duckdb(spark, duck, pairs):
     compare_to_oracle(sdf, duck, sql)
 
 
+def test_zero_norm_cosine_is_null_on_every_form(spark):
+    """A zero-norm row has no cosine. Under the session's ANSI mode the
+    HOF kernel, the Arrow twin on a clean batch, and the twin's per-row
+    fallback (the zero row sharing its Arrow batch with a NULL row) all
+    return NULL for it; the other rows keep their values."""
+    from vector_index_spark.functions.distance import seq_metric_arrow
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    zero, one, two = [0.0] * 4, [1.0, 2.0, 3.0, 4.0], [4.0, 3.0, 2.0, 1.0]
+    schema = "i long, x array<double>, y array<double>"
+    clean = [(0, zero, one), (1, one, two), (2, zero, zero)]
+    with_null = [(0, zero, one), (1, one, two), (2, None, one)]
+    for rows in (clean, with_null):
+        got = (
+            spark.createDataFrame(rows, schema)
+            .coalesce(1)  # one partition -> one Arrow batch
+            .select(
+                "i",
+                cos_dist(F.col("x"), F.col("y")).alias("hof"),
+                seq_metric_arrow("cosine_similarity")(
+                    F.col("x"), F.col("y")
+                ).alias("twin"),
+            )
+            .orderBy("i")
+            .collect()
+        )
+        assert [(r["hof"], r["twin"]) for r in got] == [
+            (None, None), (got[1]["hof"], got[1]["hof"]), (None, None),
+        ]
+        assert got[1]["hof"] == pytest.approx(1.0 - 20.0 / 30.0)
+
+
+def test_dot_twin_null_and_ragged_rows_match_hof(spark):
+    """``seq_metric_arrow("dot")`` bit-equals the HOF ``dot`` on clean
+    rows and, like it, returns NULL for a NULL or ragged row in the
+    same Arrow batch instead of failing the batch."""
+    from vector_index_spark.functions.distance import seq_metric_arrow
+
+    rows = [
+        (0, [1.0, 2.0], [3.0, 4.0]),
+        (1, [1.0, 2.0, 3.0], [1.0, 2.0]),
+        (2, None, [1.0, 2.0]),
+        (3, [0.1, 0.2], [0.3, 0.7]),
+    ]
+    got = (
+        spark.createDataFrame(rows, "i long, x array<double>, y array<double>")
+        .coalesce(1)
+        .select(
+            "i",
+            dot(F.col("x"), F.col("y")).alias("hof"),
+            seq_metric_arrow("dot")(F.col("x"), F.col("y")).alias("twin"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    assert [r["twin"] for r in got] == [r["hof"] for r in got]
+    assert [r["hof"] for r in got][:3] == [11.0, None, None]
+
+
 def test_assert_dim_passes_and_raises(spark):
     from py4j.protocol import Py4JJavaError
     import pytest as _pytest

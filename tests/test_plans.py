@@ -140,7 +140,7 @@ def test_maxsim_plan_broadcasts_queries_with_partial_agg(spark):
     d = toks.filter(F.col("doc_id") % 20 != 0)
     plan = _plan(maxsim_retrieval(q, d, 10))
     # query token set broadcasts; the dot product runs in exactly one
-    # Arrow stage (the dot_seq_arrow twin), never a row-at-a-time UDF
+    # Arrow stage (seq_metric_arrow("dot")), never a row-at-a-time UDF
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "BatchEvalPython" not in plan

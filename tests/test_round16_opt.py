@@ -238,7 +238,7 @@ def test_seq_metric_arrow_bit_identical_to_hof(spark):
 
 def test_maxsim_dot_seq_matches_hof_form(spark):
     """Round 16 swapped maxsim's per-pair dot from the interpreted
-    aggregate(zip_with(...)) expression to dot_seq_arrow. The full
+    aggregate(zip_with(...)) expression to seq_metric_arrow("dot"). The full
     retrieval output must be row-identical (q90 hashes round(score, 6))."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F

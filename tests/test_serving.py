@@ -990,6 +990,23 @@ def _round_rows(df):
     )
 
 
+def _dup_qid_want(spark, query, rows, schema):
+    """The duplicate-qid oracle: run each row of ``rows`` (one qid,
+    different vectors or constraints) alone through ``query``, keep each
+    id's best distance, re-rank — what one batch holding all the rows
+    must return."""
+    best: dict = {}
+    for row in rows:
+        for r in query(spark.createDataFrame([row], schema)).collect():
+            key = (r["qid"], r["id"])
+            best[key] = min(best.get(key, r["dist"]), r["dist"])
+    merged = sorted(best.items(), key=lambda kv: (kv[1], kv[0][1]))[:K]
+    return sorted(
+        (qid, rank, id_, round(dist, 9))
+        for rank, ((qid, id_), dist) in enumerate(merged, start=1)
+    )
+
+
 def test_graph_serving_conjunction_filter(spark, ltrain):
     """Multi-attribute conjunction on graph ServingIndex: the selective
     branch equals exact conjunction-filtered kNN; the broad (beam)
@@ -2186,6 +2203,19 @@ def test_query_by_window_per_query_ranges(spark, ltrain):
             r for r in got_n if r[0] in q20
         ) + sorted(r for r in _round_rows(got_w) if r[0] not in q20)
         assert got_m == sorted(want_m)
+        # a qid repeated with nearly equal vectors on the beam branch:
+        # the rows share neighbours, and the answer holds each id once
+        # (independent rows, then min-merge per (qid, id))
+        v = [float(x) for x in half.first()["vec"]]
+        dup_rows = [(7, v, 5, 95), (7, [x + 1e-3 for x in v], 5, 95)]
+        schema = "qid long, vec array<double>, lo long, hi long"
+        got_d = _round_rows(sidx.query_by_window(
+            spark.createDataFrame(dup_rows, schema), K
+        ))
+        assert len({r[2] for r in got_d}) == len(got_d) == K
+        assert got_d == _dup_qid_want(
+            spark, lambda df: sidx.query_by_window(df, K), dup_rows, schema
+        )
         # arity gate: windows need exactly one attribute
         two = ServingIndex(
             vectors.withColumn("x2", F.col("day_code")),
@@ -2647,9 +2677,8 @@ def test_query_by_window_all_serving_classes(spark, ltrain):
             got = _round_rows(sidx.query_by_window(wtest, K))
             assert got == want, name
 
-        # dup qid, different vectors AND windows — Cell's single-pass
-        # positional path and PQ's wave decomposition both must equal
-        # independent-then-min-merge
+        # dup qid, different vectors AND windows — every class's
+        # positional path must equal independent-then-min-merge
         two = wtest.limit(2).toPandas()
         v0 = [float(v) for v in two["vec"][0]]
         v1 = [float(v) for v in two["vec"][1]]
@@ -2657,7 +2686,7 @@ def test_query_by_window_all_serving_classes(spark, ltrain):
             [(999, v0, 10, 14), (999, v1, 20, 26)],
             "qid long, vec array<double>, lo long, hi long",
         ).localCheckpoint(eager=True)
-        for name in ("cell", "pq"):
+        for name in built:
             sidx = built[name]
             singles = []
             for v, (lo, hi) in zip((v0, v1), [(10, 14), (20, 26)]):
@@ -2812,6 +2841,23 @@ def test_query_by_attribute_decomposed_classes(spark, ltrain):
                 sidx.query_by_attribute(wtest, K, qattr_col="label")
             )
             assert got == want, name
+        # dup qid, different vectors AND tenants: each row answers
+        # independently, then the rows min-merge per (qid, id)
+        two = wtest.limit(2).toPandas()
+        dup_rows = [
+            (999, [float(v) for v in two["vec"][i]], lab)
+            for i, lab in enumerate((3, 5))
+        ]
+        schema = "qid long, vec array<double>, label long"
+        dup = spark.createDataFrame(dup_rows, schema).localCheckpoint(
+            eager=True
+        )
+        for name, sidx in built.items():
+            def by_attr(df, sidx=sidx):
+                return sidx.query_by_attribute(df, K, qattr_col="label")
+
+            dwant = _dup_qid_want(spark, by_attr, dup_rows, schema)
+            assert _round_rows(by_attr(dup)) == dwant, name
         # multi-attribute conjunction tenants on the compressed route
         pq2 = PqServingIndex(
             encode_pq(tr, books).localCheckpoint(eager=True), tr, books,

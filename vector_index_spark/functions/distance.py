@@ -65,8 +65,12 @@ def ip_dist(a: Column, b: Column) -> Column:
 
 
 def cos_dist(a: Column, b: Column) -> Column:
-    """Cosine distance = 1 - dot/(|a||b|) (source/distance.h:158-170)."""
-    return F.lit(1.0) - dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine distance = 1 - dot/(|a||b|) (source/distance.h:158-170).
+
+    A zero-norm side has no cosine: the distance is NULL (``try_divide``)
+    instead of an ANSI DIVIDE_BY_ZERO, the same NULL the Arrow twin
+    :func:`seq_metric_arrow` returns for that row."""
+    return F.lit(1.0) - F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def normalize(a: Column) -> Column:
@@ -119,7 +123,8 @@ def _seq_row_fallback(kind: str, x, y):
     """Per-row exact twin of the HOF kernels for null/ragged rows: a
     null side or a length mismatch yields NULL (zip_with pads the short
     side with null, which nulls the whole fold); equal-length rows fold
-    left-to-right in python floats (C doubles — the same IEEE ops)."""
+    left-to-right in python floats (C doubles — the same IEEE ops), and
+    a zero-norm cosine row is NULL like the HOF's ``try_divide``."""
     import math
 
     if x is None or y is None or len(x) != len(y):
@@ -133,6 +138,8 @@ def _seq_row_fallback(kind: str, x, y):
     dv = 0.0
     for a, b in zip(x, y):
         dv += float(a) * float(b)
+    if kind == "dot":
+        return dv
     if kind == "inner_product":
         return 1.0 - dv
     na = 0.0
@@ -143,25 +150,29 @@ def _seq_row_fallback(kind: str, x, y):
     for b in y:
         fb = float(b)
         nb += fb * fb
-    return 1.0 - dv / (math.sqrt(na) * math.sqrt(nb))
+    den = math.sqrt(na) * math.sqrt(nb)
+    return None if den == 0.0 else 1.0 - dv / den
 
 
 def seq_metric_arrow(kind: str):
-    """Arrow-batched twin of the HOF distance kernels (:func:`l2sq`,
-    :func:`ip_dist`, :func:`cos_dist`) preserving their EXACT values
-    (round 16): per element the same single-rounding ops as zip_with's
-    lambda, then a strict left-to-right fold (see :func:`_seq_sum`), so
-    every distance bit-equals the interpreted higher-order expression it
-    replaces — safe on oracle-hashed outputs, unlike :func:`l2sq_arrow`
-    (numpy pairwise accumulation, recall-gated paths only). Null or
-    ragged rows keep the HOF's NULL result via a per-row fallback.
-    ~20 us/row of interpreter dispatch becomes one vectorized pass per
-    Arrow batch."""
+    """Arrow-batched twin of the HOF kernels (``"euclidean2"``:
+    :func:`l2sq`, ``"inner_product"``: :func:`ip_dist`,
+    ``"cosine_similarity"``: :func:`cos_dist`, ``"dot"``: :func:`dot`)
+    preserving their EXACT values (round 16): per element the same
+    single-rounding ops as zip_with's lambda, then a strict
+    left-to-right fold (see :func:`_seq_sum`), so every value bit-equals
+    the interpreted higher-order expression it replaces — safe on
+    oracle-hashed outputs (maxsim's q90 hashes ``round(score, 6)``),
+    unlike :func:`l2sq_arrow` (numpy pairwise accumulation,
+    recall-gated paths only). Null or ragged rows keep the HOF's NULL
+    result via a per-row fallback; a zero-norm cosine row is NULL, as
+    in the HOF. ~20 us/row of interpreter dispatch becomes one
+    vectorized pass per Arrow batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if kind not in ("euclidean2", "inner_product", "cosine_similarity"):
+    if kind not in ("euclidean2", "inner_product", "cosine_similarity", "dot"):
         raise ValueError(f"unknown metric {kind!r}")
 
     @pandas_udf("double")
@@ -190,39 +201,17 @@ def seq_metric_arrow(kind: str):
             D = A - B
             return pd.Series(_seq_sum(D * D))
         dv = _seq_sum(A * B)
+        if kind == "dot":
+            return pd.Series(dv)
         if kind == "inner_product":
             return pd.Series(1.0 - dv)
-        na = np.sqrt(_seq_sum(A * A))
-        nb = np.sqrt(_seq_sum(B * B))
-        return pd.Series(1.0 - dv / (na * nb))
+        den = np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B))
+        out = np.full(n, np.nan)  # NaN leaves the UDF as NULL
+        nz = den != 0.0
+        out[nz] = 1.0 - dv[nz] / den[nz]
+        return pd.Series(out)
 
     return _f
-
-
-def dot_seq_arrow():
-    """Arrow-batched twin of :func:`dot` that preserves its EXACT value:
-    per element one IEEE multiply (same as zip_with's ``x * y``), then a
-    strict left-to-right accumulation vectorized ACROSS rows (one
-    ``acc += P[:, j]`` per dimension — each row's partial sums follow
-    ``((0 + p0) + p1) + ...`` exactly like the Catalyst fold). Unlike
-    :func:`l2sq_arrow` (numpy pairwise accumulation, last-ulp-different,
-    recall-gated paths only), this form is bit-identical to the
-    higher-order-function expression and safe on oracle-hashed outputs
-    (q90 hashes ``round(score, 6)``). ~100x less interpreter dispatch
-    than the HOF at 64-d (round 16)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _dot_seq(a, b):
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        return pd.Series(_seq_sum(A * B))
-
-    return _dot_seq
 
 
 def assert_dim(df, vec_col: str, dim: int):

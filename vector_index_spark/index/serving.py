@@ -42,6 +42,22 @@ declares the rest as data: its blob key column, the names of its
 pending-snapshot and blob-count attributes, its driver ``.npy`` arrays,
 whether it snapshots a routing table, its histogram source relation and
 whether it keeps a fingerprinted cold corpus.
+
+Per-query constrained serving (``query_by_window``: each query row
+carries its own ``[lo, hi)`` over the single attribute;
+``query_by_attribute``: its own value per attribute) is one core path
+too, :meth:`_ResidentBlobIndex._constrained_query`: validation, the
+near-duplicate reroute, grouping rows by window or tenant tuple, the
+per-group histogram strategy, ONE exact broadcast join against the cold
+corpus for the selective groups (PQ, SQ, IVF-PQ), row-position keying
+and the per-(qid, id) min-merge. Each class's public ``query_by_*``
+forwards its own knob (``relaxed_monotonicity``, ``nprobe``,
+``candidate_factor``, ``probes``) to its one hook,
+``_masked_constraint_batch``: the route's single pass over its resident
+blobs for every remaining group, with the route's own rule (graph
+patience boost; Cell / IVF-PQ nprobe boost over :func:`_probe_cells`;
+RPT probe boost; PQ / SQ shortlist + exact re-rank; PCA reduced-space
+shortlist + in-blob refine).
 """
 
 from __future__ import annotations
@@ -732,259 +748,6 @@ def _restore_attr_fields(idx, manifest) -> None:
     )
 
 
-def _require_window_attr(idx) -> None:
-    if idx._attr_cols is None or len(idx._attr_cols) != 1:
-        raise ValueError(
-            "query_by_window needs exactly one attr_col= at "
-            f"{type(idx).__name__} construction (the windowed attribute)"
-        )
-
-
-def _single_pass_window_query(
-    idx,
-    test: DataFrame,
-    k: int,
-    lo_col: str,
-    hi_col: str,
-    qid_col: str,
-    vec_col: str,
-    max_queries_per_batch: int,
-    auto_boost: bool,
-    masked_batch,
-    exact_corpus,
-) -> DataFrame:
-    """Shared :meth:`query_by_window` for the serving classes without
-    cell routing (PQ, SQ, RPT, PCA — round 11): per-row half-open
-    ``[lo, hi)`` windows answer in ONE masked pass over the resident
-    blobs, the way round 10's grouped kernel already served the
-    graph/Cell/IVF-PQ routes. Replaces the per-DISTINCT-window
-    decomposition (round 10 ``_decomposed_constraint_query``), whose
-    cost scaled with the number of distinct windows and carried a
-    64-group cap — this route has NO cap: a row-unique-window batch of
-    N queries is one resident pass, same as a single-window batch.
-    Selective windows ride one non-equi broadcast join against the cold
-    corpus where the class keeps one (exact — the tiny query side
-    broadcasts with its bounds, the corpus never shuffles); everything
-    keys by ROW POSITION (dup-qid contract) and min-merges per
-    (qid, id)."""
-    from vector_index_spark.index.querychunk import chunked_over_queries
-
-    _require_window_attr(idx)
-    t = test.select(
-        F.col(qid_col).alias("qid"),
-        F.col(vec_col).alias("vec"),
-        F.col(lo_col).cast("long").alias("__lo"),
-        F.col(hi_col).cast("long").alias("__hi"),
-    )
-    idx._release_broadcasts()
-    return chunked_over_queries(
-        t,
-        lambda chunk: _single_pass_constraint_batch(
-            idx, chunk, k, "window", masked_batch, exact_corpus, auto_boost
-        ),
-        max_queries_per_batch,
-    )
-
-
-def _single_pass_attr_query(
-    idx,
-    test: DataFrame,
-    k: int,
-    qattr_col,
-    qid_col: str,
-    vec_col: str,
-    max_queries_per_batch: int,
-    auto_boost: bool,
-    masked_batch,
-    exact_corpus,
-) -> DataFrame:
-    """Shared :meth:`query_by_attribute` for PQ/SQ/RPT/PCA (round 11):
-    the tenant analogue of :func:`_single_pass_window_query` — one
-    masked resident pass for every tenant group in the batch (no
-    distinct-tenant cap), small tenants on one equality-join exact pass
-    against the cold corpus where the class keeps one."""
-    from vector_index_spark.index.querychunk import chunked_over_queries
-
-    if idx._attr_cols is None:
-        raise ValueError(
-            "query_by_attribute needs attr_col= at "
-            f"{type(idx).__name__} construction"
-        )
-    qcols = [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
-    if len(qcols) != len(idx._attr_cols):
-        raise ValueError(
-            f"qattr_col must name {len(idx._attr_cols)} column(s) "
-            f"(one per attr_col), got {qattr_col!r}"
-        )
-    t = test.select(
-        F.col(qid_col).alias("qid"),
-        F.col(vec_col).alias("vec"),
-        *(
-            F.col(c).cast("long").alias(f"__qa{i}")
-            for i, c in enumerate(qcols)
-        ),
-    )
-    idx._release_broadcasts()
-    return chunked_over_queries(
-        t,
-        lambda chunk: _single_pass_constraint_batch(
-            idx, chunk, k, "attr", masked_batch, exact_corpus, auto_boost
-        ),
-        max_queries_per_batch,
-    )
-
-
-def _single_pass_constraint_batch(
-    idx, t: DataFrame, k: int, form: str, masked_batch, exact_corpus,
-    auto_boost: bool,
-) -> DataFrame:
-    """One micro-batch of the single-pass constrained forms: rows group
-    by constraint (tenant tuple / window), each group gets the
-    histogram strategy rule, SELECTIVE groups ride one cold-corpus
-    broadcast join (when the class keeps a cold corpus — PQ/SQ; RPT/PCA
-    keep raw vectors resident and fold exactness into the masked pass),
-    and every remaining group rides ONE ``masked_batch(pdf, Q, groups,
-    k, n_corpus)`` pass over the resident blobs — groups sharing a blob
-    share its unpickle, the cellscan grouped-kernel shape. ``groups``
-    entries are ``(allow_arrays, row_positions, exact, n_match)``.
-    Positional keying end-to-end; min-merge per (qid, id)."""
-    from vector_index_spark.operators.filtered import (
-        RangeSpec,
-        choose_filtered_strategy,
-    )
-
-    spark = idx._spark
-    pdf = t.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame(
-            [], "qid long, rank int, id long, dist double"
-        )
-    qids = pdf["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-    has_dup = len(np.unique(qids)) < len(qids)
-    m = len(idx._attr_cols)
-    hist = idx._attribute_histogram()
-    n_corpus = max(sum(hist.values()), 1)
-    if form == "attr":
-        qa = np.column_stack(
-            [pdf[f"__qa{i}"].to_numpy(dtype=np.int64) for i in range(m)]
-        )
-        keys = [tuple(int(v) for v in qa[pos]) for pos in range(len(pdf))]
-    else:
-        los = pdf["__lo"].to_numpy(dtype=np.int64)
-        his = pdf["__hi"].to_numpy(dtype=np.int64)
-        keys = [(int(los[p]), int(his[p])) for p in range(len(pdf))]
-    acc: dict = {}
-    for pos, key in enumerate(keys):
-        acc.setdefault(key, []).append(pos)
-    exact_rows: list = []
-    groups: list = []
-    for key, ix in acc.items():
-        if form == "window":
-            if key[1] <= key[0]:
-                continue  # empty window matches nothing (RangeSpec)
-            spec = (RangeSpec(key[0], key[1]),)
-        else:
-            spec = tuple(frozenset({v}) for v in key)
-        n_match = _match_count(hist, spec)
-        exact = True
-        if not auto_boost:
-            exact = False  # parity semantics: force the masked route
-        elif n_match > 0:
-            s, _ = choose_filtered_strategy(
-                n_corpus, min(n_match, n_corpus), k, 1, 1
-            )
-            exact = s == "exact"
-        if exact and exact_corpus is not None:
-            exact_rows.extend(ix)
-        else:
-            groups.append(
-                (
-                    _allow_arrays(spec),
-                    np.asarray(ix, dtype=np.int64),
-                    exact,
-                    n_match,
-                )
-            )
-    parts = []
-    if exact_rows:
-        ex = np.asarray(sorted(exact_rows), dtype=np.int64)
-        parts.append(
-            _translate_positions(
-                _exact_constraint_join(
-                    spark, pdf, ex, form, k, exact_corpus, idx._attr_cols
-                ),
-                spark, ex, qids[ex],
-            )
-        )
-    if groups:
-        parts.append(
-            _translate_positions(
-                masked_batch(pdf, Q, groups, k, n_corpus),
-                spark, np.arange(len(pdf), dtype=np.int64), qids,
-            )
-        )
-    return _union_min_merge(parts, spark, k, has_dup)
-
-
-def _exact_constraint_join(
-    spark, pdf, rows, form: str, k: int, exact_corpus, attr_cols,
-) -> DataFrame:
-    """ONE broadcast join answers every selective-constraint row of the
-    batch exactly against the cold corpus — equality on the attribute
-    codes for tenants (the attribute_knn plan), non-equi on the bounds
-    for windows; either way the tiny query side broadcasts and the
-    corpus scans once, never shuffles. Positional qids (each row joins
-    only its own constraint's rows, so duplicate qids never
-    cross-score); callers translate positions back."""
-    from pyspark.sql import Window
-
-    from vector_index_spark.functions.distance import l2sq_arrow
-
-    corpus, id_col, vec_col = exact_corpus
-    m = len(attr_cols)
-    if form == "attr":
-        sub = pdf.iloc[rows][["vec"] + [f"__qa{i}" for i in range(m)]].copy()
-        sub.insert(0, "qid", rows)
-        sub["vec"] = sub["vec"].map(list)
-        tq = spark.createDataFrame(
-            sub.rename(columns={f"__qa{i}": f"__k{i}" for i in range(m)})
-        )
-        joined = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__cv"),
-            *(
-                F.col(a).cast("long").alias(f"__k{i}")
-                for i, a in enumerate(attr_cols)
-            ),
-        ).join(F.broadcast(tq), [f"__k{i}" for i in range(m)])
-    else:
-        sub = pdf.iloc[rows][["vec", "__lo", "__hi"]].copy()
-        sub.insert(0, "qid", rows)
-        sub["vec"] = sub["vec"].map(list)
-        tq = spark.createDataFrame(sub)
-        joined = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__cv"),
-            F.col(attr_cols[0]).cast("long").alias("__wattr"),
-        ).join(
-            F.broadcast(tq),
-            (F.col("__wattr") >= F.col("__lo"))
-            & (F.col("__wattr") < F.col("__hi")),
-        )
-    joined = joined.select(
-        "qid", "id", l2sq_arrow()(F.col("vec"), F.col("__cv")).alias("dist")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("id").asc()
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
-    )
-
-
 def _attr_pack_names(attr_cols: "tuple[str, ...]") -> "list[str]":
     """Internal packed-attribute column names (__attr0..__attr{m-1}) —
     positional, so the blob layout is independent of user column names."""
@@ -1209,6 +972,10 @@ class _ResidentBlobIndex:
     - ``_QUANTIZED``: blobs hold quantized codes, so the near-duplicate
       reroute (:meth:`reroute_dense_to`) applies;
     - ``_MANIFEST_SCALARS``: extra ``(manifest key, attribute)`` pairs.
+
+    Per-query constrained serving (:meth:`_constrained_query`) is core
+    too; each class supplies only its resident pass over the blobs, the
+    hook ``_masked_constraint_batch``.
     """
 
     _PENDING: str
@@ -1222,6 +989,9 @@ class _ResidentBlobIndex:
     _COLD_CORPUS = False
     _QUANTIZED = False
     _MANIFEST_SCALARS: tuple = ()
+    # query vector dimension, where the class knows it: set -> ragged
+    # constrained queries fail fast
+    _dimension = None
     # (id, vec) column names of the relations a refresh wave arrives in
     _id_col = "id"
     _vec_col = "vec"
@@ -1639,6 +1409,216 @@ class _ResidentBlobIndex:
         idx._snapshot_lineage = (path, *_lineage_token(manifest))
         return idx
 
+    # -- per-query constrained serving: query_by_window / query_by_attribute
+
+    def _constrained_query(
+        self, form: str, test: DataFrame, k: int, cols: dict, qid_col: str,
+        vec_col: str, max_queries_per_batch: int, auto_boost: bool,
+        **knobs,
+    ) -> DataFrame:
+        """The one path under every class's :meth:`query_by_window`
+        (``form="window"``, ``cols = {lo_col, hi_col}``: each row carries
+        its own half-open ``[lo, hi)`` over the single attribute) and
+        :meth:`query_by_attribute` (``form="attr"``, ``cols =
+        {qattr_col}``: each row's neighbors must equal its own value per
+        attribute). Validates the constraint columns, dispatches to the
+        near-duplicate fallback on quantized routes, checks the query
+        dimension where the class knows it, and answers the batch in
+        micro-batches of :meth:`_constrained_batch`. ``knobs`` are the
+        route's own parameters, passed through to its
+        :meth:`_masked_constraint_batch` hook. Returns (qid, rank, id,
+        dist)."""
+        from vector_index_spark.index.querychunk import chunked_over_queries
+
+        name = type(self).__name__
+        if form == "window":
+            if self._attr_cols is None or len(self._attr_cols) != 1:
+                raise ValueError(
+                    "query_by_window needs exactly one attr_col= at "
+                    f"{name} construction (the windowed attribute)"
+                )
+            key_cols = [cols["lo_col"], cols["hi_col"]]
+        else:
+            if self._attr_cols is None:
+                raise ValueError(
+                    f"query_by_attribute needs attr_col= at {name} "
+                    "construction"
+                )
+            qattr_col = cols["qattr_col"]
+            key_cols = (
+                [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
+            )
+            if len(key_cols) != len(self._attr_cols):
+                raise ValueError(
+                    f"qattr_col must name {len(self._attr_cols)} column(s) "
+                    f"(one per attr_col), got {qattr_col!r}"
+                )
+        if self._QUANTIZED:
+            fb = _dense_reroute(self, k, knobs["candidate_factor"])
+            if fb is not None:
+                return getattr(fb, f"query_by_{form}")(
+                    test, k, **cols, qid_col=qid_col, vec_col=vec_col
+                )
+        self._release_broadcasts()
+        t = test.select(
+            F.col(qid_col).alias("qid"),
+            F.col(vec_col).alias("vec"),
+            *(
+                F.col(c).cast("long").alias(f"__k{i}")
+                for i, c in enumerate(key_cols)
+            ),
+        )
+        if self._dimension is not None:
+            from vector_index_spark.functions.distance import assert_dim
+
+            t = assert_dim(t, "vec", self._dimension)
+        return chunked_over_queries(
+            t,
+            lambda chunk: self._constrained_batch(
+                chunk, k, form, len(key_cols), auto_boost, knobs
+            ),
+            max_queries_per_batch,
+        )
+
+    def _constrained_batch(
+        self, t: DataFrame, k: int, form: str, n_keys: int,
+        auto_boost: bool, knobs: dict,
+    ) -> DataFrame:
+        """One micro-batch: rows group by constraint (tenant tuple or
+        window) and each group gets the histogram strategy rule —
+        ``auto_boost=False`` forces every group onto the masked route.
+        On cold-corpus routes the selective groups ride ONE exact join
+        against the corpus (:meth:`_exact_constraint_join`); every
+        other group rides ONE pass of the route's hook
+        ``_masked_constraint_batch(pdf, Q, groups, k, n_corpus,
+        auto_boost, **knobs)`` over the resident blobs, where ``groups``
+        entries are ``(allow_arrays, row_positions, exact, n_match)``
+        and groups sharing a blob share its unpickle. Every stage keys
+        by ROW POSITION (the hook returns positional (qid, rank, id,
+        dist)), so a qid repeated with different vectors or constraints
+        answers each row independently; the parts translate back to
+        real qids and min-merge per (qid, id)."""
+        from vector_index_spark.operators.filtered import (
+            RangeSpec,
+            choose_filtered_strategy,
+        )
+
+        spark = self._spark
+        pdf = t.toPandas()
+        if len(pdf) == 0:
+            return spark.createDataFrame(
+                [], "qid long, rank int, id long, dist double"
+            )
+        qids = pdf["qid"].to_numpy(dtype=np.int64)
+        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        keys = np.column_stack(
+            [pdf[f"__k{i}"].to_numpy(dtype=np.int64) for i in range(n_keys)]
+        )
+        hist = self._attribute_histogram()
+        n_corpus = max(sum(hist.values()), 1)
+        acc: dict = {}
+        for pos, key in enumerate(map(tuple, keys.tolist())):
+            acc.setdefault(key, []).append(pos)
+        exact_rows: list = []
+        groups: list = []
+        for key, ix in acc.items():
+            if form == "window":
+                # an empty window (hi <= lo) matches nothing
+                spec = (RangeSpec(key[0], max(key[1], key[0])),)
+                n_match = _match_count(hist, spec)
+            else:
+                spec = tuple(frozenset({v}) for v in key)
+                n_match = hist.get(key, 0)  # the tuple IS a histogram key
+            exact = auto_boost and choose_filtered_strategy(
+                n_corpus, min(n_match, n_corpus), k, 1, 1
+            )[0] == "exact"
+            if exact and self._COLD_CORPUS:
+                exact_rows.extend(ix)
+            else:
+                groups.append(
+                    (
+                        _allow_arrays(spec),
+                        np.asarray(ix, dtype=np.int64),
+                        exact,
+                        n_match,
+                    )
+                )
+        parts = []
+        if exact_rows:
+            ex = np.asarray(sorted(exact_rows), dtype=np.int64)
+            parts.append(
+                _translate_positions(
+                    self._exact_constraint_join(pdf, ex, form, n_keys, k),
+                    spark, ex, qids[ex],
+                )
+            )
+        if groups:
+            parts.append(
+                _translate_positions(
+                    self._masked_constraint_batch(
+                        pdf, Q, groups, k, n_corpus, auto_boost, **knobs
+                    ),
+                    spark, np.arange(len(pdf), dtype=np.int64), qids,
+                )
+            )
+        return _union_min_merge(
+            parts, spark, k, len(np.unique(qids)) < len(qids)
+        )
+
+    def _exact_constraint_join(
+        self, pdf, rows, form: str, n_keys: int, k: int,
+    ) -> DataFrame:
+        """ONE broadcast join answers every selective-constraint row of
+        the batch exactly against the cold corpus — equality on the
+        attribute codes for tenants (the attribute_knn plan), non-equi
+        on the bounds for windows; either way the tiny query side
+        broadcasts and the corpus scans once, never shuffles. Positional
+        qids: each row joins only its own constraint's corpus rows."""
+        from pyspark.sql import Window
+
+        from vector_index_spark.functions.distance import l2sq_arrow
+
+        corpus = self._train.select(
+            F.col(self._id_col).alias("id"),
+            F.col(self._vec_col).alias("__cv"),
+            *(
+                F.col(a).cast("long").alias(f"__a{i}")
+                for i, a in enumerate(self._attr_cols)
+            ),
+        )
+        tq = _position_frame(
+            self._spark, pdf, rows, [f"__k{i}" for i in range(n_keys)]
+        )
+        if form == "window":
+            a = F.col("__a0")
+            on = (a >= F.col("__k0")) & (a < F.col("__k1"))
+        else:
+            on = F.col("__a0") == F.col("__k0")
+            for i in range(1, n_keys):
+                on = on & (F.col(f"__a{i}") == F.col(f"__k{i}"))
+        joined = corpus.join(F.broadcast(tq), on).select(
+            "qid", "id",
+            l2sq_arrow()(F.col("vec"), F.col("__cv")).alias("dist"),
+        )
+        w = Window.partitionBy("qid").orderBy(
+            F.col("dist").asc(), F.col("id").asc()
+        )
+        return (
+            joined.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "rank", "id", "dist")
+        )
+
+    def _rerank_positions(self, cands: DataFrame, pdf, pos, k: int,
+                          broadcast_cands: bool) -> DataFrame:
+        """Exact re-rank of a positional candidate relation against the
+        cold corpus: each candidate is scored only against the vector of
+        the row whose constraint admitted it."""
+        return _rerank_exact(
+            cands, self._train, _position_frame(self._spark, pdf, pos), k,
+            self._id_col, self._vec_col, broadcast_cands=broadcast_cands,
+        )
+
 
 class ServingIndex(_ResidentBlobIndex):
     """Resident serving form of a graph index: per-shard graphs pickled
@@ -1910,167 +1890,15 @@ class ServingIndex(_ResidentBlobIndex):
         rate patience boost), and ALL groups ride the same single
         mapInPandas pass over the cached blobs. Unrouted by design: a
         tenant's rows are scattered across shards unless the shard
-        layout was built per-tenant. Returns (qid, rank, id, dist)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-
-        if self._attr_cols is None:
-            raise ValueError(
-                "query_by_attribute needs attr_col= at ServingIndex "
-                "construction"
-            )
-        qcols = [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
-        if len(qcols) != len(self._attr_cols):
-            raise ValueError(
-                f"qattr_col must name {len(self._attr_cols)} column(s) "
-                f"(one per attr_col), got {qattr_col!r}"
-            )
-        self._release_broadcasts()
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            *(
-                F.col(c).cast("long").alias(f"__qa{i}")
-                for i, c in enumerate(qcols)
-            ),
+        layout was built per-tenant. Duplicate qids answer each row
+        independently, then min-merge per (qid, id) (the shared
+        constrained core, :meth:`_constrained_query`). Returns (qid,
+        rank, id, dist)."""
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            relaxed_monotonicity=relaxed_monotonicity,
         )
-        if self._dimension is not None:
-            from vector_index_spark.functions.distance import assert_dim
-
-            t = assert_dim(t, "vec", self._dimension)
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch_by_attr(
-                chunk, k, relaxed_monotonicity, auto_boost
-            ),
-            max_queries_per_batch,
-        )
-
-    def _query_batch_by_attr(
-        self, t: DataFrame, k: int, relaxed_monotonicity: int,
-        auto_boost: bool,
-    ) -> DataFrame:
-        import math as _math
-
-        from vector_index_spark.operators.filtered import (
-            choose_filtered_strategy,
-        )
-
-        spark = self._spark
-        m = len(self._attr_cols)
-        pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame(
-                [], "qid long, rank int, id long, dist double"
-            )
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        qattrs = np.column_stack(
-            [pdf[f"__qa{i}"].to_numpy(dtype=np.int64) for i in range(m)]
-        )
-        # group queries by tenant tuple; per-group strategy from the
-        # resident histogram (each group is one value per attribute —
-        # equality is the selectivity-sharpest conjunction)
-        from vector_index_spark.operators.filtered import allow_arrays
-
-        hist = self._attribute_histogram()
-        n_corpus = max(sum(hist.values()), 1)
-        acc: dict[tuple, list[int]] = {}
-        for qi in range(len(qids)):
-            acc.setdefault(tuple(int(v) for v in qattrs[qi]), []).append(qi)
-        groups = []
-        for key, ix in acc.items():
-            n_match = hist.get(key, 0)
-            exact = True
-            patience = relaxed_monotonicity
-            if not auto_boost:
-                # parity-testing semantics, consistent with query():
-                # force the masked beam at exactly relaxed_monotonicity
-                exact = False
-            elif n_match > 0:
-                strategy, _ = choose_filtered_strategy(
-                    n_corpus, min(n_match, n_corpus), k, 1, 1
-                )
-                exact = strategy == "exact"
-                if not exact:
-                    sel = n_match / n_corpus
-                    patience = relaxed_monotonicity * min(
-                        8, _math.ceil(1.0 / sel)
-                    )
-            groups.append(
-                (
-                    allow_arrays(tuple(frozenset({int(v)}) for v in key)),
-                    np.asarray(ix, dtype=np.int64),
-                    exact,
-                    patience,
-                )
-            )
-        return self._grouped_masked_batch(qids, Q, groups, k)
-
-    def _grouped_masked_batch(self, qids, Q, groups, k) -> DataFrame:
-        """Shared engine for per-query-constraint serving
-        (query_by_attribute / query_by_window): ``groups`` is a list of
-        ``(spec_arrays, row_ix, exact, patience)`` — one entry per
-        distinct constraint in the batch — and ONE mapInPandas pass over
-        the cached blobs evaluates every group's mask (groups sharing a
-        blob visit share its unpickle)."""
-        spark = self._spark
-        bc = spark.sparkContext.broadcast((qids, Q, groups))
-        self._live_bcs.append(bc)
-
-        def search(batches):
-            from vector_index_spark.index.cellscan import (
-                grouped_masked_topk_frame,
-            )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
-
-            for pdf_b in batches:
-                q_ids, q_mat, b_groups = bc.value
-                out_qid, out_id, out_dist = [], [], []
-                frames = []
-                for _, blob in zip(pdf_b["shard"], pdf_b["blob"]):
-                    g = pickle.loads(blob)
-                    attrs = g.attrs
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    exact_groups = []
-                    for spec, ix, exact, patience in b_groups:
-                        mask = conjunction_mask(attrs, spec)
-                        if not mask.any():
-                            continue
-                        if exact:
-                            exact_groups.append((ix, mask))
-                            continue
-                        for qi in ix:
-                            for d, off in query_shard(
-                                g, q_mat[qi], k, patience, allowed=mask
-                            ):
-                                out_qid.append(int(q_ids[qi]))
-                                out_id.append(int(g.ids[off]))
-                                out_dist.append(d)
-                    if exact_groups:
-                        # ONE distance matrix per shard; each exact
-                        # group (tenant / window) selects its top-k
-                        # from its mask's columns — per-group corpus
-                        # copies removed (round 10, cellscan kernel)
-                        frames.append(
-                            grouped_masked_topk_frame(
-                                q_ids, q_mat, g.ids, g.X,
-                                exact_groups, k,
-                            )
-                        )
-                beam = pd.DataFrame(
-                    {"qid": out_qid, "id": out_id, "dist": out_dist}
-                )
-                yield (
-                    pd.concat([beam, *frames], ignore_index=True)
-                    if frames
-                    else beam
-                )
-
-        per_shard = self.blobs.mapInPandas(search, RESULT_SCHEMA)
-        return _merge_topk(per_shard, k)
 
     def query_by_window(
         self,
@@ -2098,71 +1926,85 @@ class ServingIndex(_ResidentBlobIndex):
         ALL groups ride one mapInPandas pass over the cached blobs.
         Requires a single ``attr_col`` at construction. Returns
         (qid, rank, id, dist)."""
-        import math as _math
-
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import (
-            RangeSpec,
-            choose_filtered_strategy,
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            relaxed_monotonicity=relaxed_monotonicity,
         )
 
-        if self._attr_cols is None or len(self._attr_cols) != 1:
-            raise ValueError(
-                "query_by_window needs exactly one attr_col= at "
-                "ServingIndex construction (the windowed attribute)"
+    def _masked_constraint_batch(
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        relaxed_monotonicity: int,
+    ) -> DataFrame:
+        """Graph hook of the constrained core: ONE mapInPandas pass over
+        the resident shard graphs answers every group. Selective groups
+        run a grouped masked exact GEMM over the shard matrices (the raw
+        vectors are resident, so exactness is free; groups sharing a
+        shard share one distance matrix); the rest run the filtered-HNSW
+        beam, whose patience ``auto_boost`` multiplies by the group's
+        inverse match rate (at most 8x)."""
+        import math
+
+        bgroups = []
+        for allow, ix, exact, n_match in groups:
+            patience = relaxed_monotonicity
+            if auto_boost and not exact:
+                patience = relaxed_monotonicity * min(
+                    8, math.ceil(1.0 / (n_match / n_corpus))
+                )
+            bgroups.append((allow, ix, exact, patience))
+        bc = self._spark.sparkContext.broadcast((Q, bgroups))
+        self._live_bcs.append(bc)
+
+        def search(batches):
+            from vector_index_spark.index.cellscan import (
+                grouped_masked_topk_frame,
             )
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            F.col(lo_col).cast("long").alias("__lo"),
-            F.col(hi_col).cast("long").alias("__hi"),
-        )
-        if self._dimension is not None:
-            from vector_index_spark.functions.distance import assert_dim
+            from vector_index_spark.operators.filtered import (
+                conjunction_mask,
+            )
 
-            t = assert_dim(t, "vec", self._dimension)
-
-        def run_chunk(chunk: DataFrame) -> DataFrame:
-            spark = self._spark
-            pdf = chunk.toPandas()
-            if len(pdf) == 0:
-                return spark.createDataFrame(
-                    [], "qid long, rank int, id long, dist double"
-                )
-            qids = pdf["qid"].to_numpy(dtype=np.int64)
-            Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            los = pdf["__lo"].to_numpy(dtype=np.int64)
-            his = pdf["__hi"].to_numpy(dtype=np.int64)
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            acc: dict[tuple[int, int], list[int]] = {}
-            for qi in range(len(qids)):
-                acc.setdefault((int(los[qi]), int(his[qi])), []).append(qi)
-            groups = []
-            for (lo, hi), ix in acc.items():
-                spec = (RangeSpec(lo, max(hi, lo)),)
-                n_match = _match_count(hist, spec)
-                exact = True
-                patience = relaxed_monotonicity
-                if not auto_boost:
-                    exact = False
-                elif n_match > 0:
-                    strategy, _ = choose_filtered_strategy(
-                        n_corpus, min(n_match, n_corpus), k, 1, 1
-                    )
-                    exact = strategy == "exact"
-                    if not exact:
-                        sel = n_match / n_corpus
-                        patience = relaxed_monotonicity * min(
-                            8, _math.ceil(1.0 / sel)
+            for pdf_b in batches:
+                q_mat, b_groups = bc.value
+                pos_ids = np.arange(len(q_mat), dtype=np.int64)
+                out_qid, out_id, out_dist = [], [], []
+                frames = []
+                for blob in pdf_b["blob"]:
+                    g = pickle.loads(blob)
+                    exact_groups = []
+                    for allow, ix, exact, patience in b_groups:
+                        mask = conjunction_mask(g.attrs, allow)
+                        if not mask.any():
+                            continue
+                        if exact:
+                            exact_groups.append((ix, mask))
+                            continue
+                        for qi in ix:
+                            for d, off in query_shard(
+                                g, q_mat[qi], k, patience, allowed=mask
+                            ):
+                                out_qid.append(int(qi))
+                                out_id.append(int(g.ids[off]))
+                                out_dist.append(d)
+                    if exact_groups:
+                        # ONE distance matrix per shard; each exact
+                        # group selects its top-k from its mask's columns
+                        frames.append(
+                            grouped_masked_topk_frame(
+                                pos_ids, q_mat, g.ids, g.X,
+                                exact_groups, k,
+                            )
                         )
-                groups.append(
-                    (spec, np.asarray(ix, dtype=np.int64), exact, patience)
+                beam = pd.DataFrame(
+                    {"qid": out_qid, "id": out_id, "dist": out_dist}
                 )
-            return self._grouped_masked_batch(qids, Q, groups, k)
+                yield (
+                    pd.concat([beam, *frames], ignore_index=True)
+                    if frames
+                    else beam
+                )
 
-        self._release_broadcasts()
-        return chunked_over_queries(t, run_chunk, max_queries_per_batch)
+        return _merge_topk(self.blobs.mapInPandas(search, RESULT_SCHEMA), k)
 
     def _query_batch(
         self,
@@ -2588,53 +2430,15 @@ class CellServingIndex(_ResidentBlobIndex):
         query row carries its own half-open ``[lo_col, hi_col)``
         interval over this index's single attribute —
         :meth:`ServingIndex.query_by_window`'s contract over resident
-        cell blobs. A micro-batch groups rows by distinct window; the
-        histogram strategy picks per group (a narrow window probes
-        EVERY cell, where the range-masked GEMM over the resident raw
-        vectors is exact; a wide one probes routed cells with the
-        largest inverse-match-rate nprobe boost), and ALL groups ride
-        ONE mapInPandas pass over the cached blobs. Rows are keyed by
-        position end-to-end, so duplicate qids carrying different
-        vectors/windows answer independently and min-merge per
-        (qid, id). Returns (qid, rank, id, dist)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-
-        if self._attr_cols is None or len(self._attr_cols) != 1:
-            raise ValueError(
-                "query_by_window needs exactly one attr_col= at "
-                "CellServingIndex construction (the windowed attribute)"
-            )
-        self._release_broadcasts()
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            F.col(lo_col).cast("long").alias("__lo"),
-            F.col(hi_col).cast("long").alias("__hi"),
-        )
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch_by_window(
-                chunk, k, nprobe, auto_boost
-            ),
-            max_queries_per_batch,
-        )
-
-    def _query_batch_by_window(
-        self, t: DataFrame, k: int, nprobe: int, auto_boost: bool,
-    ) -> DataFrame:
-        from vector_index_spark.operators.filtered import RangeSpec
-
-        def mask_of(attrs, key):
-            return (attrs[:, 0] >= key[0]) & (attrs[:, 0] < key[1])
-
-        return self._grouped_constraint_batch(
-            t,
-            key_cols=("__lo", "__hi"),
-            mask_of=mask_of,
-            nmatch_of=lambda hist, key: _match_count(
-                hist, (RangeSpec(key[0], max(key[1], key[0])),)
-            ),
-            k=k, nprobe=nprobe, auto_boost=auto_boost,
+        cell blobs. A narrow window probes EVERY cell, where the
+        range-masked GEMM over the resident raw vectors is exact; a wide
+        one probes routed cells with the largest inverse-match-rate
+        nprobe boost; ALL groups ride ONE mapInPandas pass over the
+        cached blobs. Returns (qid, rank, id, dist)."""
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            nprobe=nprobe,
         )
 
     def query_by_attribute(
@@ -2655,110 +2459,26 @@ class CellServingIndex(_ResidentBlobIndex):
         :meth:`ServingIndex.query_by_attribute`'s contract over resident
         cell blobs. Tenants group inside one blob pass (a small tenant
         probes EVERY cell, where the masked GEMM is exact; a large one
-        probes routed cells at the boosted nprobe); positional keying
-        gives duplicate qids the independent-rows + min-merge contract.
-        Returns (qid, rank, id, dist)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-
-        if self._attr_cols is None:
-            raise ValueError(
-                "query_by_attribute needs attr_col= at CellServingIndex "
-                "construction"
-            )
-        qcols = [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
-        if len(qcols) != len(self._attr_cols):
-            raise ValueError(
-                f"qattr_col must name {len(self._attr_cols)} column(s) "
-                f"(one per attr_col), got {qattr_col!r}"
-            )
-        self._release_broadcasts()
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            *(
-                F.col(c).cast("long").alias(f"__qa{i}")
-                for i, c in enumerate(qcols)
-            ),
-        )
-        m = len(qcols)
-
-        def mask_of(attrs, key):
-            mask = attrs[:, 0] == key[0]
-            for j in range(1, len(key)):
-                mask &= attrs[:, j] == key[j]
-            return mask
-
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._grouped_constraint_batch(
-                chunk,
-                key_cols=tuple(f"__qa{i}" for i in range(m)),
-                mask_of=mask_of,
-                nmatch_of=lambda hist, key: hist.get(tuple(key), 0),
-                k=k, nprobe=nprobe, auto_boost=auto_boost,
-            ),
-            max_queries_per_batch,
+        probes routed cells at the boosted nprobe). Returns (qid, rank,
+        id, dist)."""
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
+            max_queries_per_batch, auto_boost, nprobe=nprobe,
         )
 
-    def _grouped_constraint_batch(
-        self, t: DataFrame, key_cols, mask_of, nmatch_of,
-        k: int, nprobe: int, auto_boost: bool,
+    def _masked_constraint_batch(
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        nprobe: int,
     ) -> DataFrame:
-        """Shared engine for per-query-constraint serving on the IVF
-        route (query_by_window / query_by_attribute): ``key_cols`` name
-        the long-typed constraint columns of the batch frame,
-        ``mask_of(attrs, key)`` builds the resident mask for one
-        constraint over a blob's (n, m) attribute matrix, and
-        ``nmatch_of(hist, key)`` feeds the strategy rule. Rows sharing a
-        constraint share one mask+GEMM pass per blob; everything is
-        keyed by ROW POSITION so duplicate qids answer independently
-        and min-merge per (qid, id)."""
-        import math as _math
-
+        """Cell hook of the constrained core: selective groups visit
+        EVERY cell (the masked GEMM over resident raw vectors is exact),
+        the rest probe routed cells at the boosted nprobe
+        (:func:`_probe_cells`). Each probed blob runs ONE grouped masked
+        GEMM over the constraints of the rows probing it; replicas
+        min-merge per (position, id)."""
         from pyspark.sql import Window
 
-        from vector_index_spark.operators.filtered import (
-            choose_filtered_strategy,
-        )
-        from vector_index_spark.operators.knn import knn_join
-
-        spark = self._spark
-        pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame(
-                [], "qid long, rank int, id long, dist double"
-            )
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        keys = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.int64) for c in key_cols]
-        )
-        has_dup = len(np.unique(qids)) < len(qids)
-        hist = self._attribute_histogram()
-        n_corpus = max(sum(hist.values()), 1)
-        all_cells = [int(r["id"]) for r in self._cents_kv.select("id").collect()]
-        n_cells = max(len(all_cells), 1)
-        exact_qi: list[int] = []
-        probe_qi: list[int] = []
-        boost = 1
-        strat: dict[tuple, str] = {}
-        for qi in range(len(qids)):
-            key = tuple(int(v) for v in keys[qi])
-            if key not in strat:
-                n_match = nmatch_of(hist, key)
-                s = "exact"
-                if auto_boost and n_match > 0:
-                    s, _ = choose_filtered_strategy(
-                        n_corpus, min(n_match, n_corpus), k, 1, 1
-                    )
-                elif not auto_boost:
-                    s = "probe"
-                strat[key] = s
-                if s != "exact":
-                    sel = max(n_match, 1) / n_corpus
-                    boost = max(boost, min(8, _math.ceil(1.0 / sel)))
-            (exact_qi if strat[key] == "exact" else probe_qi).append(qi)
-        n_exact_groups = sum(1 for s in strat.values() if s == "exact")
+        n_exact_groups = sum(1 for g in groups if g[2])
         if n_exact_groups > 8 and not getattr(
             self, "_warned_constraint_scan", False
         ):
@@ -2778,40 +2498,30 @@ class CellServingIndex(_ResidentBlobIndex):
                 "masks); the VectorIndex facade's query_by_window / "
                 "query_by_attribute dispatch there automatically.",
                 RuntimeWarning,
-                stacklevel=3,
+                stacklevel=7,
             )
             self._warned_constraint_scan = True
-        # per-POSITION cell assignment: selective-constraint rows visit
-        # every cell (masked GEMM over resident raw vectors == exact);
-        # the rest probe routed cells at the boosted nprobe
-        acc: dict[int, list[int]] = {}
-        for c in all_cells if exact_qi else ():
-            acc[int(c)] = list(exact_qi)
-        if probe_qi:
-            sub_ix = np.asarray(probe_qi, dtype=np.int64)
-            eff_nprobe = min(n_cells, nprobe * boost)
-            psub = pdf.iloc[probe_qi][["vec"]].copy()
-            psub.insert(0, "qid", sub_ix)
-            psub["vec"] = psub["vec"].map(list)
-            tq = spark.createDataFrame(psub)
-            probes = knn_join(tq, self._cents_kv, eff_nprobe).select(
-                "qid", F.col("id").alias("cell")
-            )
-            for r in probes.collect():
-                acc.setdefault(int(r["cell"]), []).append(int(r["qid"]))
-        assign = {
-            c: np.asarray(sorted(set(ix)), dtype=np.int64)
-            for c, ix in acc.items()
-        }
-        bc = spark.sparkContext.broadcast((Q, keys, assign))
+        all_cells = [int(r["id"]) for r in self._cents_kv.select("id").collect()]
+        assign = _probe_cells(
+            self, pdf, groups, nprobe, max(len(all_cells), 1), n_corpus,
+            all_cells,
+        )
+        gid = _group_of_position(len(Q), groups)
+        bc = self._spark.sparkContext.broadcast(
+            (Q, gid, [g[0] for g in groups], assign)
+        )
         self._live_bcs.append(bc)
 
         def search(batches):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
+            from vector_index_spark.operators.filtered import (
+                conjunction_mask,
+            )
 
-            bQ, b_keys, asg = bc.value
+            bQ, b_gid, allows, asg = bc.value
+            pos_ids = np.arange(len(bQ), dtype=np.int64)
             for pdf_b in batches:
                 frames = []
                 for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
@@ -2820,26 +2530,16 @@ class CellServingIndex(_ResidentBlobIndex):
                         continue
                     payload = pickle.loads(blob)
                     ids, X, attrs = payload[0], payload[1], payload[2]
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    groups: dict[tuple, list[int]] = {}
-                    for qi in ix:
-                        groups.setdefault(
-                            tuple(int(v) for v in b_keys[qi]), []
-                        ).append(int(qi))
-                    blob_groups = [
-                        (np.asarray(qlist, dtype=np.int64), mask)
-                        for key, qlist in groups.items()
-                        for mask in (mask_of(attrs, key),)
-                    ]
                     # ONE distance matrix per blob, each constraint
-                    # selecting from its mask's columns — positional
-                    # keys out of the kernel; real qids restored after
-                    # the merge
+                    # selecting from its mask's columns
                     frames.append(
                         grouped_masked_topk_frame(
-                            np.arange(len(bQ), dtype=np.int64), bQ,
-                            ids, X, blob_groups, k,
+                            pos_ids, bQ, ids, X,
+                            [
+                                (gq, conjunction_mask(attrs, allows[gi]))
+                                for gi, gq in _positions_by_group(ix, b_gid)
+                            ],
+                            k,
                         )
                     )
                 yield (
@@ -2848,24 +2548,19 @@ class CellServingIndex(_ResidentBlobIndex):
                     else pd.DataFrame({"qid": [], "id": [], "dist": []})
                 )
 
-        probed = sorted(assign)
-        per_cell = self.blobs.filter(F.col("cell").isin(probed)).mapInPandas(
-            search, RESULT_SCHEMA
-        )
+        per_cell = self.blobs.filter(
+            F.col("cell").isin(sorted(assign))
+        ).mapInPandas(search, RESULT_SCHEMA)
         w = Window.partitionBy("qid").orderBy(
             F.col("dist").asc(), F.col("id").asc()
         )
-        ranked = (
+        return (
             per_cell.groupBy("qid", "id")  # replica min per POSITION
             .agg(F.min("dist").alias("dist"))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "rank", "id", "dist")
         )
-        translated = _translate_positions(
-            ranked, spark, np.arange(len(qids)), qids
-        )
-        return _union_min_merge([translated], spark, k, has_dup)
 
 
 # ---------------------------------------------------------------------------
@@ -3404,9 +3099,16 @@ def _translate_positions(ranked: DataFrame, spark, pos_ix, real_qids) -> DataFra
     twice in one batch with *different* vectors / constraints is answered
     strictly against its own row (the dup-qid rerank contract: each row
     independently, then min-merge per (qid, id)). This is the last step:
-    a tiny broadcast map from position to the row's real qid."""
+    a tiny broadcast map from position to the row's real qid, built from
+    a pandas frame (one Arrow transfer; a list of tuples costs ~0.3 s
+    more per batch on 4 cores)."""
     pos_map = spark.createDataFrame(
-        [(int(p), int(q)) for p, q in zip(pos_ix, real_qids)],
+        pd.DataFrame(
+            {
+                "qid": np.asarray(pos_ix, dtype=np.int64),
+                "__real": np.asarray(real_qids, dtype=np.int64),
+            }
+        ),
         "qid long, __real long",
     )
     return ranked.join(F.broadcast(pos_map), "qid").select(
@@ -3443,6 +3145,72 @@ def _union_min_merge(parts: list[DataFrame], spark, k: int,
         .filter(F.col("rank") <= k)
         .select("qid", "rank", "id", "dist")
     )
+
+
+def _position_frame(spark, pdf, pos, extra=()) -> DataFrame:
+    """The batch rows ``pos`` as a (qid = row position, vec[, extra])
+    relation — the positional query side of the constrained paths'
+    probe, exact-join and re-rank stages."""
+    sub = pdf.iloc[pos][["vec", *extra]].copy()
+    sub.insert(0, "qid", np.asarray(pos, dtype=np.int64))
+    sub["vec"] = sub["vec"].map(list)  # ndarray cells -> plain lists
+    return spark.createDataFrame(sub)
+
+
+def _group_of_position(n: int, groups) -> np.ndarray:
+    """Row position -> index of its constraint group (-1: no group)."""
+    gid = np.full(n, -1, dtype=np.int64)
+    for gi, (_, ix, _, _) in enumerate(groups):
+        gid[ix] = gi
+    return gid
+
+
+def _positions_by_group(ix, gid) -> list:
+    """Split the sorted row positions ``ix`` probing one blob by their
+    constraint group: ``[(group index, positions)]`` in one stable sort,
+    so a row-unique batch stays O(n log n) per blob."""
+    order = np.argsort(gid[ix], kind="stable")
+    ix, g = ix[order], gid[ix][order]
+    cuts = np.flatnonzero(np.diff(g)) + 1
+    return [
+        (int(g[start]), part)
+        for start, part in zip(np.r_[0, cuts], np.split(ix, cuts))
+    ]
+
+
+def _probe_cells(idx, pdf, groups, nprobe: int, n_cells: int,
+                 n_corpus: int, all_cells=()) -> dict:
+    """Positional cell assignment (cell -> sorted row positions) for the
+    cell-routed constrained hooks (Cell, IVF-PQ): rows of exact groups
+    visit every cell of ``all_cells``; the other rows probe their
+    nearest centroids at ``nprobe`` boosted by the LARGEST inverse match
+    rate among their groups, capped at the cell count."""
+    import math
+
+    from vector_index_spark.operators.knn import knn_join
+
+    acc: dict = {}
+    exact = [ix for _, ix, ex, _ in groups if ex]
+    if exact:
+        rows = np.concatenate(exact).tolist()
+        for c in all_cells:
+            acc[int(c)] = list(rows)
+    probing = [(ix, n) for _, ix, ex, n in groups if not ex]
+    if probing:
+        boost = max(
+            min(8, math.ceil(1.0 / (max(n, 1) / n_corpus)))
+            for _, n in probing
+        )
+        pos = np.sort(np.concatenate([ix for ix, _ in probing]))
+        probes = knn_join(
+            _position_frame(idx._spark, pdf, pos), idx._cents_kv,
+            min(n_cells, nprobe * boost),
+        )
+        for r in probes.select("qid", "id").collect():
+            acc.setdefault(int(r["id"]), []).append(int(r["qid"]))
+    return {
+        c: np.asarray(sorted(set(ix)), dtype=np.int64) for c, ix in acc.items()
+    }
 
 
 def _rerank_exact(cands: DataFrame, train: DataFrame, t: DataFrame, k: int,
@@ -3579,23 +3347,12 @@ class PqServingIndex(_ResidentBlobIndex):
         code blobs (round 11): narrow windows ride one non-equi
         broadcast join against the cold corpus (exact); the rest share a
         single ADC scan where each window group's range mask applies
-        BEFORE its shortlist — no distinct-window cap (round 10's
-        per-DISTINCT-window decomposition is gone); a row-unique-window
-        batch costs one pass."""
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_window(
-                test, k, lo_col=lo_col, hi_col=hi_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        return _single_pass_window_query(
-            self, test, k, lo_col, hi_col, qid_col, vec_col,
-            max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    pdf, Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=(self._train, self._id_col, self._vec_col),
+        BEFORE its shortlist — no distinct-window cap; a
+        row-unique-window batch costs one pass."""
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
 
     def query_by_attribute(
@@ -3612,26 +3369,16 @@ class PqServingIndex(_ResidentBlobIndex):
         """Multi-tenant serving in ONE masked pass (round 11): small
         tenants ride one equality-join exact pass against the cold
         corpus, the rest share a single ADC scan with per-tenant masks —
-        no distinct-tenant cap (the tenant analogue of
-        :meth:`query_by_window`)."""
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_attribute(
-                test, k, qattr_col=qattr_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        return _single_pass_attr_query(
-            self, test, k, qattr_col, qid_col, vec_col,
+        no distinct-tenant cap."""
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    pdf, Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=(self._train, self._id_col, self._vec_col),
+            candidate_factor=candidate_factor,
         )
 
     def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, candidate_factor: int,
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        candidate_factor: int,
     ) -> DataFrame:
         """One ADC pass over every resident code blob answers ALL masked
         constraint groups (round 11): the per-query LUTs build once for
@@ -3689,15 +3436,10 @@ class PqServingIndex(_ResidentBlobIndex):
             self.blobs.mapInPandas(scan, "qid long, id long")
             .dropDuplicates(["qid", "id"])
         )
-        probe_ix = np.concatenate([ix for _, ix, _, _ in groups])
-        rsub = pdf.iloc[probe_ix][["vec"]].copy()
-        rsub.insert(0, "qid", probe_ix)
-        rsub["vec"] = rsub["vec"].map(list)
-        rq = spark.createDataFrame(rsub)
-        small = len(probe_ix) * ncand * self._n_serve <= 2_000_000
-        return _rerank_exact(
-            cands, self._train, rq, k, self._id_col, self._vec_col,
-            broadcast_cands=small,
+        pos = np.concatenate([ix for _, ix, _, _ in groups])
+        return self._rerank_positions(
+            cands, pdf, pos, k,
+            broadcast_cands=len(pos) * ncand * self._n_serve <= 2_000_000,
         )
 
     def query(
@@ -3917,22 +3659,12 @@ class SqServingIndex(_ResidentBlobIndex):
         uint8 blobs (round 11): narrow windows ride one non-equi
         broadcast join against the cold corpus (exact); the rest share a
         single dequantize + grouped-GEMM pass (one distance matrix per
-        blob, each window group selecting its masked columns — the
-        cellscan kernel) — no distinct-window cap."""
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_window(
-                test, k, lo_col=lo_col, hi_col=hi_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        return _single_pass_window_query(
-            self, test, k, lo_col, hi_col, qid_col, vec_col,
-            max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    pdf, Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=(self._train, self._id_col, self._vec_col),
+        blob, each window group selecting its masked columns) — no
+        distinct-window cap."""
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
 
     def query_by_attribute(
@@ -3950,24 +3682,15 @@ class SqServingIndex(_ResidentBlobIndex):
         tenants on one equality-join exact pass against the cold corpus,
         the rest on a single dequantize + grouped-GEMM pass with
         per-tenant masks — no distinct-tenant cap."""
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_attribute(
-                test, k, qattr_col=qattr_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        return _single_pass_attr_query(
-            self, test, k, qattr_col, qid_col, vec_col,
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    pdf, Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=(self._train, self._id_col, self._vec_col),
+            candidate_factor=candidate_factor,
         )
 
     def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, candidate_factor: int,
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        candidate_factor: int,
     ) -> DataFrame:
         """One dequantize + grouped-GEMM pass over every resident uint8
         blob answers ALL masked constraint groups (round 11): each blob
@@ -4019,15 +3742,10 @@ class SqServingIndex(_ResidentBlobIndex):
             self.blobs.mapInPandas(scan, "qid long, id long")
             .dropDuplicates(["qid", "id"])
         )
-        probe_ix = np.concatenate([ix for _, ix, _, _ in groups])
-        rsub = pdf.iloc[probe_ix][["vec"]].copy()
-        rsub.insert(0, "qid", probe_ix)
-        rsub["vec"] = rsub["vec"].map(list)
-        rq = spark.createDataFrame(rsub)
-        small = len(probe_ix) * ncand * self._n_serve <= 2_000_000
-        return _rerank_exact(
-            cands, self._train, rq, k, self._id_col, self._vec_col,
-            broadcast_cands=small,
+        pos = np.concatenate([ix for _, ix, _, _ in groups])
+        return self._rerank_positions(
+            cands, pdf, pos, k,
+            broadcast_cands=len(pos) * ncand * self._n_serve <= 2_000_000,
         )
 
     def query(
@@ -4341,264 +4059,21 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         row carries its own attribute value(s) (``qattr_col``, aligned
         with ``attr_col``) and its neighbors must match them exactly —
         ServingIndex.query_by_attribute's contract over resident code
-        blobs instead of raw matrices.
-
-        A mixed batch splits by per-tenant strategy from the resident
-        histogram: SMALL tenants (under fallback_factor*k matching rows)
-        all go through ONE equality-join exact kNN against the cold
-        corpus (the attribute_knn plan — the tiny query side broadcasts,
-        the corpus never shuffles); the rest probe their routed cells
-        with per-tenant equality masks applied to the resident attribute
-        arrays BEFORE ADC scoring (tenants sharing a probed cell share
-        its blob visit), nprobe boosted by the LARGEST inverse match
-        rate among probing tenants (capped at the cell count), then the
-        usual shortlist + exact re-rank. Returns (qid, rank, id, dist)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-
-        if self._attr_cols is None:
-            raise ValueError(
-                "query_by_attribute needs attr_col= at IvfPqServingIndex "
-                "construction"
-            )
-        qcols = [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
-        if len(qcols) != len(self._attr_cols):
-            raise ValueError(
-                f"qattr_col must name {len(self._attr_cols)} column(s) "
-                f"(one per attr_col), got {qattr_col!r}"
-            )
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_attribute(
-                test, k, qattr_col=qattr_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        self._release_broadcasts()
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            *(
-                F.col(c).cast("long").alias(f"__qa{i}")
-                for i, c in enumerate(qcols)
-            ),
+        blobs instead of raw matrices. SMALL tenants (under
+        fallback_factor*k matching rows) all go through ONE
+        equality-join exact kNN against the cold corpus (the
+        attribute_knn plan — the tiny query side broadcasts, the corpus
+        never shuffles); the rest probe their routed cells with
+        per-tenant equality masks applied to the resident attribute
+        arrays BEFORE ADC scoring, nprobe boosted by the LARGEST inverse
+        match rate among probing tenants (capped at the cell count),
+        then the usual shortlist + exact re-rank. Returns (qid, rank,
+        id, dist)."""
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            nprobe=nprobe, candidate_factor=candidate_factor,
         )
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch_by_attr(
-                chunk, k, nprobe, candidate_factor, auto_boost
-            ),
-            max_queries_per_batch,
-        )
-
-    def _query_batch_by_attr(
-        self, t: DataFrame, k: int, nprobe: int, candidate_factor: int,
-        auto_boost: bool,
-    ) -> DataFrame:
-        import math as _math
-
-        from pyspark.sql import Window
-
-        from vector_index_spark.operators.filtered import (
-            choose_filtered_strategy,
-        )
-        from vector_index_spark.operators.knn import knn_join
-
-        spark = self._spark
-        m = len(self._attr_cols)
-        pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame(
-                [], "qid long, rank int, id long, dist double"
-            )
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        qattrs = np.column_stack(
-            [pdf[f"__qa{i}"].to_numpy(dtype=np.int64) for i in range(m)]
-        )
-        # duplicate qids in one batch: every row keeps its own probe /
-        # tenant candidates (positional keying below) and the per-qid
-        # answer is the min-merge over its rows (ADVICE r7)
-        has_dup = len(np.unique(qids)) < len(qids)
-        hist = self._attribute_histogram()
-        n_corpus = max(sum(hist.values()), 1)
-        n_cells = int(self._C.shape[0])
-        exact_qi: list[int] = []
-        probe_qi: list[int] = []
-        boost = 1
-        for qi in range(len(qids)):
-            key = tuple(int(v) for v in qattrs[qi])
-            n_match = hist.get(key, 0)
-            strategy = "exact"
-            if auto_boost and n_match > 0:
-                strategy, _ = choose_filtered_strategy(
-                    n_corpus, min(n_match, n_corpus), k, 1, 1
-                )
-            elif not auto_boost:
-                strategy = "probe"
-            if strategy == "exact":
-                exact_qi.append(qi)
-            else:
-                probe_qi.append(qi)
-                sel = max(n_match, 1) / n_corpus
-                boost = max(boost, min(8, _math.ceil(1.0 / sel)))
-        parts = []
-
-        if exact_qi:
-            # ONE equality-join exact kNN over the cold corpus for every
-            # small tenant's queries (the attribute_knn plan: tiny query
-            # side broadcasts on the attribute keys, corpus never
-            # shuffles; WindowGroupLimit bounds the exchange)
-            sub = pdf.iloc[exact_qi].copy()
-            sub["vec"] = sub["vec"].map(list)  # ndarray cells -> plain lists
-            tq = spark.createDataFrame(
-                sub.rename(columns={f"__qa{i}": f"__k{i}" for i in range(m)})
-            )
-            c = self._train.select(
-                F.col(self._id_col).alias("id"),
-                F.col(self._vec_col).alias("__cv"),
-                *(
-                    F.col(a).cast("long").alias(f"__k{i}")
-                    for i, a in enumerate(self._attr_cols)
-                ),
-            )
-            from vector_index_spark.functions.distance import l2sq_arrow
-
-            joined = c.join(
-                F.broadcast(tq), [f"__k{i}" for i in range(m)]
-            ).select(
-                "qid", "id",
-                l2sq_arrow()(F.col("vec"), F.col("__cv")).alias("dist"),
-            )
-            if has_dup:
-                joined = joined.groupBy("qid", "id").agg(
-                    F.min("dist").alias("dist")
-                )
-            w = Window.partitionBy("qid").orderBy(
-                F.col("dist").asc(), F.col("id").asc()
-            )
-            parts.append(
-                joined.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("qid", "rank", "id", "dist")
-            )
-
-        if probe_qi:
-            sub_ix = np.asarray(probe_qi, dtype=np.int64)
-            eff_nprobe = min(n_cells, nprobe * boost)
-            # probe by ROW POSITION, not qid value (ADVICE r7): duplicate
-            # qids in one batch each keep their own probe/tenant results,
-            # matching _query_batch's positional assign; the real qid is
-            # restored from b_qids at emit time
-            psub = pdf.iloc[probe_qi][["vec"]].copy()
-            psub.insert(0, "qid", sub_ix)
-            psub["vec"] = psub["vec"].map(list)
-            tq = spark.createDataFrame(psub)
-            probes = knn_join(tq, self._cents_kv, eff_nprobe).select(
-                "qid", F.col("id").alias("cell")
-            )
-            cell_rows = probes.groupBy("qid").agg(
-                F.collect_list("cell").alias("__cells")
-            ).collect()
-            cells_by_pos = {int(r["qid"]): r["__cells"] for r in cell_rows}
-            acc: dict[int, list[int]] = {}
-            for pos_v, cells in cells_by_pos.items():
-                for c in cells:
-                    acc.setdefault(int(c), []).append(pos_v)
-            assign = {
-                c: np.asarray(ix, dtype=np.int64) for c, ix in acc.items()
-            }
-            ncand = candidate_factor * k
-            bc = spark.sparkContext.broadcast(
-                (Q, qattrs, self._C, self._books, assign)
-            )
-            self._live_bcs.append(bc)
-
-            def scan(batches):
-                bQ, b_qattrs, bC, books, asg = bc.value
-                bm, ncent, sub_d = books.shape
-                for pdf_b in batches:
-                    for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                        ix = asg.get(int(cell))
-                        if ix is None or len(ix) == 0:
-                            continue
-                        payload = pickle.loads(blob)
-                        ids, codes, attrs = payload[0], payload[1], payload[2]
-                        if attrs.ndim == 1:
-                            attrs = attrs[:, None]
-                        # group this cell's probing queries by tenant so
-                        # tenants sharing the cell share one mask+LUT pass
-                        groups: dict[tuple, list[int]] = {}
-                        for qi in ix:
-                            groups.setdefault(
-                                tuple(int(v) for v in b_qattrs[qi]), []
-                            ).append(int(qi))
-                        for key, qlist in groups.items():
-                            mask = attrs[:, 0] == key[0]
-                            for j in range(1, len(key)):
-                                mask &= attrs[:, j] == key[j]
-                            if not mask.any():
-                                continue
-                            g_ids = ids[mask]
-                            g_codes = codes[mask].astype(np.int64)
-                            gq = np.asarray(qlist, dtype=np.int64)
-                            R = bQ[gq] - bC[int(cell)][None, :]
-                            lut = np.empty((len(gq), bm, ncent))
-                            for s in range(bm):
-                                seg = R[:, s * sub_d : (s + 1) * sub_d]
-                                lut[:, s, :] = (
-                                    (seg[:, None, :] - books[s][None, :, :])
-                                    ** 2
-                                ).sum(-1)
-                            approx = np.zeros((len(g_ids), len(gq)))
-                            for s in range(bm):
-                                approx += lut[:, s, g_codes[:, s]].T
-                            kk = min(ncand, len(g_ids))
-                            for p in range(len(gq)):
-                                sel = np.lexsort((g_ids, approx[:, p]))[:kk]
-                                yield pd.DataFrame(
-                                    {
-                                        "qid": np.full(kk, gq[p]),
-                                        "id": g_ids[sel],
-                                        "approx": approx[sel, p],
-                                    }
-                                )
-
-            probed = sorted(assign)
-            cands = (
-                self.blobs.filter(F.col("cell").isin(probed))
-                .mapInPandas(scan, "qid long, id long, approx double")
-                .groupBy("qid", "id")
-                .agg(F.min("approx").alias("approx"))
-            )
-            wa = Window.partitionBy("qid").orderBy(
-                F.col("approx").asc(), F.col("id").asc()
-            )
-            shortlist = (
-                cands.withColumn("arank", F.row_number().over(wa))
-                .filter(F.col("arank") <= ncand)
-                .select("qid", "id")
-            )
-            # the shortlist keys by ROW POSITION end-to-end, so the
-            # re-rank query frame is positional too: every candidate is
-            # rescored ONLY against the vector of the row whose tenant
-            # constraint admitted it — a dup qid carrying different
-            # vectors/tenants never cross-scores (each row answered
-            # independently, then min-merged by _union_min_merge)
-            rsub = pdf.iloc[probe_qi][["vec"]].copy()
-            rsub.insert(0, "qid", sub_ix)
-            rsub["vec"] = rsub["vec"].map(list)
-            rq = spark.createDataFrame(rsub)
-            parts.append(
-                _translate_positions(
-                    _rerank_exact(
-                        shortlist, self._train, rq, k, self._id_col,
-                        self._vec_col,
-                        broadcast_cands=len(sub_ix) * ncand <= 2_000_000,
-                    ),
-                    spark, sub_ix, qids[sub_ix],
-                )
-            )
-
-        return _union_min_merge(parts, spark, k, has_dup)
 
     def query_by_window(
         self,
@@ -4618,238 +4093,98 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         interval over this index's single attribute —
         :meth:`ServingIndex.query_by_window`'s contract over resident
         code blobs. Narrow-window queries all resolve through ONE
-        non-equi broadcast join against the cold corpus (the query side
-        broadcasts with its bounds; the corpus never shuffles); the rest
-        probe their routed cells with per-window range masks on the
-        resident attribute arrays BEFORE ADC scoring, nprobe boosted by
-        the largest inverse match rate. Returns (qid, rank, id, dist)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-
-        if self._attr_cols is None or len(self._attr_cols) != 1:
-            raise ValueError(
-                "query_by_window needs exactly one attr_col= at "
-                "IvfPqServingIndex construction (the windowed attribute)"
-            )
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query_by_window(
-                test, k, lo_col=lo_col, hi_col=hi_col,
-                qid_col=qid_col, vec_col=vec_col,
-            )
-        self._release_broadcasts()
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            F.col(lo_col).cast("long").alias("__lo"),
-            F.col(hi_col).cast("long").alias("__hi"),
-        )
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch_by_window(
-                chunk, k, nprobe, candidate_factor, auto_boost
-            ),
-            max_queries_per_batch,
+        non-equi broadcast join against the cold corpus; the rest probe
+        their routed cells with per-window range masks on the resident
+        attribute arrays BEFORE ADC scoring, nprobe boosted by the
+        largest inverse match rate. Returns (qid, rank, id, dist)."""
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            nprobe=nprobe, candidate_factor=candidate_factor,
         )
 
-    def _query_batch_by_window(
-        self, t: DataFrame, k: int, nprobe: int, candidate_factor: int,
-        auto_boost: bool,
+    def _masked_constraint_batch(
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        nprobe: int, candidate_factor: int,
     ) -> DataFrame:
-        import math as _math
-
+        """IVF-PQ hook of the constrained core: the groups probe their
+        routed cells at the boosted nprobe (:func:`_probe_cells`); in
+        each probed cell every group's mask applies to the resident
+        attribute arrays BEFORE ADC scoring (groups sharing a cell share
+        its unpickle), then the global shortlist window and the
+        positional exact re-rank against the cold corpus."""
         from pyspark.sql import Window
 
-        from vector_index_spark.operators.filtered import (
-            RangeSpec,
-            choose_filtered_strategy,
+        assign = _probe_cells(
+            self, pdf, groups, nprobe, int(self._C.shape[0]), n_corpus
         )
-        from vector_index_spark.operators.knn import knn_join
+        gid = _group_of_position(len(Q), groups)
+        ncand = candidate_factor * k
+        bc = self._spark.sparkContext.broadcast(
+            (Q, gid, [g[0] for g in groups], self._C, self._books, assign)
+        )
+        self._live_bcs.append(bc)
 
-        spark = self._spark
-        pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame(
-                [], "qid long, rank int, id long, dist double"
-            )
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        los = pdf["__lo"].to_numpy(dtype=np.int64)
-        his = pdf["__hi"].to_numpy(dtype=np.int64)
-        has_dup = len(np.unique(qids)) < len(qids)
-        hist = self._attribute_histogram()
-        n_corpus = max(sum(hist.values()), 1)
-        n_cells = int(self._C.shape[0])
-        exact_qi: list[int] = []
-        probe_qi: list[int] = []
-        boost = 1
-        strat: dict[tuple[int, int], str] = {}
-        for qi in range(len(qids)):
-            win = (int(los[qi]), int(his[qi]))
-            if win not in strat:
-                spec = (RangeSpec(win[0], max(win[1], win[0])),)
-                n_match = _match_count(hist, spec)
-                s = "exact"
-                if auto_boost and n_match > 0:
-                    s, _ = choose_filtered_strategy(
-                        n_corpus, min(n_match, n_corpus), k, 1, 1
-                    )
-                elif not auto_boost:
-                    s = "probe"
-                strat[win] = s
-                if s != "exact":
-                    sel = max(n_match, 1) / n_corpus
-                    boost = max(boost, min(8, _math.ceil(1.0 / sel)))
-            (exact_qi if strat[win] == "exact" else probe_qi).append(qi)
-        parts = []
-
-        if exact_qi:
-            # ONE non-equi broadcast join covers every narrow-window
-            # query: the (tiny) query side broadcasts carrying its
-            # bounds; the corpus scans once, never shuffles
-            from vector_index_spark.functions.distance import l2sq_arrow
-
-            sub = pdf.iloc[exact_qi][["qid", "vec", "__lo", "__hi"]].copy()
-            sub["vec"] = sub["vec"].map(list)
-            tq = spark.createDataFrame(sub)
-            attr = F.col(self._attr_cols[0]).cast("long")
-            joined = (
-                self._train.select(
-                    F.col(self._id_col).alias("id"),
-                    F.col(self._vec_col).alias("__cv"),
-                    attr.alias("__wattr"),
-                )
-                .join(
-                    F.broadcast(tq),
-                    (F.col("__wattr") >= F.col("__lo"))
-                    & (F.col("__wattr") < F.col("__hi")),
-                )
-                .select(
-                    "qid", "id",
-                    l2sq_arrow()(F.col("vec"), F.col("__cv")).alias("dist"),
-                )
-            )
-            if has_dup:
-                joined = joined.groupBy("qid", "id").agg(
-                    F.min("dist").alias("dist")
-                )
-            w = Window.partitionBy("qid").orderBy(
-                F.col("dist").asc(), F.col("id").asc()
-            )
-            parts.append(
-                joined.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("qid", "rank", "id", "dist")
+        def scan(batches):
+            from vector_index_spark.operators.filtered import (
+                conjunction_mask,
             )
 
-        if probe_qi:
-            sub_ix = np.asarray(probe_qi, dtype=np.int64)
-            eff_nprobe = min(n_cells, nprobe * boost)
-            # probe by ROW POSITION (the dup-qid contract)
-            psub = pdf.iloc[probe_qi][["vec"]].copy()
-            psub.insert(0, "qid", sub_ix)
-            psub["vec"] = psub["vec"].map(list)
-            tq = spark.createDataFrame(psub)
-            probes = knn_join(tq, self._cents_kv, eff_nprobe).select(
-                "qid", F.col("id").alias("cell")
-            )
-            cell_rows = probes.groupBy("qid").agg(
-                F.collect_list("cell").alias("__cells")
-            ).collect()
-            acc: dict[int, list[int]] = {}
-            for r in cell_rows:
-                for c in r["__cells"]:
-                    acc.setdefault(int(c), []).append(int(r["qid"]))
-            assign = {
-                c: np.asarray(ix, dtype=np.int64) for c, ix in acc.items()
-            }
-            ncand = candidate_factor * k
-            bc = spark.sparkContext.broadcast(
-                (Q, los, his, self._C, self._books, assign)
-            )
-            self._live_bcs.append(bc)
-
-            def scan(batches):
-                bQ, b_los, b_his, bC, books, asg = bc.value
-                bm, ncent, sub_d = books.shape
-                for pdf_b in batches:
-                    for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                        ix = asg.get(int(cell))
-                        if ix is None or len(ix) == 0:
+            bQ, b_gid, allows, bC, books, asg = bc.value
+            bm, ncent, sub_d = books.shape
+            for pdf_b in batches:
+                for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
+                    ix = asg.get(int(cell))
+                    if ix is None or len(ix) == 0:
+                        continue
+                    payload = pickle.loads(blob)
+                    ids, codes, attrs = payload[0], payload[1], payload[2]
+                    for gi, gq in _positions_by_group(ix, b_gid):
+                        mask = conjunction_mask(attrs, allows[gi])
+                        if not mask.any():
                             continue
-                        payload = pickle.loads(blob)
-                        ids, codes, attrs = payload[0], payload[1], payload[2]
-                        if attrs.ndim == 1:
-                            attrs = attrs[:, None]
-                        # group this cell's probing queries by window so
-                        # shared windows share one mask+LUT pass
-                        groups: dict[tuple, list[int]] = {}
-                        for qi in ix:
-                            groups.setdefault(
-                                (int(b_los[qi]), int(b_his[qi])), []
-                            ).append(int(qi))
-                        for (lo, hi), qlist in groups.items():
-                            mask = (attrs[:, 0] >= lo) & (attrs[:, 0] < hi)
-                            if not mask.any():
-                                continue
-                            g_ids = ids[mask]
-                            g_codes = codes[mask].astype(np.int64)
-                            gq = np.asarray(qlist, dtype=np.int64)
-                            R = bQ[gq] - bC[int(cell)][None, :]
-                            lut = np.empty((len(gq), bm, ncent))
-                            for s in range(bm):
-                                seg = R[:, s * sub_d : (s + 1) * sub_d]
-                                lut[:, s, :] = (
-                                    (seg[:, None, :] - books[s][None, :, :])
-                                    ** 2
-                                ).sum(-1)
-                            approx = np.zeros((len(g_ids), len(gq)))
-                            for s in range(bm):
-                                approx += lut[:, s, g_codes[:, s]].T
-                            kk = min(ncand, len(g_ids))
-                            for p in range(len(gq)):
-                                sel = np.lexsort((g_ids, approx[:, p]))[:kk]
-                                yield pd.DataFrame(
-                                    {
-                                        "qid": np.full(kk, gq[p]),
-                                        "id": g_ids[sel],
-                                        "approx": approx[sel, p],
-                                    }
-                                )
+                        g_ids = ids[mask]
+                        g_codes = codes[mask].astype(np.int64)
+                        R = bQ[gq] - bC[int(cell)][None, :]
+                        lut = np.empty((len(gq), bm, ncent))
+                        for s in range(bm):
+                            seg = R[:, s * sub_d : (s + 1) * sub_d]
+                            lut[:, s, :] = (
+                                (seg[:, None, :] - books[s][None, :, :]) ** 2
+                            ).sum(-1)
+                        approx = np.zeros((len(g_ids), len(gq)))
+                        for s in range(bm):
+                            approx += lut[:, s, g_codes[:, s]].T
+                        kk = min(ncand, len(g_ids))
+                        for p in range(len(gq)):
+                            sel = np.lexsort((g_ids, approx[:, p]))[:kk]
+                            yield pd.DataFrame(
+                                {
+                                    "qid": np.full(kk, gq[p]),
+                                    "id": g_ids[sel],
+                                    "approx": approx[sel, p],
+                                }
+                            )
 
-            probed = sorted(assign)
-            cands = (
-                self.blobs.filter(F.col("cell").isin(probed))
-                .mapInPandas(scan, "qid long, id long, approx double")
-                .groupBy("qid", "id")
-                .agg(F.min("approx").alias("approx"))
-            )
-            wa = Window.partitionBy("qid").orderBy(
-                F.col("approx").asc(), F.col("id").asc()
-            )
-            shortlist = (
-                cands.withColumn("arank", F.row_number().over(wa))
-                .filter(F.col("arank") <= ncand)
-                .select("qid", "id")
-            )
-            # positional re-rank: each candidate rescored only against
-            # the vector of the row whose window admitted it (dup-qid
-            # contract; see _query_batch_by_attr)
-            rsub = pdf.iloc[probe_qi][["vec"]].copy()
-            rsub.insert(0, "qid", sub_ix)
-            rsub["vec"] = rsub["vec"].map(list)
-            rq = spark.createDataFrame(rsub)
-            parts.append(
-                _translate_positions(
-                    _rerank_exact(
-                        shortlist, self._train, rq, k, self._id_col,
-                        self._vec_col,
-                        broadcast_cands=len(sub_ix) * ncand <= 2_000_000,
-                    ),
-                    spark, sub_ix, qids[sub_ix],
-                )
-            )
-
-        return _union_min_merge(parts, spark, k, has_dup)
+        cands = (
+            self.blobs.filter(F.col("cell").isin(sorted(assign)))
+            .mapInPandas(scan, "qid long, id long, approx double")
+            .groupBy("qid", "id")
+            .agg(F.min("approx").alias("approx"))
+        )
+        wa = Window.partitionBy("qid").orderBy(
+            F.col("approx").asc(), F.col("id").asc()
+        )
+        shortlist = (
+            cands.withColumn("arank", F.row_number().over(wa))
+            .filter(F.col("arank") <= ncand)
+            .select("qid", "id")
+        )
+        pos = np.sort(np.concatenate([g[1] for g in groups]))
+        return self._rerank_positions(
+            shortlist, pdf, pos, k,
+            broadcast_cands=len(pos) * ncand <= 2_000_000,
+        )
 
     def _query_batch(
         self, t: DataFrame, k: int, nprobe: int, candidate_factor: int,
@@ -5053,16 +4388,10 @@ class RptServingIndex(_ResidentBlobIndex):
         leaf's unpickle and one grouped-GEMM kernel call — no
         distinct-window cap. ``probes`` defaults scale-aware
         (:func:`vector_index_spark.index.rpt.default_probes`)."""
-        if probes is None:
-            probes = _rpt_default_probes(2 ** self._depth)
-        return _single_pass_window_query(
-            self, test, k, lo_col, hi_col, qid_col, vec_col,
-            max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    Q, groups, kk, probes, nc, auto_boost
-                ),
-            exact_corpus=None,
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            probes=probes,
         )
 
     def query_by_attribute(
@@ -5081,21 +4410,14 @@ class RptServingIndex(_ResidentBlobIndex):
         (exact), large tenants probe boosted leaf sets — no
         distinct-tenant cap (the tenant analogue of
         :meth:`query_by_window`)."""
-        if probes is None:
-            probes = _rpt_default_probes(2 ** self._depth)
-        return _single_pass_attr_query(
-            self, test, k, qattr_col, qid_col, vec_col,
-            max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    Q, groups, kk, probes, nc, auto_boost
-                ),
-            exact_corpus=None,
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
+            max_queries_per_batch, auto_boost, probes=probes,
         )
 
     def _masked_constraint_batch(
-        self, Q, groups, k: int, probes: int, n_corpus: int,
-        auto_boost: bool = True,
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        probes: "int | None",
     ) -> DataFrame:
         """One pass over the resident leaf blobs answers ALL constraint
         groups (round 11): non-exact groups run the driver-side
@@ -5115,6 +4437,8 @@ class RptServingIndex(_ResidentBlobIndex):
 
         spark = self._spark
         n_leaves = 2 ** self._depth
+        if probes is None:
+            probes = _rpt_default_probes(n_leaves)
         # leaf -> {group index -> probing row positions}
         assign: dict = {}
         exact_gi: list = []
@@ -5406,14 +4730,10 @@ class PcaServingIndex(_ResidentBlobIndex):
         in the reduced space under their masks and refine against the
         co-resident raw rows inside the same blob visit — no
         distinct-window cap."""
-        return _single_pass_window_query(
-            self, test, k, lo_col, hi_col, qid_col, vec_col,
-            max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=None,
+        return self._constrained_query(
+            "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
+            qid_col, vec_col, max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
 
     def query_by_attribute(
@@ -5431,18 +4751,15 @@ class PcaServingIndex(_ResidentBlobIndex):
         tenants run the masked exact GEMM over the resident raw
         matrices, large tenants shortlist reduced-space under their
         masks and refine in-blob — no distinct-tenant cap."""
-        return _single_pass_attr_query(
-            self, test, k, qattr_col, qid_col, vec_col,
+        return self._constrained_query(
+            "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
-            masked_batch=lambda pdf, Q, groups, kk, nc:
-                self._masked_constraint_batch(
-                    Q, groups, kk, candidate_factor
-                ),
-            exact_corpus=None,
+            candidate_factor=candidate_factor,
         )
 
     def _masked_constraint_batch(
-        self, Q, groups, k: int, candidate_factor: int,
+        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+        candidate_factor: int,
     ) -> DataFrame:
         """One pass over the resident (ids, reduced, raw) blobs answers
         ALL constraint groups (round 11): exact groups ride one grouped

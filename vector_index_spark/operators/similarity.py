@@ -47,7 +47,7 @@ def maxsim_retrieval(
 
     Returns (qid, rank, doc_id, score), score rounded to 6 decimals.
     """
-    from vector_index_spark.functions.distance import dot_seq_arrow
+    from vector_index_spark.functions.distance import seq_metric_arrow
 
     q = query_tokens.select(
         F.col(qdoc_col).alias("qid"),
@@ -61,14 +61,17 @@ def maxsim_retrieval(
     )
     # round 16: the per-pair dot was an interpreted higher-order
     # expression (aggregate over zip_with — no codegen) costing ~2d
-    # interpreter dispatches per crossed row; dot_seq_arrow computes the
-    # BIT-IDENTICAL left-to-right fold in one vectorized pass per Arrow
-    # batch, so every downstream value (max, sum, round) is unchanged.
+    # interpreter dispatches per crossed row; seq_metric_arrow("dot")
+    # computes the BIT-IDENTICAL left-to-right fold in one vectorized
+    # pass per Arrow batch, so every downstream value (max, sum, round)
+    # is unchanged.
     # The plan keeps the same shape otherwise: broadcast cross join,
     # map-side partial max, two key-preserving aggregations.
     per_qtok = (
         d.crossJoin(F.broadcast(q))
-        .withColumn("__sim", dot_seq_arrow()(F.col("__qv"), F.col("__dv")))
+        .withColumn(
+            "__sim", seq_metric_arrow("dot")(F.col("__qv"), F.col("__dv"))
+        )
         .groupBy("qid", "doc_id", "__qt")
         .agg(F.max("__sim").alias("__best"))
     )
