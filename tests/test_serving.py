@@ -1007,6 +1007,20 @@ def _dup_qid_want(spark, query, rows, schema):
     )
 
 
+def _assert_plain_query_dup_qid(spark, sidx, v, name=""):
+    """One qid sent twice in a plain ``query`` batch with nearly equal
+    vectors: the rows share neighbours, so a batch that merged them by
+    qid would repeat ids; the answer must hold K distinct ids and equal
+    the rows run alone, min-merged (:func:`_dup_qid_want`)."""
+    rows = [(7, v), (7, [x + 1e-3 for x in v])]
+    schema = "qid long, vec array<double>"
+    got = _round_rows(sidx.query(spark.createDataFrame(rows, schema), K))
+    assert len({r[2] for r in got}) == len(got) == K, (name, got)
+    assert got == _dup_qid_want(
+        spark, lambda df: sidx.query(df, K), rows, schema
+    ), name
+
+
 def test_graph_serving_conjunction_filter(spark, ltrain):
     """Multi-attribute conjunction on graph ServingIndex: the selective
     branch equals exact conjunction-filtered kNN; the broad (beam)
@@ -2216,6 +2230,8 @@ def test_query_by_window_per_query_ranges(spark, ltrain):
         assert got_d == _dup_qid_want(
             spark, lambda df: sidx.query_by_window(df, K), dup_rows, schema
         )
+        # the same repeated qid on plain query: each id comes back once
+        _assert_plain_query_dup_qid(spark, sidx, v)
         # arity gate: windows need exactly one attribute
         two = ServingIndex(
             vectors.withColumn("x2", F.col("day_code")),
@@ -2292,6 +2308,10 @@ def test_ivfpq_query_by_window(spark, ltrain):
             + [r for r in _round_rows(got_w) if r[0] not in q10]
         )
         assert got_m == want_m
+        # a qid repeated with nearly equal vectors on plain query
+        _assert_plain_query_dup_qid(
+            spark, sidx, [float(x) for x in half.first()["vec"]]
+        )
         with pytest.raises(ValueError, match="exactly one"):
             IvfPqServingIndex(
                 enc, cents, books, train,
@@ -2709,10 +2729,72 @@ def test_query_by_window_all_serving_classes(spark, ltrain):
             )
             dgot = _round_rows(built[name].query_by_window(dup, K))
             assert dgot == dwant, name
+            # plain query, one qid sent twice with nearly equal vectors
+            _assert_plain_query_dup_qid(spark, sidx, v0, name)
 
         # attr_col is mandatory
         with pytest.raises(ValueError, match="attr_col"):
             PqServingIndex(enc_pq, tr, books).query_by_window(wtest, K)
+    finally:
+        for sidx in built.values():
+            sidx.unpersist()
+
+
+def test_wrong_dimension_query_rows_fail_on_array_routes(spark, ltrain):
+    """PQ, SQ, IVF-PQ, RPT and PCA know the query dimension from the
+    driver arrays they hold (codebooks, SQ mins, centroids, normals, PCA
+    mean): a wrong-dimension or ragged query row fails with the graph
+    route's ``vector dimension mismatch`` on ``query`` and
+    ``query_by_*`` alike, not with a numpy broadcast error inside a
+    kernel."""
+    from vector_index_spark.index.ivfpq import build_ivfpq
+    from vector_index_spark.index.pca import project_pca, train_pca
+    from vector_index_spark.index.pq import encode_pq, train_pq
+    from vector_index_spark.index.rpt import assign_rpt, train_rpt
+    from vector_index_spark.index.serving import (
+        IvfPqServingIndex,
+        PcaServingIndex,
+        PqServingIndex,
+        RptServingIndex,
+        SqServingIndex,
+    )
+    from vector_index_spark.index.sq import encode_sq, train_sq
+
+    train, test = ltrain
+    tr = train.select("id", "vec", "label")
+    labels = F.broadcast(tr.select("id", "label"))
+    books = train_pq(tr, n_subspaces=8, n_centroids=16)
+    mins, maxs = train_sq(tr)
+    enc, cents, ivf_books = build_ivfpq(
+        tr.select("id", "vec"), n_centroids=8, replicas=1
+    )
+    W, T = train_rpt(tr, depth=3)
+    mean, comp = train_pca(tr, 16)
+    built = {
+        "pq": PqServingIndex(encode_pq(tr, books), tr, books,
+                             attr_col="label"),
+        "sq": SqServingIndex(encode_sq(tr, mins, maxs), tr, mins, maxs,
+                             attr_col="label"),
+        "ivfpq": IvfPqServingIndex(enc, cents, ivf_books, tr,
+                                   attr_col="label"),
+        "rpt": RptServingIndex(assign_rpt(tr, W, T).join(labels, "id"),
+                               W, T, attr_col="label"),
+        "pca": PcaServingIndex(project_pca(tr, mean, comp).join(labels, "id"),
+                               mean, comp, attr_col="label"),
+    }
+    v = [float(x) for x in test.first()["vec"]]
+    schema = "qid long, vec array<double>, label long"
+    short = spark.createDataFrame([(1, v[:32], 1)], schema)
+    ragged = spark.createDataFrame([(1, v, 1), (2, v[:32], 1)], schema)
+    try:
+        for name, sidx in built.items():
+            for df in (short, ragged):
+                with pytest.raises(Exception) as ei:
+                    sidx.query(df, K).collect()
+                assert "vector dimension mismatch" in str(ei.value), name
+                with pytest.raises(Exception) as ei:
+                    sidx.query_by_attribute(df, K, qattr_col="label").collect()
+                assert "vector dimension mismatch" in str(ei.value), name
     finally:
         for sidx in built.values():
             sidx.unpersist()

@@ -113,9 +113,20 @@ def grouped_masked_topk_frame(qids, Q, ids, X, groups, k: int,
     absolute, with identical id selection away from within-wobble top-k
     boundaries (the PCA-serving parity contract; property-tested in
     test_hypothesis_props, pinned against exact kNN at the engine's
-    9-decimal rounding in tests/test_serving.py)."""
+    9-decimal rounding in tests/test_serving.py).
+
+    A ``None`` mask selects every blob row. With ONE group there is no
+    matrix to share: its rows are masked first and scored by
+    :func:`gemm_topk_frame` itself, so a single-filter batch gets
+    exactly the per-group kernel's floats (and computes only its
+    mask's columns)."""
     import pandas as pd
 
+    if len(groups) == 1:
+        pos, mask = groups[0]
+        if mask is not None:
+            ids, X = ids[mask], X[mask]
+        return gemm_topk_frame(qids[pos], Q[pos], ids, X, k, query_block)
     # restrict the GEMM to rows that actually probe this blob
     up = np.unique(np.concatenate([pos for pos, _ in groups]))
     remap = {int(p): i for i, p in enumerate(up)}
@@ -131,12 +142,12 @@ def grouped_masked_topk_frame(qids, Q, ids, X, groups, k: int,
                 [remap[int(p)] for p in pos if lo <= remap[int(p)] < hi],
                 dtype=np.int64,
             )
-            if len(rows) == 0 or not mask.any():
+            if len(rows) == 0 or (mask is not None and not mask.any()):
                 continue
-            Dg = D[rows - lo][:, mask]
+            Dg = D[rows - lo] if mask is None else D[rows - lo][:, mask]
             kk = min(k, Dg.shape[1])
             top = np.argsort(Dg, axis=1, kind="stable")[:, :kk]
-            gids = ids[mask]
+            gids = ids if mask is None else ids[mask]
             out_qid.append(np.repeat(qids[up[rows]], kk))
             out_id.append(gids[top].reshape(-1))
             out_dist.append(np.take_along_axis(Dg, top, axis=1).reshape(-1))

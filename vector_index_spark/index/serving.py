@@ -37,32 +37,38 @@ the remove ledger, the strategy histogram, the segment stack, and the
 crash-safe snapshot protocol (``snapshot``, ``snapshot_incremental``,
 ``from_snapshot``: versioned dirs, writer token, manifest commit, GC,
 latest-generation-wins restore, blob and corpus fingerprints). Each
-serving class keeps its own pack, refresh-encode and query kernels and
+serving class keeps its own pack, refresh-encode and query kernel and
 declares the rest as data: its blob key column, the names of its
 pending-snapshot and blob-count attributes, its driver ``.npy`` arrays,
 whether it snapshots a routing table, its histogram source relation and
 whether it keeps a fingerprinted cold corpus.
 
-Per-query constrained serving (``query_by_window``: each query row
-carries its own ``[lo, hi)`` over the single attribute;
-``query_by_attribute``: its own value per attribute) is one core path
-too, :meth:`_ResidentBlobIndex._constrained_query`: validation, the
-near-duplicate reroute, grouping rows by window or tenant tuple, the
-per-group histogram strategy, ONE exact broadcast join against the cold
-corpus for the selective groups (PQ, SQ, IVF-PQ), row-position keying
-and the per-(qid, id) min-merge. Each class's public ``query_by_*``
-forwards its own knob (``relaxed_monotonicity``, ``nprobe``,
-``candidate_factor``, ``probes``) to its one hook,
-``_masked_constraint_batch``: the route's single pass over its resident
-blobs for every remaining group, with the route's own rule (graph
-patience boost; Cell / IVF-PQ nprobe boost over :func:`_probe_cells`;
-RPT probe boost; PQ / SQ shortlist + exact re-rank; PCA reduced-space
-shortlist + in-blob refine).
+Every read is one core path too, :meth:`_ResidentBlobIndex._query`:
+``query`` (a plain batch is one unmasked group of rows, an ``allowed=``
+batch one masked group over every row), ``query_by_window`` (each row
+carries its own ``[lo, hi)`` over the single attribute) and
+``query_by_attribute`` (its own value per attribute; rows group by
+window or tenant tuple). The core owns validation, the near-duplicate
+reroute, the dimension check, the per-group histogram strategy and its
+boosts, chunking, ONE exact broadcast join against the cold corpus for
+the exact groups (PQ, SQ, IVF-PQ), and the per-(qid, id) min-merge that
+a batch repeating a qid needs. Each class's public methods forward
+their own knobs (``nprobe``, ``relaxed_monotonicity``,
+``tree_merge_fanin``, ``candidate_factor``, ``probes``) to its ONE
+kernel hook, ``_kernel_batch``: the route's single pass over its
+resident blobs for every remaining group (graph beam / masked GEMM with
+the patience boost; Cell / IVF-PQ centroid probes over
+:func:`_probe_plan`; RPT leaf walk; PQ / SQ shortlist + exact re-rank;
+PCA reduced-space shortlist + in-blob refine). Kernels emit real qids:
+the broadcast batch carries them, and probing, shortlists and re-rank
+key by row position only where a row's own vector or filter is needed.
 """
 
 from __future__ import annotations
 
+import math
 import pickle
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -971,11 +977,17 @@ class _ResidentBlobIndex:
       ``fingerprint_corpus``, ``corpus_fp_delta``) are refused elsewhere;
     - ``_QUANTIZED``: blobs hold quantized codes, so the near-duplicate
       reroute (:meth:`reroute_dense_to`) applies;
-    - ``_MANIFEST_SCALARS``: extra ``(manifest key, attribute)`` pairs.
+    - ``_MANIFEST_SCALARS``: extra ``(manifest key, attribute)`` pairs;
+    - ``_FILTER_BRANCH``: the ``last_filter_strategy`` label of a
+      non-exact ``allowed`` query (``"beam"`` / ``"prefilter"`` /
+      ``"masked_scan"``); ``_REPORTS_NPROBE``: ``query`` also records
+      its effective probe count in ``last_eff_nprobe`` (graph route).
 
-    Per-query constrained serving (:meth:`_constrained_query`) is core
-    too; each class supplies only its resident pass over the blobs, the
-    hook ``_masked_constraint_batch``.
+    Every read is core too: ``query`` (plain and ``allowed=``),
+    ``query_by_window`` and ``query_by_attribute`` run one path,
+    :meth:`_query`, and each class supplies one kernel hook,
+    ``_kernel_batch`` — its resident pass over the blobs for a batch's
+    groups of rows (``allow=None``: unmasked).
     """
 
     _PENDING: str
@@ -989,8 +1001,11 @@ class _ResidentBlobIndex:
     _COLD_CORPUS = False
     _QUANTIZED = False
     _MANIFEST_SCALARS: tuple = ()
-    # query vector dimension, where the class knows it: set -> ragged
-    # constrained queries fail fast
+    _FILTER_BRANCH = "prefilter"
+    _REPORTS_NPROBE = False
+    # query vector dimension, where the class knows it (the graph route
+    # from its constructor, the others from their driver arrays): set ->
+    # ragged or wrong-dimension query rows fail fast
     _dimension = None
     # (id, vec) column names of the relations a refresh wave arrives in
     _id_col = "id"
@@ -1076,6 +1091,23 @@ class _ResidentBlobIndex:
 
     def _routing_table(self) -> DataFrame:
         return self._cents_kv
+
+    def _routing_matrix(self) -> tuple:
+        """(keys, float64 vectors) of the routing table, collected once
+        per table and held on the driver: a refresh that changes the
+        table replaces the relation object, and a restored handle starts
+        without a copy, so the copy stays current without bookkeeping."""
+        table = self._routing_table()
+        held = getattr(self, "_routing_held", None)
+        if held is None or held[0] is not table:
+            rows = table.select("id", "vec").collect()
+            held = (
+                table,
+                np.array([r["id"] for r in rows], dtype=np.int64),
+                np.array([r["vec"] for r in rows], dtype=np.float64),
+            )
+            self._routing_held = held
+        return held[1], held[2]
 
     def remove(self, ids) -> int:
         """Remove rows by id from the resident blobs (see
@@ -1409,42 +1441,55 @@ class _ResidentBlobIndex:
         idx._snapshot_lineage = (path, *_lineage_token(manifest))
         return idx
 
-    # -- per-query constrained serving: query_by_window / query_by_attribute
+    # -- the one query path: query, query_by_window, query_by_attribute
 
-    def _constrained_query(
-        self, form: str, test: DataFrame, k: int, cols: dict, qid_col: str,
+    def _query(
+        self, form: str, test: DataFrame, k: int, spec, qid_col: str,
         vec_col: str, max_queries_per_batch: int, auto_boost: bool,
         **knobs,
     ) -> DataFrame:
-        """The one path under every class's :meth:`query_by_window`
-        (``form="window"``, ``cols = {lo_col, hi_col}``: each row carries
-        its own half-open ``[lo, hi)`` over the single attribute) and
-        :meth:`query_by_attribute` (``form="attr"``, ``cols =
-        {qattr_col}``: each row's neighbors must equal its own value per
-        attribute). Validates the constraint columns, dispatches to the
-        near-duplicate fallback on quantized routes, checks the query
+        """The one path under every class's :meth:`query` (``form=
+        "query"``, ``spec`` the ``allowed`` filter or ``None``),
+        :meth:`query_by_window` (``form="window"``, ``spec = {lo_col,
+        hi_col}``: each row carries its own half-open ``[lo, hi)`` over
+        the single attribute) and :meth:`query_by_attribute` (``form=
+        "attr"``, ``spec = {qattr_col}``: each row's neighbors must equal
+        its own value per attribute). Validates the filter or the
+        constraint columns, dispatches to the near-duplicate fallback on
+        quantized routes, runs the ``allowed`` filter's histogram
+        strategy rule (recorded in ``last_filter_strategy``, and in
+        ``last_eff_nprobe`` where ``_REPORTS_NPROBE``), checks the query
         dimension where the class knows it, and answers the batch in
-        micro-batches of :meth:`_constrained_batch`. ``knobs`` are the
+        micro-batches of :meth:`_answer_batch`. ``knobs`` are the
         route's own parameters, passed through to its
-        :meth:`_masked_constraint_batch` hook. Returns (qid, rank, id,
-        dist)."""
+        :meth:`_kernel_batch` hook. Returns (qid, rank, id, dist)."""
         from vector_index_spark.index.querychunk import chunked_over_queries
+        from vector_index_spark.operators.filtered import (
+            choose_filtered_strategy,
+            normalize_allowed,
+        )
 
         name = type(self).__name__
-        if form == "window":
+        key_cols: list = []
+        if form == "query":
+            if spec is not None and self._attr_cols is None:
+                raise ValueError(
+                    f"filtered query needs attr_col= at {name} construction"
+                )
+        elif form == "window":
             if self._attr_cols is None or len(self._attr_cols) != 1:
                 raise ValueError(
                     "query_by_window needs exactly one attr_col= at "
                     f"{name} construction (the windowed attribute)"
                 )
-            key_cols = [cols["lo_col"], cols["hi_col"]]
+            key_cols = [spec["lo_col"], spec["hi_col"]]
         else:
             if self._attr_cols is None:
                 raise ValueError(
                     f"query_by_attribute needs attr_col= at {name} "
                     "construction"
                 )
-            qattr_col = cols["qattr_col"]
+            qattr_col = spec["qattr_col"]
             key_cols = (
                 [qattr_col] if isinstance(qattr_col, str) else list(qattr_col)
             )
@@ -1456,9 +1501,49 @@ class _ResidentBlobIndex:
         if self._QUANTIZED:
             fb = _dense_reroute(self, k, knobs["candidate_factor"])
             if fb is not None:
+                if form == "query":
+                    return fb.query(
+                        test, k, qid_col=qid_col, vec_col=vec_col,
+                        allowed=spec,
+                    )
                 return getattr(fb, f"query_by_{form}")(
-                    test, k, **cols, qid_col=qid_col, vec_col=vec_col
+                    test, k, **spec, qid_col=qid_col, vec_col=vec_col
                 )
+        plan = None
+        if form == "query":
+            # a plain query is one unmasked group, an allowed= query one
+            # masked group over every row; unboosted, the group's match
+            # rate is 1/1 and no histogram is read
+            allows = (
+                None if spec is None
+                else normalize_allowed(spec, len(self._attr_cols))
+            )
+            exact, n_match, n_corpus = False, 1, 1
+            boosted = allows is not None and auto_boost
+            if boosted:
+                hist = self._attribute_histogram()
+                n_corpus = max(sum(hist.values()), 1)
+                n_match = _match_count(hist, allows)
+                exact = choose_filtered_strategy(
+                    n_corpus, n_match, k, 1, 1
+                )[0] == "exact"
+            plan = (allows, exact, n_match, n_corpus)
+            # observability for tests/ops: which branch served this call
+            # and the effective (possibly boosted) probe count
+            self.last_filter_strategy = (
+                None if allows is None
+                else "exact" if exact else self._FILTER_BRANCH
+            )
+            if self._REPORTS_NPROBE:
+                eff = None if exact else knobs["nprobe"]
+                if eff is not None and boosted:
+                    eff *= _boost(n_match, n_corpus)
+                    cap = getattr(self, self._COUNT, None)
+                    eff = eff if cap is None else min(int(cap), eff)
+                self.last_eff_nprobe = eff
+        # recycle the PREVIOUS call's broadcasts here, not per micro-batch:
+        # a multi-chunk call would unpersist earlier chunks before the
+        # lazily-unioned result executes
         self._release_broadcasts()
         t = test.select(
             F.col(qid_col).alias("qid"),
@@ -1474,150 +1559,187 @@ class _ResidentBlobIndex:
             t = assert_dim(t, "vec", self._dimension)
         return chunked_over_queries(
             t,
-            lambda chunk: self._constrained_batch(
-                chunk, k, form, len(key_cols), auto_boost, knobs
+            lambda chunk: self._answer_batch(
+                chunk, k, form, len(key_cols), plan, auto_boost, knobs
             ),
             max_queries_per_batch,
         )
 
-    def _constrained_batch(
-        self, t: DataFrame, k: int, form: str, n_keys: int,
+    def _answer_batch(
+        self, t: DataFrame, k: int, form: str, n_keys: int, plan,
         auto_boost: bool, knobs: dict,
     ) -> DataFrame:
-        """One micro-batch: rows group by constraint (tenant tuple or
-        window) and each group gets the histogram strategy rule —
-        ``auto_boost=False`` forces every group onto the masked route.
-        On cold-corpus routes the selective groups ride ONE exact join
-        against the corpus (:meth:`_exact_constraint_join`); every
-        other group rides ONE pass of the route's hook
-        ``_masked_constraint_batch(pdf, Q, groups, k, n_corpus,
-        auto_boost, **knobs)`` over the resident blobs, where ``groups``
-        entries are ``(allow_arrays, row_positions, exact, n_match)``
-        and groups sharing a blob share its unpickle. Every stage keys
-        by ROW POSITION (the hook returns positional (qid, rank, id,
-        dist)), so a qid repeated with different vectors or constraints
-        answers each row independently; the parts translate back to
-        real qids and min-merge per (qid, id)."""
+        """One micro-batch: its rows form groups — one group for
+        ``query`` (``plan`` carries its spec and strategy), one per
+        tenant tuple or window for the constrained forms, each with the
+        histogram strategy rule (``auto_boost=False`` forces the masked
+        route). On cold-corpus routes the exact groups ride ONE join
+        against the corpus (:meth:`_exact_join`); every other group
+        rides ONE pass of the route's hook ``_kernel_batch(b, groups, k,
+        n_corpus, auto_boost, **knobs)`` over the resident blobs, where
+        ``groups`` entries are ``(allow_arrays or None, row_positions,
+        exact, n_match)`` (``None``: unmasked) and groups sharing a blob
+        share its unpickle. Both emit real qids. When the batch repeats
+        a qid, each row is answered independently (positional probing,
+        shortlists and re-rank) and the answers min-merge per (qid,
+        id)."""
         from vector_index_spark.operators.filtered import (
             RangeSpec,
             choose_filtered_strategy,
         )
 
-        spark = self._spark
         pdf = t.toPandas()
         if len(pdf) == 0:
-            return spark.createDataFrame(
-                [], "qid long, rank int, id long, dist double"
-            )
+            return self._spark.createDataFrame([], _RANKED_SCHEMA)
         qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        keys = np.column_stack(
-            [pdf[f"__k{i}"].to_numpy(dtype=np.int64) for i in range(n_keys)]
+        b = _Batch(
+            pdf, qids, np.stack(pdf["vec"].to_numpy()).astype(np.float64),
+            len(np.unique(qids)) < len(qids),
         )
-        hist = self._attribute_histogram()
-        n_corpus = max(sum(hist.values()), 1)
-        acc: dict = {}
-        for pos, key in enumerate(map(tuple, keys.tolist())):
-            acc.setdefault(key, []).append(pos)
-        exact_rows: list = []
-        groups: list = []
-        for key, ix in acc.items():
-            if form == "window":
-                # an empty window (hi <= lo) matches nothing
-                spec = (RangeSpec(key[0], max(key[1], key[0])),)
-                n_match = _match_count(hist, spec)
-            else:
-                spec = tuple(frozenset({v}) for v in key)
-                n_match = hist.get(key, 0)  # the tuple IS a histogram key
-            exact = auto_boost and choose_filtered_strategy(
-                n_corpus, min(n_match, n_corpus), k, 1, 1
-            )[0] == "exact"
-            if exact and self._COLD_CORPUS:
-                exact_rows.extend(ix)
-            else:
-                groups.append(
-                    (
-                        _allow_arrays(spec),
-                        np.asarray(ix, dtype=np.int64),
-                        exact,
-                        n_match,
-                    )
-                )
-        parts = []
-        if exact_rows:
-            ex = np.asarray(sorted(exact_rows), dtype=np.int64)
-            parts.append(
-                _translate_positions(
-                    self._exact_constraint_join(pdf, ex, form, n_keys, k),
-                    spark, ex, qids[ex],
-                )
+        if form == "query":
+            allows, exact, n_match, n_corpus = plan
+            specs = [(allows, np.arange(len(pdf), dtype=np.int64), exact,
+                      n_match)]
+        else:
+            hist = self._attribute_histogram()
+            n_corpus = max(sum(hist.values()), 1)
+            keys = np.column_stack(
+                [pdf[f"__k{i}"].to_numpy(dtype=np.int64)
+                 for i in range(n_keys)]
             )
+            acc: dict = {}
+            for pos, key in enumerate(map(tuple, keys.tolist())):
+                acc.setdefault(key, []).append(pos)
+            specs = []
+            for key, ix in acc.items():
+                if form == "window":
+                    # an empty window (hi <= lo) matches nothing
+                    spec = (RangeSpec(key[0], max(key[1], key[0])),)
+                    n_match = _match_count(hist, spec)
+                else:
+                    spec = tuple(frozenset({v}) for v in key)
+                    n_match = hist.get(key, 0)  # the tuple IS a hist key
+                exact = auto_boost and choose_filtered_strategy(
+                    n_corpus, min(n_match, n_corpus), k, 1, 1
+                )[0] == "exact"
+                specs.append(
+                    (spec, np.asarray(ix, dtype=np.int64), exact, n_match)
+                )
+        cold = [s for s in specs if s[2] and self._COLD_CORPUS]
+        groups = [
+            (None if spec is None else _allow_arrays(spec), ix, exact,
+             n_match)
+            for spec, ix, exact, n_match in specs
+            if not (exact and self._COLD_CORPUS)
+        ]
+        parts = []
+        if cold:
+            parts.append(self._exact_join(b, cold, k, form, n_keys))
         if groups:
             parts.append(
-                _translate_positions(
-                    self._masked_constraint_batch(
-                        pdf, Q, groups, k, n_corpus, auto_boost, **knobs
-                    ),
-                    spark, np.arange(len(pdf), dtype=np.int64), qids,
+                self._kernel_batch(
+                    b, groups, k, n_corpus, auto_boost, **knobs
                 )
             )
-        return _union_min_merge(
-            parts, spark, k, len(np.unique(qids)) < len(qids)
+        if len(parts) == 1:
+            return parts[0]
+        out = parts[0].unionByName(parts[1])
+        # without a repeated qid the two parts answer disjoint qids
+        return _rank_topk(out.drop("rank"), k, True) if b.dup else out
+
+    def _exact_join(self, b, specs, k: int, form: str, n_keys: int):
+        """ONE broadcast join answers every exact row of the batch
+        against the cold corpus — the ``allowed`` filter as a corpus
+        predicate (it reaches the scan as a pushed filter), equality on
+        the attribute codes for tenants (the attribute_knn plan),
+        non-equi on the bounds for windows; either way the tiny query
+        side broadcasts and the corpus scans once, never shuffles. Each
+        row joins only its own constraint's corpus rows, scored with
+        the knn_join kernel."""
+        from vector_index_spark.operators.filtered import (
+            conjunction_predicate,
         )
+        from vector_index_spark.operators.knn import distance_column
 
-    def _exact_constraint_join(
-        self, pdf, rows, form: str, n_keys: int, k: int,
-    ) -> DataFrame:
-        """ONE broadcast join answers every selective-constraint row of
-        the batch exactly against the cold corpus — equality on the
-        attribute codes for tenants (the attribute_knn plan), non-equi
-        on the bounds for windows; either way the tiny query side
-        broadcasts and the corpus scans once, never shuffles. Positional
-        qids: each row joins only its own constraint's corpus rows."""
-        from pyspark.sql import Window
-
-        from vector_index_spark.functions.distance import l2sq_arrow
-
-        corpus = self._train.select(
+        rows = np.sort(np.concatenate([ix for _, ix, _, _ in specs]))
+        tq = F.broadcast(_position_frame(
+            self._spark, b, rows, [f"__k{i}" for i in range(n_keys)]
+        ))
+        corpus = self._train
+        if form == "query":
+            corpus = corpus.filter(
+                conjunction_predicate(self._attr_cols, specs[0][0])
+            )
+        corpus = corpus.select(
             F.col(self._id_col).alias("id"),
             F.col(self._vec_col).alias("__cv"),
             *(
                 F.col(a).cast("long").alias(f"__a{i}")
-                for i, a in enumerate(self._attr_cols)
+                for i, a in enumerate(self._attr_cols if n_keys else ())
             ),
         )
-        tq = _position_frame(
-            self._spark, pdf, rows, [f"__k{i}" for i in range(n_keys)]
-        )
-        if form == "window":
-            a = F.col("__a0")
-            on = (a >= F.col("__k0")) & (a < F.col("__k1"))
+        if form == "query":
+            joined = corpus.crossJoin(tq)
         else:
-            on = F.col("__a0") == F.col("__k0")
-            for i in range(1, n_keys):
-                on = on & (F.col(f"__a{i}") == F.col(f"__k{i}"))
-        joined = corpus.join(F.broadcast(tq), on).select(
-            "qid", "id",
-            l2sq_arrow()(F.col("vec"), F.col("__cv")).alias("dist"),
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+            if form == "window":
+                a = F.col("__a0")
+                on = (a >= F.col("__k0")) & (a < F.col("__k1"))
+            else:
+                on = F.col("__a0") == F.col("__k0")
+                for i in range(1, n_keys):
+                    on = on & (F.col(f"__a{i}") == F.col(f"__k{i}"))
+            joined = corpus.join(tq, on)
+        return _rank_topk(
+            joined.select(
+                "qid", "id",
+                distance_column(
+                    "euclidean2", F.col("vec"), F.col("__cv")
+                ).alias("dist"),
+            ),
+            k, b.dup,
         )
 
-    def _rerank_positions(self, cands: DataFrame, pdf, pos, k: int,
-                          broadcast_cands: bool) -> DataFrame:
-        """Exact re-rank of a positional candidate relation against the
-        cold corpus: each candidate is scored only against the vector of
-        the row whose constraint admitted it."""
-        return _rerank_exact(
-            cands, self._train, _position_frame(self._spark, pdf, pos), k,
-            self._id_col, self._vec_col, broadcast_cands=broadcast_cands,
+    def _rerank(self, cands: DataFrame, b, pos, k: int,
+                broadcast_cands: bool) -> DataFrame:
+        """Exact re-rank of a (pos, id) shortlist against the cold
+        corpus — the pq_knn/sq_knn/ivfpq_knn tail (same l2sq_arrow
+        kernel, same (dist, id) window): each candidate is scored only
+        against the vector of the row that shortlisted it, and takes
+        that row's real qid from the broadcast query frame.
+
+        ``broadcast_cands``: the candidate relation comes out of a
+        mapInPandas scan, so AQE has NO stats for it and plans a
+        sort-merge join — shuffling the CORPUS side every serving batch.
+        Callers that know the batch is small (Q * ncand bounded) pass
+        True, turning the corpus side into an in-place broadcast-hash
+        probe: no corpus shuffle, identical rows. At the 62k bench
+        corpus this is measured-neutral (the 34 MB corpus shuffle is
+        noise next to the batch's fixed stage overheads; A/B medians
+        1.44-1.74 s both ways); its case is asymptotic — at real corpus
+        sizes the per-batch sort-merge would re-shuffle the whole
+        corpus, which is the one cost a serving loop must never pay."""
+        from vector_index_spark.functions.distance import l2sq_arrow
+
+        if broadcast_cands:
+            cands = F.broadcast(cands)
+        tq = _position_frame(self._spark, b, pos).withColumnRenamed(
+            "vec", "__qv"
         )
+        rescored = (
+            cands.join(
+                self._train.select(
+                    F.col(self._id_col).alias("id"),
+                    F.col(self._vec_col).alias("__tv"),
+                ),
+                "id",
+            )
+            .join(F.broadcast(tq), "pos")
+            .select(
+                "qid", "id",
+                l2sq_arrow()(F.col("__qv"), F.col("__tv")).alias("dist"),
+            )
+        )
+        return _rank_topk(rescored, k, b.dup)
 
 
 class ServingIndex(_ResidentBlobIndex):
@@ -1641,6 +1763,8 @@ class ServingIndex(_ResidentBlobIndex):
     _HIST_SOURCE = "_vectors"
     _ROUTED = _ROUTING_FOLLOWS_KEYS = True
     _MANIFEST_SCALARS = (("dimension", "_dimension"),)
+    _FILTER_BRANCH = "beam"
+    _REPORTS_NPROBE = True
     # a restored handle routes by its snapshotted table (_cents_kv)
     _centroids = None
 
@@ -1784,84 +1908,18 @@ class ServingIndex(_ResidentBlobIndex):
         serving classes accept the same grammar. With ``auto_boost``
         the operators/filtered strategy rule runs against a resident
         attribute histogram: a selective filter switches to a masked
-        exact GEMM over the resident shard matrices (the raw vectors are
-        already in the blobs — exactness is free), a broad one runs the
-        filtered-HNSW beam with patience boosted by the inverse match
-        rate. ``auto_boost=False`` runs the masked beam at exactly
-        ``relaxed_monotonicity`` (parity testing)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at ServingIndex construction"
-            )
-        exact_scan = False
-        patience = relaxed_monotonicity
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        if allows is not None and auto_boost:
-            import math as _math
-
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            strategy, _ = choose_filtered_strategy(n_corpus, n_match, k, 1, 1)
-            if strategy == "exact":
-                exact_scan = True
-                # exactness contract: the masked GEMM must see EVERY
-                # shard's resident matrix — centroid routing (nprobe) is
-                # a beam-search recall knob and would silently drop
-                # matching rows living in unprobed shards
-                nprobe = None
-            else:
-                sel = max(n_match, 1) / n_corpus
-                boost = min(8, _math.ceil(1.0 / sel))
-                patience = relaxed_monotonicity * boost
-                if nprobe is not None:
-                    # routed + filtered: the k-th MATCHING neighbor is
-                    # farther than the k-th unfiltered one, so probe
-                    # proportionally more shards — the graph analog of
-                    # ivf_filtered_knn's nprobe boost (measured: without
-                    # it, routed filtered recall decays by ~the match
-                    # rate on top of the routing baseline)
-                    cap = getattr(self, "n_shards", None)
-                    nprobe = (
-                        nprobe * boost
-                        if cap is None
-                        else min(int(cap), nprobe * boost)
-                    )
-        # observability for tests/ops: which branch served this call and
-        # the effective (possibly boosted) probe count
-        self.last_filter_strategy = (
-            None if allows is None else ("exact" if exact_scan else "beam")
-        )
-        self.last_eff_nprobe = nprobe
-        # recycle the PREVIOUS call's query broadcasts here — not inside
-        # _query_batch, where a multi-chunk call would unpersist earlier
-        # chunks before the lazily-unioned result executes (re-shippable,
-        # so correct either way, but needlessly re-broadcast). By the next
-        # serving call the previous results are consumed.
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        if self._dimension is not None:
-            from vector_index_spark.functions.distance import assert_dim
-
-            t = assert_dim(t, "vec", self._dimension)
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(
-                chunk, k, nprobe, patience, tree_merge_fanin,
-                allows, exact_scan,
-            ),
-            max_queries_per_batch,
+        exact GEMM over EVERY resident shard matrix (the raw vectors are
+        already in the blobs — exactness is free; routing would drop
+        matching rows in unprobed shards), a broad one runs the
+        filtered-HNSW beam with patience — and a routed call's nprobe —
+        boosted by the inverse match rate. ``auto_boost=False`` runs the
+        masked beam at exactly ``relaxed_monotonicity`` (parity
+        testing). The shared path, :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost, nprobe=nprobe,
+            relaxed_monotonicity=relaxed_monotonicity,
+            tree_merge_fanin=tree_merge_fanin,
         )
 
     def query_by_attribute(
@@ -1892,9 +1950,9 @@ class ServingIndex(_ResidentBlobIndex):
         tenant's rows are scattered across shards unless the shard
         layout was built per-tenant. Duplicate qids answer each row
         independently, then min-merge per (qid, id) (the shared
-        constrained core, :meth:`_constrained_query`). Returns (qid,
+        query path, :meth:`_query`). Returns (qid,
         rank, id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
             relaxed_monotonicity=relaxed_monotonicity,
@@ -1926,64 +1984,66 @@ class ServingIndex(_ResidentBlobIndex):
         ALL groups ride one mapInPandas pass over the cached blobs.
         Requires a single ``attr_col`` at construction. Returns
         (qid, rank, id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             relaxed_monotonicity=relaxed_monotonicity,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
-        relaxed_monotonicity: int,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
+        relaxed_monotonicity: int, nprobe: "int | None" = None,
+        tree_merge_fanin: "int | None" = None,
     ) -> DataFrame:
-        """Graph hook of the constrained core: ONE mapInPandas pass over
-        the resident shard graphs answers every group. Selective groups
-        run a grouped masked exact GEMM over the shard matrices (the raw
-        vectors are resident, so exactness is free; groups sharing a
-        shard share one distance matrix); the rest run the filtered-HNSW
-        beam, whose patience ``auto_boost`` multiplies by the group's
-        inverse match rate (at most 8x)."""
-        import math
-
-        bgroups = []
-        for allow, ix, exact, n_match in groups:
-            patience = relaxed_monotonicity
-            if auto_boost and not exact:
-                patience = relaxed_monotonicity * min(
-                    8, math.ceil(1.0 / (n_match / n_corpus))
-                )
-            bgroups.append((allow, ix, exact, patience))
-        bc = self._spark.sparkContext.broadcast((Q, bgroups))
+        """Graph hook of the shared query path: ONE mapInPandas pass over
+        the resident shard graphs (the shards each row probes when
+        ``nprobe`` routes by centroid; every shard for exact groups)
+        answers every group. Exact groups run a grouped masked exact
+        GEMM over the shard matrices (the raw vectors are resident, so
+        exactness is free; groups sharing a shard share one distance
+        matrix); the rest run the (filtered-)HNSW beam, whose patience
+        ``auto_boost`` multiplies by the group's inverse match rate (at
+        most 8x). The per-shard partials merge in one exchange
+        (:func:`_merge_topk`, or :func:`tree_merge_topk` at
+        ``tree_merge_fanin``); a batch repeating a qid min-merges per
+        (qid, id) instead."""
+        plan = _probe_plan(self, b, groups, nprobe, n_corpus)
+        bgroups = [
+            (
+                allow, ix, exact,
+                relaxed_monotonicity * _boost(n_match, n_corpus)
+                if auto_boost and not exact else relaxed_monotonicity,
+            )
+            for allow, ix, exact, n_match in groups
+        ]
+        bc = self._spark.sparkContext.broadcast((b.qids, b.Q, bgroups, plan))
         self._live_bcs.append(bc)
 
         def search(batches):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
 
+            q_ids, q_mat, b_groups, b_plan = bc.value
             for pdf_b in batches:
-                q_mat, b_groups = bc.value
-                pos_ids = np.arange(len(q_mat), dtype=np.int64)
                 out_qid, out_id, out_dist = [], [], []
                 frames = []
-                for blob in pdf_b["blob"]:
+                for shard, blob in zip(pdf_b["shard"], pdf_b["blob"]):
+                    here = _visiting(b_plan, shard, b_groups)
+                    if not here:
+                        continue
                     g = pickle.loads(blob)
                     exact_groups = []
-                    for allow, ix, exact, patience in b_groups:
-                        mask = conjunction_mask(g.attrs, allow)
-                        if not mask.any():
-                            continue
+                    for gi, gq, mask in _masks(g.attrs, here, b_groups):
+                        _, _, exact, patience = b_groups[gi]
                         if exact:
-                            exact_groups.append((ix, mask))
+                            exact_groups.append((gq, mask))
                             continue
-                        for qi in ix:
+                        for qi in gq:
                             for d, off in query_shard(
                                 g, q_mat[qi], k, patience, allowed=mask
                             ):
-                                out_qid.append(int(qi))
+                                out_qid.append(int(q_ids[qi]))
                                 out_id.append(int(g.ids[off]))
                                 out_dist.append(d)
                     if exact_groups:
@@ -1991,8 +2051,7 @@ class ServingIndex(_ResidentBlobIndex):
                         # group selects its top-k from its mask's columns
                         frames.append(
                             grouped_masked_topk_frame(
-                                pos_ids, q_mat, g.ids, g.X,
-                                exact_groups, k,
+                                q_ids, q_mat, g.ids, g.X, exact_groups, k,
                             )
                         )
                 beam = pd.DataFrame(
@@ -2004,107 +2063,9 @@ class ServingIndex(_ResidentBlobIndex):
                     else beam
                 )
 
-        return _merge_topk(self.blobs.mapInPandas(search, RESULT_SCHEMA), k)
-
-    def _query_batch(
-        self,
-        t: DataFrame,
-        k: int,
-        nprobe: int | None,
-        relaxed_monotonicity: int,
-        tree_merge_fanin: int | None,
-        allows=None,
-        exact_scan: bool = False,
-    ) -> DataFrame:
-        from vector_index_spark.operators.knn import knn_join
-
-        spark = self._spark
-        if nprobe is not None:
-            probes = knn_join(t, self._routing_table(), nprobe).select(
-                "qid", F.col("id").alias("shard")
-            )
-            routed = t.join(
-                probes.groupBy("qid").agg(F.collect_list("shard").alias("__shards")),
-                "qid",
-            )
-            pdf = routed.toPandas()
-        else:
-            pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        if nprobe is not None:
-            acc: dict[int, list[int]] = {}
-            for qi, shards in enumerate(pdf["__shards"]):
-                for s in shards:
-                    acc.setdefault(int(s), []).append(qi)
-            assign = {s: np.asarray(ix, dtype=np.int64) for s, ix in acc.items()}
-        else:
-            assign = None
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast((qids, Q, assign, allow_arrs, exact_scan))
-        self._live_bcs.append(bc)
-        rm = relaxed_monotonicity
-
-        def search(batches):
-            from vector_index_spark.index.cellscan import gemm_topk_frame
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            for pdf_b in batches:
-                q_ids, q_mat, asg, allow, exact = bc.value
-                out_qid, out_id, out_dist = [], [], []
-                frames = []
-                for shard, blob in zip(pdf_b["shard"], pdf_b["blob"]):
-                    if asg is None:
-                        idx = range(len(q_ids))
-                    else:
-                        ix = asg.get(int(shard))
-                        if ix is None or len(ix) == 0:
-                            continue
-                        idx = ix
-                    g = pickle.loads(blob)
-                    mask = None
-                    if allow is not None:
-                        mask = conjunction_mask(g.attrs, allow)
-                        if not mask.any():
-                            continue
-                        if exact:
-                            # selective filter: exact GEMM over the masked
-                            # resident matrix (ids stay sorted under the
-                            # mask -> the engine's (dist, id) tie order)
-                            sub_ids = g.ids[mask]
-                            sub_X = g.X[mask]
-                            qi_arr = np.asarray(list(idx), dtype=np.int64)
-                            frames.append(
-                                gemm_topk_frame(
-                                    q_ids[qi_arr], q_mat[qi_arr],
-                                    sub_ids, sub_X, k,
-                                )
-                            )
-                            continue
-                    for qi in idx:
-                        for d, off in query_shard(
-                            g, q_mat[qi], k, rm, allowed=mask
-                        ):
-                            out_qid.append(int(q_ids[qi]))
-                            out_id.append(int(g.ids[off]))
-                            out_dist.append(d)
-                beam = pd.DataFrame(
-                    {"qid": out_qid, "id": out_id, "dist": out_dist}
-                )
-                yield (
-                    pd.concat([beam, *frames], ignore_index=True)
-                    if frames
-                    else beam
-                )
-
-        blobs = self.blobs
-        if assign is not None:
-            # in-memory cache batches carry per-column stats; the isin
-            # prunes unprobed shards' batches without any exchange
-            blobs = blobs.filter(F.col("shard").isin(sorted(assign)))
-        per_shard = blobs.mapInPandas(search, RESULT_SCHEMA)
+        per_shard = _probed(self, plan).mapInPandas(search, RESULT_SCHEMA)
+        if b.dup:
+            return _rank_topk(per_shard, k, True)
         if tree_merge_fanin is not None:
             # group count = per_shard's ACTUAL partition count (the blob
             # relation's n_serve), not the pack-time cogroup count — a
@@ -2291,127 +2252,15 @@ class CellServingIndex(_ResidentBlobIndex):
         neighbors to matching rows — a flat value set for one attribute,
         one value set per attribute for a conjunction. With
         ``auto_boost`` the operators/filtered strategy rule runs against
-        a resident attribute histogram: a selective filter probes EVERY
+        a resident attribute histogram: a selective filter visits EVERY
         cell (the serving analog of the brute-force-exact branch — still
         one map over cached blobs), a broad one boosts nprobe by the
         inverse match rate. Pass ``auto_boost=False`` to probe exactly
-        ``nprobe`` cells (parity testing)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at CellServingIndex construction"
-            )
-        eff_nprobe = nprobe
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            n_cells = getattr(self, "n_cells", None) or self.blobs.count()
-            mode, boosted = choose_filtered_strategy(
-                n_corpus, n_match, k, nprobe, n_cells
-            )
-            eff_nprobe = n_cells if mode == "exact" else boosted
-            self.last_filter_strategy = mode
-        else:
-            self.last_filter_strategy = None if allows is None else "prefilter"
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(chunk, k, eff_nprobe, allows),
-            max_queries_per_batch,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, nprobe: int, allows=None,
-    ) -> DataFrame:
-        from vector_index_spark.operators.knn import knn_join
-
-        spark = self._spark
-        probes = knn_join(t, self._cents_kv, nprobe).select(
-            "qid", F.col("id").alias("cell")
-        )
-        routed = t.join(
-            probes.groupBy("qid").agg(F.collect_list("cell").alias("__cells")),
-            "qid",
-        )
-        pdf = routed.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        acc: dict[int, list[int]] = {}
-        for qi, cells in enumerate(pdf["__cells"]):
-            for c in cells:
-                acc.setdefault(int(c), []).append(qi)
-        assign = {c: np.asarray(ix, dtype=np.int64) for c, ix in acc.items()}
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast((qids, Q, assign, allow_arrs))
-        self._live_bcs.append(bc)
-
-        def search(batches):
-            from vector_index_spark.index.cellscan import gemm_topk_frame
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            for pdf_b in batches:
-                q_ids, q_mat, asg, allow = bc.value
-                frames = []
-                for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                    ix = asg.get(int(cell))
-                    if ix is None or len(ix) == 0:
-                        continue
-                    payload = pickle.loads(blob)
-                    ids, X = payload[0], payload[1]
-                    if allow is not None:
-                        # in-kernel predicate: mask the resident arrays
-                        # before the GEMM (mask preserves id sort order,
-                        # so results stay bit-identical to scanning the
-                        # pre-filtered postings)
-                        mask = conjunction_mask(payload[2], allow)
-                        if not mask.any():
-                            continue
-                        ids, X = ids[mask], X[mask]
-                    # THE cell_topk_scan kernel (shared function — bit
-                    # parity by construction), incl. its query-block
-                    # memory bound; corpus pre-sorted by id at pack time
-                    frames.append(
-                        gemm_topk_frame(q_ids[ix], q_mat[ix], ids, X, k)
-                    )
-                yield (
-                    pd.concat(frames, ignore_index=True)
-                    if frames
-                    else pd.DataFrame({"qid": [], "id": [], "dist": []})
-                )
-
-        probed = sorted(assign)
-        per_cell = (
-            self.blobs.filter(F.col("cell").isin(probed))
-            .mapInPandas(search, RESULT_SCHEMA)
-        )
-        # same deterministic replica resolution as ivf_knn: min-dist per
-        # (qid, id), then the (dist, id) ranking window
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            per_cell.groupBy("qid", "id")
-            .agg(F.min("dist").alias("dist"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        ``nprobe`` cells (parity testing). The shared path,
+        :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost, nprobe=nprobe,
         )
 
     def query_by_window(
@@ -2435,7 +2284,7 @@ class CellServingIndex(_ResidentBlobIndex):
         one probes routed cells with the largest inverse-match-rate
         nprobe boost; ALL groups ride ONE mapInPandas pass over the
         cached blobs. Returns (qid, rank, id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             nprobe=nprobe,
@@ -2461,23 +2310,21 @@ class CellServingIndex(_ResidentBlobIndex):
         probes EVERY cell, where the masked GEMM is exact; a large one
         probes routed cells at the boosted nprobe). Returns (qid, rank,
         id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost, nprobe=nprobe,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         nprobe: int,
     ) -> DataFrame:
-        """Cell hook of the constrained core: selective groups visit
-        EVERY cell (the masked GEMM over resident raw vectors is exact),
-        the rest probe routed cells at the boosted nprobe
-        (:func:`_probe_cells`). Each probed blob runs ONE grouped masked
-        GEMM over the constraints of the rows probing it; replicas
-        min-merge per (position, id)."""
-        from pyspark.sql import Window
-
+        """Cell hook of the shared query path: exact groups visit EVERY
+        cell (the masked GEMM over resident raw vectors is exact), the
+        rest probe routed cells at the boosted nprobe
+        (:func:`_probe_plan`). Each visited blob runs ONE grouped masked
+        GEMM over the groups of the rows visiting it; replicas min-merge
+        per (qid, id)."""
         n_exact_groups = sum(1 for g in groups if g[2])
         if n_exact_groups > 8 and not getattr(
             self, "_warned_constraint_scan", False
@@ -2501,14 +2348,9 @@ class CellServingIndex(_ResidentBlobIndex):
                 stacklevel=7,
             )
             self._warned_constraint_scan = True
-        all_cells = [int(r["id"]) for r in self._cents_kv.select("id").collect()]
-        assign = _probe_cells(
-            self, pdf, groups, nprobe, max(len(all_cells), 1), n_corpus,
-            all_cells,
-        )
-        gid = _group_of_position(len(Q), groups)
+        plan = _probe_plan(self, b, groups, nprobe, n_corpus)
         bc = self._spark.sparkContext.broadcast(
-            (Q, gid, [g[0] for g in groups], assign)
+            (b.qids, b.Q, [g[:2] for g in groups], plan)
         )
         self._live_bcs.append(bc)
 
@@ -2516,50 +2358,40 @@ class CellServingIndex(_ResidentBlobIndex):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
 
-            bQ, b_gid, allows, asg = bc.value
-            pos_ids = np.arange(len(bQ), dtype=np.int64)
+            q_ids, q_mat, b_groups, b_plan = bc.value
             for pdf_b in batches:
                 frames = []
                 for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                    ix = asg.get(int(cell))
-                    if ix is None or len(ix) == 0:
+                    here = _visiting(b_plan, cell, b_groups)
+                    if not here:
                         continue
                     payload = pickle.loads(blob)
-                    ids, X, attrs = payload[0], payload[1], payload[2]
-                    # ONE distance matrix per blob, each constraint
-                    # selecting from its mask's columns
-                    frames.append(
-                        grouped_masked_topk_frame(
-                            pos_ids, bQ, ids, X,
-                            [
-                                (gq, conjunction_mask(attrs, allows[gi]))
-                                for gi, gq in _positions_by_group(ix, b_gid)
-                            ],
-                            k,
+                    # mask the resident arrays in-kernel, ONE distance
+                    # matrix per blob (the cell_topk_scan kernel when one
+                    # group visits); ids stay sorted -> (dist, id) order
+                    kg = [
+                        (gq, mask) for _, gq, mask in _masks(
+                            payload[2] if len(payload) > 2 else None,
+                            here, b_groups,
                         )
-                    )
+                    ]
+                    if kg:
+                        frames.append(
+                            grouped_masked_topk_frame(
+                                q_ids, q_mat, payload[0], payload[1], kg, k,
+                            )
+                        )
                 yield (
                     pd.concat(frames, ignore_index=True)
                     if frames
                     else pd.DataFrame({"qid": [], "id": [], "dist": []})
                 )
 
-        per_cell = self.blobs.filter(
-            F.col("cell").isin(sorted(assign))
-        ).mapInPandas(search, RESULT_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            per_cell.groupBy("qid", "id")  # replica min per POSITION
-            .agg(F.min("dist").alias("dist"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        # same deterministic replica resolution as ivf_knn: min-dist per
+        # (qid, id), then the (dist, id) ranking window
+        return _rank_topk(
+            _probed(self, plan).mapInPandas(search, RESULT_SCHEMA), k, True
         )
 
 
@@ -3091,84 +2923,66 @@ def _resident_remove(idx, ids) -> int:
     return n_removed
 
 
-def _translate_positions(ranked: DataFrame, spark, pos_ix, real_qids) -> DataFrame:
-    """Map a positional-qid result frame back to real qids.
-
-    The constrained probe paths key every stage — cell assignment, ADC
-    shortlist, exact re-rank — by ROW POSITION so a qid that appears
-    twice in one batch with *different* vectors / constraints is answered
-    strictly against its own row (the dup-qid rerank contract: each row
-    independently, then min-merge per (qid, id)). This is the last step:
-    a tiny broadcast map from position to the row's real qid, built from
-    a pandas frame (one Arrow transfer; a list of tuples costs ~0.3 s
-    more per batch on 4 cores)."""
-    pos_map = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "qid": np.asarray(pos_ix, dtype=np.int64),
-                "__real": np.asarray(real_qids, dtype=np.int64),
-            }
-        ),
-        "qid long, __real long",
-    )
-    return ranked.join(F.broadcast(pos_map), "qid").select(
-        F.col("__real").alias("qid"), "rank", "id", "dist"
-    )
+_RANKED_SCHEMA = "qid long, rank int, id long, dist double"
 
 
-def _union_min_merge(parts: list[DataFrame], spark, k: int,
-                     has_dup: bool) -> DataFrame:
-    """Union the exact / probe result parts of one constrained batch.
+class _Batch(NamedTuple):
+    """One collected query micro-batch of the shared query path."""
 
-    Without duplicate qids the parts cover disjoint qid sets and the
-    union IS the answer. With duplicates, one qid's rows may land in
-    different parts (or several rows in the probe part), so the union
-    holds several independent per-row answers for that qid — min-merge
-    per (qid, id) and re-rank, exactly the semantics the graph route's
-    _merge_topk applies to its per-shard candidate streams."""
+    pdf: pd.DataFrame  # (qid, vec[, __k<i> constraint keys]) rows
+    qids: np.ndarray  # int64 qid of each row position
+    Q: np.ndarray  # float64 query matrix, one row per position
+    dup: bool  # some qid repeats: its rows answer independently
+
+
+def _boost(n_match: int, n_corpus: int) -> int:
+    """Inverse-match-rate boost of a filtered group's probe count or
+    beam patience, at most 8x (the operators/filtered strategy rule)."""
+    return min(8, math.ceil(1.0 / (max(n_match, 1) / n_corpus)))
+
+
+def _rank_topk(cands: DataFrame, k: int, dedupe: bool) -> DataFrame:
+    """Top-k per qid by (dist, id) of a (qid, id, dist) candidate
+    relation. ``dedupe`` first keeps each (qid, id)'s best distance —
+    boundary replicas of one id, or the rows of a repeated qid, each
+    answered independently: min-merging their candidates equals
+    min-merging the rows' own top-k lists, since an id in the merged
+    top-k is in the top-k of the row that scored it best."""
     from pyspark.sql import Window
 
-    if not parts:
-        return spark.createDataFrame(
-            [], "qid long, rank int, id long, dist double"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if not has_dup:
-        return out
+    if dedupe:
+        cands = cands.groupBy("qid", "id").agg(F.min("dist").alias("dist"))
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
-        out.groupBy("qid", "id")
-        .agg(F.min("dist").alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
+        cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "rank", "id", "dist")
     )
 
 
-def _position_frame(spark, pdf, pos, extra=()) -> DataFrame:
-    """The batch rows ``pos`` as a (qid = row position, vec[, extra])
-    relation — the positional query side of the constrained paths'
-    probe, exact-join and re-rank stages."""
-    sub = pdf.iloc[pos][["vec", *extra]].copy()
-    sub.insert(0, "qid", np.asarray(pos, dtype=np.int64))
+def _position_frame(spark, b: _Batch, pos, extra=()) -> DataFrame:
+    """The batch rows ``pos`` as a (qid, pos, vec[, extra]) relation —
+    the broadcast query side of the probe, exact-join and re-rank
+    stages, which key by row position and carry the row's real qid."""
+    sub = b.pdf.iloc[pos][["vec", *extra]].copy()
+    sub.insert(0, "pos", np.asarray(pos, dtype=np.int64))
+    sub.insert(0, "qid", b.qids[pos])
     sub["vec"] = sub["vec"].map(list)  # ndarray cells -> plain lists
     return spark.createDataFrame(sub)
 
 
 def _group_of_position(n: int, groups) -> np.ndarray:
-    """Row position -> index of its constraint group (-1: no group)."""
+    """Row position -> index of its group (-1: no group)."""
     gid = np.full(n, -1, dtype=np.int64)
-    for gi, (_, ix, _, _) in enumerate(groups):
-        gid[ix] = gi
+    for gi, g in enumerate(groups):
+        gid[g[1]] = gi
     return gid
 
 
 def _positions_by_group(ix, gid) -> list:
-    """Split the sorted row positions ``ix`` probing one blob by their
-    constraint group: ``[(group index, positions)]`` in one stable sort,
-    so a row-unique batch stays O(n log n) per blob."""
+    """Split the sorted row positions ``ix`` visiting one blob by their
+    group: ``[(group index, positions)]`` in one stable sort, so a
+    row-unique batch stays O(n log n) per blob."""
     order = np.argsort(gid[ix], kind="stable")
     ix, g = ix[order], gid[ix][order]
     cuts = np.flatnonzero(np.diff(g)) + 1
@@ -3178,89 +2992,92 @@ def _positions_by_group(ix, gid) -> list:
     ]
 
 
-def _probe_cells(idx, pdf, groups, nprobe: int, n_cells: int,
-                 n_corpus: int, all_cells=()) -> dict:
-    """Positional cell assignment (cell -> sorted row positions) for the
-    cell-routed constrained hooks (Cell, IVF-PQ): rows of exact groups
-    visit every cell of ``all_cells``; the other rows probe their
-    nearest centroids at ``nprobe`` boosted by the LARGEST inverse match
-    rate among their groups, capped at the cell count."""
-    import math
-
-    from vector_index_spark.operators.knn import knn_join
-
-    acc: dict = {}
-    exact = [ix for _, ix, ex, _ in groups if ex]
-    if exact:
-        rows = np.concatenate(exact).tolist()
-        for c in all_cells:
-            acc[int(c)] = list(rows)
-    probing = [(ix, n) for _, ix, ex, n in groups if not ex]
-    if probing:
-        boost = max(
-            min(8, math.ceil(1.0 / (max(n, 1) / n_corpus)))
-            for _, n in probing
-        )
-        pos = np.sort(np.concatenate([ix for ix, _ in probing]))
-        probes = knn_join(
-            _position_frame(idx._spark, pdf, pos), idx._cents_kv,
-            min(n_cells, nprobe * boost),
-        )
-        for r in probes.select("qid", "id").collect():
-            acc.setdefault(int(r["id"]), []).append(int(r["qid"]))
-    return {
-        c: np.asarray(sorted(set(ix)), dtype=np.int64) for c, ix in acc.items()
-    }
-
-
-def _rerank_exact(cands: DataFrame, train: DataFrame, t: DataFrame, k: int,
-                  id_col: str, vec_col: str,
-                  broadcast_cands: bool = False,
-                  dedupe_pairs: bool = False) -> DataFrame:
-    """Shared exact-re-rank tail: identical to the pq_knn/sq_knn batch
-    tails (same l2sq_arrow kernel, same (dist, id) window) so serving
-    results are equal whenever the candidate set covers the true top-k.
-
-    ``broadcast_cands``: the candidate relation comes out of a
-    mapInPandas scan, so AQE has NO stats for it and plans a sort-merge
-    join — shuffling the CORPUS side every serving batch. Callers that
-    know the batch is small (Q * ncand bounded) pass True, turning the
-    corpus side into an in-place broadcast-hash probe: no corpus
-    shuffle, identical rows. At the 62k bench corpus this is
-    measured-neutral (the 34 MB corpus shuffle is noise next to the
-    batch's fixed stage overheads; A/B medians 1.44-1.74 s both ways);
-    its case is asymptotic — at real corpus sizes the per-batch
-    sort-merge would re-shuffle the whole corpus, which is the one cost
-    a serving loop must never pay."""
-    from pyspark.sql import Window
-
-    from vector_index_spark.functions.distance import l2sq_arrow
-
-    if broadcast_cands:
-        cands = F.broadcast(cands)
-    rescored = (
-        cands.join(
-            train.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__tv")),
-            "id",
-        )
-        .join(F.broadcast(t.withColumnRenamed("vec", "__qv")), "qid")
-        .select(
-            "qid", "id", l2sq_arrow()(F.col("__qv"), F.col("__tv")).alias("dist")
-        )
-    )
-    if dedupe_pairs:
-        # duplicate qids in t fan the join out to one dist per query ROW;
-        # union-merge semantics keep the best per (qid, id) — only paid
-        # when the caller saw duplicate qids in the batch
-        rescored = rescored.groupBy("qid", "id").agg(
-            F.min("dist").alias("dist")
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
+def _plan(acc: dict, every: list, groups, n: int) -> tuple:
+    """A probe plan: (blob key -> sorted row positions, the positions
+    that visit every blob, row position -> group)."""
     return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "id", "dist")
+        {key: np.asarray(sorted(set(ix)), dtype=np.int64)
+         for key, ix in acc.items()},
+        np.sort(np.concatenate(every)) if every
+        else np.empty(0, dtype=np.int64),
+        _group_of_position(n, groups),
     )
+
+
+def _probe_plan(idx, b: _Batch, groups, nprobe, n_corpus: int):
+    """Which rows visit which blobs on the centroid-routed hooks (graph
+    with ``nprobe``, Cell, IVF-PQ): rows of exact groups visit every
+    blob; the other rows probe their nearest routing-table entries
+    (:func:`_nearest_keys`) at ``nprobe`` boosted by the LARGEST inverse
+    match rate among their groups. ``nprobe=None`` needs no plan: every
+    row visits every blob."""
+    if nprobe is None:
+        return None
+    probing = [(ix, n) for _, ix, exact, n in groups if not exact]
+    acc: dict = {}
+    if probing:
+        pos = np.sort(np.concatenate([ix for ix, _ in probing]))
+        keys, C = idx._routing_matrix()
+        n = nprobe * max(_boost(m, n_corpus) for _, m in probing)
+        for p, near in zip(pos, _nearest_keys(b.Q[pos], keys, C, n)):
+            for key in near:
+                acc.setdefault(int(key), []).append(int(p))
+    return _plan(acc, [g[1] for g in groups if g[2]], groups, len(b.Q))
+
+
+def _nearest_keys(Q, keys, C, n: int) -> list:
+    """Per query row, the keys of its ``n`` nearest routing entries by
+    (l2sq, key) — bit-identical to a knn_join over the routing table:
+    the same float64 differences, the same strict left-to-right fold
+    (functions.distance._seq_sum), the same (dist, id) order. Blocked
+    over query rows so a block's difference tensor stays ~32 MB."""
+    from vector_index_spark.functions.distance import _seq_sum
+
+    step = max(1, (1 << 22) // max(C.size, 1))
+    out = []
+    for lo in range(0, len(Q), step):
+        D = Q[lo : lo + step, None, :] - C[None, :, :]
+        d = _seq_sum((D * D).reshape(-1, C.shape[1])).reshape(len(D), len(C))
+        out.extend(keys[np.lexsort((keys, row))[:n]] for row in d)
+    return out
+
+
+def _visiting(plan, key, groups) -> list:
+    """``[(group index, row positions)]`` of the rows that visit blob
+    ``key`` under a probe plan (``None``: every row visits every blob)."""
+    if plan is None:
+        return [(gi, g[1]) for gi, g in enumerate(groups)]
+    asg, every, gid = plan
+    ix = asg.get(int(key))
+    if len(every):
+        ix = every if ix is None else np.union1d(ix, every)
+    if ix is None or len(ix) == 0:
+        return []
+    return _positions_by_group(ix, gid)
+
+
+def _masks(attrs, here, groups) -> list:
+    """``[(group index, row positions, corpus mask)]`` of the groups
+    visiting one blob (``here``), without those whose mask matches no
+    blob row; an unmasked group's mask is ``None``."""
+    from vector_index_spark.operators.filtered import conjunction_mask
+
+    out = []
+    for gi, gq in here:
+        allow = groups[gi][0]
+        mask = None if allow is None else conjunction_mask(attrs, allow)
+        if mask is None or mask.any():
+            out.append((gi, gq, mask))
+    return out
+
+
+def _probed(idx, plan) -> DataFrame:
+    """The resident blobs a probe plan visits: every blob unless every
+    visiting row was routed — in-memory cache batches carry per-column
+    stats, so the isin prunes unprobed blobs without any exchange."""
+    if plan is None or len(plan[1]):
+        return idx.blobs
+    return idx.blobs.filter(F.col(idx._KEY).isin(sorted(plan[0])))
 
 
 class PqServingIndex(_ResidentBlobIndex):
@@ -3287,6 +3104,7 @@ class PqServingIndex(_ResidentBlobIndex):
     _HIST_SOURCE = "_train"
     _ARRAYS = (("codebooks.npy", "_books"),)
     _COLD_CORPUS = _QUANTIZED = True
+    _FILTER_BRANCH = "masked_scan"
 
     def __init__(
         self,
@@ -3313,6 +3131,11 @@ class PqServingIndex(_ResidentBlobIndex):
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+
+    @property
+    def _dimension(self) -> int:
+        m, _, sub = self._books.shape
+        return int(m * sub)
 
     def refresh(self, new_rows: DataFrame,
                 train: DataFrame) -> "PqServingIndex":
@@ -3349,7 +3172,7 @@ class PqServingIndex(_ResidentBlobIndex):
         single ADC scan where each window group's range mask applies
         BEFORE its shortlist — no distinct-window cap; a
         row-unique-window batch costs one pass."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
@@ -3370,75 +3193,73 @@ class PqServingIndex(_ResidentBlobIndex):
         tenants ride one equality-join exact pass against the cold
         corpus, the rest share a single ADC scan with per-tenant masks —
         no distinct-tenant cap."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         candidate_factor: int,
     ) -> DataFrame:
-        """One ADC pass over every resident code blob answers ALL masked
-        constraint groups (round 11): the per-query LUTs build once for
-        the whole batch, each blob unpickles once, and each group
+        """PQ hook of the shared query path: ONE ADC pass over every
+        resident code blob answers ALL groups — the per-query LUTs build
+        once for the whole batch (identical construction to
+        pq._pq_knn_batch), each blob unpickles once, and each group
         gathers approx distances only over its masked rows for its own
         query positions (total work <= the unfiltered batch scan's).
         Candidates key by ROW POSITION; the exact re-rank scores each
         row only against its own vector."""
-        spark = self._spark
         m, ncent, sub_d = self._books.shape
-        tables = np.empty((len(Q), m, ncent))
+        tables = np.empty((len(b.Q), m, ncent))
         for s in range(m):
-            seg = Q[:, s * sub_d : (s + 1) * sub_d]
+            seg = b.Q[:, s * sub_d : (s + 1) * sub_d]
             tables[:, s, :] = (
                 (seg[:, None, :] - self._books[s][None, :, :]) ** 2
             ).sum(axis=2)
         ncand = candidate_factor * k
-        bgroups = [(allow, ix) for allow, ix, _, _ in groups]
-        bc = spark.sparkContext.broadcast((tables, bgroups))
+        bc = self._spark.sparkContext.broadcast(
+            (tables, [g[:2] for g in groups])
+        )
         self._live_bcs.append(bc)
 
         def scan(batches):
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
-
             b_tables, bg = bc.value
             bm = b_tables.shape[1]
             for pdf_b in batches:
                 for blob in pdf_b["blob"]:
                     payload = pickle.loads(blob)
-                    ids, codes, attrs = payload[0], payload[1], payload[2]
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    codes64 = codes.astype(np.int64)
-                    for allow, ix in bg:
-                        mask = conjunction_mask(attrs, allow)
-                        if not mask.any():
-                            continue
-                        g_ids = ids[mask]
-                        g_codes = codes64[mask]
+                    ids, codes64 = payload[0], payload[1].astype(np.int64)
+                    for _, ix, mask in _masks(
+                        payload[2] if len(payload) > 2 else None,
+                        _visiting(None, None, bg), bg,
+                    ):
+                        # in-kernel mask BEFORE the ADC scan: every
+                        # shortlist slot is a matching row
+                        g_ids = ids if mask is None else ids[mask]
+                        g_codes = codes64 if mask is None else codes64[mask]
                         approx = np.zeros((len(g_ids), len(ix)))
                         for s in range(bm):
                             approx += b_tables[ix, s, :][:, g_codes[:, s]].T
                         kk = min(ncand, len(g_ids))
-                        # masked rows keep the blob's id sort, so a
-                        # stable argsort yields the (approx, id) order
+                        # blob rows are id-sorted, so a stable argsort
+                        # yields the engine's (approx, id) tie order
                         part = np.argsort(approx, axis=0, kind="stable")[:kk]
                         sel = part.T.reshape(-1)
                         yield pd.DataFrame(
-                            {"qid": np.repeat(ix, kk), "id": g_ids[sel]}
+                            {"pos": np.repeat(ix, kk), "id": g_ids[sel]}
                         )
 
         cands = (
-            self.blobs.mapInPandas(scan, "qid long, id long")
-            .dropDuplicates(["qid", "id"])
+            self.blobs.mapInPandas(scan, "pos long, id long")
+            .dropDuplicates(["pos", "id"])
         )
-        pos = np.concatenate([ix for _, ix, _, _ in groups])
-        return self._rerank_positions(
-            cands, pdf, pos, k,
+        pos = np.concatenate([g[1] for g in groups])
+        # candidate volume is bounded by Q * ncand * n_blobs (known here);
+        # broadcast small batches so the corpus never shuffles per batch
+        return self._rerank(
+            cands, b, pos, k,
             broadcast_cands=len(pos) * ncand * self._n_serve <= 2_000_000,
         )
 
@@ -3453,120 +3274,16 @@ class PqServingIndex(_ResidentBlobIndex):
         allowed=None,
         auto_boost: bool = True,
     ) -> DataFrame:
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at PqServingIndex construction"
-            )
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query(
-                test, k, qid_col=qid_col, vec_col=vec_col, allowed=allowed
-            )
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        self.last_filter_strategy = (
-            None if allows is None else "masked_scan"
-        )
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-                conjunction_predicate,
-                filtered_knn,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            mode, _ = choose_filtered_strategy(n_corpus, n_match, k, 1, 1)
-            self.last_filter_strategy = mode if mode == "exact" else "masked_scan"
-            if mode == "exact":
-                return filtered_knn(
-                    test, self._train, k,
-                    conjunction_predicate(self._attr_cols, allows),
-                    qid_col=qid_col, id_col=self._id_col,
-                    test_vec=vec_col, train_vec=self._vec_col,
-                )
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(chunk, k, candidate_factor, allows),
-            max_queries_per_batch,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, candidate_factor: int, allows=None,
-    ) -> DataFrame:
-        spark = self._spark
-        tp = t.toPandas()
-        if len(tp) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = tp["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(tp["vec"].to_numpy()).astype(np.float64)
-        m, ncent, sub = self._books.shape
-        # identical LUT construction to pq._pq_knn_batch (bit parity)
-        tables = np.empty((len(Q), m, ncent))
-        for s in range(m):
-            seg = Q[:, s * sub : (s + 1) * sub]
-            tables[:, s, :] = (
-                (seg[:, None, :] - self._books[s][None, :, :]) ** 2
-            ).sum(axis=2)
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast((qids, tables, allow_arrs))
-        self._live_bcs.append(bc)
-        ncand = candidate_factor * k
-
-        def scan(batches):
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            b_qids, b_tables, allow = bc.value
-            nq = len(b_qids)
-            bm = b_tables.shape[1]
-            for pdf_b in batches:
-                for blob in pdf_b["blob"]:
-                    payload = pickle.loads(blob)
-                    ids, codes = payload[0], payload[1]
-                    if allow is not None:
-                        # in-kernel mask BEFORE the ADC scan: every
-                        # shortlist slot is a matching row (id sort order
-                        # survives the mask)
-                        mask = conjunction_mask(payload[2], allow)
-                        if not mask.any():
-                            continue
-                        ids, codes = ids[mask], codes[mask]
-                    codes = codes.astype(np.int64)
-                    approx = np.zeros((len(ids), nq))
-                    for s in range(bm):
-                        approx += b_tables[:, s, codes[:, s]].T
-                    kk = min(ncand, len(ids))
-                    # blob rows are id-sorted, so a stable argsort on
-                    # approx yields the engine's (approx, id) tie order
-                    part = np.argsort(approx, axis=0, kind="stable")[:kk]
-                    sel = part.T.reshape(-1)
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.repeat(b_qids, kk),
-                            "id": ids[sel],
-                            "approx": approx[sel, np.repeat(np.arange(nq), kk)],
-                        }
-                    )
-
-        cands = (
-            self.blobs.mapInPandas(scan, "qid long, id long, approx double")
-            .dropDuplicates(["qid", "id"])
-        )
-        # candidate volume is bounded by Q * ncand * n_blobs (known here);
-        # broadcast small batches so the corpus never shuffles per batch
-        small = len(qids) * ncand * self._n_serve <= 2_000_000
-        return _rerank_exact(
-            cands.select("qid", "id"), self._train, t, k,
-            self._id_col, self._vec_col, broadcast_cands=small,
+        """ADC top-``candidate_factor * k`` shortlist over every resident
+        code blob, exact re-rank against the cold corpus. ``allowed``
+        masks the resident codes before the scan; a selective filter
+        (``auto_boost``) answers exactly over the matching cold-corpus
+        rows instead. Returns (qid, rank, id, dist); the shared path,
+        :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
 
 
@@ -3589,6 +3306,7 @@ class SqServingIndex(_ResidentBlobIndex):
     _HIST_SOURCE = "_train"
     _ARRAYS = (("mins.npy", "_mins"), ("span.npy", "_span"))
     _COLD_CORPUS = _QUANTIZED = True
+    _FILTER_BRANCH = "masked_scan"
 
     def __init__(
         self,
@@ -3622,6 +3340,10 @@ class SqServingIndex(_ResidentBlobIndex):
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+
+    @property
+    def _dimension(self) -> int:
+        return len(self._mins)
 
     def refresh(self, new_rows: DataFrame,
                 train: DataFrame) -> "SqServingIndex":
@@ -3661,7 +3383,7 @@ class SqServingIndex(_ResidentBlobIndex):
         single dequantize + grouped-GEMM pass (one distance matrix per
         blob, each window group selecting its masked columns) — no
         distinct-window cap."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
@@ -3682,28 +3404,26 @@ class SqServingIndex(_ResidentBlobIndex):
         tenants on one equality-join exact pass against the cold corpus,
         the rest on a single dequantize + grouped-GEMM pass with
         per-tenant masks — no distinct-tenant cap."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         candidate_factor: int,
     ) -> DataFrame:
-        """One dequantize + grouped-GEMM pass over every resident uint8
-        blob answers ALL masked constraint groups (round 11): each blob
-        dequantizes ONCE, `grouped_masked_topk_frame` computes one
-        distance matrix per blob restricted to the probing query rows,
-        and each group selects its top-ncand from its mask's columns.
-        Candidates key by ROW POSITION; the exact re-rank scores each
-        row only against its own vector."""
-        spark = self._spark
+        """SQ hook of the shared query path: one dequantize + grouped-GEMM
+        pass over every resident uint8 blob answers ALL groups — each
+        blob dequantizes ONCE (identical math to sq._sq_knn_batch),
+        :func:`grouped_masked_topk_frame` computes one distance matrix
+        per blob, and each group selects its top-ncand from its mask's
+        columns. Candidates key by ROW POSITION; the exact re-rank
+        scores each row only against its own vector."""
         ncand = candidate_factor * k
-        bgroups = [(allow, ix) for allow, ix, _, _ in groups]
-        bc = spark.sparkContext.broadcast(
-            (Q, self._mins, self._span, bgroups)
+        bc = self._spark.sparkContext.broadcast(
+            (b.Q, self._mins, self._span, [g[:2] for g in groups])
         )
         self._live_bcs.append(bc)
 
@@ -3711,40 +3431,34 @@ class SqServingIndex(_ResidentBlobIndex):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
 
             bQ, b_mins, b_span, bg = bc.value
             pos_ids = np.arange(len(bQ), dtype=np.int64)
             for pdf_b in batches:
                 for blob in pdf_b["blob"]:
                     payload = pickle.loads(blob)
-                    ids, codes, attrs = payload[0], payload[1], payload[2]
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    kg = []
-                    for allow, ix in bg:
-                        mask = conjunction_mask(attrs, allow)
-                        if mask.any():
-                            kg.append((ix, mask))
+                    kg = [
+                        (ix, mask) for _, ix, mask in _masks(
+                            payload[2] if len(payload) > 2 else None,
+                            _visiting(None, None, bg), bg,
+                        )
+                    ]
                     if not kg:
                         continue
-                    # identical dequantize to sq._sq_knn_batch, ONCE
-                    X = codes.astype(np.float64)
+                    X = payload[1].astype(np.float64)
                     X = X / 255.0 * b_span[None, :] + b_mins[None, :]
                     f = grouped_masked_topk_frame(
-                        pos_ids, bQ, ids, X, kg, ncand
+                        pos_ids, bQ, payload[0], X, kg, ncand
                     )
-                    yield f[["qid", "id"]]
+                    yield pd.DataFrame({"pos": f["qid"], "id": f["id"]})
 
         cands = (
-            self.blobs.mapInPandas(scan, "qid long, id long")
-            .dropDuplicates(["qid", "id"])
+            self.blobs.mapInPandas(scan, "pos long, id long")
+            .dropDuplicates(["pos", "id"])
         )
-        pos = np.concatenate([ix for _, ix, _, _ in groups])
-        return self._rerank_positions(
-            cands, pdf, pos, k,
+        pos = np.concatenate([g[1] for g in groups])
+        return self._rerank(
+            cands, b, pos, k,
             broadcast_cands=len(pos) * ncand * self._n_serve <= 2_000_000,
         )
 
@@ -3759,104 +3473,15 @@ class SqServingIndex(_ResidentBlobIndex):
         allowed=None,
         auto_boost: bool = True,
     ) -> DataFrame:
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at SqServingIndex construction"
-            )
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query(
-                test, k, qid_col=qid_col, vec_col=vec_col, allowed=allowed
-            )
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
+        """Dequantized-GEMM top-``candidate_factor * k`` shortlist over
+        every resident uint8 blob, exact re-rank against the cold
+        corpus; ``allowed`` as on :meth:`PqServingIndex.query`. Returns
+        (qid, rank, id, dist); the shared path, :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
-        self.last_filter_strategy = (
-            None if allows is None else "masked_scan"
-        )
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-                conjunction_predicate,
-                filtered_knn,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            mode, _ = choose_filtered_strategy(n_corpus, n_match, k, 1, 1)
-            self.last_filter_strategy = mode if mode == "exact" else "masked_scan"
-            if mode == "exact":
-                return filtered_knn(
-                    test, self._train, k,
-                    conjunction_predicate(self._attr_cols, allows),
-                    qid_col=qid_col, id_col=self._id_col,
-                    test_vec=vec_col, train_vec=self._vec_col,
-                )
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(chunk, k, candidate_factor, allows),
-            max_queries_per_batch,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, candidate_factor: int, allows=None,
-    ) -> DataFrame:
-        spark = self._spark
-        tp = t.toPandas()
-        if len(tp) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = tp["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(tp["vec"].to_numpy()).astype(np.float64)
-        qsq = (Q * Q).sum(axis=1)
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast(
-            (qids, Q, qsq, self._mins, self._span, allow_arrs)
-        )
-        self._live_bcs.append(bc)
-        ncand = candidate_factor * k
-
-        def scan(batches):
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            b_qids, b_Q, b_qsq, b_mins, b_span, allow = bc.value
-            for pdf_b in batches:
-                for blob in pdf_b["blob"]:
-                    payload = pickle.loads(blob)
-                    ids, codes = payload[0], payload[1]
-                    if allow is not None:
-                        # in-kernel mask BEFORE dequantize+GEMM
-                        mask = conjunction_mask(payload[2], allow)
-                        if not mask.any():
-                            continue
-                        ids, codes = ids[mask], codes[mask]
-                    # identical dequantize + GEMM to sq._sq_knn_batch
-                    X = codes.astype(np.float64)
-                    X = X / 255.0 * b_span[None, :] + b_mins[None, :]
-                    xsq = (X * X).sum(axis=1)
-                    D = xsq[:, None] + b_qsq[None, :] - 2.0 * (X @ b_Q.T)
-                    kk = min(ncand, len(ids))
-                    # blob rows are id-sorted: stable argsort = (dist, id)
-                    part = np.argsort(D, axis=0, kind="stable")[:kk]
-                    sel = part.T.reshape(-1)
-                    yield pd.DataFrame(
-                        {"qid": np.repeat(b_qids, kk), "id": ids[sel]}
-                    )
-
-        cands = (
-            self.blobs.mapInPandas(scan, "qid long, id long")
-            .dropDuplicates(["qid", "id"])
-        )
-        small = len(qids) * ncand * self._n_serve <= 2_000_000
-        return _rerank_exact(cands, self._train, t, k, self._id_col,
-                             self._vec_col, broadcast_cands=small)
 
 
 class IvfPqServingIndex(_ResidentBlobIndex):
@@ -3925,6 +3550,10 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         ).localCheckpoint(eager=True)
         self._C = centroid_matrix(centroids)
 
+    @property
+    def _dimension(self) -> int:
+        return int(self._C.shape[1])
+
     def refresh(
         self, new_rows: DataFrame, train: DataFrame,
     ) -> "IvfPqServingIndex":
@@ -3982,65 +3611,12 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         rule), a broad one masks candidates on the resident attribute
         arrays before ADC scoring with nprobe boosted by the inverse
         match rate. ``auto_boost=False`` runs the masked probe at
-        exactly ``nprobe`` (parity testing)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at IvfPqServingIndex "
-                "construction"
-            )
-        fb = _dense_reroute(self, k, candidate_factor)
-        if fb is not None:
-            return fb.query(
-                test, k, qid_col=qid_col, vec_col=vec_col, allowed=allowed
-            )
-        eff_nprobe = nprobe
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        self.last_filter_strategy = None if allows is None else "prefilter"
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            n_cells = int(self._C.shape[0])
-            mode, boosted = choose_filtered_strategy(
-                n_corpus, n_match, k, nprobe, n_cells
-            )
-            self.last_filter_strategy = mode
-            if mode == "exact":
-                from vector_index_spark.operators.filtered import (
-                    conjunction_predicate,
-                    filtered_knn,
-                )
-
-                return filtered_knn(
-                    test,
-                    self._train,
-                    k,
-                    conjunction_predicate(self._attr_cols, allows),
-                    qid_col=qid_col,
-                    id_col=self._id_col,
-                    test_vec=vec_col,
-                    train_vec=self._vec_col,
-                )
-            eff_nprobe = boosted
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(
-                chunk, k, eff_nprobe, candidate_factor, allows
-            ),
-            max_queries_per_batch,
+        exactly ``nprobe`` (parity testing). The shared path,
+        :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            nprobe=nprobe, candidate_factor=candidate_factor,
         )
 
     def query_by_attribute(
@@ -4069,7 +3645,7 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         match rate among probing tenants (capped at the cell count),
         then the usual shortlist + exact re-rank. Returns (qid, rank,
         id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
             nprobe=nprobe, candidate_factor=candidate_factor,
@@ -4097,54 +3673,52 @@ class IvfPqServingIndex(_ResidentBlobIndex):
         their routed cells with per-window range masks on the resident
         attribute arrays BEFORE ADC scoring, nprobe boosted by the
         largest inverse match rate. Returns (qid, rank, id, dist)."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             nprobe=nprobe, candidate_factor=candidate_factor,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         nprobe: int, candidate_factor: int,
     ) -> DataFrame:
-        """IVF-PQ hook of the constrained core: the groups probe their
-        routed cells at the boosted nprobe (:func:`_probe_cells`); in
+        """IVF-PQ hook of the shared query path: the rows probe their
+        routed cells at the boosted nprobe (:func:`_probe_plan`); in
         each probed cell every group's mask applies to the resident
-        attribute arrays BEFORE ADC scoring (groups sharing a cell share
-        its unpickle), then the global shortlist window and the
-        positional exact re-rank against the cold corpus."""
+        attribute arrays BEFORE ADC scoring over the rows' residual LUTs
+        (identical math to the ivfpq scan; groups sharing a cell share
+        its unpickle), then the per-row shortlist window (min approx per
+        (row, id) across replicas, as ivfpq_knn) and the positional
+        exact re-rank against the cold corpus."""
         from pyspark.sql import Window
 
-        assign = _probe_cells(
-            self, pdf, groups, nprobe, int(self._C.shape[0]), n_corpus
-        )
-        gid = _group_of_position(len(Q), groups)
+        plan = _probe_plan(self, b, groups, nprobe, n_corpus)
         ncand = candidate_factor * k
         bc = self._spark.sparkContext.broadcast(
-            (Q, gid, [g[0] for g in groups], self._C, self._books, assign)
+            (b.Q, [g[:2] for g in groups], self._C, self._books, plan)
         )
         self._live_bcs.append(bc)
 
         def scan(batches):
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
-
-            bQ, b_gid, allows, bC, books, asg = bc.value
+            bQ, bg, bC, books, b_plan = bc.value
             bm, ncent, sub_d = books.shape
             for pdf_b in batches:
                 for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                    ix = asg.get(int(cell))
-                    if ix is None or len(ix) == 0:
+                    here = _visiting(b_plan, cell, bg)
+                    if not here:
                         continue
                     payload = pickle.loads(blob)
-                    ids, codes, attrs = payload[0], payload[1], payload[2]
-                    for gi, gq in _positions_by_group(ix, b_gid):
-                        mask = conjunction_mask(attrs, allows[gi])
-                        if not mask.any():
-                            continue
-                        g_ids = ids[mask]
-                        g_codes = codes[mask].astype(np.int64)
+                    ids, codes = payload[0], payload[1]
+                    for _, gq, mask in _masks(
+                        payload[2] if len(payload) > 2 else None, here, bg,
+                    ):
+                        g_ids = ids if mask is None else ids[mask]
+                        g_codes = (
+                            codes if mask is None else codes[mask]
+                        ).astype(np.int64)
+                        # the probing rows' residuals against THIS cell's
+                        # centroid, one broadcasted subtraction per subspace
                         R = bQ[gq] - bC[int(cell)][None, :]
                         lut = np.empty((len(gq), bm, ncent))
                         for s in range(bm):
@@ -4152,148 +3726,42 @@ class IvfPqServingIndex(_ResidentBlobIndex):
                             lut[:, s, :] = (
                                 (seg[:, None, :] - books[s][None, :, :]) ** 2
                             ).sum(-1)
+                        # approx[i, p] = sum_s lut[p, s, codes[i, s]]
                         approx = np.zeros((len(g_ids), len(gq)))
                         for s in range(bm):
                             approx += lut[:, s, g_codes[:, s]].T
                         kk = min(ncand, len(g_ids))
+                        # per-(row, cell) top-ncand in the batch path's
+                        # exact (approx, id) lexsort order — ties
+                        # (identical codes) resolve to the same set
                         for p in range(len(gq)):
                             sel = np.lexsort((g_ids, approx[:, p]))[:kk]
                             yield pd.DataFrame(
                                 {
-                                    "qid": np.full(kk, gq[p]),
+                                    "pos": np.full(kk, gq[p]),
                                     "id": g_ids[sel],
                                     "approx": approx[sel, p],
                                 }
                             )
 
         cands = (
-            self.blobs.filter(F.col("cell").isin(sorted(assign)))
-            .mapInPandas(scan, "qid long, id long, approx double")
-            .groupBy("qid", "id")
+            _probed(self, plan)
+            .mapInPandas(scan, "pos long, id long, approx double")
+            .groupBy("pos", "id")
             .agg(F.min("approx").alias("approx"))
         )
-        wa = Window.partitionBy("qid").orderBy(
+        wa = Window.partitionBy("pos").orderBy(
             F.col("approx").asc(), F.col("id").asc()
         )
         shortlist = (
             cands.withColumn("arank", F.row_number().over(wa))
             .filter(F.col("arank") <= ncand)
-            .select("qid", "id")
+            .select("pos", "id")
         )
         pos = np.sort(np.concatenate([g[1] for g in groups]))
-        return self._rerank_positions(
-            shortlist, pdf, pos, k,
+        return self._rerank(
+            shortlist, b, pos, k,
             broadcast_cands=len(pos) * ncand <= 2_000_000,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, nprobe: int, candidate_factor: int,
-        allows=None,
-    ) -> DataFrame:
-        from pyspark.sql import Window
-
-        from vector_index_spark.operators.knn import knn_join
-
-        spark = self._spark
-        probes = knn_join(t, self._cents_kv, nprobe).select(
-            "qid", F.col("id").alias("cell")
-        )
-        routed = t.join(
-            probes.groupBy("qid").agg(F.collect_list("cell").alias("__cells")),
-            "qid",
-        )
-        pdf = routed.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        acc: dict[int, list[int]] = {}
-        for qi, cells in enumerate(pdf["__cells"]):
-            for c in cells:
-                acc.setdefault(int(c), []).append(qi)
-        assign = {c: np.asarray(ix, dtype=np.int64) for c, ix in acc.items()}
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast(
-            (qids, Q, self._C, self._books, assign, allow_arrs)
-        )
-        self._live_bcs.append(bc)
-        ncand = candidate_factor * k
-
-        def scan(batches):
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            b_qids, bQ, bC, books, asg, allow = bc.value
-            m, ncent, sub = books.shape
-            for pdf_b in batches:
-                for cell, blob in zip(pdf_b["cell"], pdf_b["blob"]):
-                    ix = asg.get(int(cell))
-                    if ix is None or len(ix) == 0:
-                        continue
-                    payload = pickle.loads(blob)
-                    ids, codes = payload[0], payload[1]
-                    if allow is not None:
-                        # in-kernel predicate: mask the resident arrays
-                        # before ADC scoring (mask preserves id sort
-                        # order, so the per-cell lexsort top-ncand equals
-                        # scanning pre-filtered postings — every
-                        # shortlist slot is a matching row)
-                        mask = conjunction_mask(payload[2], allow)
-                        if not mask.any():
-                            continue
-                        ids, codes = ids[mask], codes[mask]
-                    codes = codes.astype(np.int64)
-                    # identical residual-LUT math to ivfpq scan: one
-                    # broadcasted subtraction per subspace over the probing
-                    # queries' residuals against THIS cell's centroid
-                    R = bQ[ix] - bC[int(cell)][None, :]  # (P, d)
-                    lut = np.empty((len(ix), m, ncent))
-                    for s in range(m):
-                        seg = R[:, s * sub : (s + 1) * sub]
-                        lut[:, s, :] = (
-                            (seg[:, None, :] - books[s][None, :, :]) ** 2
-                        ).sum(-1)
-                    # approx[i, p] = sum_s lut[p, s, codes[i, s]]
-                    approx = np.zeros((len(ids), len(ix)))
-                    for s in range(m):
-                        approx += lut[:, s, codes[:, s]].T
-                    kk = min(ncand, len(ids))
-                    # per-(query, cell) top-ncand in the batch path's
-                    # exact (approx, id) lexsort order — ties (identical
-                    # codes) must resolve to the same candidate set
-                    for p in range(len(ix)):
-                        sel = np.lexsort((ids, approx[:, p]))[:kk]
-                        yield pd.DataFrame(
-                            {
-                                "qid": np.full(kk, b_qids[ix[p]]),
-                                "id": ids[sel],
-                                "approx": approx[sel, p],
-                            }
-                        )
-
-        probed = sorted(assign)
-        # min approx per (qid, id) across replicas — same deterministic
-        # resolution as ivfpq_knn
-        cands = (
-            self.blobs.filter(F.col("cell").isin(probed))
-            .mapInPandas(scan, "qid long, id long, approx double")
-            .groupBy("qid", "id")
-            .agg(F.min("approx").alias("approx"))
-        )
-        wa = Window.partitionBy("qid").orderBy(
-            F.col("approx").asc(), F.col("id").asc()
-        )
-        shortlist = (
-            cands.withColumn("arank", F.row_number().over(wa))
-            .filter(F.col("arank") <= ncand)
-            .select("qid", "id")
-        )
-        return _rerank_exact(
-            shortlist, self._train, t, k, self._id_col, self._vec_col,
-            broadcast_cands=len(qids) * ncand <= 2_000_000,
-            # duplicate qids fan the rerank join out to one dist per query
-            # ROW; min-merge per (qid, id) so no id repeats in a top-k
-            # (the shared-spec analogue of the positional dup-qid paths)
-            dedupe_pairs=len(np.unique(qids)) < len(qids),
         )
 
 
@@ -4346,6 +3814,10 @@ class RptServingIndex(_ResidentBlobIndex):
         )
 
     @property
+    def _dimension(self) -> int:
+        return int(self._W.shape[1])
+
+    @property
     def _depth(self) -> int:
         return int(np.log2(len(self._W) + 1))
 
@@ -4388,7 +3860,7 @@ class RptServingIndex(_ResidentBlobIndex):
         leaf's unpickle and one grouped-GEMM kernel call — no
         distinct-window cap. ``probes`` defaults scale-aware
         (:func:`vector_index_spark.index.rpt.default_probes`)."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             probes=probes,
@@ -4410,94 +3882,73 @@ class RptServingIndex(_ResidentBlobIndex):
         (exact), large tenants probe boosted leaf sets — no
         distinct-tenant cap (the tenant analogue of
         :meth:`query_by_window`)."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost, probes=probes,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         probes: "int | None",
     ) -> DataFrame:
-        """One pass over the resident leaf blobs answers ALL constraint
-        groups (round 11): non-exact groups run the driver-side
-        best-first probe walk with the inverse-match-rate probe boost
-        (the class's filtered-query rule), exact groups visit EVERY leaf
-        — raw vectors are resident and leaves partition the corpus, so
-        the masked grouped GEMM over full leaf coverage is exact. All
-        groups probing a leaf share its unpickle and one
-        `grouped_masked_topk_frame` call; distances are final (no
-        re-rank tail on this route)."""
-        from pyspark.sql import Window
-
+        """RPT hook of the shared query path: ONE pass over the resident
+        leaf blobs answers ALL groups. Each row of a non-exact group
+        takes the driver-side best-first probe walk (the same
+        `_probe_leaves` as rpt_knn), its probe count boosted under
+        ``auto_boost`` by its filter's inverse match rate; exact groups
+        visit EVERY leaf — raw vectors are resident and leaves partition
+        the corpus, so the masked GEMM over full leaf coverage is exact.
+        All groups visiting a leaf share its unpickle and one
+        `grouped_masked_topk_frame` call (THE `gemm_topk_frame` kernel
+        when one group visits); distances are final (no re-rank tail on
+        this route)."""
         from vector_index_spark.index.rpt import _probe_leaves
-        from vector_index_spark.operators.filtered import (
-            choose_filtered_strategy,
-        )
 
-        spark = self._spark
         n_leaves = 2 ** self._depth
         if probes is None:
             probes = _rpt_default_probes(n_leaves)
-        # leaf -> {group index -> probing row positions}
-        assign: dict = {}
-        exact_gi: list = []
-        for gi, (allow, ix, exact, n_match) in enumerate(groups):
+        acc: dict = {}
+        for allow, ix, exact, n_match in groups:
             if exact:
-                exact_gi.append(gi)
                 continue
             eff = probes
-            if auto_boost:
-                _, boosted = choose_filtered_strategy(
-                    n_corpus, min(max(n_match, 1), n_corpus), k, probes,
-                    n_leaves,
-                )
-                eff = min(n_leaves, max(probes, boosted))
+            if auto_boost and allow is not None:
+                eff = min(n_leaves, probes * _boost(n_match, n_corpus))
             for pos in ix:
                 # sorted-set normalization matches rpt_knn's probe UDF
                 for leaf in sorted(set(_probe_leaves(
-                    Q[pos], self._W, self._T, self._depth, eff
+                    b.Q[pos], self._W, self._T, self._depth, eff
                 ))):
-                    assign.setdefault(int(leaf), {}).setdefault(
-                        gi, []
-                    ).append(int(pos))
-        bgroups = [(allow, ix) for allow, ix, _, _ in groups]
-        bc = spark.sparkContext.broadcast((Q, bgroups, assign, exact_gi))
+                    acc.setdefault(int(leaf), []).append(int(pos))
+        plan = _plan(acc, [g[1] for g in groups if g[2]], groups, len(b.Q))
+        bc = self._spark.sparkContext.broadcast(
+            (b.qids, b.Q, [g[:2] for g in groups], plan)
+        )
         self._live_bcs.append(bc)
 
         def search(batches):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
 
-            bQ, bg, asg, b_exact = bc.value
-            pos_ids = np.arange(len(bQ), dtype=np.int64)
+            q_ids, q_mat, b_groups, b_plan = bc.value
             for pdf_b in batches:
                 frames = []
                 for leaf, blob in zip(pdf_b["leaf"], pdf_b["blob"]):
+                    here = _visiting(b_plan, leaf, b_groups)
+                    if not here:
+                        continue
                     payload = pickle.loads(blob)
-                    ids, X, attrs = payload[0], payload[1], payload[2]
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    kg = []
-                    here = asg.get(int(leaf), {})
-                    for gi, poss in here.items():
-                        mask = conjunction_mask(attrs, bg[gi][0])
-                        if mask.any():
-                            kg.append(
-                                (np.asarray(poss, dtype=np.int64), mask)
-                            )
-                    for gi in b_exact:
-                        mask = conjunction_mask(attrs, bg[gi][0])
-                        if mask.any():
-                            kg.append((bg[gi][1], mask))
+                    kg = [
+                        (gq, mask) for _, gq, mask in _masks(
+                            payload[2] if len(payload) > 2 else None,
+                            here, b_groups,
+                        )
+                    ]
                     if kg:
                         frames.append(
                             grouped_masked_topk_frame(
-                                pos_ids, bQ, ids, X, kg, k
+                                q_ids, q_mat, payload[0], payload[1], kg, k,
                             )
                         )
                 yield (
@@ -4506,18 +3957,8 @@ class RptServingIndex(_ResidentBlobIndex):
                     else pd.DataFrame({"qid": [], "id": [], "dist": []})
                 )
 
-        rel = self.blobs
-        if not exact_gi:
-            # no group needs full coverage: prune to the probed leaves
-            rel = rel.filter(F.col("leaf").isin(sorted(assign)))
-        per_leaf = rel.mapInPandas(search, RESULT_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            per_leaf.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        return _rank_topk(
+            _probed(self, plan).mapInPandas(search, RESULT_SCHEMA), k, b.dup
         )
 
     def query(
@@ -4536,111 +3977,12 @@ class RptServingIndex(_ResidentBlobIndex):
         attribute for a conjunction). Leaves PRUNE the corpus, so a
         broad filter boosts the probe count by the inverse match rate
         (filtered recall holds as selectivity falls); a selective filter
-        probes EVERY leaf — with the raw vectors resident and full leaf
-        coverage the masked GEMM is exact."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at RptServingIndex construction"
-            )
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        if probes is None:
-            probes = _rpt_default_probes(2 ** self._depth)
-        eff_probes = probes
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            n_leaves = 2 ** self._depth
-            mode, boosted = choose_filtered_strategy(
-                n_corpus, n_match, k, probes, n_leaves
-            )
-            eff_probes = n_leaves if mode == "exact" else boosted
-            self.last_filter_strategy = mode
-        else:
-            self.last_filter_strategy = None if allows is None else "prefilter"
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t, lambda chunk: self._query_batch(chunk, k, eff_probes, allows),
-            max_queries_per_batch,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, probes: int, allows=None,
-    ) -> DataFrame:
-        from vector_index_spark.index.rpt import _probe_leaves
-
-        spark = self._spark
-        pdf = t.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = pdf["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        acc: dict[int, list[int]] = {}
-        for qi in range(len(Q)):
-            # sorted-set normalization matches rpt_knn's probe UDF
-            for leaf in sorted(set(_probe_leaves(
-                Q[qi], self._W, self._T, self._depth, probes
-            ))):
-                acc.setdefault(int(leaf), []).append(qi)
-        assign = {lf: np.asarray(ix, dtype=np.int64) for lf, ix in acc.items()}
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast((qids, Q, assign, allow_arrs))
-        self._live_bcs.append(bc)
-
-        def search(batches):
-            from vector_index_spark.index.cellscan import gemm_topk_frame
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            for pdf_b in batches:
-                q_ids, q_mat, asg, allow = bc.value
-                frames = []
-                for leaf, blob in zip(pdf_b["leaf"], pdf_b["blob"]):
-                    ix = asg.get(int(leaf))
-                    if ix is None or len(ix) == 0:
-                        continue
-                    payload = pickle.loads(blob)
-                    ids, X = payload[0], payload[1]
-                    if allow is not None:
-                        # in-kernel mask before the leaf GEMM
-                        mask = conjunction_mask(payload[2], allow)
-                        if not mask.any():
-                            continue
-                        ids, X = ids[mask], X[mask]
-                    frames.append(
-                        gemm_topk_frame(q_ids[ix], q_mat[ix], ids, X, k)
-                    )
-                yield (
-                    pd.concat(frames, ignore_index=True)
-                    if frames
-                    else pd.DataFrame({"qid": [], "id": [], "dist": []})
-                )
-
-        probed = sorted(assign)
-        per_leaf = (
-            self.blobs.filter(F.col("leaf").isin(probed))
-            .mapInPandas(search, RESULT_SCHEMA)
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            per_leaf.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        visits EVERY leaf — with the raw vectors resident and full leaf
+        coverage the masked GEMM is exact. The shared path,
+        :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost, probes=probes,
         )
 
 
@@ -4663,6 +4005,7 @@ class PcaServingIndex(_ResidentBlobIndex):
     _PENDING, _COUNT = "_pending_snapshot_parts", "n_blobs"
     _HIST_SOURCE = "_projected"
     _ARRAYS = (("mean.npy", "_mean"), ("components.npy", "_comp"))
+    _FILTER_BRANCH = "masked_scan"
 
     def __init__(
         self,
@@ -4694,6 +4037,10 @@ class PcaServingIndex(_ResidentBlobIndex):
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+
+    @property
+    def _dimension(self) -> int:
+        return len(self._mean)
 
     def refresh(self, new_rows: DataFrame) -> "PcaServingIndex":
         """Incremental ingest on the PCA filter-and-refine route (round
@@ -4730,7 +4077,7 @@ class PcaServingIndex(_ResidentBlobIndex):
         in the reduced space under their masks and refine against the
         co-resident raw rows inside the same blob visit — no
         distinct-window cap."""
-        return self._constrained_query(
+        return self._query(
             "window", test, k, {"lo_col": lo_col, "hi_col": hi_col},
             qid_col, vec_col, max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
@@ -4751,99 +4098,66 @@ class PcaServingIndex(_ResidentBlobIndex):
         tenants run the masked exact GEMM over the resident raw
         matrices, large tenants shortlist reduced-space under their
         masks and refine in-blob — no distinct-tenant cap."""
-        return self._constrained_query(
+        return self._query(
             "attr", test, k, {"qattr_col": qattr_col}, qid_col, vec_col,
             max_queries_per_batch, auto_boost,
             candidate_factor=candidate_factor,
         )
 
-    def _masked_constraint_batch(
-        self, pdf, Q, groups, k: int, n_corpus: int, auto_boost: bool,
+    def _kernel_batch(
+        self, b, groups, k: int, n_corpus: int, auto_boost: bool,
         candidate_factor: int,
     ) -> DataFrame:
-        """One pass over the resident (ids, reduced, raw) blobs answers
-        ALL constraint groups (round 11): exact groups ride one grouped
-        masked GEMM over the RAW matrix (full coverage -> exact); the
-        rest shortlist in the reduced space (one reduced distance matrix
-        per blob, each group selecting its masked columns) and refine
-        against the co-resident raw rows in the SAME blob visit — the
-        filter-and-refine layout pays off because vec and pvec were
-        packed together. Distances are final; no re-rank tail."""
-        from pyspark.sql import Window
-
-        spark = self._spark
-        PQ_ = (Q - self._mean[None, :]) @ self._comp.T
-        ncand = candidate_factor * k
-        bgroups = [(allow, ix, exact) for allow, ix, exact, _ in groups]
-        bc = spark.sparkContext.broadcast((Q, PQ_, bgroups))
+        """PCA hook of the shared query path: ONE pass over the resident
+        (ids, reduced, raw) blobs answers ALL groups. Exact groups ride
+        one grouped masked GEMM over the RAW matrix (full coverage ->
+        exact); every other group runs THE `pca_shortlist_refine` kernel
+        over its masked rows — reduced-space shortlist, then the exact
+        refine against the co-resident raw rows in the SAME blob visit
+        (the filter-and-refine layout pays off because vec and pvec were
+        packed together). Distances are final; no re-rank tail."""
+        PQ_ = (b.Q - self._mean[None, :]) @ self._comp.T
+        bc = self._spark.sparkContext.broadcast((
+            b.qids, b.Q, (b.Q * b.Q).sum(axis=1), PQ_,
+            (PQ_ * PQ_).sum(axis=1), [g[:3] for g in groups],
+        ))
         self._live_bcs.append(bc)
+        ncand = candidate_factor * k
 
         def scan(batches):
             from vector_index_spark.index.cellscan import (
                 grouped_masked_topk_frame,
             )
-            from vector_index_spark.operators.filtered import (
-                conjunction_mask,
-            )
+            from vector_index_spark.index.pca import pca_shortlist_refine
 
-            bQ, bPQ, bg = bc.value
-            pos_ids = np.arange(len(bQ), dtype=np.int64)
+            q_ids, bQ, qsq, bPQ, pqsq, bg = bc.value
             for pdf_b in batches:
-                frames = []
                 for blob in pdf_b["blob"]:
                     payload = pickle.loads(blob)
-                    ids, P, X, attrs = (
-                        payload[0], payload[1], payload[2], payload[3],
+                    ids, P, X = payload[0], payload[1], payload[2]
+                    masked = _masks(
+                        payload[3] if len(payload) > 3 else None,
+                        _visiting(None, None, bg), bg,
                     )
-                    if attrs.ndim == 1:
-                        attrs = attrs[:, None]
-                    eg, sg = [], []
-                    for allow, ix, exact in bg:
-                        mask = conjunction_mask(attrs, allow)
-                        if not mask.any():
-                            continue
-                        (eg if exact else sg).append((ix, mask))
+                    eg = [(gq, m) for gi, gq, m in masked if bg[gi][2]]
                     if eg:
-                        frames.append(
-                            grouped_masked_topk_frame(
-                                pos_ids, bQ, ids, X, eg, k
-                            )
+                        yield grouped_masked_topk_frame(
+                            q_ids, bQ, ids, X, eg, k
                         )
-                    if sg:
-                        # reduced-space shortlist: candidate "ids" are
-                        # blob ROW indices, refined against the raw rows
-                        rf = grouped_masked_topk_frame(
-                            pos_ids, bPQ,
-                            np.arange(len(ids), dtype=np.int64), P,
-                            sg, ncand,
+                    for gi, gq, m in masked:
+                        if bg[gi][2]:
+                            continue
+                        g_ids, g_P, g_X = (
+                            (ids, P, X) if m is None else (ids[m], P[m], X[m])
                         )
-                        if len(rf):
-                            qpos = rf["qid"].to_numpy(dtype=np.int64)
-                            rix = rf["id"].to_numpy(dtype=np.int64)
-                            diff = bQ[qpos] - X[rix]
-                            d = (diff * diff).sum(axis=1)
-                            ref = pd.DataFrame(
-                                {"qid": qpos, "id": ids[rix], "dist": d}
-                            )
-                            frames.append(
-                                ref.sort_values(
-                                    ["qid", "dist", "id"], kind="stable"
-                                ).groupby("qid").head(k)
-                            )
-                yield (
-                    pd.concat(frames, ignore_index=True)
-                    if frames
-                    else pd.DataFrame({"qid": [], "id": [], "dist": []})
-                )
+                        yield pca_shortlist_refine(
+                            q_ids[gq], bQ[gq], qsq[gq], bPQ[gq], pqsq[gq],
+                            g_ids, g_P, lambda uniq, g_X=g_X: g_X[uniq],
+                            k, ncand,
+                        )
 
-        partial = self.blobs.mapInPandas(scan, RESULT_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        return _rank_topk(
+            self.blobs.mapInPandas(scan, RESULT_SCHEMA), k, b.dup
         )
 
     def query(
@@ -4863,99 +4177,10 @@ class PcaServingIndex(_ResidentBlobIndex):
         reduced matrix BEFORE the shortlist, so every shortlist slot is
         a matching row (this route scans every blob — no probe boost
         needed); a selective filter switches to a masked exact GEMM over
-        the resident RAW matrices (full coverage -> exact)."""
-        from vector_index_spark.index.querychunk import chunked_over_queries
-        from vector_index_spark.operators.filtered import normalize_allowed
-
-        if allowed is not None and self._attr_cols is None:
-            raise ValueError(
-                "filtered query needs attr_col= at PcaServingIndex construction"
-            )
-        allows = (
-            normalize_allowed(allowed, len(self._attr_cols))
-            if allowed is not None
-            else None
-        )
-        exact_scan = False
-        if allows is not None and auto_boost:
-            from vector_index_spark.operators.filtered import (
-                choose_filtered_strategy,
-            )
-
-            hist = self._attribute_histogram()
-            n_corpus = max(sum(hist.values()), 1)
-            n_match = _match_count(hist, allows)
-            mode, _ = choose_filtered_strategy(n_corpus, n_match, k, 1, 1)
-            exact_scan = mode == "exact"
-        self.last_filter_strategy = (
-            None if allows is None else ("exact" if exact_scan else "masked_scan")
-        )
-        self._release_broadcasts()
-        t = test.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        return chunked_over_queries(
-            t,
-            lambda chunk: self._query_batch(
-                chunk, k, candidate_factor, allows, exact_scan
-            ),
-            max_queries_per_batch,
-        )
-
-    def _query_batch(
-        self, t: DataFrame, k: int, candidate_factor: int,
-        allows=None, exact_scan: bool = False,
-    ) -> DataFrame:
-        from vector_index_spark.index.pca import pca_shortlist_refine
-
-        spark = self._spark
-        tp = t.toPandas()
-        if len(tp) == 0:
-            return spark.createDataFrame([], "qid long, rank int, id long, dist double")
-        qids = tp["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(tp["vec"].to_numpy()).astype(np.float64)
-        qsq = (Q * Q).sum(axis=1)
-        PQ_ = (Q - self._mean[None, :]) @ self._comp.T
-        pqsq = (PQ_ * PQ_).sum(axis=1)
-        allow_arrs = _allow_arrays(allows) if allows is not None else None
-        bc = spark.sparkContext.broadcast(
-            (qids, Q, qsq, PQ_, pqsq, allow_arrs, exact_scan)
-        )
-        self._live_bcs.append(bc)
-        ncand = candidate_factor * k
-
-        def scan(batches):
-            from vector_index_spark.index.cellscan import gemm_topk_frame
-            from vector_index_spark.operators.filtered import conjunction_mask
-
-            b_qids, b_Q, b_qsq, b_PQ, b_pqsq, allow, exact = bc.value
-            for pdf_b in batches:
-                for blob in pdf_b["blob"]:
-                    payload = pickle.loads(blob)
-                    ids, P, X = payload[0], payload[1], payload[2]
-                    if allow is not None:
-                        # in-kernel mask before the reduced-space scan
-                        mask = conjunction_mask(payload[3], allow)
-                        if not mask.any():
-                            continue
-                        ids, P, X = ids[mask], P[mask], X[mask]
-                        if exact:
-                            # selective filter: masked exact GEMM over
-                            # the resident raw matrix (every blob is
-                            # scanned -> full coverage -> exact)
-                            yield gemm_topk_frame(b_qids, b_Q, ids, X, k)
-                            continue
-                    yield pca_shortlist_refine(
-                        b_qids, b_Q, b_qsq, b_PQ, b_pqsq,
-                        ids, P, lambda uniq, X=X: X[uniq], k, ncand,
-                    )
-
-        partial = self.blobs.mapInPandas(scan, RESULT_SCHEMA)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "id", "dist")
+        the resident RAW matrices (full coverage -> exact). The shared
+        path, :meth:`_query`."""
+        return self._query(
+            "query", test, k, allowed, qid_col, vec_col,
+            max_queries_per_batch, auto_boost,
+            candidate_factor=candidate_factor,
         )
