@@ -60,31 +60,35 @@ def _auto_nprobe(n_shards: int) -> int:
     return max(8, int(round(n_shards ** 0.5)))
 
 
-def _stamp_manifest(inner, path: str, **extra) -> None:
-    """Merge metric-adapter keys into an already-committed serving
-    manifest (shared by the cosine and MIPS adapters — round 14
-    review: one copy of the read/mutate/rewrite protocol)."""
-    import json as _json
+class _MetricServing:
+    """The one metric adapter over a serving handle whose stored vectors
+    carry a metric's build transform (cosine: unit-normalized; inner
+    product: norm-augmented), so its euclidean^2 kernels serve that
+    metric. Every query form (``query``, ``query_by_attribute``,
+    ``query_by_window``: the constraint columns pass through untouched)
+    and every lifecycle call (``warm``, ``unpersist``, ``blobs``,
+    ``bytes_resident``, ``refresh``, ``remove``, ``snapshot``,
+    ``snapshot_incremental``, ``from_snapshot``) forwards to the wrapped
+    handle. A metric supplies only its query-side transform and
+    distance map (:meth:`_answer`), the build transform of a raw-row
+    refresh wave (:meth:`_wave`) and its manifest fields, which the
+    wrapped handle writes in its own single manifest commit: a snapshot
+    is never left without them, so a restore re-wraps the same adapter
+    (restored bare it would serve right ids on the wrong distance
+    scale, with no error)."""
 
-    from vector_index_spark.index.serving import (
-        _fs_read_bytes,
-        _fs_write_bytes,
-    )
-
-    spark = inner._spark
-    mpath = f"{path}/serving_manifest.json"
-    manifest = _json.loads(_fs_read_bytes(spark, mpath).decode("utf-8"))
-    manifest.update(extra)
-    _fs_write_bytes(spark, mpath, _json.dumps(manifest).encode("utf-8"))
-
-
-class _CosineQueryBase:
-    """Shared cosine query surface (round 15 review — ONE copy of the
-    normalize-query + dist/2 mapping): subclasses differ only in their
-    maintenance/persistence surface."""
+    _METRIC: str
 
     def __init__(self, inner):
         self._inner = inner
+        inner._metric_fields = self._fields()
+
+    def _fields(self) -> tuple:
+        return (("metric", self._METRIC),)
+
+    @classmethod
+    def _restored(cls, inner, manifest: dict):
+        return cls(inner)
 
     def warm(self):
         self._inner.warm()
@@ -93,103 +97,6 @@ class _CosineQueryBase:
     def unpersist(self) -> None:
         self._inner.unpersist()
 
-    def query(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        normed, rest = self._normed(test, kwargs)
-        res = self._inner.query(normed, k, **rest)
-        return res.select(
-            "qid", "rank", "id", (F.col("dist") / 2.0).alias("dist")
-        )
-
-    def query_by_attribute(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        """Multi-tenant serving with the cosine transform: qattr columns
-        pass through untouched; distances map l2sq-on-normalized -> cos
-        via dist/2, same as query()."""
-        qcols = kwargs.get("qattr_col", "attr")
-        qcols = [qcols] if isinstance(qcols, str) else list(qcols)
-        normed, rest = self._normed(test, kwargs, extra=qcols)
-        res = self._inner.query_by_attribute(normed, k, **rest)
-        return res.select(
-            "qid", "rank", "id", (F.col("dist") / 2.0).alias("dist")
-        )
-
-    def query_by_window(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        """Per-query [lo, hi) window serving with the cosine transform:
-        the bound columns pass through untouched; distances map
-        l2sq-on-normalized -> cos via dist/2, same as query()."""
-        bounds = [
-            kwargs.get("lo_col", "lo"), kwargs.get("hi_col", "hi"),
-        ]
-        normed, rest = self._normed(test, kwargs, extra=bounds)
-        res = self._inner.query_by_window(normed, k, **rest)
-        return res.select(
-            "qid", "rank", "id", (F.col("dist") / 2.0).alias("dist")
-        )
-
-    def _normed(self, test: DataFrame, kwargs: dict, extra=()):
-        """(normalized query batch, remaining kwargs) — the caller's
-        dict is never mutated (round 15, same hygiene as the MIPS
-        adapter)."""
-        from vector_index_spark.functions.distance import normalize
-
-        kwargs = dict(kwargs)
-        qid_col = kwargs.pop("qid_col", "qid")
-        vec_col = kwargs.pop("vec_col", "vec")
-        return test.select(
-            F.col(qid_col).alias("qid"),
-            normalize(F.col(vec_col)).alias("vec"),
-            *(F.col(c) for c in extra),
-        ), kwargs
-
-
-class _CosineServing(_CosineQueryBase):
-    """Metric adapter over :class:`~vector_index_spark.index.serving.
-    ServingIndex` for cosine indexes: the stored vectors are unit-
-    normalized at build time, so serving applies the same query-side
-    normalize and l2sq -> cos_dist (dist / 2) transform as
-    :meth:`VectorIndex.query` — answers byte-identical to the facade."""
-
-    def snapshot(self, path: str) -> "_CosineServing":
-        """Snapshot the wrapped serving form and stamp the metric into
-        the manifest, so :meth:`VectorIndex.serving_from_snapshot`
-        restores the SAME adapter (round 10): a cosine snapshot restored
-        bare would serve l2sq-on-normalized distances — right ids,
-        wrong dist scale — with no error."""
-        self._inner.snapshot(path)
-        _stamp_manifest(self._inner, path, metric="cosine_similarity")
-        return self
-
-
-class CosineCompressedServing(_CosineQueryBase):
-    """Cosine serving over the DIRECTLY-CONSTRUCTED compressed /
-    self-contained classes (round 15, VERDICT r14 item 6) — IvfPq, PQ,
-    SQ (and Cell / RPT / PCA), which natively serve euclidean^2 only.
-
-    The normalize-at-encode reduction: build the inner handle over
-    UNIT-NORMALIZED vectors (``functions.distance.normalize`` on the
-    encode/assign relation AND — for the corpus-backed routes whose
-    exact re-rank reads raw vectors — the re-rank corpus), then
-    ``l2^2 = 2*cos_dist`` on unit vectors, so this adapter normalizes
-    queries and maps ``dist -> dist/2`` (the query surface lives on
-    :class:`_CosineQueryBase`, shared with the graph-route adapter).
-    Candidate ORDER under ADC / reduced-space shortlists is unchanged
-    by the mapping (monotone), so recall characteristics equal the
-    euclidean handle's on the normalized corpus.
-
-    Maintenance passes through with the same transform: ``refresh``
-    normalizes the wave's vectors (pass the normalized train corpus for
-    the corpus-backed routes); ``remove`` is id-only. ``snapshot``
-    stamps ``metric=cosine_similarity`` so :meth:`from_snapshot` (or a
-    reader of the manifest) knows to re-wrap — restoring the inner
-    class bare would serve l2sq-on-normalized distances (right ids,
-    wrong scale) with no error. MIPS stays graph-route-only
-    (``VectorIndex.serving()``): the norm-augmentation changes the
-    stored dimensionality, which would invalidate compressed codebooks
-    trained on raw vectors."""
-
-    def __init__(self, inner, vec_col: str = "vec"):
-        super().__init__(inner)
-        self._vec = vec_col
-
     @property
     def blobs(self):
         return self._inner.blobs
@@ -197,128 +104,195 @@ class CosineCompressedServing(_CosineQueryBase):
     def bytes_resident(self) -> dict:
         return self._inner.bytes_resident()
 
-    def refresh(self, new_rows: DataFrame, *args, **kwargs):
-        """Pass the wave through the SAME normalize-at-encode transform
-        the build side used; extra args (the normalized train corpus on
-        the corpus-backed routes) forward untouched."""
-        from vector_index_spark.functions.distance import normalize
-
-        vec = self._vec
-        wave = new_rows.select(
-            *(
-                normalize(F.col(c)).alias(c) if c == vec else F.col(c)
-                for c in new_rows.columns
-            )
-        )
-        self._inner.refresh(wave, *args, **kwargs)
-        return self
-
     def remove(self, ids) -> int:
         return self._inner.remove(ids)
 
-    def snapshot(self, path: str, **kwargs) -> "CosineCompressedServing":
-        self._inner.snapshot(path, **kwargs)
-        _stamp_manifest(self._inner, path, metric="cosine_similarity")
+    def refresh(self, new_rows: DataFrame, *args, **kwargs):
+        """The graph route's arguments are the stored (already
+        transformed) index relations and pass through; a raw-row wave
+        takes the build side's transform first (:meth:`_wave`). Extra
+        args (the transformed corpus on the cold-corpus routes) forward
+        untouched."""
+        if self._inner._KEY != "shard":
+            new_rows = self._wave(new_rows)
+        self._inner.refresh(new_rows, *args, **kwargs)
         return self
 
-    def snapshot_incremental(self, path: str, **kwargs):
-        self._inner.snapshot_incremental(path, **kwargs)
-        _stamp_manifest(self._inner, path, metric="cosine_similarity")
+    def _wave(self, new_rows: DataFrame) -> DataFrame:
+        raise TypeError(
+            f"{type(self).__name__} serves the graph route only: refresh "
+            "it with the stored index relations (vectors, edges, shards)"
+        )
+
+    def snapshot(self, path: str, *args, **kwargs):
+        self._inner.snapshot(path, *args, **kwargs)
+        return self
+
+    def snapshot_incremental(self, path: str, *args, **kwargs):
+        self._inner.snapshot_incremental(path, *args, **kwargs)
         return self
 
     @classmethod
-    def from_snapshot(cls, inner_cls, spark, path: str, *args,
-                      **kwargs) -> "CosineCompressedServing":
+    def from_snapshot(cls, inner_cls, spark, path: str, *args, **kwargs):
         """Restore: ``CosineCompressedServing.from_snapshot(
         IvfPqServingIndex, spark, path, normalized_corpus)``. Raises if
-        the manifest's stamped metric is not cosine (a euclidean
-        snapshot re-wrapped here would silently halve distances)."""
-        import json as _json
+        the manifest's metric is not this adapter's (a euclidean
+        snapshot re-wrapped here would silently re-scale distances)."""
+        from vector_index_spark.index.serving import _read_manifest_any
 
-        from vector_index_spark.index.serving import _fs_read_bytes
-
-        manifest = _json.loads(
-            _fs_read_bytes(spark, f"{path}/serving_manifest.json").decode(
-                "utf-8"
-            )
-        )
+        manifest = _read_manifest_any(spark, path) or {}
         got = manifest.get("metric")
-        if got != "cosine_similarity":
+        if got != cls._METRIC:
             raise ValueError(
                 f"snapshot at {path!r} is stamped metric={got!r}, not "
-                "cosine_similarity — restore it with the inner class "
+                f"{cls._METRIC} — restore it with the inner class "
                 "directly (it serves euclidean^2)"
             )
-        return cls(inner_cls.from_snapshot(spark, path, *args, **kwargs))
-
-
-class _MipsServing:
-    """Metric adapter over :class:`~vector_index_spark.index.serving.
-    ServingIndex` for inner-product indexes (round 14, VERDICT r13
-    item 9): the stored vectors carry the norm-augmentation in their
-    last slot (x -> [x, sqrt(M^2-|x|^2)], so augmented-L2 order =
-    descending dot product), queries augment with a literal 0 inside
-    the RESIDENT path, and ip_dist recovers algebraically from the
-    returned augmented-L2 distance — no join back through the stored
-    vectors: |x_aug|^2 = M^2 identically, so
-    ``dot(q, x) = (|q|^2 + M^2 - l2_aug) / 2`` and
-    ``ip_dist = 1 - dot``. ``m2`` is captured once at construction
-    (one scalar aggregate, startup-class)."""
-
-    def __init__(self, inner, m2: float):
-        self._inner = inner
-        self._m2 = float(m2)
-
-    def warm(self) -> "_MipsServing":
-        self._inner.warm()
-        return self
-
-    def unpersist(self) -> None:
-        self._inner.unpersist()
+        return cls._restored(
+            inner_cls.from_snapshot(spark, path, *args, **kwargs), manifest
+        )
 
     def query(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        aug, qn, rest = self._augmented(test, kwargs)
-        res = self._inner.query(aug, k, **rest)
-        return self._ip_dist(res, qn)
+        return self._run("query", test, k, kwargs, ())
 
     def query_by_attribute(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        """Multi-tenant MIPS serving: qattr columns pass through
-        untouched; distances map augmented-L2 -> ip_dist per query,
-        same as :meth:`query`."""
         qcols = kwargs.get("qattr_col", "attr")
-        qcols = [qcols] if isinstance(qcols, str) else list(qcols)
-        aug, qn, rest = self._augmented(test, kwargs, extra=qcols)
-        res = self._inner.query_by_attribute(aug, k, **rest)
-        return self._ip_dist(res, qn)
+        return self._run(
+            "query_by_attribute", test, k, kwargs,
+            [qcols] if isinstance(qcols, str) else list(qcols),
+        )
 
     def query_by_window(self, test: DataFrame, k: int, **kwargs) -> DataFrame:
-        """Per-query [lo, hi) ATTRIBUTE-window serving with the MIPS
-        transform: the bound columns window the handle's attribute and
-        pass through untouched (same as the cosine adapter); distances
-        map augmented-L2 -> ip_dist per query, same as
-        :meth:`query`."""
-        bounds = [
-            kwargs.get("lo_col", "lo"), kwargs.get("hi_col", "hi"),
-        ]
-        aug, qn, rest = self._augmented(test, kwargs, extra=bounds)
-        res = self._inner.query_by_window(aug, k, **rest)
-        return self._ip_dist(res, qn)
-
-    def snapshot(self, path: str) -> "_MipsServing":
-        """Stamp metric + M^2 into the manifest so
-        :meth:`VectorIndex.serving_from_snapshot` restores the SAME
-        adapter — a MIPS snapshot restored bare would serve
-        augmented-L2 distances (right ids, wrong dist scale) with no
-        error."""
-        self._inner.snapshot(path)
-        _stamp_manifest(
-            self._inner, path, metric="inner_product", mips_m2=self._m2
+        return self._run(
+            "query_by_window", test, k, kwargs,
+            [kwargs.get("lo_col", "lo"), kwargs.get("hi_col", "hi")],
         )
-        return self
 
-    def _ip_dist(self, res: DataFrame, qn: DataFrame) -> DataFrame:
+    def _run(self, form: str, test: DataFrame, k: int, kwargs: dict, extra):
+        """The (qid, vec, *extra) batch and the inner call; the caller's
+        dict is never mutated, so a retry wrapper reusing one dict keeps
+        its qid_col/vec_col."""
+        kwargs = dict(kwargs)
+        t = test.select(
+            F.col(kwargs.pop("qid_col", "qid")).alias("qid"),
+            F.col(kwargs.pop("vec_col", "vec")).alias("vec"),
+            *(F.col(c) for c in extra),
+        )
+        inner_call = getattr(self._inner, form)
+        return self._answer(lambda q: inner_call(q, k, **kwargs), t, k)
+
+
+class CosineCompressedServing(_MetricServing):
+    """Cosine serving over any serving class — the graph route of a
+    cosine :class:`VectorIndex` (``serving()``) and the directly
+    constructed compressed / self-contained classes (IvfPq, PQ, SQ,
+    Cell, RPT, PCA), which natively serve euclidean^2 only.
+
+    The normalize-at-encode reduction: build the inner handle over
+    UNIT-NORMALIZED vectors (``functions.distance.normalize`` on the
+    encode/assign relation AND — for the corpus-backed routes whose
+    exact re-rank reads raw vectors — the re-rank corpus), then
+    ``l2^2 = 2*cos_dist`` on unit vectors, so this adapter normalizes
+    queries and maps ``dist -> dist/2`` (answers byte-identical to
+    :meth:`VectorIndex.query` on the graph route). Candidate ORDER
+    under ADC / reduced-space shortlists is unchanged by the mapping
+    (monotone), so recall characteristics equal the euclidean handle's
+    on the normalized corpus. ``refresh`` normalizes a raw-row wave's
+    ``vec_col`` (pass the normalized train corpus on the corpus-backed
+    routes); ``remove`` is id-only. MIPS stays graph-route-only
+    (:class:`_MipsServing`): the norm-augmentation changes the stored
+    dimensionality, which would invalidate compressed codebooks trained
+    on raw vectors."""
+
+    _METRIC = "cosine_similarity"
+
+    def __init__(self, inner, vec_col: str = "vec"):
+        super().__init__(inner)
+        self._vec = vec_col
+
+    def _wave(self, new_rows: DataFrame) -> DataFrame:
+        from vector_index_spark.functions.distance import normalize
+
+        return new_rows.select(
+            *(
+                normalize(F.col(c)).alias(c) if c == self._vec else F.col(c)
+                for c in new_rows.columns
+            )
+        )
+
+    def _answer(self, call, t: DataFrame, k: int) -> DataFrame:
+        from vector_index_spark.functions.distance import normalize
+
+        res = call(t.withColumn("vec", normalize(F.col("vec"))))
+        return res.select(
+            "qid", "rank", "id", (F.col("dist") / 2.0).alias("dist")
+        )
+
+
+# the facade's name for the cosine adapter over the graph route
+_CosineServing = CosineCompressedServing
+
+
+class _MipsServing(_MetricServing):
+    """Inner-product serving over the graph route: the stored vectors
+    carry the norm-augmentation in their last slot (x -> [x,
+    sqrt(M^2-|x|^2)], so augmented-L2 order = descending dot product),
+    queries augment with a literal 0 inside the RESIDENT path, and
+    ip_dist recovers algebraically from the returned augmented-L2
+    distance — no join back through the stored vectors: |x_aug|^2 = M^2
+    identically, so ``dot(q, x) = (|q|^2 + M^2 - l2_aug) / 2`` and
+    ``ip_dist = 1 - dot``. ``m2`` is captured once at construction (one
+    scalar aggregate, startup-class) and rides in the manifest."""
+
+    _METRIC = "inner_product"
+
+    def __init__(self, inner, m2: float):
+        self._m2 = float(m2)
+        super().__init__(inner)
+
+    def _fields(self) -> tuple:
+        return (("metric", self._METRIC), ("mips_m2", self._m2))
+
+    @classmethod
+    def _restored(cls, inner, manifest: dict):
+        return cls(inner, float(manifest["mips_m2"]))
+
+    def _answer(self, call, t: DataFrame, k: int) -> DataFrame:
+        """Each row's ip_dist takes its OWN |q|^2. A batch that repeats
+        a qid answers each row on its own under a row key (the rows'
+        norms differ, so a min-merge on augmented-L2 is not one on
+        ip_dist) and min-merges per (qid, id) on ip_dist."""
+        if not t.select("qid").toPandas()["qid"].duplicated().any():
+            return self._ip_dist(call(self._augmented(t)), t)
+        from vector_index_spark.index.serving import _rank_topk
+
+        keyed = t.withColumn(
+            "__row", F.monotonically_increasing_id()
+        ).localCheckpoint(eager=True)
+        rows = keyed.withColumn("qid", F.col("__row")).drop("__row")
+        real = keyed.select(
+            F.col("__row").alias("qid"), F.col("qid").alias("__qid")
+        )
+        return _rank_topk(
+            self._ip_dist(call(self._augmented(rows)), rows)
+            .join(F.broadcast(real), "qid")
+            .select(F.col("__qid").alias("qid"), "id", "dist"),
+            k, True,
+        )
+
+    @staticmethod
+    def _augmented(t: DataFrame) -> DataFrame:
+        return t.withColumn("vec", F.concat(
+            F.transform("vec", lambda x: x.cast("double")),
+            F.array(F.lit(0.0)),
+        ))
+
+    def _ip_dist(self, res: DataFrame, t: DataFrame) -> DataFrame:
         # ip_dist = 1 - (|q|^2 + M^2 - l2_aug)/2, per-query |q|^2 via a
         # tiny broadcast (Q rows)
+        from vector_index_spark.functions.distance import l2_norm
+
+        qn = t.select("qid", (l2_norm(F.col("vec")) ** 2).alias("__qn2"))
         return res.join(F.broadcast(qn), "qid").select(
             "qid", "rank", "id",
             (
@@ -327,34 +301,6 @@ class _MipsServing:
                 / F.lit(2.0)
             ).alias("dist"),
         )
-
-    def _augmented(self, test: DataFrame, kwargs: dict, extra=()):
-        """(augmented query batch, (qid, |q|^2) broadcast side, and the
-        remaining kwargs for the inner call — the caller's dict is never
-        mutated, so a retry wrapper reusing one dict keeps its
-        qid_col/vec_col)."""
-        from vector_index_spark.functions.distance import l2_norm
-
-        kwargs = dict(kwargs)
-        qid_col = kwargs.pop("qid_col", "qid")
-        vec_col = kwargs.pop("vec_col", "vec")
-        t = test.select(
-            F.col(qid_col).alias("qid"),
-            F.col(vec_col).alias("vec"),
-            *(F.col(c) for c in extra),
-        )  # tiny query batch: re-deriving it for the norm side is free
-        aug = t.select(
-            "qid",
-            F.concat(
-                F.transform("vec", lambda x: x.cast("double")),
-                F.array(F.lit(0.0)),
-            ).alias("vec"),
-            *(F.col(c) for c in extra),
-        )
-        qn = t.select(
-            "qid", (l2_norm(F.col("vec")) ** 2).alias("__qn2")
-        )
-        return aug, qn, kwargs
 
 
 class VectorIndex:
@@ -883,16 +829,11 @@ class VectorIndex:
             pass
         metric = self.params.distance_type
         dim = self.params.dimension
-        if metric == "euclidean2":
-            return ServingIndex(
+        if metric != "inner_product":
+            inner = ServingIndex(
                 vectors, self.edges, dimension=dim, attr_col=attr_col
             )
-        if metric == "cosine_similarity":
-            return _CosineServing(
-                ServingIndex(
-                    vectors, self.edges, dimension=dim, attr_col=attr_col
-                )
-            )
+            return inner if metric == "euclidean2" else _CosineServing(inner)
         # inner_product (round 14, VERDICT r13 item 9): the stored
         # vectors already carry the norm augmentation (dim+1 slots,
         # |x_aug|^2 = M^2 identically), so the resident path serves
@@ -925,26 +866,20 @@ class VectorIndex:
         ``idx.serving().snapshot(path)`` (round 10): reads the manifest,
         validates format/fingerprint (see
         :meth:`~vector_index_spark.index.serving.ServingIndex.from_snapshot`),
-        and re-wraps cosine snapshots in the SAME metric adapter
-        ``serving()`` returned — a cosine snapshot restored bare would
-        serve l2sq-on-normalized distances (right ids, wrong scale)."""
-        import json as _json
-
+        and re-wraps cosine and inner-product snapshots in the SAME
+        metric adapter ``serving()`` returned — restored bare they would
+        serve l2sq-on-normalized or augmented-L2 distances (right ids,
+        wrong scale)."""
         from vector_index_spark.index.serving import (
             ServingIndex,
-            _fs_read_bytes,
+            _read_manifest_any,
         )
 
-        manifest = _json.loads(
-            _fs_read_bytes(spark, f"{path}/serving_manifest.json").decode(
-                "utf-8"
-            )
-        )
+        manifest = _read_manifest_any(spark, path) or {}
         inner = ServingIndex.from_snapshot(spark, path, validate=validate)
-        if manifest.get("metric") == "cosine_similarity":
-            return _CosineServing(inner)
-        if manifest.get("metric") == "inner_product":
-            return _MipsServing(inner, float(manifest["mips_m2"]))
+        for adapter in (_CosineServing, _MipsServing):
+            if manifest.get("metric") == adapter._METRIC:
+                return adapter._restored(inner, manifest)
         return inner
 
     def _constrained_serving(self, attrs, attr_col):

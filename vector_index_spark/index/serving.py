@@ -32,16 +32,21 @@ memory is short.
 The same resident-blob pattern serves every route: IVF cells
 (:class:`CellServingIndex`), PQ / SQ / IVF-PQ code blobs, RP-tree leaves
 and PCA blobs. One lifecycle core, :class:`_ResidentBlobIndex`, owns what
-they share — ``warm``/``unpersist``/``bytes_resident``, ``remove`` and
-the remove ledger, the strategy histogram, the segment stack, and the
-crash-safe snapshot protocol (``snapshot``, ``snapshot_incremental``,
+they share — ``warm``/``unpersist``/``bytes_resident``, ``refresh`` and
+``remove`` (one wave merge and one segment swap, :func:`_swap_segment`)
+with the remove ledger, the strategy histogram, the segment stack, and
+the crash-safe snapshot protocol (``snapshot``, ``snapshot_incremental``,
 ``from_snapshot``: versioned dirs, writer token, manifest commit, GC,
 latest-generation-wins restore, blob and corpus fingerprints). Each
-serving class keeps its own pack, refresh-encode and query kernel and
-declares the rest as data: its blob key column, the names of its
-pending-snapshot and blob-count attributes, its driver ``.npy`` arrays,
-whether it snapshots a routing table, its histogram source relation and
-whether it keeps a fingerprinted cold corpus.
+serving class keeps three hooks — its pack (the constructor: rows ->
+blobs), its refresh-encode ``_encode`` (a wave's rows -> blob keys and
+per-row matrices under the route's frozen model) and its query kernel
+``_kernel_batch`` — and declares the rest as data: its blob key column,
+the names of its pending-snapshot and blob-count attributes, its driver
+``.npy`` arrays, whether it snapshots a routing table, its histogram
+source relation and whether it keeps a fingerprinted cold corpus. The
+graph route alone re-packs whole shards on refresh (from the appended
+index relations) and shares only the segment swap.
 
 Every read is one core path too, :meth:`_ResidentBlobIndex._query`:
 ``query`` (a plain batch is one unmasked group of rows, an ``allowed=``
@@ -68,6 +73,7 @@ from __future__ import annotations
 
 import math
 import pickle
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
@@ -199,15 +205,19 @@ def _track_segment(idx, seg) -> None:
             _compact_resident(idx)
 
 
-def _compact_resident(idx) -> None:
+def _compact_resident(idx, merge=None) -> None:
     """Fold the lazy segment stack back into ONE checkpointed relation
-    (corpus-sized copy — paid at the count cap or the pinned-bytes
-    bound, the same amortization class as the snapshot fold) and free
-    every old leaf's blocks."""
-    old_leaves = list(getattr(idx, "_seg_stack", []))
-    idx.blobs = idx.blobs.repartition(idx._n_serve).localCheckpoint(
-        eager=True
-    )
+    of ``n_serve`` partitions (corpus-sized copy — paid at the count cap
+    or the pinned-bytes bound, the same amortization class as the
+    snapshot fold; ``merge``, a ``mapInPandas`` body, also merges each
+    partition's blobs) and free the old relation's and every old
+    leaf's blocks."""
+    old, old_leaves = idx.blobs, list(getattr(idx, "_seg_stack", []))
+    plan = old.repartition(idx._n_serve)
+    if merge is not None:
+        plan = plan.mapInPandas(merge, idx._SCHEMA)
+    idx.blobs = plan.localCheckpoint(eager=True)
+    old.unpersist()
     for leaf in old_leaves:
         leaf.unpersist()
     idx._seg_stack = []
@@ -231,6 +241,31 @@ def _adopt_base_leaf(idx) -> None:
         idx._sever()
         idx._seg_stack = [idx.blobs]
         idx._seg_bytes = [_leaf_blob_bytes(idx.blobs)]
+
+
+def _swap_segment(idx, plan: DataFrame, keys) -> None:
+    """The one segment swap under every refresh and remove: checkpoint
+    ONLY the new blobs of ``keys`` (an eager localCheckpoint — severs
+    lineage into the wave's or the index's source files, see
+    :meth:`_ResidentBlobIndex._sever`), stack them lazily over the
+    prior immutable leaves in place of the replaced keys' rows (a flat
+    route's fresh part replaces none), so the per-wave copy tracks the
+    wave, not the corpus; the stack compacts
+    at its count or pinned-bytes bound (:func:`_track_segment`). Then
+    recount, keep the severed flag, drop the cached near-duplicate
+    probe, and queue ``keys`` for the incremental snapshot."""
+    seg = plan.coalesce(
+        max(1, min(idx._n_serve, len(keys)))
+    ).localCheckpoint(eager=True)
+    _adopt_base_leaf(idx)
+    idx.blobs = idx.blobs.filter(
+        ~F.col(idx._KEY).isin(keys)
+    ).unionByName(seg)
+    _track_segment(idx, seg)
+    setattr(idx, idx._COUNT, idx.blobs.count())
+    idx._blobs_severed = True
+    idx._dup_multiplicity = None  # contents changed; re-probe lazily
+    setattr(idx, idx._PENDING, getattr(idx, idx._PENDING, set()) | set(keys))
 
 
 def _fs_write_bytes(spark, path: str, data: bytes) -> None:
@@ -983,11 +1018,20 @@ class _ResidentBlobIndex:
       ``"masked_scan"``); ``_REPORTS_NPROBE``: ``query`` also records
       its effective probe count in ``last_eff_nprobe`` (graph route).
 
-    Every read is core too: ``query`` (plain and ``allowed=``),
-    ``query_by_window`` and ``query_by_attribute`` run one path,
-    :meth:`_query`, and each class supplies one kernel hook,
-    ``_kernel_batch`` — its resident pass over the blobs for a batch's
-    groups of rows (``allow=None``: unmasked).
+    Every read and write is core too: ``query`` (plain and
+    ``allowed=``), ``query_by_window`` and ``query_by_attribute`` run one
+    path, :meth:`_query`, and ``refresh`` one wave merge; besides its
+    pack (the constructor) each class supplies two hooks —
+    ``_kernel_batch``, its resident pass over the blobs for a batch's
+    groups of rows (``allow=None``: unmasked), and ``_encode(X) ->
+    (keys or None, mats)``, the wave's blob keys (``None``: a flat
+    route, the wave lands as one fresh part) and per-row payload
+    matrices under the route's frozen model. The graph route overrides
+    ``refresh`` with its shard re-pack.
+
+    ``_metric_fields``: ``(manifest key, value)`` pairs a metric adapter
+    (``api.py``) sets on the handle it wraps, written in the same
+    manifest commit as the rest of the snapshot.
     """
 
     _PENDING: str
@@ -1003,6 +1047,7 @@ class _ResidentBlobIndex:
     _MANIFEST_SCALARS: tuple = ()
     _FILTER_BRANCH = "prefilter"
     _REPORTS_NPROBE = False
+    _metric_fields: tuple = ()
     # query vector dimension, where the class knows it (the graph route
     # from its constructor, the others from their driver arrays): set ->
     # ragged or wrong-dimension query rows fail fast
@@ -1123,6 +1168,26 @@ class _ResidentBlobIndex:
             )
         return _resident_remove(self, ids)
 
+    def refresh(self, new_rows: DataFrame, train: "DataFrame | None" = None):
+        """Incremental ingest of one wave: ``new_rows`` carries (id,
+        vec) plus the handle's attribute columns on the self-contained
+        routes; cold-corpus routes (PQ, SQ, IVF-PQ) take ``train``, the
+        post-append cold corpus (re-rank tail and attribute source; the
+        wave's ids must already be in it), and the others refuse it.
+        New ids must be NEW (id-primary-key). The wave is collected
+        under the wave cap (:func:`_collect_wave`), encoded by the
+        route's ``_encode`` hook with its FROZEN model and merged into
+        only the affected blobs (:func:`_keyed_refresh`); the touched
+        keys queue for :meth:`snapshot_incremental`."""
+        self._check_train(train, "refresh")
+        if self._COLD_CORPUS:
+            self._train = train
+        got = _collect_wave(self, new_rows)
+        if got is not None:
+            ids, X, attrs = got
+            _keyed_refresh(self, ids, *self._encode(X), attrs)
+        return self
+
     def reroute_dense_to(self, handle):
         """Attach a graph-route :class:`ServingIndex` (same corpus; same
         attr packing when ``query_by_*`` is used) as the dense-corpus
@@ -1172,7 +1237,25 @@ class _ResidentBlobIndex:
         )
 
     def _manifest_scalars(self) -> dict:
-        return {key: getattr(self, attr) for key, attr in self._scalar_fields()}
+        return {
+            **{key: getattr(self, attr) for key, attr in self._scalar_fields()},
+            **dict(self._metric_fields),
+        }
+
+    @classmethod
+    def _check_train(cls, train, call: str) -> None:
+        """``train`` is required on the cold-corpus routes and refused
+        on the others — the one rule of ``refresh`` and
+        ``from_snapshot``."""
+        if (train is not None) != cls._COLD_CORPUS:
+            raise TypeError(
+                f"{cls.__name__}.{call} "
+                + (
+                    "needs the cold corpus relation (train)"
+                    if cls._COLD_CORPUS
+                    else "takes no train: the blobs are self-contained"
+                )
+            )
 
     def snapshot(
         self, path: str, stream_batch_id: "int | None" = None,
@@ -1391,15 +1474,7 @@ class _ResidentBlobIndex:
         truncated blob relation or a drifted corpus. The restored handle
         carries the snapshot's lineage, so :meth:`refresh` and
         :meth:`snapshot_incremental` continue the chain."""
-        if (train is not None) != cls._COLD_CORPUS:
-            raise TypeError(
-                f"{cls.__name__}.from_snapshot "
-                + (
-                    "needs the cold corpus relation (train)"
-                    if cls._COLD_CORPUS
-                    else "takes no train: the snapshot is self-contained"
-                )
-            )
+        cls._check_train(train, "from_snapshot")
         manifest = _read_manifest(spark, path, cls.__name__)
         idx = cls.__new__(cls)
         idx._spark = spark
@@ -1836,23 +1911,7 @@ class ServingIndex(_ResidentBlobIndex):
         packed = cg.applyInPandas(_pack_shard, BLOB_SCHEMA)
         # kept for the touches-only-affected-shards plan assertion in tests
         self._last_refresh_packed = packed
-        # segmented checkpoint (round 14): materialize ONLY the
-        # re-packed shards' blobs (eager localCheckpoint — severs
-        # lineage into the just-overwritten index files, see warm());
-        # every unaffected blob carries over as a lazy filter of the
-        # prior immutable leaves, so per-wave copy cost tracks the
-        # appended shards' bytes, not the corpus. The stack compacts
-        # every MAX_RESIDENT_SEGMENTS waves (_track_segment).
-        seg = packed.coalesce(
-            max(1, min(self._n_serve, len(shards)))
-        ).localCheckpoint(eager=True)
-        _adopt_base_leaf(self)
-        self.blobs = self.blobs.filter(
-            ~F.col("shard").isin(shards)
-        ).unionByName(seg)
-        _track_segment(self, seg)
-        # the re-packed shards queue for snapshot_incremental
-        _after_resident_change(self, shards)
+        _swap_segment(self, packed, shards)
         # routing table: carry over unaffected shards, recompute affected
         if self._centroids is None and self._cents_kv is not None:
             old_kv = self._cents_kv
@@ -2206,33 +2265,25 @@ class CellServingIndex(_ResidentBlobIndex):
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         self._assigned = assigned if self._attr_cols is not None else None
-        # the centroid table is tiny (one row per cell) — checkpoint now
+        # the centroid table is tiny (one row per cell) — checkpoint now,
+        # with its driver copy for routing and refresh
         self._cents_kv = centroids.select(
             F.col("centroid_id").alias("id"), "vec"
         ).localCheckpoint(eager=True)
+        self._routing_matrix()
 
-    def refresh(self, new_rows: DataFrame) -> "CellServingIndex":
-        """Incremental ingest on the resident IVF route (round 13,
-        VERDICT r12 item 5): the wave routes to its nearest EXISTING
+    def _encode(self, X):
+        """Refresh hook: each wave row routes to its nearest EXISTING
         cell (cells never refit on append — builder.append_to_index's
-        ivf_cell rule) and merges into only the affected cells'
-        resident blobs; every other cell's blob carries over without
-        recomputation. ``new_rows`` carries (id, vec) plus the
-        attribute columns when the handle was built with ``attr_col``.
-        New ids must be NEW (id-primary-key). With a replicated layout
-        (``replicas > 1``) appended rows land in their primary cell
-        only — boundary replication is a build-time recall device, so
-        per-cell parity with a cold pack holds at replicas=1 (tested).
-
-        Parity: per-cell payloads are id-sorted arrays, so a merged
-        blob byte-equals a cold pack over the union relation. Cost
-        tracks the wave's affected cells; the touched cells queue for
-        :meth:`snapshot_incremental`."""
-        _keyed_refresh(
-            self, new_rows,
-            lambda X: (_nearest_cell(self._cents_kv, X)[0], X),
-        )
-        return self
+        ivf_cell rule) and its blob rows carry the raw vectors. With a
+        replicated layout (``replicas > 1``) appended rows land in
+        their primary cell only — boundary replication is a build-time
+        recall device, so per-cell parity with a cold pack holds at
+        replicas=1 (tested). The centroids come from the driver copy
+        of the routing table (:meth:`_routing_matrix`), id-sorted."""
+        keys, C = self._routing_matrix()
+        order = np.argsort(keys, kind="stable")
+        return keys[order][_nearest_cell(X, C[order])], (X,)
 
     def query(
         self,
@@ -2498,70 +2549,18 @@ def _bump_hist_with_wave(idx, attrs) -> None:
     idx._attr_hist = hist
 
 
-def _id_sorted_payload(ids, mats, attrs) -> tuple:
-    """One blob payload: ``(ids, *mats[, attrs])``, every per-row field
-    in id order — a merged blob then byte-equals a cold pack over the
-    union relation."""
-    order = np.argsort(ids, kind="stable")
-    payload = (ids[order], *(m[order] for m in mats))
-    return payload if attrs is None else (*payload, attrs[order])
-
-
-def _flat_refresh(idx, new_rows: DataFrame, mats_of) -> None:
-    """Incremental ingest body for the FLAT scan routes (PQ / SQ / PCA):
-    the wave encodes with the handle's FROZEN model (``mats_of(X)`` — a
-    tuple of per-row matrices: PQ/SQ codes, PCA (projection, raw);
-    codebooks / bounds / basis never refit on append, the snapshot
-    contract) and lands as ONE NEW resident blob row. These routes scan
-    every blob with per-blob shortlists, so appending a blob is the
-    wave-cost-proportional refresh — there is no keyed re-pack on an
-    unpartitioned scan route, and recall is monotone in blob count.
-    Blob-count growth is bounded by the snapshot fold, which compacts
-    the resident relation back to ``n_serve`` blobs
-    (:func:`_flat_compact_blobs`). The new blob's ``part`` key is
-    ``max(existing)+1`` — unique, so the generation-claim resolve
-    (:func:`_resolve_generations` on ``part``) stays sound."""
-    got = _collect_wave(idx, new_rows)
-    if got is None:
-        return
-    ids, X, attrs = got
-    payload = _id_sorted_payload(ids, mats_of(X), attrs)
-    next_part = int(
-        idx.blobs.agg(F.coalesce(F.max("part"), F.lit(-1))).collect()[0][0]
-    ) + 1
-    new_blob = idx._spark.createDataFrame(
-        [(next_part, int(len(ids)),
-          bytearray(pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)))],
-        CODE_BLOB_SCHEMA,
-    )
-    # segmented checkpoint: checkpoint ONLY the wave's blob (severs
-    # lineage into the wave's source files — see _ResidentBlobIndex.
-    # _sever) and stack it lazily over the prior immutable leaves, so
-    # the per-wave copy is wave-sized, not corpus-sized; the stack
-    # compacts every MAX_RESIDENT_SEGMENTS waves (_track_segment) and
-    # at the snapshot fold
-    _adopt_base_leaf(idx)
-    seg = new_blob.coalesce(1).localCheckpoint(eager=True)
-    idx.blobs = idx.blobs.unionByName(seg)
-    _track_segment(idx, seg)
-    _after_resident_change(idx, {next_part})
-    _bump_hist_with_wave(idx, attrs)
-
-
-def _after_resident_change(idx, keys) -> None:
-    """Bookkeeping after a refresh or remove replaced resident blobs:
-    recount, keep the severed flag, drop the cached near-duplicate
-    probe, and queue the touched keys for the incremental snapshot."""
-    setattr(idx, idx._COUNT, idx.blobs.count())
-    idx._blobs_severed = True
-    idx._dup_multiplicity = None  # contents changed; re-probe lazily
-    setattr(idx, idx._PENDING, getattr(idx, idx._PENDING, set()) | set(keys))
+def _id_sorted(fields) -> tuple:
+    """One blob payload ``(ids, *mats[, attrs])`` with every per-row
+    field in id order — a merged blob then byte-equals a cold pack over
+    the union relation."""
+    order = np.argsort(fields[0], kind="stable")
+    return tuple(f[order] for f in fields)
 
 
 def _flat_compact_blobs(idx) -> None:
     """Merge the resident flat-route blob relation back to ``n_serve``
     blobs (round 13): repeated waves each append a small blob
-    (:func:`_flat_refresh`); every per-batch scan then pays one
+    (:func:`_keyed_refresh`); every per-batch scan then pays one
     unpickle + small kernel per blob row. Run at the snapshot FOLD
     (every ``max_generations`` waves — amortized corpus-sized, exactly
     like the fold's full base write): payloads concatenate id-sorted
@@ -2598,138 +2597,105 @@ def _flat_compact_blobs(idx) -> None:
             }
         )
 
-    old_blobs = idx.blobs
-    old_leaves = list(getattr(idx, "_seg_stack", []))
-    idx.blobs = (
-        old_blobs.repartition(idx._n_serve)
-        .mapInPandas(merge, CODE_BLOB_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
+    _compact_resident(idx, merge)
     setattr(idx, idx._COUNT, idx.blobs.count())
     idx._blobs_severed = True
-    old_blobs.unpersist()
-    for leaf in old_leaves:  # free the lazy union's segment leaves too
-        leaf.unpersist()
-    idx._seg_stack = []
-    idx._seg_bytes = []
 
 
-def _keyed_refresh(idx, new_rows: DataFrame, encode) -> None:
-    """Incremental ingest body for the KEYED routes (Cell / RPT /
-    IVF-PQ): ``encode(X)`` routes the wave through the handle's FROZEN
-    model and returns ``(keys, mat)`` — one nearest cell / tree leaf per
-    row (never refit on append) and the per-row payload matrix (raw X
-    on Cell/RPT, residual int32 codes on IVF-PQ). The rows merge into
-    only the affected keys' resident blobs; every other blob carries
-    over. Per-blob payloads are id-sorted (ids, mat[, attrs]) arrays,
-    so a merged blob byte-equals a cold pack over the union relation.
-    Cost tracks the wave's affected keys; they queue for the
-    incremental snapshot."""
-    got = _collect_wave(idx, new_rows)
-    if got is None:
-        return
-    ids, X, attrs = got
-    keys, mat = encode(X)
+def _keyed_refresh(idx, ids, keys, mats, attrs) -> None:
+    """The one wave merge of :meth:`_ResidentBlobIndex.refresh`:
+    ``keys`` is each wave row's blob key from the route's ``_encode``
+    (``None`` on a flat route: the wave becomes ONE fresh ``part``,
+    ``max + 1`` — unique, so the generation-claim resolve on ``part``
+    stays sound) and ``mats`` its tuple of per-row payload matrices
+    (raw X on Cell/RPT, residual codes on IVF-PQ, PQ/SQ codes, PCA
+    (projection, raw)). The rows merge into only the affected keys'
+    resident blobs (a key with no blob row yet, every fresh part among
+    them, is created from the wave alone); every other blob carries
+    over. Per-blob payloads are id-sorted ``(ids, *mats[, attrs])``
+    arrays, so a merged blob byte-equals a cold pack over the union
+    relation. Flat routes scan every blob with per-blob shortlists, so
+    appending a blob is their wave-sized refresh (recall is monotone in
+    blob count); the snapshot fold compacts the blob count back
+    (:func:`_flat_compact_blobs`)."""
     spark = idx._spark
     key_col = idx._KEY
-    per_key: dict = {}
-    for i, c in enumerate(keys):
-        per_key.setdefault(int(c), []).append(i)
-    affected = sorted(per_key)
+    flat = keys is None
+    if flat:
+        keys = np.full(len(ids), int(
+            idx.blobs.agg(F.coalesce(F.max(key_col), F.lit(-1)))
+            .collect()[0][0]
+        ) + 1)
+    fields = (ids, *mats) + (() if attrs is None else (attrs,))
+    order = np.argsort(keys, kind="stable")
+    affected, starts = np.unique(keys[order], return_index=True)
+    affected = [int(c) for c in affected]
     add = {
-        c: (
-            ids[np.asarray(ix, dtype=np.int64)],
-            mat[np.asarray(ix, dtype=np.int64)],
-            attrs[np.asarray(ix, dtype=np.int64)]
-            if attrs is not None else None,
-        )
-        for c, ix in per_key.items()
+        c: tuple(f[ix] for f in fields)
+        for c, ix in zip(affected, np.split(order, starts[1:]))
     }
-    # recycle the previous call's broadcasts first (the same posture
-    # as the query paths): the prior wave's merge was materialized by
-    # its eager localCheckpoint, so its broadcast is consumed — a
-    # long pure-maintain stream must not accumulate one per wave
-    idx._release_broadcasts()
-    bc = spark.sparkContext.broadcast(add)
-    idx._live_bcs.append(bc)
-
-    def merge(batches):
-        for pdf_b in batches:
-            keys_o, nvec_o, blob_o = [], [], []
-            for key, blob in zip(pdf_b[key_col], pdf_b["blob"]):
-                payload = pickle.loads(blob)
-                a_ids, a_mat, a_attrs = bc.value[int(key)]
-                new_payload = _id_sorted_payload(
-                    np.concatenate([payload[0], a_ids]),
-                    (np.concatenate([payload[1], a_mat], axis=0),),
-                    np.concatenate([payload[2], a_attrs], axis=0)
-                    if len(payload) > 2 else None,
-                )
-                keys_o.append(int(key))
-                nvec_o.append(len(new_payload[0]))
-                blob_o.append(
-                    pickle.dumps(
-                        new_payload, protocol=pickle.HIGHEST_PROTOCOL
-                    )
-                )
-            yield pd.DataFrame(
-                {key_col: keys_o, "n_vectors": nvec_o, "blob": blob_o}
-            )
-
-    present = {
+    # a fresh flat part is known to be missing: no lookup job
+    present = set() if flat else {
         int(r[key_col])
         for r in idx.blobs.filter(F.col(key_col).isin(affected))
         .select(key_col).collect()
     }
-    seg_plan = (
-        idx.blobs.filter(F.col(key_col).isin(sorted(present)))
-        .mapInPandas(merge, idx._SCHEMA)
-    )
+    plans = []
+    if present:
+        # recycle the previous call's broadcasts first (the same
+        # posture as the query paths): the prior wave's merge was
+        # materialized by its eager localCheckpoint, so its broadcast is
+        # consumed — a long pure-maintain stream must not accumulate one
+        # per wave
+        idx._release_broadcasts()
+        bc = spark.sparkContext.broadcast(add)
+        idx._live_bcs.append(bc)
+
+        def merge(batches):
+            for pdf_b in batches:
+                keys_o, nvec_o, blob_o = [], [], []
+                for key, blob in zip(pdf_b[key_col], pdf_b["blob"]):
+                    payload = _id_sorted([
+                        np.concatenate([old, new], axis=0)
+                        for old, new in zip(
+                            pickle.loads(blob), bc.value[int(key)],
+                            strict=True,
+                        )
+                    ])
+                    keys_o.append(int(key))
+                    nvec_o.append(len(payload[0]))
+                    blob_o.append(
+                        pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)
+                    )
+                yield pd.DataFrame(
+                    {key_col: keys_o, "n_vectors": nvec_o, "blob": blob_o}
+                )
+
+        plans.append(
+            idx.blobs.filter(F.col(key_col).isin(sorted(present)))
+            .mapInPandas(merge, idx._SCHEMA)
+        )
     missing = [c for c in affected if c not in present]
     if missing:
-        # a key whose blob row didn't exist (it had zero rows): the
-        # wave creates it from scratch
-        rows_new = []
-        for c in missing:
-            a_ids, a_mat, a_attrs = add[c]
-            payload = _id_sorted_payload(a_ids, (a_mat,), a_attrs)
-            rows_new.append(
-                (int(c), int(len(a_ids)),
-                 bytearray(pickle.dumps(
-                     payload, protocol=pickle.HIGHEST_PROTOCOL
-                 )))
-            )
-        seg_plan = seg_plan.unionByName(
-            spark.createDataFrame(rows_new, idx._SCHEMA)
-        )
-    # segmented checkpoint: materialize ONLY the wave-affected keys'
-    # merged/new blobs (an eager localCheckpoint — severs lineage into
-    # the wave's source files); every unaffected blob carries over as a
-    # lazy filter of the prior immutable leaves, so the per-wave copy is
-    # affected-key-sized, not corpus-sized. The stack compacts every
-    # MAX_RESIDENT_SEGMENTS waves (_track_segment).
-    seg = seg_plan.coalesce(
-        max(1, min(idx._n_serve, len(affected)))
-    ).localCheckpoint(eager=True)
-    _adopt_base_leaf(idx)
-    idx.blobs = idx.blobs.filter(
-        ~F.col(key_col).isin(affected)
-    ).unionByName(seg)
-    _track_segment(idx, seg)
-    _after_resident_change(idx, affected)
+        plans.append(spark.createDataFrame(
+            [
+                (c, int(len(add[c][0])), bytearray(pickle.dumps(
+                    _id_sorted(add[c]), protocol=pickle.HIGHEST_PROTOCOL,
+                )))
+                for c in missing
+            ],
+            idx._SCHEMA,
+        ))
+    _swap_segment(idx, reduce(DataFrame.unionByName, plans), affected)
     _bump_hist_with_wave(idx, attrs)
 
 
-def _nearest_cell(cents_kv: DataFrame, X):
-    """Nearest existing cell per row of ``X`` against the (id, vec)
-    routing table — identical math to the build-side assignment.
-    Returns (cell ids, centroid matrix, row -> centroid position)."""
-    cent = cents_kv.orderBy("id").collect()
-    cids = np.array([r["id"] for r in cent], dtype=np.int64)
-    C = np.stack([np.asarray(r["vec"], dtype=np.float64) for r in cent])
+def _nearest_cell(X, C) -> np.ndarray:
+    """Row position in the id-sorted centroid matrix ``C`` of each row
+    of ``X``'s nearest centroid — identical math to the build-side
+    assignment (the GEMM form)."""
     d = (X * X).sum(1)[:, None] - 2.0 * X @ C.T + (C * C).sum(1)[None, :]
-    nearest = d.argmin(axis=1)
-    return cids[nearest], C, nearest
+    return d.argmin(axis=1)
 
 
 def _collect_remove_ids(idx, ids) -> "np.ndarray | None":
@@ -2765,10 +2731,14 @@ def _subtract_removed_ledger(idx, hist: dict) -> dict:
     from the manifest (already decremented, sources None), so the
     ledger only matters on live handles."""
     ledger = getattr(idx, "_removed_tuple_ledger", None)
-    if not ledger:
-        return hist
+    return _subtract_tuples(hist, ledger.values()) if ledger else hist
+
+
+def _subtract_tuples(hist: dict, tuples) -> dict:
+    """A copy of ``hist`` with one id less per attribute tuple in
+    ``tuples`` (ids are unique, so distinct-id counts subtract)."""
     hist = dict(hist)
-    for t in ledger.values():
+    for t in tuples:
         left = hist.get(t, 0) - 1
         if left > 0:
             hist[t] = left
@@ -2895,31 +2865,19 @@ def _resident_remove(idx, ids) -> int:
             # never-computed histogram recomputes lazily through
             # _subtract_removed_ledger, and recording this remove's ids
             # first would subtract them twice
-            hist = dict(idx._attribute_histogram())
+            hist = idx._attribute_histogram()
             ledger = dict(getattr(idx, "_removed_tuple_ledger", {}) or {})
             ledger.update(seen_tuples)
             idx._removed_tuple_ledger = ledger
-            for t in seen_tuples.values():
-                left = hist.get(t, 0) - 1
-                if left > 0:
-                    hist[t] = left
-                else:
-                    hist.pop(t, None)
-            idx._attr_hist = hist
-        seg = (
+            idx._attr_hist = _subtract_tuples(hist, seen_tuples.values())
+        _swap_segment(
+            idx,
             out.filter(F.col("n_vectors") > 0)
-            .select(key_col, "n_vectors", "blob")
-            .coalesce(max(1, min(idx._n_serve, len(affected))))
-            .localCheckpoint(eager=True)
+            .select(key_col, "n_vectors", "blob"),
+            affected,
         )
     finally:
         out.unpersist()
-    _adopt_base_leaf(idx)
-    idx.blobs = idx.blobs.filter(
-        ~F.col(key_col).isin(affected)
-    ).unionByName(seg)
-    _track_segment(idx, seg)
-    _after_resident_change(idx, affected)
     return n_removed
 
 
@@ -3137,22 +3095,11 @@ class PqServingIndex(_ResidentBlobIndex):
         m, _, sub = self._books.shape
         return int(m * sub)
 
-    def refresh(self, new_rows: DataFrame,
-                train: DataFrame) -> "PqServingIndex":
-        """Incremental ingest on the flat PQ route (round 13, VERDICT
-        r12 item 5): the wave encodes with the FROZEN codebooks (never
-        refit on append — the snapshot contract) and lands as one NEW
-        resident blob; every other blob carries over untouched. The
-        route scans every blob with per-blob shortlists, so per-wave
-        cost tracks the wave and recall is monotone in blob count —
-        blob-count growth is compacted at the snapshot fold. ``train``
-        is the post-append cold corpus (re-rank tail + attribute
-        source); new ids must be NEW (id-primary-key)."""
-        self._train = train
-        _flat_refresh(
-            self, new_rows, lambda X: (_pq_codes(X, self._books),)
-        )
-        return self
+    def _encode(self, X):
+        """Refresh hook (flat route): the wave encodes with the FROZEN
+        codebooks (never refit on append — the snapshot contract) and
+        lands as one new blob."""
+        return None, (_pq_codes(X, self._books),)
 
     def query_by_window(
         self,
@@ -3345,25 +3292,15 @@ class SqServingIndex(_ResidentBlobIndex):
     def _dimension(self) -> int:
         return len(self._mins)
 
-    def refresh(self, new_rows: DataFrame,
-                train: DataFrame) -> "SqServingIndex":
-        """Incremental ingest on the flat SQ8 route (round 13, VERDICT
-        r12 item 5): the wave encodes with the FROZEN min/span bounds
-        (never refit on append — a refit would silently re-scale every
-        existing code) and lands as one NEW resident blob — see
-        :meth:`PqServingIndex.refresh` for the flat-route contract."""
-
-        def mats_of(X):
-            # identical math to sq.encode_sq over the frozen bounds
-            return (np.clip(
-                np.rint(
-                    (X - self._mins[None, :]) / self._span[None, :] * 255.0
-                ), 0, 255,
-            ).astype(np.uint8),)
-
-        self._train = train
-        _flat_refresh(self, new_rows, mats_of)
-        return self
+    def _encode(self, X):
+        """Refresh hook (flat route): the wave encodes with the FROZEN
+        min/span bounds (never refit on append — a refit would silently
+        re-scale every existing code; identical math to sq.encode_sq)
+        and lands as one new blob."""
+        return None, (np.clip(
+            np.rint((X - self._mins[None, :]) / self._span[None, :] * 255.0),
+            0, 255,
+        ).astype(np.uint8),)
 
     def query_by_window(
         self,
@@ -3554,37 +3491,16 @@ class IvfPqServingIndex(_ResidentBlobIndex):
     def _dimension(self) -> int:
         return int(self._C.shape[1])
 
-    def refresh(
-        self, new_rows: DataFrame, train: DataFrame,
-    ) -> "IvfPqServingIndex":
-        """Incremental ingest on the compressed serving route (round
-        11): the wave encodes with the EXISTING centroids and codebooks
-        (neither refits on append — the cell layout's never-refit
-        contract, builder.append_to_index's ivf_cell rule, and PQ's
-        frozen-codebook snapshot contract), routes each row to its
-        nearest cell, and re-packs ONLY the affected cells' resident
-        blobs by merging the wave's code rows into the cached payloads —
-        every other cell's blob row carries over without recomputation.
-        ``train`` is the post-append cold corpus (the exact re-rank
-        tail; also the attribute source when ``attr_col`` was given —
-        the wave's ids must already be in it). New ids must be NEW
-        (id-primary-key, same contract as append_to_index).
-
-        Parity: per-cell payloads are id-sorted arrays, so the merged
-        blob byte-equals a cold pack over the union encode relation
-        (tested). Cost tracks the wave's affected cells, never corpus
-        size; the touched cells queue for :meth:`snapshot_incremental`.
-        """
-        self._train = train
-
-        def encode(X):
-            # residuals against the nearest existing cell, encoded with
-            # the existing books
-            cells, C, nearest = _nearest_cell(self._cents_kv, X)
-            return cells, _pq_codes(X - C[nearest], self._books)
-
-        _keyed_refresh(self, new_rows, encode)
-        return self
+    def _encode(self, X):
+        """Refresh hook: the wave encodes with the EXISTING centroids
+        and codebooks (neither refits on append — the cell layout's
+        never-refit contract, builder.append_to_index's ivf_cell rule,
+        and PQ's frozen-codebook snapshot contract): each row routes to
+        its nearest cell and its residual against that centroid encodes
+        with the existing books. Cell ids are the rows of the driver
+        centroid matrix ``_C`` (the scan indexes it the same way)."""
+        cells = _nearest_cell(X, self._C)
+        return cells, (_pq_codes(X - self._C[cells], self._books),)
 
     def query(
         self,
@@ -3821,24 +3737,16 @@ class RptServingIndex(_ResidentBlobIndex):
     def _depth(self) -> int:
         return int(np.log2(len(self._W) + 1))
 
-    def refresh(self, new_rows: DataFrame) -> "RptServingIndex":
-        """Incremental ingest on the RP-tree route (round 13, VERDICT
-        r12 item 5): the wave walks the FROZEN tree (normals/thresholds
-        never refit on append — a refit would re-leaf every existing
-        row) to its leaves with the exact :func:`~vector_index_spark.
-        index.rpt._leaves` math, then merges into only the affected
-        leaves' resident blobs — the CellServingIndex shape keyed by
-        leaf. ``new_rows`` carries (id, vec) plus the handle's
-        attribute columns when built with ``attr_col``; new ids must be
-        NEW. Merged blobs byte-equal a cold pack over the union
-        assignment (leaves partition the corpus, no replicas)."""
+    def _encode(self, X):
+        """Refresh hook: the wave walks the FROZEN tree
+        (normals/thresholds never refit on append — a refit would
+        re-leaf every existing row) to its leaves with the exact
+        :func:`~vector_index_spark.index.rpt._leaves` math; blob rows
+        carry the raw vectors (leaves partition the corpus, no
+        replicas)."""
         from vector_index_spark.index.rpt import _leaves
 
-        _keyed_refresh(
-            self, new_rows,
-            lambda X: (_leaves(X, self._W, self._T, self._depth), X),
-        )
-        return self
+        return _leaves(X, self._W, self._T, self._depth), (X,)
 
     def query_by_window(
         self,
@@ -4042,21 +3950,13 @@ class PcaServingIndex(_ResidentBlobIndex):
     def _dimension(self) -> int:
         return len(self._mean)
 
-    def refresh(self, new_rows: DataFrame) -> "PcaServingIndex":
-        """Incremental ingest on the PCA filter-and-refine route (round
-        13, VERDICT r12 item 5): the wave projects with the FROZEN basis
-        (mean/components never refit on append — a refit would silently
-        re-project every existing row) and lands as one NEW resident
-        (ids, reduced, raw) blob — the flat-route contract
-        (:meth:`PqServingIndex.refresh`). Self-contained: ``new_rows``
-        carries (id, vec) plus the handle's attribute columns when it
-        was built with ``attr_col``; new ids must be NEW."""
-        _flat_refresh(
-            self, new_rows,
-            # identical math to pca.project_pca over the frozen basis
-            lambda X: ((X - self._mean[None, :]) @ self._comp.T, X),
-        )
-        return self
+    def _encode(self, X):
+        """Refresh hook (flat route): the wave projects with the FROZEN
+        basis (mean/components never refit on append — a refit would
+        silently re-project every existing row; identical math to
+        pca.project_pca) and lands as one new (ids, reduced, raw)
+        blob."""
+        return None, ((X - self._mean[None, :]) @ self._comp.T, X)
 
     def query_by_window(
         self,

@@ -415,7 +415,13 @@ def stream_index_maintain(
     re-packing, and per-wave maintenance cost (append + refresh +
     snapshot) all tracks the wave's affected shards, never index size.
 
-    Returns ``(query, serving_handle)``; the handle answers queries
+    Returns ``(query, serving_handle)``; the handle is the one
+    :meth:`~vector_index_spark.api.VectorIndex.serving` builds (the
+    index's metric adapter over a
+    :class:`~vector_index_spark.index.serving.ServingIndex`, so cosine
+    and inner-product indexes answer on their own distance scale and
+    their snapshots restore through ``VectorIndex.serving_from_snapshot``
+    to the same adapter). It answers queries
     between and during waves (refresh persists the new blob relation
     before unpersisting the old). The base snapshot is written on start
     (startup-class, once). ``max_generations`` bounds the incremental
@@ -434,12 +440,11 @@ def stream_index_maintain(
     the wave's shards from the post-append index, so the resident blobs
     and the snapshot converge to the exactly-once state instead of
     tripping append_to_index's id-clash check."""
+    from vector_index_spark.api import VectorIndex
     from vector_index_spark.index.persistence import load_index
-    from vector_index_spark.index.serving import ServingIndex
 
     spark0 = vectors.sparkSession
-    v0, e0, _params = load_index(spark0, index_path)
-    sidx = ServingIndex(v0, e0).warm()
+    sidx = VectorIndex(*load_index(spark0, index_path)).serving().warm()
     # carry the committed batch counter across restarts of the SAME
     # stream (round 13, ADVICE: same checkpoint lineage — the epoch):
     # the persisted index at index_path is the source of truth and
