@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from vector_index_spark.operators.components import (
+    _is_star_forest,
     connected_components,
     near_dup_clusters,
     semantic_dedup,
@@ -41,7 +42,8 @@ def _labels(spark, edges, **kw):
 
 
 def _expected(edges):
-    uf = _union_find(edges)
+    # a self-loop alone is not a pair: its vertex gets no label
+    uf = _union_find([(u, v) for u, v in edges if u != v])
     # union-find roots are already the min id (we always parent toward min)
     return uf
 
@@ -79,6 +81,72 @@ def test_duplicate_and_self_edges_ignored(spark):
     edges = [(5, 5), (1, 2), (2, 1), (1, 2), (8, 8)]
     labels = _labels(spark, edges)
     assert labels == {1: 1, 2: 1}
+
+
+def test_star_forest_stop_rule(spark):
+    def star(edges):
+        return _is_star_forest(spark.createDataFrame(edges, "u long, v long"))
+
+    assert not star([(1, 3), (2, 3)])  # child 3 has two parents
+    assert not star([(1, 2), (2, 3)])  # vertex 2 is parent and child
+    assert star([(1, 2), (1, 3), (4, 5)])
+
+
+def _permuted_path(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+def _hub_joined_to_path():
+    # one 2,000-leaf hub: a single large window partition per star step
+    path, hub = _permuted_path(40, 9), 50_000
+    return path + [(hub, path[-1][1])] + [(hub, 10_000 + i) for i in range(2000)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(i, (i + 1) % 12) for i in range(12)],  # cycle
+        _permuted_path(80, 5),
+        [(4, 4), (9, 9)],  # self-loops only
+        [],
+        _hub_joined_to_path(),
+    ],
+    ids=["cycle", "permuted-path-80", "self-loops-only", "empty", "hub-2000-path"],
+)
+def test_shapes_match_union_find(spark, edges):
+    assert _labels(spark, edges) == _expected(edges)
+
+
+def test_star_families_finish_in_one_round(spark, monkeypatch):
+    # the perfbench document shape: copies are made of earlier originals
+    # only, so every family is a star around its (smallest) original,
+    # plus edges between copies of one original. Each star round ends in
+    # one localCheckpoint, so a confirming second round fails this test.
+    rng = random.Random(3)
+    originals, family, edges = [], {}, []
+    for i in range(300):
+        if originals and rng.random() < 0.3:
+            o = rng.choice(originals)
+            edges.append((o, i))
+            edges += [(c, i) for c in family[o] if rng.random() < 0.5]
+            family[o].append(i)
+        else:
+            originals.append(i)
+            family[i] = []
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    calls = []
+    checkpoint = type(df).localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls.append(1)
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", counting)
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _expected(edges)
+    assert len(calls) == 1
 
 
 def test_near_dup_clusters_labels_singletons(spark):

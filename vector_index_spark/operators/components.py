@@ -11,19 +11,22 @@ choice for web-scale dedup graphs:
     diameter. Plain hash-min label propagation needs diameter-many rounds
     — a 100 TB near-dup graph chains A~B~C~... through shingle drift, so
     diameter is unbounded in practice.
-  * each round is two groupBy-min aggregations plus re-join — pure
-    DataFrame ops, partial aggregation and AQE skew handling for free.
-    No driver-side graph state; the edge list never leaves the cluster.
+  * each star step is ONE ``min(v) OVER (PARTITION BY u)`` window — one
+    exchange, no groupBy-min plus re-join — and each round ends in one
+    dedupe. No driver-side graph state; the edges never leave the cluster.
 
-At convergence the edge relation is a star forest: every vertex points at
-its component's minimum id, which becomes the cluster id.
+Convergence: the loop stops after the first round whose output is a star
+forest — no vertex is both a parent and a child, and every child has
+exactly one parent — checked with one aggregate. Each star is then one
+component rooted at its minimum id, the cluster id. The large-star /
+small-star fixed point is always a star forest, so no confirming round
+runs: duplicate families (stars around an original) finish in one round.
 
 Scale notes: each round ends in ``localCheckpoint`` to truncate lineage
 (on a real cluster prefer ``spark.sparkContext.setCheckpointDir`` + a
-reliable ``checkpoint()``; local mode has no HDFS so we use the local
-variant). Convergence is detected with a constant-size fingerprint
-(count + xor-fold of xxhash64 over canonical edges) instead of a full
-edge-set anti-join.
+reliable ``checkpoint()``; local mode has no HDFS). A hub vertex is one
+window partition in one task: it spills to disk instead of being held in
+memory, but AQE does not split it the way it splits a skewed join.
 
 Reference parity: the reference engine has no graph/clustering surface
 (SURVEY §2A); this is a north-star training-pipeline operator
@@ -33,46 +36,63 @@ Reference parity: the reference engine has no graph/clustering surface
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-
-def _canon(edges: DataFrame) -> DataFrame:
-    """Canonical undirected form: (u, v) with u < v, no self-loops, no dups."""
-    return (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u, connect every strictly-larger neighbor to
-    m = min(N(u) + {u})."""
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.min("v").alias("__mn"))
-    mins = mins.select("u", F.least(F.col("__mn"), F.col("u")).alias("m"))
-    out = (
-        sym.join(mins, "u")
+    m = min(N(u) + {u}). Takes (u, v) in either orientation, self-loops
+    and repeats allowed; returns (larger, smaller) with repeats kept —
+    small-star's min does not change when an edge repeats."""
+    # both orientations from ONE scan, so a lazy pair input runs once
+    flip = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+    sym = edges.select(F.inline(F.array(F.struct("u", "v"), flip)))
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+    return (
+        sym.select("u", "v", m.alias("m"))
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
-    return _canon(out)
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient each edge larger->smaller; for each node u connect every
-    smaller neighbor (and u itself) to m = min of its smaller neighbors."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    """For each node u of (larger, smaller) edges, connect every smaller
+    neighbor (and u itself) to m = min of its smaller neighbors. Returns
+    the canonical form: (parent u, child v), u < v, no dups."""
+    m = F.min("v").over(Window.partitionBy("u"))
+    out = edges.select(m.alias("m"), F.array("u", "v").alias("nb")).select(
+        F.col("m").alias("u"), F.explode("nb").alias("v")
     )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    nbr = oriented.join(mins, "u").select(
-        F.col("v").alias("u"), F.col("m").alias("v")
+    return out.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when canonical (parent u, child v) edges form a star forest:
+    no vertex is both a parent and a child and every child has exactly
+    one parent, i.e. a vertex seen as a child is seen exactly once."""
+    roles = edges.select(F.col("v").alias("x"), F.lit(True).alias("child")).union(
+        edges.select(F.col("u").alias("x"), F.lit(False).alias("child"))
     )
-    self_edge = mins.select("u", F.col("m").alias("v"))
-    return _canon(nbr.union(self_edge))
+    bad = roles.groupBy("x").agg(
+        (F.bool_or("child") & (F.count(F.lit(1)) > 1)).alias("bad")
+    )
+    return bad.agg(F.count_if("bad")).first()[0] == 0
+
+
+def _star_forest(
+    pairs: DataFrame, src: str, dst: str, max_rounds: int = 30
+) -> DataFrame:
+    """Star rounds until the edges are a star forest; returns its
+    (root u, child v) edges, each root its component's minimum id."""
+    edges = pairs.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    )
+    for _ in range(max_rounds):
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        if _is_star_forest(edges):
+            return edges
+    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
 
 
 def connected_components(
@@ -84,39 +104,16 @@ def connected_components(
     """Label every vertex appearing in ``pairs`` with its component id
     (the minimum vertex id in the component).
 
-    Returns (id, component) — one row per distinct vertex.
+    Runs star rounds (two windows each) until the edges form a star
+    forest — see the module docstring for the stop rule and the hub
+    scale note — and raises RuntimeError if that takes more than
+    ``max_rounds`` rounds. Returns (id, component), one row per distinct
+    vertex: a child labelled by its root, each root by itself.
     """
-    # materialize the input once: each round references `edges` several
-    # times (symmetrize + min-join), and upstream pair generation is often
-    # expensive (LSH banding, kmeans cells) — without this the whole pair
-    # pipeline re-executes 3-4x in round 1
-    edges = _canon(
-        pairs.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    ).localCheckpoint(eager=True)
-    prev_fp = None
-    for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent, cannot overflow under ANSI mode
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        fp = (row["n"], row["h"])
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
-    # Star forest in canonical (min, max) order: u is the root, v the child.
-    children = edges.select(F.col("v").alias("id"), F.col("u").alias("component"))
-    roots = edges.select(F.col("u").alias("id"), F.col("u").alias("component"))
-    return children.union(roots).groupBy("id").agg(
-        F.min("component").alias("component")
-    )
+    star = _star_forest(pairs, src, dst, max_rounds)
+    children = star.select(F.col("v").alias("id"), F.col("u").alias("component"))
+    roots = star.select(F.col("u").alias("id"), F.col("u").alias("component"))
+    return children.union(roots.distinct())
 
 
 def semantic_dedup(
@@ -237,19 +234,21 @@ def near_dup_clusters(
 ) -> DataFrame:
     """Assign every document a duplicate-cluster id and a keep flag.
 
-    Documents in no pair form singleton clusters (their own id); the
-    survivor of each cluster is its minimum id. Returns
-    (id_col, cluster_id, keep) for every input document.
+    Clusters come from the star forest of ``connected_components`` (same
+    stop rule and scale notes): ONE left join of the documents against
+    its child -> root edges labels them. A root, or a document in no
+    pair, is its own cluster; the survivor of each cluster is its
+    minimum id. Returns (id_col, cluster_id, keep) for every document.
     """
-    comp = connected_components(pairs, src=src, dst=dst).withColumnRenamed(
-        "id", "__cc_id"
+    star = _star_forest(pairs, src, dst).select(
+        F.col("v").alias("__child"), F.col("u").alias("__root")
     )
     return (
         docs.select(F.col(id_col).cast("long").alias(id_col))
-        .join(comp, F.col(id_col) == F.col("__cc_id"), "left")
+        .join(star, F.col(id_col) == F.col("__child"), "left")
         .select(
             id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
+            F.coalesce("__root", F.col(id_col)).alias("cluster_id"),
         )
         .withColumn("keep", (F.col(id_col) == F.col("cluster_id")).cast("int"))
     )
